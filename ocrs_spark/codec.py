@@ -324,8 +324,9 @@ def decode_image(data: bytes) -> np.ndarray:
     if data[:6] in (b"GIF87a", b"GIF89a"):
         from .gif import decode_gif
 
-        grey, _delay = decode_gif(data)
-        return grey[:, :, None]
+        frame, _delay = decode_gif(data)
+        # grey palettes decode to HxW, colour palettes to HxWx3
+        return frame[:, :, None] if frame.ndim == 2 else frame
     raise UnsupportedImageError(
         "unsupported image format (RAWI, RLEI, PNG, baseline/progressive "
         "JPEG, lossless + lossy WebP, and GIF supported)"

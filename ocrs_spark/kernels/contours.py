@@ -1,17 +1,45 @@
 """Connected components, contour tracing, polygon simplification,
-min-area rects, and polygon rasterization — pure numpy/Python.
+min-area rects and polygon rasterization, in numpy array passes.
 
 Behavioral counterparts of the rten-imageproc routines used by
 ``ocrs/src/detection.rs:41-62`` (find_contours RetrievalMode::External,
 simplify_polygon eps=2, min_area_rect) and
 ``ocrs/src/recognition.rs:91-126`` (Polygon::fill_iter). Implemented from
 the published algorithms (Suzuki-Abe border following via Moore tracing,
-Douglas-Peucker, rotating calipers) — no reference code reused.
+Douglas-Peucker, quickhull, rotating calipers) — no reference code
+reused.
 
-Connected-component labeling is a vectorized row-run union-find: runs of
-foreground per row are found with np.diff, merged across rows with
-8-connectivity. This keeps the hot loop O(rows + runs) in Python with all
-per-pixel work in numpy.
+One image's mask goes through a fixed number of numpy passes over all
+of its components at once, not a Python loop per component or per
+contour point:
+
+- Labeling. Foreground runs come from one diff of the padded mask. The
+  runs of the row above that touch a run (8-connectivity) form a
+  contiguous range found with searchsorted. Components come from
+  min-label hooking plus pointer jumping over those run pairs; the root
+  of a component is its first run, so components are numbered in raster
+  order of their first pixel.
+- Tracing. The 8-neighbour code of every pixel is computed once per
+  image. Every component's Moore walk (clockwise from its
+  topmost-leftmost pixel, Jacob's stopping criterion) then advances in
+  lockstep: one transition-table lookup per step for all walks. When
+  fewer than ``_SCALAR_TAIL`` walks are left they finish in a scalar
+  loop over the same table. That loop is the tail of the lockstep walk,
+  not a second tracer: it keeps one long contour (a page frame) from
+  holding numpy to a few pixels per call.
+- Simplification. Douglas-Peucker runs level by level over the open
+  chords of every contour: per-chord maximum via reduceat, the first
+  maximum wins, and the chord splits there when that maximum is > eps.
+- Fitting. Quickhull runs level by level over every point set; rotating
+  calipers then project each hull on all of its edges in one pass, and
+  the rects come out as arrays.
+
+Contour coordinates are integers, so every cross product and squared
+length here is exact in float64 and the square roots are correctly
+rounded: they equal the ``math.hypot`` of a per-point formulation. The
+per-component scalar kernels these passes replaced are kept in
+``tests/kernel_reference.py``, and ``tests/test_contour_fuzz.py`` checks
+the passes against them point for point.
 """
 
 from __future__ import annotations
@@ -25,9 +53,79 @@ from ..geometry import Rect, RotatedRect
 # Moore neighborhood in clockwise order starting from W (dx, dy).
 _MOORE = [(-1, 0), (-1, -1), (0, -1), (1, -1), (1, 0), (1, 1), (0, 1), (-1, 1)]
 
-# Single-slot scratch for _component_runs (reused across same-shaped
-# masks; Spark Python workers are single-threaded processes).
-_RUN_SCRATCH = None
+# Tracing finishes in the scalar loop once fewer walks than this are left.
+_SCALAR_TAIL = 8
+
+# Single-slot scratch for one mask shape: zero-padded mask, run
+# boundaries, neighbour codes and a shift buffer, reused across same-shaped masks
+# (Spark Python workers are single-threaded processes). Fresh pages
+# fault in slowly on the target hosts, and allocating ~1 MB of
+# temporaries per image measurably throttles concurrent workers (see
+# malloc_tuning.py).
+_SCRATCH = None
+
+
+def _scratch(h: int, w: int):
+    global _SCRATCH
+    if _SCRATCH is None or _SCRATCH[0] != (h, w):
+        _SCRATCH = (
+            (h, w),
+            np.zeros((h + 2, w + 2), np.uint8),
+            np.empty((h, w + 1), bool),
+            np.zeros((h + 2) * (w + 2), np.uint8),
+            np.empty(max(h * (w + 2) - 2, 0), np.uint8),
+        )
+    return _SCRATCH[1:]
+
+
+def _component_runs(mask: np.ndarray, grid: np.ndarray, edge: np.ndarray):
+    """Foreground runs of ``mask`` and their 8-connected components.
+
+    Fills ``grid`` with the mask inside a 1-pixel zero border. Returns
+    (y, xs, xe, comp, first): run i covers columns [xs[i], xe[i]) of row
+    y[i], runs in raster order; comp[i] is its component, numbered in
+    raster order of the first pixel; first[k] is component k's first
+    run."""
+    w = mask.shape[1]
+    grid[1:-1, 1:-1] = mask
+    np.not_equal(grid[1:-1, 1:], grid[1:-1, :-1], out=edge)
+    # Boundaries alternate start, end along a row, so one pass finds
+    # both, as flat keys y * (w + 1) + x.
+    bounds = np.flatnonzero(edge)
+    ks, ke = bounds[0::2], bounds[1::2]
+    stride = w + 1
+    y = ks // stride
+    xs = ks - y * stride
+    xe = ke - y * stride
+    # The runs of the row above that touch run i (start <= xe[i] and
+    # end >= xs[i]) are the range [lo[i], hi[i]); a key shifted by one
+    # row never reaches a run two rows away.
+    lo = np.searchsorted(ke, ks - stride)
+    hi = np.searchsorted(ks, ke - stride, side="right")
+    cnt = np.maximum(hi - lo, 0)
+    idx = np.arange(len(ks))
+    ea = np.repeat(idx, cnt)
+    eb = np.arange(len(ea)) - np.repeat(np.cumsum(cnt) - cnt - lo, cnt)
+    # Every run points at an earlier run of its component, a root at
+    # itself. Start from the first touching run above; then jump
+    # pointers to the roots and hook the larger of two roots that a run
+    # pair joins to the smaller, until no pair joins two trees. A
+    # component's root is then its first run.
+    lab = np.where(cnt > 0, lo, idx)
+    while True:
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
+        ra, rb = lab[ea], lab[eb]
+        join = ra != rb
+        if not join.any():
+            break
+        ra, rb = ra[join], rb[join]
+        np.minimum.at(lab, np.maximum(ra, rb), np.minimum(ra, rb))
+    root = lab == idx
+    return y, xs, xe, (np.cumsum(root) - 1)[lab], np.flatnonzero(root)
 
 
 def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
@@ -36,356 +134,349 @@ def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
     Returns (labels, n) where labels is int32 (0 = background,
     components numbered 1..n in raster order of their first pixel).
     """
-    runs_by_label, h, w = _component_runs(mask)
-    labels = np.zeros((h, w), dtype=np.int32)
-    for lbl, runs in enumerate(runs_by_label, start=1):
-        for y, s, e in runs:
-            labels[y, s:e] = lbl
-    return labels, len(runs_by_label)
-
-
-def _component_runs(mask: np.ndarray):
-    """Row-run union-find labeling. Returns (runs_by_label, h, w) where
-    runs_by_label[i] is the list of (y, start, end) half-open runs of
-    component i+1, in raster order of first appearance."""
     mask = np.asarray(mask, dtype=bool)
     h, w = mask.shape
-
-    # All run boundaries in ONE 2D diff (row-major nonzero order pairs
-    # starts with ends per row), instead of h per-row numpy calls. The
-    # scratch buffers are reused across calls (single-slot, per-process)
-    # — this host faults fresh pages at ~20 MB/s, and allocating ~1 MB
-    # of temporaries per image measurably throttles concurrent workers
-    # (see malloc_tuning.py).
-    global _RUN_SCRATCH
-    key = (h, w)
-    if _RUN_SCRATCH is None or _RUN_SCRATCH[0] != key:
-        padded = np.zeros((h, w + 2), dtype=np.int8)
-        diff = np.empty((h, w + 1), dtype=np.int8)
-        _RUN_SCRATCH = (key, padded, diff)
-    _, padded, diff = _RUN_SCRATCH
-    padded[:, 1:-1] = mask
-    np.subtract(padded[:, 1:], padded[:, :-1], out=diff)
-    sy, sx = np.nonzero(diff == 1)
-    _, ex = np.nonzero(diff == -1)
-    n = len(sy)
-
-    parent = list(range(n + 1))  # union-find over run ids 1..n
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-
-    runs = list(zip(sy.tolist(), sx.tolist(), ex.tolist()))
-    prev: list[tuple[int, int, int]] = []  # (start, end, run_id) of row-1
-    cur: list[tuple[int, int, int]] = []
-    cur_row = -1
-    for i, (y, s, e) in enumerate(runs):
-        rid = i + 1
-        if y != cur_row:
-            prev = cur if y == cur_row + 1 else []
-            cur = []
-            cur_row = y
-        # 8-connectivity: overlap with previous row extended by 1 col.
-        for ps, pe, pid in prev:
-            if ps < e + 1 and pe > s - 1:
-                union(rid, pid)
-        cur.append((s, e, rid))
-
-    # Resolve roots to dense component labels in raster order.
-    root_to_label: dict[int, int] = {}
-    runs_by_label: list[list[tuple[int, int, int]]] = []
-    for i, (y, s, e) in enumerate(runs):
-        r = find(i + 1)
-        lbl = root_to_label.get(r)
-        if lbl is None:
-            lbl = len(runs_by_label)
-            root_to_label[r] = lbl
-            runs_by_label.append([])
-        runs_by_label[lbl].append((y, s, e))
-    return runs_by_label, h, w
-
-
-def _ring_index(dx: int, dy: int) -> int:
-    for i, (mx, my) in enumerate(_MOORE):
-        if (mx, my) == (dx, dy):
-            return i
-    raise ValueError((dx, dy))
+    grid, edge, _, _ = _scratch(h, w)
+    y, xs, xe, comp, first = _component_runs(mask, grid, edge)
+    length = xe - xs
+    pixels = np.arange(length.sum()) + np.repeat(y * w + xs - np.cumsum(length) + length, length)
+    labels = np.zeros(h * w, dtype=np.int32)
+    labels[pixels] = np.repeat(comp + 1, length)
+    return labels.reshape(h, w), len(first)
 
 
 def _build_trace_table():
-    """Transition table for table-driven Moore tracing: for (backtrack
-    direction, 8-bit neighborhood mask) precompute the full step — the
-    clockwise scan from the backtrack, the move to the first foreground
-    neighbor, and the new backtrack direction (toward the last
-    background cell examined). Encodes exactly the scan the loop in the
-    pre-table implementation performed, so traces are bit-identical."""
-    table = [[None] * 256 for _ in range(8)]
+    """Moore-tracing transitions indexed by ``256 * bdir + code`` (the
+    backtrack direction and the 8-bit neighbourhood code): the clockwise
+    scan from the backtrack stops at the first foreground neighbour,
+    which gives the move (dx, dy); the new backtrack is the last
+    background cell scanned, as a direction from the new pixel. Returns
+    (dx, dy, 256 * new bdir); code 0, an isolated pixel, has no move."""
+    dx, dy, nxt = (np.zeros(2048, np.int64) for _ in range(3))
     for bdir in range(8):
-        for nb in range(256):
-            step = None
-            for k in range(1, 9):
-                d = (bdir + k) & 7
-                if nb & (1 << d):
-                    dx, dy = _MOORE[d]
-                    # Last background examined: ring slot before the hit
-                    # (for k == 1 that's the old backtrack itself, which
-                    # the scan has not moved past — same as the loop
-                    # leaving bx,by untouched).
-                    pbx, pby = _MOORE[(bdir + k - 1) & 7]
-                    step = (dx, dy, _ring_index(pbx - dx, pby - dy))
-                    break
-            table[bdir][nb] = step  # None = isolated pixel
-    return table
+        for code in range(1, 256):
+            k = next(k for k in range(1, 9) if code >> ((bdir + k) & 7) & 1)
+            mx, my = _MOORE[(bdir + k) & 7]
+            # For k == 1 the last background scanned is the old
+            # backtrack itself.
+            bx, by = _MOORE[(bdir + k - 1) & 7]
+            key = 256 * bdir + code
+            dx[key], dy[key] = mx, my
+            nxt[key] = 256 * _MOORE.index((bx - mx, by - my))
+    return dx, dy, nxt
 
 
-_TRACE_TABLE = _build_trace_table()
+_STEP_DX, _STEP_DY, _STEP_NEXT = _build_trace_table()
 
 
-def _neighbor_bits(crop: np.ndarray) -> bytes:
-    """Flat row-major uint8 mask per cell: bit i set iff the Moore
-    neighbor i is foreground. Pure slice arithmetic (no per-cell Python
-    objects); crop carries a 1-pixel False border."""
-    g = crop.view(np.uint8) if crop.dtype == bool else crop.astype(np.uint8)
-    h, w = g.shape
-    nb = np.zeros((h, w), np.uint8)
+def _neighbour_codes(grid: np.ndarray, codes: np.ndarray, tmp: np.ndarray) -> np.ndarray:
+    """8-neighbour code of every pixel of the padded ``grid``, flat: bit
+    i set iff Moore neighbour i is foreground. Computed on flat offsets,
+    so the border columns get meaningless codes; walks never visit
+    them."""
+    g = grid.reshape(-1)
+    w2 = grid.shape[1]
+    lo = w2 + 1
+    hi = max(len(g) - w2 - 1, lo)
+    core = codes[lo:hi]
     for i, (dx, dy) in enumerate(_MOORE):
-        ys0, ys1 = max(0, -dy), h - max(0, dy)
-        xs0, xs1 = max(0, -dx), w - max(0, dx)
-        nb[ys0:ys1, xs0:xs1] |= g[ys0 + dy : ys1 + dy, xs0 + dx : xs1 + dx] << i
-    return nb.tobytes()
+        src = g[lo + dx + dy * w2 : hi + dx + dy * w2]
+        if i == 0:
+            core[...] = src
+        else:
+            np.left_shift(src, i, out=tmp)
+            core |= tmp
+    return codes
 
 
-def _trace_on_grid(crop: np.ndarray, sx: int, sy: int, max_steps: int) -> list[tuple[int, int]]:
-    """Moore-neighbor tracing (clockwise, Jacob's stopping criterion) on
-    a padded boolean array (crop[y, x]; 1-pixel False border).
-    ``(sx, sy)`` is the topmost-leftmost foreground pixel. Returns
-    border pixels (x, y) in traversal order.
+def trace_contours(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Outer contour of every 8-connected component of a boolean mask
+    (counterpart of rten-imageproc find_contours with
+    RetrievalMode::External, used at detection.rs:46).
 
-    The per-step neighbor scan is a single lookup in _TRACE_TABLE keyed
-    by the precomputed (vectorized) neighborhood bitmask — the per-step
-    Python work is one bytes index + one table fetch instead of an
-    8-neighbor scan. Returns an (N, 2) int32 array (flat int appends
-    into array.array beat building N coordinate tuples)."""
-    import array as _array
+    Returns (x, y, offsets): contour k is points offsets[k]:offsets[k+1]
+    of the int64 coordinate arrays, components in raster order of their
+    first pixel. A contour lists border pixels in clockwise walking
+    order, from the topmost-leftmost pixel back to it (a single pixel is
+    one point)."""
+    mask = np.asarray(mask, dtype=bool)
+    h, w = mask.shape
+    grid, edge, codes, tmp = _scratch(h, w)
+    ry, rxs, rxe, comp, first = _component_runs(mask, grid, edge)
+    ncomp = len(first)
+    w2 = w + 2
+    code = _neighbour_codes(grid, codes, tmp)
+    start = (ry[first] + 1) * w2 + rxs[first] + 1
+    # A walk is deterministic in (pixel, backtrack): one that outlasts
+    # the 8 states per pixel of its component never stops.
+    budget = 8 * np.bincount(comp, weights=rxe - rxs, minlength=ncomp).astype(np.int64) + 2
+    dpos = _STEP_DX + _STEP_DY * w2
 
-    nb = _neighbor_bits(crop)
-    w = crop.shape[1]
-    table = _TRACE_TABLE
-    coords = _array.array("i", (sx, sy))
-    push = coords.append
-    cx, cy = sx, sy
-    bdir = 0  # entered the start pixel from the West
-    fmx = fmy = -1  # first move (Jacob's stopping criterion)
-    for _ in range(max_steps):
-        step = table[bdir][nb[cy * w + cx]]
-        if step is None:
-            break  # isolated pixel
-        dx, dy, bdir = step
-        nx, ny = cx + dx, cy + dy
-        if cx == sx and cy == sy:
-            if fmx < 0:
-                fmx, fmy = nx, ny
-            elif nx == fmx and ny == fmy:
-                break  # completed the loop
-        cx, cy = nx, ny
-        push(nx)
-        push(ny)
-    else:
-        raise RuntimeError("contour tracing did not terminate")
-    return np.frombuffer(coords, dtype=np.int32).reshape(-1, 2)
+    # Step 0: every walk enters its start pixel from the West, and its
+    # first move fixes Jacob's criterion: the walk stops when it is
+    # about to leave the start pixel by that move again. Single pixels
+    # do not walk.
+    key = code[start].astype(np.int64)
+    wid = np.flatnonzero(key)
+    s0, key, left = start[wid], key[wid], budget[wid]
+    pos = s0 + dpos[key]
+    back = _STEP_NEXT[key]
+    fm = pos
+    ids, steps = [wid], [pos]
+    t = 1
+    limit = left.min(initial=1 << 62)
+    while len(wid) >= _SCALAR_TAIL:
+        if t > limit:
+            raise RuntimeError("contour tracing did not terminate")
+        key = back + code[pos]
+        nxt = pos + dpos[key]
+        done = (nxt == fm) & (pos == s0)
+        if done.any():
+            go = ~done
+            wid, s0, fm, left, key, nxt = wid[go], s0[go], fm[go], left[go], key[go], nxt[go]
+            limit = left.min(initial=1 << 62)
+        back = _STEP_NEXT[key]
+        pos = nxt
+        ids.append(wid)
+        steps.append(pos)
+        t += 1
 
+    # The scalar tail: the last few walks, same table, same stopping rule.
+    tails = []
+    if len(wid):
+        cv, dl, nl = memoryview(code), dpos.tolist(), _STEP_NEXT.tolist()
+        for w_, p, b, s, f, n in zip(*(a.tolist() for a in (wid, pos, back, s0, fm, left))):
+            pts = []
+            for _ in range(n - t + 1):
+                k = b + cv[p]
+                q = p + dl[k]
+                if p == s and q == f:
+                    break
+                b = nl[k]
+                p = q
+                pts.append(p)
+            else:
+                raise RuntimeError("contour tracing did not terminate")
+            tails.append((w_, pts))
 
-def trace_outer_contour(labels: np.ndarray, label: int, start: tuple[int, int]) -> list[tuple[int, int]]:
-    """Back-compat wrapper: trace one component of a label image."""
-    grid = np.pad(labels == label, 1)
-    sx, sy = start
-    pts = _trace_on_grid(grid, sx + 1, sy + 1, 4 * (labels.size + 8))
-    return [(int(x) - 1, int(y) - 1) for x, y in pts]
+    # Step i of a walk is point i + 1 of its contour; point 0 is the start.
+    ids_all = np.concatenate(ids)
+    counts = np.bincount(ids_all, minlength=ncomp) + 1
+    for w_, pts in tails:
+        counts[w_] += len(pts)
+    offsets = np.zeros(ncomp + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    flat = np.empty(offsets[-1], dtype=np.int64)
+    flat[offsets[:-1]] = start
+    step_no = np.repeat(np.arange(len(ids)), [len(a) for a in ids])
+    flat[offsets[ids_all] + 1 + step_no] = np.concatenate(steps)
+    for w_, pts in tails:
+        flat[offsets[w_ + 1] - len(pts) : offsets[w_ + 1]] = pts
+    y, x = np.divmod(flat, w2)
+    return x - 1, y - 1, offsets
 
 
 def find_contours_external(mask: np.ndarray) -> list[np.ndarray]:
     """Outer contour of each 8-connected component, as ordered (N, 2)
-    int32 arrays of (x, y) border pixels (counterpart of rten-imageproc
-    find_contours with RetrievalMode::External, used at detection.rs:46).
+    int32 arrays of (x, y) border pixels (see trace_contours)."""
+    x, y, offsets = trace_contours(mask)
+    if len(offsets) == 1:
+        return []
+    return np.split(np.stack([x, y], axis=1).astype(np.int32), offsets[1:-1])
 
-    Each component is traced on its own padded bounding-box crop (built
-    from the labeling runs), so cost scales with component perimeter,
-    not image area."""
-    runs_by_label, h, w = _component_runs(mask)
-    contours = []
-    for runs in runs_by_label:
-        y0 = runs[0][0]
-        y1 = runs[-1][0]
-        x0 = min(s for _, s, _ in runs)
-        x1 = max(e for _, _, e in runs)
-        ch, cw = y1 - y0 + 1, x1 - x0
-        crop = np.zeros((ch + 2, cw + 2), dtype=bool)
-        for y, s, e in runs:
-            crop[y - y0 + 1, s - x0 + 1 : e - x0 + 1] = True
-        # Start = topmost-leftmost pixel (raster order of first run).
-        sx, sy = runs[0][1] - x0 + 1, 1
-        pts = _trace_on_grid(crop, sx, sy, 4 * ((ch + 2) * (cw + 2) + 8))
-        contours.append(pts + np.array([x0 - 1, y0 - 1], dtype=np.int32))
-    return contours
+
+def simplify_polylines(x, y, offsets, eps: float) -> np.ndarray:
+    """Douglas-Peucker over every polyline at once, endpoints kept
+    (counterpart of rten-imageproc simplify_polygon at detection.rs:50).
+    Polyline k is points offsets[k]:offsets[k+1], each non-empty.
+    Returns the boolean mask of the kept points.
+
+    A point's distance is to its chord's line, or to the chord's start
+    when the chord has zero length (a closed contour)."""
+    xf = np.asarray(x, dtype=np.float64)
+    yf = np.asarray(y, dtype=np.float64)
+    keep = np.zeros(len(xf), dtype=bool)
+    i0, i1 = offsets[:-1], offsets[1:] - 1
+    keep[i0] = keep[i1] = True
+    while True:
+        chord = i1 > i0 + 1
+        i0, i1 = i0[chord], i1[chord]
+        if not len(i0):
+            return keep
+        inner = i1 - i0 - 1
+        seg0 = np.cumsum(inner) - inner
+        sid = np.repeat(np.arange(len(inner)), inner)
+        j = np.arange(inner.sum()) + np.repeat(i0 + 1 - seg0, inner)
+        x0, y0 = xf[i0], yf[i0]
+        ex, ey = xf[i1] - x0, yf[i1] - y0
+        length = np.sqrt(ex * ex + ey * ey)
+        dx, dy = xf[j] - x0[sid], yf[j] - y0[sid]
+        closed = length == 0
+        d = np.abs(ex[sid] * dy - ey[sid] * dx) / np.where(closed, 1.0, length)[sid]
+        pc = closed[sid]
+        if pc.any():
+            d[pc] = np.sqrt(dx[pc] * dx[pc] + dy[pc] * dy[pc])
+        best = np.maximum.reduceat(d, seg0)
+        bi = np.minimum.reduceat(np.where(d == best[sid], j, len(xf)), seg0)
+        split = best > eps
+        i0, i1, bi = i0[split], i1[split], bi[split]
+        keep[bi] = True
+        i0, i1 = np.concatenate((i0, bi)), np.concatenate((bi, i1))
 
 
 def simplify_polyline(points, eps: float) -> np.ndarray:
-    """Douglas-Peucker simplification, endpoints kept (counterpart of
-    rten-imageproc simplify_polygon at detection.rs:50). Accepts a
-    point list or an (N, 2) array; returns an (M, 2) float64 array.
-
-    Pure-Python DP over scalar floats: contours are a few hundred
-    points, where per-call numpy overhead dwarfs the arithmetic. The
-    per-element float ops (sub, mul, abs, divide-by-seg_len, strict >
-    first-max) are the exact IEEE sequence of the vectorized form this
-    replaces, so the kept set is bit-identical."""
+    """Douglas-Peucker of one polyline (see simplify_polylines). Accepts
+    a point list or an (N, 2) array; returns an (M, 2) float64 array."""
     pts = np.asarray(points, dtype=np.float64)
-    n = len(pts)
-    if n <= 2:
+    if len(pts) <= 2:
         return pts
-    xs = pts[:, 0].tolist()
-    ys = pts[:, 1].tolist()
-    keep = [False] * n
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i0, i1 = stack.pop()
-        if i1 <= i0 + 1:
-            continue
-        x0, y0 = xs[i0], ys[i0]
-        ex, ey = xs[i1] - x0, ys[i1] - y0
-        seg_len = math.hypot(ex, ey)
-        best = -1.0
-        bi = -1
-        if seg_len == 0:
-            for j in range(i0 + 1, i1):
-                d = math.hypot(xs[j] - x0, ys[j] - y0)
-                if d > best:
-                    best, bi = d, j
-        else:
-            for j in range(i0 + 1, i1):
-                d = abs(ex * (ys[j] - y0) - ey * (xs[j] - x0)) / seg_len
-                if d > best:
-                    best, bi = d, j
-        if best > eps:
-            keep[bi] = True
-            stack.append((i0, bi))
-            stack.append((bi, i1))
-    return pts[keep]
+    return pts[simplify_polylines(pts[:, 0], pts[:, 1], np.array([0, len(pts)]), eps)]
 
 
-def convex_hull(points) -> np.ndarray:
-    """Andrew monotone chain. Returns hull points (x, y) CCW in image
-    coords (y down), shape (m, 2) float64. Pure-Python over scalar
-    floats (inputs are simplified contours of a handful of points where
-    numpy per-call overhead dominates); dedup + lexicographic sort
-    matches np.unique's row ordering."""
-    pts = np.asarray(points, dtype=np.float64)
-    uniq = sorted(set(map(tuple, pts.tolist())))
-    if len(uniq) <= 2:
-        return np.asarray(uniq, dtype=np.float64).reshape(-1, 2)
+def convex_hulls(x, y, offsets) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Convex hull of every point set at once. Returns (hx, hy,
+    hull_offsets): the strictly convex vertices of set k, CCW in image
+    coords (y down) from its lexicographically smallest point, in
+    monotone-chain order (lower chain left to right, then upper chain
+    right to left; collinear points dropped). One or two distinct points
+    come back as they are; an empty set has an empty hull.
 
-    def half(seq):
-        out = []
-        for px, py in seq:
-            while len(out) >= 2:
-                ox, oy = out[-2]
-                ax, ay = out[-1]
-                if (ax - ox) * (py - oy) - (ay - oy) * (px - ox) <= 0:
-                    out.pop()
-                else:
-                    break
-            out.append((px, py))
-        return out
+    Quickhull, level by level: each outside point belongs to one hull
+    edge found so far. Every such edge takes its outside point farthest
+    from it (on a tie, the one farthest along the edge, so that it is a
+    vertex), and its other outside points move to the two new edges or
+    drop."""
+    xf = np.asarray(x, dtype=np.float64)
+    yf = np.asarray(y, dtype=np.float64)
+    nset = len(offsets) - 1
+    sid = np.repeat(np.arange(nset), np.diff(offsets))
+    order = np.lexsort((yf, xf, sid))
+    xs, ys, ss = xf[order], yf[order], sid[order]
+    new = np.ones(len(xs), dtype=bool)
+    new[1:] = (ss[1:] != ss[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
+    xs, ys, ss = xs[new], ys[new], ss[new]
+    count = np.bincount(ss, minlength=nset)
+    lo = (np.cumsum(count) - count)[ss]  # lexicographically first point
+    hi = lo + count[ss] - 1  # and last
+    # Part 0 is the lower chain lo -> hi, part 1 the upper chain hi -> lo.
+    verts = [np.unique(lo), np.unique(hi[hi > lo])]
+    parts = [np.zeros(len(verts[0]), np.int64), np.ones(len(verts[1]), np.int64)]
+    pt = np.arange(len(xs))
+    side = _outside(xs, ys, lo, hi, pt)
+    up = side < 0
+    ea, eb = np.where(up, hi, lo), np.where(up, lo, hi)
+    part = up.astype(np.int64)
+    live = side != 0
+    pt, ea, eb, part = pt[live], ea[live], eb[live], part[live]
+    n = len(xs)
+    while len(pt):
+        dist = _outside(xs, ys, ea, eb, pt)
+        along = (xs[eb] - xs[ea]) * (xs[pt] - xs[ea]) + (ys[eb] - ys[ea]) * (ys[pt] - ys[ea])
+        edge = ea * n + eb
+        order = np.lexsort((along, dist, edge))
+        pt, ea, eb, part, edge = pt[order], ea[order], eb[order], part[order], edge[order]
+        last = np.ones(len(pt), dtype=bool)
+        last[:-1] = edge[1:] != edge[:-1]
+        far = pt[last]
+        verts.append(far)
+        parts.append(part[last])
+        c = far[np.cumsum(last) - last]  # the far point of each one's edge
+        to_a = _outside(xs, ys, ea, c, pt) > 0
+        live = to_a | (_outside(xs, ys, c, eb, pt) > 0)
+        ea, eb = np.where(to_a, ea, c), np.where(to_a, c, eb)
+        pt, ea, eb, part = pt[live], ea[live], eb[live], part[live]
+    v = np.concatenate(verts)
+    vpart = np.concatenate(parts)
+    v = v[np.lexsort((np.where(vpart == 0, v, -v), vpart, ss[v]))]
+    hull_offsets = np.zeros(nset + 1, dtype=np.int64)
+    np.cumsum(np.bincount(ss[v], minlength=nset), out=hull_offsets[1:])
+    return xs[v], ys[v], hull_offsets
 
-    lower = half(uniq)
-    upper = half(uniq[::-1])
-    return np.asarray(lower[:-1] + upper[:-1])
+
+def _outside(xs, ys, a, b, p) -> np.ndarray:
+    """Distance of point p from the line of the directed hull edge
+    a -> b, times the edge length: > 0 outside the hull walked CCW in
+    image coords (the lower chain's outside is below it), < 0 inside."""
+    ax, ay = xs[a], ys[a]
+    return (ys[b] - ay) * (xs[p] - ax) - (xs[b] - ax) * (ys[p] - ay)
+
+
+def min_area_rects(x, y, offsets) -> tuple[np.ndarray, ...]:
+    """Minimum-area oriented rect of every point set at once, by
+    rotating calipers over the hull edges (counterpart of rten-imageproc
+    min_area_rect at detection.rs:52). Set k is points
+    offsets[k]:offsets[k+1], each non-empty. Returns float64 arrays
+    (cx, cy, ux, uy, width, height), the up axis oriented towards
+    (0, -1), so horizontal input yields width = x-extent, height =
+    y-extent.
+
+    Every hull is projected on each of its edge directions in one pass,
+    and the first edge (in hull order) of minimal area wins. One point
+    gives a zero-size rect, two a zero-height rect along their
+    segment."""
+    hx, hy, hoff = convex_hulls(x, y, offsets)
+    m = np.diff(hoff)
+    cx, cy = hx[hoff[:-1]], hy[hoff[:-1]]
+    ux, uy = np.zeros(len(m)), np.full(len(m), -1.0)
+    width, height = np.zeros(len(m)), np.zeros(len(m))
+
+    seg = np.flatnonzero(m == 2)
+    i = hoff[seg]
+    dx, dy = hx[i + 1] - hx[i], hy[i + 1] - hy[i]
+    # math.hypot: these sets may be float corners (output.py), where the
+    # square root of the squared length can differ in the last place.
+    length = np.array([math.hypot(u, v) for u, v in zip(dx.tolist(), dy.tolist())])
+    cx[seg], cy[seg] = (hx[i] + hx[i + 1]) / 2, (hy[i] + hy[i + 1]) / 2
+    ux[seg], uy[seg], width[seg] = -dy / length, dx / length, length
+
+    big = np.flatnonzero(m >= 3)
+    if len(big):
+        mb = m[big]
+        ne = mb.sum()
+        e0 = np.cumsum(mb) - mb  # first edge of each hull
+        hull_of = np.repeat(np.arange(len(big)), mb)
+        rank = np.arange(ne) - e0[hull_of]
+        a = hoff[big][hull_of] + rank
+        b = np.where(rank == mb[hull_of] - 1, a + 1 - mb[hull_of], a + 1)
+        evx, evy = hx[b] - hx[a], hy[b] - hy[a]
+        elen = np.hypot(evx, evy)
+        ex, ey = evx / elen, evy / elen
+        px, py = -ey, ex
+        # Every edge direction against every point of its hull.
+        rows = mb[hull_of]
+        r0 = np.cumsum(rows) - rows
+        e_of = np.repeat(np.arange(ne), rows)
+        q = np.arange(rows.sum()) + np.repeat(hoff[big][hull_of] - r0, rows)
+        pe = hx[q] * ex[e_of] + hy[q] * ey[e_of]
+        pp = hx[q] * px[e_of] + hy[q] * py[e_of]
+        emin, emax = np.minimum.reduceat(pe, r0), np.maximum.reduceat(pe, r0)
+        pmin, pmax = np.minimum.reduceat(pp, r0), np.maximum.reduceat(pp, r0)
+        area = (emax - emin) * (pmax - pmin)
+        amin = np.minimum.reduceat(area, e0)
+        k = np.minimum.reduceat(np.where(area == amin[hull_of], np.arange(ne), ne), e0)
+        ce, cp = (emax[k] + emin[k]) / 2, (pmax[k] + pmin[k]) / 2
+        cx[big], cy[big] = ce * ex[k] + cp * px[k], ce * ey[k] + cp * py[k]
+        # Width along the edge, height along its perpendicular, which is
+        # the up axis; then make the up axis the one closest to vertical.
+        bux, buy, bw, bh = px[k], py[k], emax[k] - emin[k], pmax[k] - pmin[k]
+        swap = np.abs(buy) < np.abs(bux)
+        ux[big], uy[big] = np.where(swap, buy, bux), np.where(swap, -bux, buy)
+        width[big], height[big] = np.where(swap, bh, bw), np.where(swap, bw, bh)
+
+    # orient_towards(0, -1) (text_items.rs:26-29)
+    flip = ux * 0.0 + uy * -1.0 < 0
+    ux[flip], uy[flip] = -ux[flip], -uy[flip]
+    return cx, cy, ux, uy, width, height
 
 
 def min_area_rect(points) -> RotatedRect | None:
-    """Minimum-area oriented bounding rect via rotating calipers over hull
-    edges (counterpart of rten-imageproc min_area_rect at
-    detection.rs:52). Up axis is oriented towards (0, -1) so horizontal
-    input yields width = x-extent, height = y-extent."""
-    pts = np.asarray(points, dtype=np.float64)
-    if len(pts) == 0:
+    """Minimum-area oriented rect of one point set (see min_area_rects);
+    None for no points."""
+    pts = np.asarray(points, dtype=np.float64).reshape(-1, 2)
+    if not len(pts):
         return None
-    hull = convex_hull(pts)
-    if len(hull) == 1:
-        return RotatedRect(hull[0][0], hull[0][1], 0.0, -1.0, 0.0, 0.0)
-    if len(hull) == 2:
-        (x0, y0), (x1, y1) = hull
-        dx, dy = x1 - x0, y1 - y0
-        length = math.hypot(dx, dy)
-        ux, uy = (-dy / length, dx / length) if length else (0.0, -1.0)
-        rr = RotatedRect((x0 + x1) / 2, (y0 + y1) / 2, ux, uy, length, 0.0)
-        return rr.orient_towards(0.0, -1.0)
-
-    # Rotating calipers over the (tiny) hull in pure Python: project
-    # every hull point on every edge direction and take the first
-    # minimal-area edge. Same elementwise IEEE mul+add as the
-    # vectorized form this replaces (no FMA/matmul), so results are
-    # bit-identical; at hull sizes of 4-10 points the scalar loop beats
-    # the ~15 numpy calls it replaces.
-    hx = hull[:, 0].tolist()
-    hy = hull[:, 1].tolist()
-    m = len(hx)
-    best_area = None
-    best = None
-    for a in range(m):
-        b = (a + 1) % m
-        evx, evy = hx[b] - hx[a], hy[b] - hy[a]
-        # np.hypot, not math.hypot: they can differ in the last ulp and
-        # the unit-vector rounding must match the prior vectorized form.
-        elen = float(np.hypot(evx, evy))
-        if elen == 0:
-            continue
-        uex, uey = evx / elen, evy / elen
-        upx, upy = -uey, uex
-        emin = emax = hx[0] * uex + hy[0] * uey
-        pmin = pmax = hx[0] * upx + hy[0] * upy
-        for j in range(1, m):
-            pe = hx[j] * uex + hy[j] * uey
-            pp = hx[j] * upx + hy[j] * upy
-            if pe < emin:
-                emin = pe
-            elif pe > emax:
-                emax = pe
-            if pp < pmin:
-                pmin = pp
-            elif pp > pmax:
-                pmax = pp
-        area = (emax - emin) * (pmax - pmin)
-        if best_area is None or area < best_area:
-            best_area = area
-            best = (uex, uey, upx, upy, emin, emax, pmin, pmax)
-    ex, ey, px, py, emin_, emax_, pmin_, pmax_ = best
-    ws_i = emax_ - emin_
-    hs_i = pmax_ - pmin_
-    ce = (emax_ + emin_) / 2
-    cp = (pmax_ + pmin_) / 2
-    # Width along the edge direction; height along perpendicular.
-    # Up axis = the axis along "height", pointing up-ish.
-    rr = RotatedRect(ce * ex + cp * px, ce * ey + cp * py, px, py, ws_i, hs_i)
-    # Normalize: make the up axis the one closest to vertical, and point
-    # it towards (0, -1) (mirrors orient_towards usage,
-    # text_items.rs:26-29).
-    if abs(rr.uy) < abs(rr.ux):
-        # Swap axes: up becomes the perpendicular of current up.
-        rr = RotatedRect(rr.cx, rr.cy, rr.uy, -rr.ux, rr.height, rr.width)
-    return rr.orient_towards(0.0, -1.0)
+    rect = min_area_rects(pts[:, 0], pts[:, 1], np.array([0, len(pts)]))
+    return RotatedRect(*(float(a[0]) for a in rect))
 
 
 def fill_polygon_mask(points: list[tuple[int, int]], bounds: Rect) -> np.ndarray:

@@ -11,6 +11,13 @@ Behavioral counterpart of ``ocrs/src/detection.rs``:
 - connected components -> simplify(eps=2) -> min-area rect ->
   expand each side by ``expand_dist`` (3.0) -> drop area < ``min_area``
   (100) (detection.rs:41-62,109-121).
+
+The last step runs as array passes over all components of the mask at
+once (``kernels.contours``): one labeling pass, a lockstep Moore walk of
+every outer contour that finishes its last few walks in a scalar loop,
+level-by-level Douglas-Peucker over every contour, and quickhull plus
+rotating calipers over every simplified contour. RotatedRect objects are
+built only for the rects that pass the area filter.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ import numpy as np
 
 from ..geometry import RotatedRect
 from ..models import Model
-from .contours import find_contours_external, min_area_rect, simplify_polyline
+from .contours import min_area_rects, simplify_polylines, trace_contours
 from .preprocess import BLACK_VALUE
 from .resize import resize_bilinear
 
@@ -31,16 +38,14 @@ EXPAND_DIST = 3.0
 def find_connected_component_rects(
     mask: np.ndarray, expand_dist: float, min_area: float
 ) -> list[RotatedRect]:
-    rects = []
-    for contour in find_contours_external(mask):
-        pts = simplify_polyline(contour, 2.0)
-        rect = min_area_rect(pts)
-        if rect is None:
-            continue
-        rect = rect.resize(rect.width + 2 * expand_dist, rect.height + 2 * expand_dist)
-        if rect.area() >= min_area:
-            rects.append(rect)
-    return rects
+    x, y, offsets = trace_contours(mask)
+    keep = simplify_polylines(x, y, offsets, 2.0)
+    kept_offsets = np.concatenate(([0], np.cumsum(keep)))[offsets]
+    cx, cy, ux, uy, w, h = min_area_rects(x[keep], y[keep], kept_offsets)
+    w = w + 2 * expand_dist
+    h = h + 2 * expand_dist
+    ok = w * h >= min_area
+    return [RotatedRect(*r) for r in zip(*(a[ok].tolist() for a in (cx, cy, ux, uy, w, h)))]
 
 
 class TextDetector:

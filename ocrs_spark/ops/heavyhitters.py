@@ -121,11 +121,14 @@ def mg_candidates(toks: DataFrame, k: int = K, n: DataFrame | None = None) -> Da
 
 def heavy_hitter_tokens(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
     """Exact (token, cnt) for every token with cnt * k > N — sketch
-    pass to bound the candidate set, exact pass to count it. The token
-    total comes from sum(size(tokens)) on the DOCUMENT rows — a codegen
-    projection, not a third explode of the corpus — and the exploded
-    stream exists exactly twice (sketch pass, exact pass), the
-    two-pass minimum the algorithm itself requires."""
+    pass to bound the candidate set, exact pass to count it. Each text
+    is split once into a token array; the arrays are materialized with
+    an eager localCheckpoint and read by three consumers: the sketch
+    pass and the exact pass each explode them, and the token total is
+    sum(size(tokens)) over them (a projection, not a third explode).
+    The checkpoint cuts lineage: losing an executor loses its blocks
+    and fails the job instead of recomputing them, and the whole
+    tokenized corpus must fit executor storage."""
     (docs,) = load_tables(spark, sf_dir, "documents")
     # r6: split each text exactly once. The token arrays are spread
     # (the sf corpora scan as ONE parquet partition) and checkpointed,

@@ -26,10 +26,12 @@ the relational glue around the UDF.
 from __future__ import annotations
 
 import re
+import threading
 from typing import Iterator
 
 import pandas as pd
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -237,9 +239,16 @@ def _parse_byte_size(value: str) -> int | None:
 # per session instead of one per pipeline invocation. Values are single
 # booleans (bounded); a snapshot change produces a different analyzed
 # plan, hence a fresh entry. This caches a PLANNING decision, never
-# query results.
+# query results. Staleness window: files rewritten in place under the
+# same path (no new snapshot or table version) analyze to the same plan,
+# so their decision stands until the application ends. A stale decision
+# picks the slower join (or broadcasts a table that grew past the
+# threshold); the joined rows are the same either way.
 _BROADCAST_DECISION_CACHE: dict[tuple, bool] = {}
 _BROADCAST_AGGS_RUN = 0  # instrumentation for the plan test
+# Held from the cache check to the cache write (and the counter), so two
+# threads deciding for the same table run one aggregate between them.
+_BROADCAST_LOCK = threading.Lock()
 
 
 def _media_fits_broadcast(media: DataFrame) -> bool:
@@ -250,7 +259,9 @@ def _media_fits_broadcast(media: DataFrame) -> bool:
     TB-scale media table kills the driver, while shuffle-joining a tiny
     one makes the big span table pay an Exchange it never needed. The
     deciding aggregate reads one column of the (already deduplicated-
-    by-nature) media table and is dwarfed by the OCR stage it gates."""
+    by-nature) media table and is dwarfed by the OCR stage it gates.
+    When the plan's semantic hash (a private JVM call) is unavailable,
+    the decision is made without the cache."""
     spark = media.sparkSession
     raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     thresh = _parse_byte_size(raw)
@@ -258,23 +269,28 @@ def _media_fits_broadcast(media: DataFrame) -> bool:
         thresh = 10 * 1024 * 1024
     if thresh <= 0:
         return False
-    key = (
-        spark.sparkContext.applicationId,
-        media._jdf.queryExecution().analyzed().semanticHash(),
-        thresh,
-    )
-    cached = _BROADCAST_DECISION_CACHE.get(key)
-    if cached is not None:
-        return cached
+    try:
+        key = (
+            spark.sparkContext.applicationId,
+            media._jdf.queryExecution().analyzed().semanticHash(),
+            thresh,
+        )
+    except (AttributeError, Py4JError):
+        key = None
     global _BROADCAST_AGGS_RUN
-    _BROADCAST_AGGS_RUN += 1
-    row = media.agg(
-        F.coalesce(F.sum(F.octet_length("bytes")), F.lit(0)).alias("b"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    overhead = 64  # hashed-relation per-row key/pointer overhead
-    fits = int(row.b) + overhead * int(row.n) <= thresh
-    _BROADCAST_DECISION_CACHE[key] = fits
+    with _BROADCAST_LOCK:
+        cached = _BROADCAST_DECISION_CACHE.get(key)
+        if cached is not None:
+            return cached
+        _BROADCAST_AGGS_RUN += 1
+        row = media.agg(
+            F.coalesce(F.sum(F.octet_length("bytes")), F.lit(0)).alias("b"),
+            F.count("*").alias("n"),
+        ).collect()[0]
+        overhead = 64  # hashed-relation per-row key/pointer overhead
+        fits = int(row.b) + overhead * int(row.n) <= thresh
+        if key is not None:
+            _BROADCAST_DECISION_CACHE[key] = fits
     return fits
 
 

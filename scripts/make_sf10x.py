@@ -8,8 +8,9 @@ Per-replica transforms (k = 0 keeps the originals):
 - documents: doc_id + 10M*k; every token suffixed '~k' so replicas
   share no vocabulary (near-dup/dedup ops scale by volume, not by
   fabricated cross-replica duplicates); n_chars recomputed.
-- embeddings: vec_id + 10M*k; the vector rolled by k positions
-  (norm/distribution preserved, cross-replica cosine decorrelated).
+- embeddings: vec_id + 10M*k; the vector rolled by k mod its dimension
+  (norm/distribution preserved, cross-replica cosine decorrelated as
+  long as the dimension exceeds K - 1).
 - events / TPC-H star: consistent key offsets per replica
   (orderkey/event_id +10M*k, custkey/partkey/user_id +1M*k,
   suppkey +100k*k); nation/region copied (dimension tables).
@@ -56,7 +57,10 @@ def main():
         else:
             embs.append(
                 f"SELECT vec_id + {10_000_000 * k} AS vec_id, "
-                f"(embedding[{k + 1}:] || embedding[1:{k}])::FLOAT[] AS embedding, label "
+                # roll by k mod the dimension: a slice past the end of a
+                # short vector would leave it unrolled
+                f"(embedding[({k} % len(embedding)) + 1:] || embedding[1:{k} % len(embedding)])::FLOAT[] "
+                "AS embedding, label "
                 f"FROM '{SRC}/embeddings.parquet'"
             )
     con.sql(f"COPY ({reps(embs)}) TO '{OUT}/embeddings.parquet' (FORMAT PARQUET)")

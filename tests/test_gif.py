@@ -171,6 +171,31 @@ def test_color_palette_expands_rgb():
     assert np.array_equal(out.reshape(-1, 3)[:, 2], (flat * 3) & 0xFF)
 
 
+def test_dispatcher_returns_hwc_for_grey_and_colour_palettes():
+    """decode_image hands both palette kinds on as HWC uint8, which the
+    OCR engine's input preparation accepts."""
+    from ocrs_spark import FakeDetectionModel, FakeRecognitionModel, OcrEngine, OcrEngineParams
+    from ocrs_spark.models import fake_alphabet
+
+    engine = OcrEngine(
+        OcrEngineParams(
+            detection_model=FakeDetectionModel(),
+            recognition_model=FakeRecognitionModel(),
+            alphabet=fake_alphabet(),
+        )
+    )
+    img = np.arange(20, dtype=np.uint8).reshape(4, 5)
+    grey = encode_gif(img)
+    colour = bytearray(grey)
+    for i in range(256):  # the 256-entry GCT at offset 13, made colour
+        colour[13 + 3 * i : 13 + 3 * i + 3] = bytes([i, 255 - i, (i * 3) & 0xFF])
+    for data, channels in ((grey, 1), (bytes(colour), 3)):
+        arr = decode_image(data)
+        assert arr.shape == (4, 5, channels) and arr.dtype == np.uint8
+        assert np.array_equal(arr[:, :, 0], img)
+        assert engine.prepare_input(arr).shape == (4, 5)
+
+
 def test_truncated_gif_raises_giferror():
     """Truncation anywhere in the block walk must surface as GifError
     (the quarantine contract), never IndexError/struct.error."""

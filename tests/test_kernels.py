@@ -10,7 +10,6 @@ import pytest
 
 from ocrs_spark.geometry import Line, Rect, RotatedRect, leftmost_edge, rightmost_edge
 from ocrs_spark.kernels.contours import (
-    convex_hull,
     fill_polygon_mask,
     find_contours_external,
     label_components,

@@ -267,6 +267,66 @@ def test_broadcast_decision_memoized(spark):
     assert P._BROADCAST_AGGS_RUN == before + 2, "distinct table must re-measure"
 
 
+def test_broadcast_decision_one_aggregate_under_concurrent_callers(spark):
+    """Threads deciding for the same table at once run one size
+    aggregate between them: the cache check, the aggregate and the
+    cache write are one critical section."""
+    import sys
+    import threading
+
+    from ocrs_spark import pipeline as P
+
+    media = spark.createDataFrame(
+        [("m1", bytearray(b"xyz"))], "media_ref string, bytes binary"
+    ).select("media_ref", "bytes")
+    P._BROADCAST_DECISION_CACHE.clear()
+    before = P._BROADCAST_AGGS_RUN
+    results = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: results.append(P._media_fits_broadcast(media)))
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert results == [True] * 8
+    assert P._BROADCAST_AGGS_RUN == before + 1
+
+
+def test_broadcast_decision_without_semantic_hash(spark, monkeypatch):
+    """When the private JVM semanticHash call fails, the decision is
+    still made, by its own aggregate each time, and nothing is cached."""
+    from py4j.protocol import Py4JError
+
+    from ocrs_spark import pipeline as P
+
+    media = spark.createDataFrame(
+        [("m1", bytearray(b"xx"))], "media_ref string, bytes binary"
+    ).select("media_ref", "bytes")
+    real = media._jdf
+
+    class _NoSemanticHash:
+        def __getattr__(self, name):
+            if name == "queryExecution":
+                raise Py4JError("queryExecution does not exist in the JVM")
+            return getattr(real, name)
+
+    monkeypatch.setattr(media, "_jdf", _NoSemanticHash())
+    P._BROADCAST_DECISION_CACHE.clear()
+    before = P._BROADCAST_AGGS_RUN
+    assert P._media_fits_broadcast(media) is True
+    assert P._media_fits_broadcast(media) is True
+    assert P._BROADCAST_AGGS_RUN == before + 2
+    assert P._BROADCAST_DECISION_CACHE == {}
+
+
 def test_quality_checks_pruned_profile_matches_full(spark):
     """data_quality_checks' pruned profile spec yields row-identical
     verdicts to deriving them from the full PROFILE_SPEC profile."""
