@@ -21,10 +21,12 @@ Everything the spec makes load-bearing is real:
   ``scan(snapshot_id=...)`` reads the table as of any retained snapshot.
 - **Atomic commits**: ``v<N>.metadata.json`` is published with the same
   exclusive-create CAS primitive the checkpoint layer uses (Iceberg's
-  HadoopTableOperations protocol): racing committers retry on the next
-  version, a crash mid-commit leaves the previous version live, and
-  ``version-hint.text`` is a best-effort pointer readers can fall back
-  from by listing the metadata directory.
+  HadoopTableOperations protocol): a racing append rebases onto the
+  winner and retries on the next version, any other losing commit
+  raises ``CommitConflictError``, a crash mid-commit leaves the
+  previous version live, and ``version-hint.text`` is a best-effort
+  pointer readers check forward from (or fall back from by listing the
+  metadata directory).
 - **Partition pruning**: the spec's partition transforms — identity,
   ``bucket[N]`` (murmur3_x86_32 per spec appendix B), ``truncate[W]``
   (int/long/string), and the epoch-anchored temporal transforms
@@ -70,6 +72,14 @@ from .avro_ocf import read_ocf, write_ocf
 from .checkpoint import _PosixIO
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# An append that loses the metadata-version race rebases onto the
+# winner's snapshot and retries, like ``DocumentCheckpoint.commit``.
+_APPEND_COMMIT_RETRIES = 32
+
+
+class CommitConflictError(RuntimeError):
+    """Another committer published a metadata version this table handle
+    has not seen; the commit was not applied."""
 
 
 # ---------------------------------------------------------------------------
@@ -571,7 +581,9 @@ class IcebergTable:
             "snapshot-log": [],
             "metadata-log": [],
         }
-        table = IcebergTable(location, metadata, version=0)
+        # version -1: the first commit publishes v0, and fails if a
+        # table already exists at ``location``
+        table = IcebergTable(location, metadata, version=-1)
         os.makedirs(f"{location}/metadata", exist_ok=True)
         os.makedirs(f"{location}/data", exist_ok=True)
         table._commit_metadata()
@@ -599,6 +611,10 @@ class IcebergTable:
             if not versions:
                 raise FileNotFoundError(f"no Iceberg metadata at {location}")
             version = max(versions)
+        # the hint is written after the version it names, so it lags
+        # behind a racing committer or one that died in between
+        while os.path.exists(f"{meta_dir}/v{version + 1}.metadata.json"):
+            version += 1
         with open(f"{meta_dir}/v{version}.metadata.json") as f:
             return IcebergTable(location, json.load(f), version)
 
@@ -726,23 +742,24 @@ class IcebergTable:
     # -- commit protocol ----------------------------------------------------
 
     def _commit_metadata(self) -> None:
-        """Publish self.metadata as the next version via exclusive-create
-        (HadoopTableOperations): losers of a version race re-read + retry
-        at the caller's level; the previous version file is never touched."""
+        """Publish self.metadata as version ``self.version + 1`` via
+        exclusive-create (HadoopTableOperations). Losing that race means
+        another committer published a version this handle has not seen:
+        raise ``CommitConflictError`` instead of publishing stale
+        metadata over their commit. The previous version file is never
+        touched; after a conflict, reload the table before retrying."""
         meta_dir = f"{self.location}/metadata"
-        next_version = self.version + (1 if self.metadata["snapshots"] or self.version else 0)
-        if self.version == 0 and not os.path.exists(
-            f"{meta_dir}/v0.metadata.json"
-        ):
-            next_version = 0
+        next_version = self.version + 1
         tmp = f"{meta_dir}/.tmp-{_uuid.uuid4().hex}.json"
         with open(tmp, "w") as f:
             json.dump(self.metadata, f, indent=1)
-        while True:
-            dst = f"{meta_dir}/v{next_version}.metadata.json"
-            if self._io.publish_exclusive(tmp, dst):
-                break
-            next_version += 1
+        dst = f"{meta_dir}/v{next_version}.metadata.json"
+        if not self._io.publish_exclusive(tmp, dst):
+            os.unlink(tmp)
+            raise CommitConflictError(
+                f"{dst} was published by another committer; this handle "
+                f"is based on version {self.version}"
+            )
         self.version = next_version
         # best-effort pointer; readers fall back to a directory listing
         hint_tmp = f"{meta_dir}/.hint-{_uuid.uuid4().hex}"
@@ -916,50 +933,6 @@ class IcebergTable:
 
         return self._data_manifest_from_entries(entries, snapshot_id, seq)
 
-    def commit_data_files(
-        self,
-        data_files: list[dict],
-        extra_summary: dict | None = None,
-        replace: bool = False,
-    ) -> int:
-        """Commit already-written parquet files as one snapshot —
-        append by default, full table replace with ``replace=True``.
-
-        This is the real Iceberg writer protocol surface: executor
-        tasks write data files and report back ``data_file`` dicts
-        (path, partition tuple, record count, size, per-field bounds),
-        and the driver performs a metadata-only commit — no data moves,
-        no footer re-reads. The Arrow data source writer
-        (``iceberg_source.IcebergArrowWriter``) feeds this from its
-        collected commit messages."""
-        if not data_files:
-            raise ValueError("commit_data_files: empty file list")
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
-        entries = [
-            {
-                "status": 1,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {**{"content": 0, "equality_ids": None}, **f},
-            }
-            for f in data_files
-        ]
-        manifest = self._data_manifest_from_entries(entries, snapshot_id, seq)
-        return self._commit_manifests(
-            [manifest],
-            operation="overwrite" if replace else "append",
-            summary={
-                "added-data-files": str(manifest["added_files_count"]),
-                "added-records": str(manifest["added_rows_count"]),
-                **(extra_summary or {}),
-            },
-            snapshot_id=snapshot_id,
-            seq=seq,
-            carry="none" if replace else "all",
-        )
-
     def _data_manifest_from_entries(
         self, entries: list[dict], snapshot_id: int, seq: int
     ) -> dict:
@@ -1056,80 +1029,102 @@ class IcebergTable:
         branch (write-audit-publish) — parented on the branch head (or
         main's head if the branch is new), invisible to default scans
         until ``fast_forward("main", branch)`` publishes it.
-        """
-        branch_ref = self.metadata.get("refs", {}).get(branch)
-        prev = (
-            branch_ref["snapshot-id"]
-            if branch_ref is not None
-            else self.current_snapshot_id()
-        )
-        carried: list[dict] = []
-        if prev is not None and carry != "none":
-            snap = next(
-                s for s in self.metadata["snapshots"] if s["snapshot-id"] == prev
-            )
-            carried, _ = read_ocf(snap["manifest-list"])
-            if carry == "deletes":
-                carried = [m for m in carried if m.get("content", 0) == 1]
-        manifests = list(new_manifests) + carried
-        mlist_path = (
-            f"{self.location}/metadata/snap-{snapshot_id}-{_uuid.uuid4().hex}.avro"
-        )
-        write_ocf(
-            mlist_path,
-            MANIFEST_LIST_SCHEMA,
-            manifests,
-            metadata={
-                "snapshot-id": str(snapshot_id),
-                "sequence-number": str(seq),
-                "format-version": "2",
-            },
-        )
 
-        # spec summary totals: live data-file records across the whole
-        # snapshot (added + existing per manifest; deleted entries are
-        # not live). Like Iceberg's, total-records counts data-file rows
-        # before merge-on-read delete application.
-        data_manifests = [m for m in manifests if m.get("content", 0) == 0]
-        del_manifests = [m for m in manifests if m.get("content", 0) == 1]
-        totals = {
-            "total-data-files": str(
-                sum(m["added_files_count"] + m["existing_files_count"] for m in data_manifests)
-            ),
-            "total-records": str(
-                sum(m["added_rows_count"] + m["existing_rows_count"] for m in data_manifests)
-            ),
-            "total-delete-files": str(
-                sum(m["added_files_count"] + m["existing_files_count"] for m in del_manifests)
-            ),
-        }
-        now = int(time.time() * 1000)
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "sequence-number": seq,
-            "timestamp-ms": now,
-            "manifest-list": mlist_path,
-            "summary": {"operation": operation, **totals, **summary},
-            "schema-id": self.metadata["current-schema-id"],
-        }
-        if prev is not None:
-            snapshot["parent-snapshot-id"] = prev
-        self.metadata["snapshots"].append(snapshot)
-        self.metadata["last-sequence-number"] = seq
-        self.metadata["last-updated-ms"] = now
-        self.metadata.setdefault("refs", {})[branch] = {
-            "snapshot-id": snapshot_id,
-            "type": "branch",
-        }
-        if branch == "main":
-            # spec: snapshot-log and current-snapshot-id track main only;
-            # staged branch commits stay invisible to default scans
-            self.metadata["snapshot-log"].append(
-                {"timestamp-ms": now, "snapshot-id": snapshot_id}
+        A commit that loses the metadata-version race never overwrites
+        the winner: an ``"append"`` rebases onto the table as reloaded
+        and retries, every other operation (its file set was planned
+        against the stale snapshot) raises ``CommitConflictError``.
+        """
+        for _ in range(_APPEND_COMMIT_RETRIES):
+            branch_ref = self.metadata.get("refs", {}).get(branch)
+            prev = (
+                branch_ref["snapshot-id"]
+                if branch_ref is not None
+                else self.current_snapshot_id()
             )
-            self.metadata["current-snapshot-id"] = snapshot_id
-        self._commit_metadata()
-        return snapshot_id
+            carried: list[dict] = []
+            if prev is not None and carry != "none":
+                snap = next(
+                    s for s in self.metadata["snapshots"] if s["snapshot-id"] == prev
+                )
+                carried, _ = read_ocf(snap["manifest-list"])
+                if carry == "deletes":
+                    carried = [m for m in carried if m.get("content", 0) == 1]
+            manifests = list(new_manifests) + carried
+            mlist_path = (
+                f"{self.location}/metadata/snap-{snapshot_id}-{_uuid.uuid4().hex}.avro"
+            )
+            write_ocf(
+                mlist_path,
+                MANIFEST_LIST_SCHEMA,
+                manifests,
+                metadata={
+                    "snapshot-id": str(snapshot_id),
+                    "sequence-number": str(seq),
+                    "format-version": "2",
+                },
+            )
+
+            # spec summary totals: live data-file records across the whole
+            # snapshot (added + existing per manifest; deleted entries are
+            # not live). Like Iceberg's, total-records counts data-file rows
+            # before merge-on-read delete application.
+            data_manifests = [m for m in manifests if m.get("content", 0) == 0]
+            del_manifests = [m for m in manifests if m.get("content", 0) == 1]
+            totals = {
+                "total-data-files": str(
+                    sum(m["added_files_count"] + m["existing_files_count"] for m in data_manifests)
+                ),
+                "total-records": str(
+                    sum(m["added_rows_count"] + m["existing_rows_count"] for m in data_manifests)
+                ),
+                "total-delete-files": str(
+                    sum(m["added_files_count"] + m["existing_files_count"] for m in del_manifests)
+                ),
+            }
+            now = int(time.time() * 1000)
+            snapshot = {
+                "snapshot-id": snapshot_id,
+                "sequence-number": seq,
+                "timestamp-ms": now,
+                "manifest-list": mlist_path,
+                "summary": {"operation": operation, **totals, **summary},
+                "schema-id": self.metadata["current-schema-id"],
+            }
+            if prev is not None:
+                snapshot["parent-snapshot-id"] = prev
+            self.metadata["snapshots"].append(snapshot)
+            self.metadata["last-sequence-number"] = seq
+            self.metadata["last-updated-ms"] = now
+            self.metadata.setdefault("refs", {})[branch] = {
+                "snapshot-id": snapshot_id,
+                "type": "branch",
+            }
+            if branch == "main":
+                # spec: snapshot-log and current-snapshot-id track main only;
+                # staged branch commits stay invisible to default scans
+                self.metadata["snapshot-log"].append(
+                    {"timestamp-ms": now, "snapshot-id": snapshot_id}
+                )
+                self.metadata["current-snapshot-id"] = snapshot_id
+            try:
+                self._commit_metadata()
+                return snapshot_id
+            except CommitConflictError:
+                os.remove(mlist_path)
+                if operation != "append":
+                    raise
+            # Fast append: rebase onto the winner — re-parent on the new
+            # branch head, re-carry its manifests, take the next seq.
+            fresh = IcebergTable.load(self.location)
+            self.metadata, self.version = fresh.metadata, fresh.version
+            seq = self.metadata["last-sequence-number"] + 1
+            for m in new_manifests:
+                m["sequence_number"] = m["min_sequence_number"] = seq
+        raise CommitConflictError(
+            f"append lost {_APPEND_COMMIT_RETRIES} consecutive commit races "
+            f"at {self.location}"
+        )
 
     # -- refs (tags / branches) ----------------------------------------------
 

@@ -1,53 +1,35 @@
-"""PySpark Python Data Source over ocrs_spark Iceberg tables.
+"""PySpark Python Data Source: a changelog stream over an Iceberg table.
 
-Registers format ``ocrs_iceberg`` (Spark 4 Python Data Source API), so
-the from-spec table layer plugs into the standard reader surfaces:
+Registers format ``ocrs_iceberg`` (Spark 4 Python Data Source API) as a
+Structured Streaming source over an ``ocrs_spark.iceberg`` table:
 
     spark.dataSource.register(IcebergDataSource)
-    spark.read.format("ocrs_iceberg").load(location)           # batch
-    spark.readStream.format("ocrs_iceberg").load(location)     # changelog
+    spark.readStream.format("ocrs_iceberg").load(location)
 
-The STREAMING reader is the point: offsets are the table's snapshot
-sequence numbers, so Structured Streaming's own offset log drives
-``plan_incremental_files`` — each micro-batch reads exactly the data
-files appended since the last committed offset, planning cost
-proportional to new data, exactly-once by the engine's offset/commit
-protocol. Splits are one InputPartition per data file, read
-executor-side with pyarrow, so a backlog catch-up parallelizes across
-the cluster instead of bottlenecking on the driver.
+Offsets are the table's snapshot sequence numbers, so Structured
+Streaming's own offset log drives ``plan_incremental_files``: each
+micro-batch reads exactly the data files appended since the last
+committed offset, planning cost is proportional to new data, and the
+engine's offset/commit protocol makes delivery exactly-once. Splits are
+one InputPartition per data file, read executor-side with pyarrow, so a
+backlog catch-up parallelizes across the cluster instead of
+bottlenecking on the driver.
 
-The BATCH reader exists for API parity and applies the same
-merge-on-read semantics as ``IcebergTable.scan`` per split (position
-deletes by (path, row index); equality deletes gated on data sequence
-numbers — the split-planning shape of Iceberg's DSv2 source, where each
-task receives its data file plus the delete files that may apply to
-it). For large batch scans prefer ``IcebergTable.scan``: it reads
-parquet on the JVM path with whole-stage codegen, while a Python data
-source necessarily crosses the Arrow boundary per batch.
+This is a stream source only. Batch reads go through
+``IcebergTable.scan`` (JVM parquet with whole-stage codegen, merge-on-
+read deletes, partition and bound pruning) and writes through
+``IcebergTable.append``: one read path and one write path per table.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
-    WriterCommitMessage,
 )
 
-from .iceberg import (
-    IcebergTable,
-    _spark_ddl,
-    bound_ordinal,
-    bucket_value,
-    serialize_bound,
-    transform_value,
-)
+from .iceberg import IcebergTable, _spark_ddl
 
 
 def _arrow_schema(spark_schema):
@@ -56,193 +38,52 @@ def _arrow_schema(spark_schema):
     return to_arrow_schema(spark_schema, timestamp_utc=True)
 
 
-def _identity_parts(table: IcebergTable) -> list[tuple[str, str, str]]:
-    """[(partition field name, source column, source iceberg type)] for
-    identity transforms across EVERY spec (partition evolution) — the
-    hive layout projects these out of the data files, so the reader
-    re-attaches them as per-split constants when the split's partition
-    tuple carries the field."""
+def _identity_parts(table: IcebergTable) -> list[tuple[str, str]]:
+    """[(partition field name, source column)] for identity transforms
+    across EVERY spec (partition evolution) — the hive layout projects
+    these out of the data files, so the reader re-attaches them as
+    per-split constants when the split's partition tuple carries the
+    field."""
     by_id = {f["id"]: f for f in table._schema()["fields"]}
     seen, out = set(), []
     for spec in table.metadata["partition-specs"]:
         for pf in spec["fields"]:
             if pf["transform"] == "identity" and pf["name"] not in seen:
-                src = by_id[pf["source-id"]]
                 seen.add(pf["name"])
-                out.append((pf["name"], src["name"], src["type"]))
+                out.append((pf["name"], by_id[pf["source-id"]]["name"]))
     return out
 
 
 def _split_of(f: dict) -> dict:
-    return {
-        "path": f["file_path"],
-        "partition": dict(f.get("partition") or {}),
-        "seq": int(f.get("_data_seq", 0)),
-    }
+    return {"path": f["file_path"], "partition": dict(f.get("partition") or {})}
 
 
-def _read_split(split: dict, identity, arrow_schema, pos_deletes, eq_deletes):
+def _read_split(split: dict, identity, arrow_schema):
     """Executor-side split read: parquet file -> arrow batches matching
-    the declared source schema, merge-on-read deletes applied."""
-    import numpy as np
+    the declared source schema."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(split["path"])
-
-    # position deletes: (file_path, pos) rows naming THIS file
-    if pos_deletes:
-        keep = np.ones(tbl.num_rows, dtype=bool)
-        hit = False
-        for dpath in pos_deletes:
-            d = pq.read_table(dpath, columns=["file_path", "pos"])
-            mask = pc.equal(d.column("file_path"), split["path"])
-            pos = d.filter(mask).column("pos").to_numpy(zero_copy_only=False)
-            if len(pos):
-                keep[pos[pos < tbl.num_rows]] = False
-                hit = True
-        if hit:
-            tbl = tbl.filter(pa.array(keep))
-
     # re-attach identity partition columns as constants, then align to
     # the declared schema (schema evolution: older files lack added
     # columns -> typed nulls; hive layout dropped identity sources)
     names = set(tbl.schema.names)
-    arrays, fields = [], []
+    arrays = []
     for field in arrow_schema:
         if field.name in names:
             arrays.append(tbl.column(field.name))
+            continue
+        const = None
+        for pname, src in identity:
+            if src == field.name:
+                const = split["partition"].get(pname)
+        if const is not None:
+            arrays.append(pa.array([const] * tbl.num_rows).cast(field.type))
         else:
-            const = None
-            for pname, src, _stype in identity:
-                if src == field.name:
-                    const = split["partition"].get(pname)
-            if const is not None:
-                arrays.append(pa.array([const] * tbl.num_rows).cast(field.type))
-            else:
-                arrays.append(pa.nulls(tbl.num_rows, type=field.type))
-        fields.append(field)
-    tbl = pa.table(dict(zip([f.name for f in fields], arrays)))
-
-    # equality deletes: key-match rows in files with LOWER data seq
-    for dpath, dseq, keys in eq_deletes:
-        if split["seq"] >= dseq or not keys:
-            continue
-        d = pq.read_table(dpath, columns=list(keys))
-        dead = set(zip(*[d.column(k).to_pylist() for k in keys]))
-        if not dead:
-            continue
-        rows = zip(*[tbl.column(k).to_pylist() for k in keys])
-        keep = pa.array([r not in dead for r in rows])
-        tbl = tbl.filter(keep)
-
-    tbl = tbl.cast(arrow_schema)
+            arrays.append(pa.nulls(tbl.num_rows, type=field.type))
+    tbl = pa.table(arrays, names=arrow_schema.names).cast(arrow_schema)
     yield from tbl.to_batches()
-
-
-class IcebergBatchReader(DataSourceReader):
-    """Batch reader with real filter pushdown: Spark hands the scan's
-    predicates to ``pushFilters``, which turns comparison filters into
-    source-column ranges; ``partitions()`` maps those ranges through
-    order-preserving partition transforms (plus exact bucket lookups)
-    and per-file column bounds, so only surviving files become splits.
-    Every filter is also returned to Spark for row-exact re-evaluation —
-    pruning here is file-granular, which is exactly Iceberg's contract."""
-
-    def __init__(self, location: str, spark_schema, snapshot_id: int | None):
-        table = IcebergTable.load(location)
-        self._location = location
-        self._snapshot_id = snapshot_id
-        self._identity = _identity_parts(table)
-        self._arrow_schema = _arrow_schema(spark_schema)
-        self._scalar_cols = {
-            f["name"]
-            for f in table._schema()["fields"]
-            if isinstance(f["type"], str)
-        }
-        self._ranges: dict[str, list] = {}  # col -> [lo | None, hi | None]
-
-    def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        for flt in filters:
-            attr = getattr(flt, "attribute", None)
-            if attr is not None and len(attr) == 1 and attr[0] in self._scalar_cols:
-                col, lo, hi = attr[0], None, None
-                if isinstance(flt, EqualTo):
-                    lo = hi = flt.value
-                elif isinstance(flt, (GreaterThan, GreaterThanOrEqual)):
-                    # strictness is irrelevant for file-granular pruning
-                    lo = flt.value
-                elif isinstance(flt, (LessThan, LessThanOrEqual)):
-                    hi = flt.value
-                elif isinstance(flt, In) and flt.value:
-                    try:
-                        lo, hi = min(flt.value), max(flt.value)
-                    except TypeError:
-                        lo = hi = None
-                if lo is not None or hi is not None:
-                    cur = self._ranges.setdefault(col, [None, None])
-                    if lo is not None and (cur[0] is None or lo > cur[0]):
-                        cur[0] = lo
-                    if hi is not None and (cur[1] is None or hi < cur[1]):
-                        cur[1] = hi
-            # partial pushdown: splits are pruned, rows are Spark's job
-            yield flt
-
-    def partitions(self):
-        table = IcebergTable.load(self._location)
-        part_filter: dict = {}
-        for name, src, transform, src_type in table._partition_columns():
-            r = self._ranges.get(src)
-            if r is None:
-                continue
-            lo, hi = r
-            if transform.startswith("bucket["):
-                # buckets are unordered: only an exact point maps through
-                if lo is not None and lo == hi:
-                    part_filter[name] = transform_value(lo, transform, src_type)
-                continue
-            part_filter[name] = (
-                transform_value(lo, transform, src_type) if lo is not None else None,
-                transform_value(hi, transform, src_type) if hi is not None else None,
-            )
-        bounds = {c: (r[0], r[1]) for c, r in self._ranges.items()}
-        files, deletes, _stats = table.plan_scan(
-            snapshot_id=self._snapshot_id,
-            partition_filter=part_filter or None,
-            bounds_filter=bounds or None,
-        )
-        pos = [d["file_path"] for d in deletes if d.get("content") == 1]
-        id_to_name = {f["id"]: f["name"] for f in table._schema()["fields"]}
-        eqs = [
-            (
-                d["file_path"],
-                int(d["_data_seq"]),
-                tuple(id_to_name[i] for i in (d.get("equality_ids") or ())),
-            )
-            for d in deletes
-            if d.get("content") == 2
-        ]
-        # delete descriptors ride inside each split so read() needs no
-        # reader state mutated after construction
-        return [
-            InputPartition({**_split_of(f), "pos": pos, "eq": eqs}) for f in files
-        ]
-
-    def read(self, partition):
-        s = partition.value
-        yield from _read_split(
-            s, self._identity, self._arrow_schema, s["pos"], s["eq"]
-        )
 
 
 class IcebergStreamReader(DataSourceStreamReader):
@@ -259,8 +100,7 @@ class IcebergStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self._initial == "latest":
-            t = IcebergTable.load(self._location)
-            return {"seq": int(t.metadata["last-sequence-number"])}
+            return self.latestOffset()
         return {"seq": 0}
 
     def latestOffset(self) -> dict:
@@ -278,230 +118,18 @@ class IcebergStreamReader(DataSourceStreamReader):
     def read(self, partition):
         if partition.value is None:
             return iter(())
-        return _read_split(
-            partition.value, self._identity, self._arrow_schema, [], []
-        )
+        return _read_split(partition.value, self._identity, self._arrow_schema)
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in the engine's offset/commit log
 
 
-@dataclass
-class IcebergCommitMessage(WriterCommitMessage):
-    """One task's report to the driver: the data_file dicts (path,
-    partition tuple, record count, size, per-field bounds) for every
-    file it wrote — the Iceberg writer protocol's DataFile payload."""
-
-    files: list = field(default_factory=list)
-
-
-def _partition_tuples(batch, parts):
-    """Vectorized partition-tuple computation for one Arrow batch:
-    returns a pandas DataFrame with one column per partition field."""
-    import pandas as pd
-
-    out = {}
-    for name, src, transform, src_type in parts:
-        s = batch.column(src).to_pandas()
-        if transform == "identity":
-            v = s
-        elif transform.startswith("bucket["):
-            n = int(transform[len("bucket[") : -1])
-            uniq = pd.Series(s.dropna().unique())
-            mapping = {u: bucket_value(u, src_type, n) for u in uniq}
-            v = s.map(mapping)
-        elif transform.startswith("truncate["):
-            w = int(transform[len("truncate[") : -1])
-            if src_type in ("int", "long"):
-                v = s - (s % w)  # pandas % is positive-remainder, per spec
-            else:
-                v = s.str.slice(0, w)
-        else:
-            ts = pd.to_datetime(s, utc=True)
-            if transform == "year":
-                v = ts.dt.year - 1970
-            elif transform == "month":
-                v = (ts.dt.year - 1970) * 12 + ts.dt.month - 1
-            else:
-                # timedelta floor-division is resolution-independent
-                # (arrow-backed series may be us, not ns) and rounds
-                # pre-1970 values toward -inf like the spec requires
-                delta = ts - pd.Timestamp(0, tz="UTC")
-                unit = pd.Timedelta(days=1) if transform == "day" else pd.Timedelta(hours=1)
-                v = delta // unit
-            v = v.where(~ts.isna(), other=None)
-        out[name] = v
-    return pd.DataFrame(out)
-
-
-def _file_stats(tbl, fields) -> dict:
-    """Per-field value/null counts + serialized min/max bounds for a
-    written pyarrow table — computed from the in-memory data the task
-    just wrote, no footer re-read."""
-    import pyarrow.compute as pc
-
-    values, nulls, lower, upper = [], [], [], []
-    names = set(tbl.schema.names)
-    for name, ftype, fid in fields:
-        if name not in names:
-            continue
-        col = tbl.column(name)
-        values.append({"key": fid, "value": len(tbl)})
-        nulls.append({"key": fid, "value": col.null_count})
-        if col.null_count == len(tbl):
-            continue
-        try:
-            mn = pc.min(col).as_py()
-            mx = pc.max(col).as_py()
-        except Exception:
-            continue
-        lo = serialize_bound(mn, ftype)
-        hi = serialize_bound(mx, ftype)
-        if lo is not None and hi is not None:
-            lower.append({"key": fid, "value": lo})
-            upper.append({"key": fid, "value": hi})
-    return {
-        "value_counts": values,
-        "null_value_counts": nulls,
-        "lower_bounds": lower,
-        "upper_bounds": upper,
-    }
-
-
-class IcebergArrowWriter(DataSourceArrowWriter):
-    """Arrow batch writer implementing the Iceberg write protocol:
-    each task groups its batches by partition tuple, writes one parquet
-    file per tuple, computes the file's stats from the data in hand,
-    and reports data_file dicts as its commit message; the driver's
-    ``commit`` turns the collected messages into ONE metadata-only
-    snapshot commit (``IcebergTable.commit_data_files``). A failed job
-    aborts by deleting the orphaned files — the table never saw them.
-
-    Files keep every column (including identity partition sources);
-    scans re-attach identity constants only when the column is missing,
-    so both layouts read identically. For bounded files-per-partition
-    at scale, repartition by the partition source columns first (the
-    writer is task-local, like Iceberg's fanout writer)."""
-
-    def __init__(self, location: str, parts, fields, overwrite: bool):
-        import uuid
-
-        self._location = location
-        self._parts = parts
-        self._fields = fields
-        self._overwrite = overwrite
-        self._write_id = uuid.uuid4().hex
-
-    def write(self, iterator):
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        groups: dict[tuple, list] = {}
-        for batch in iterator:
-            tbl = pa.Table.from_batches([batch])
-            if not self._parts:
-                groups.setdefault((), []).append(tbl)
-                continue
-            pf = _partition_tuples(batch, self._parts)
-            for key, idx in pf.groupby(
-                list(pf.columns), dropna=False, sort=False
-            ).indices.items():
-                if len(pf.columns) == 1:
-                    key = (key,)
-                groups.setdefault(key, []).append(tbl.take(idx))
-
-        task_id = uuid.uuid4().hex
-        data_dir = os.path.join(self._location, "data", self._write_id)
-        os.makedirs(data_dir, exist_ok=True)
-        files = []
-        for i, (key, chunks) in enumerate(groups.items()):
-            tbl = pa.concat_tables(chunks)
-            path = os.path.join(data_dir, f"{task_id}-{i:05d}.parquet")
-            pq.write_table(tbl, path)
-            partition = {}
-            for (name, _src, transform, src_type), raw in zip(self._parts, key):
-                if raw is None or raw != raw:  # NaN from pandas null keys
-                    partition[name] = None
-                elif isinstance(raw, float) and raw.is_integer():
-                    partition[name] = int(raw)  # pandas upcast int->float
-                elif hasattr(raw, "item"):
-                    partition[name] = raw.item()  # numpy scalar -> python
-                else:
-                    partition[name] = raw
-            files.append(
-                {
-                    "content": 0,
-                    "file_path": path,
-                    "file_format": "PARQUET",
-                    "partition": partition,
-                    "record_count": len(tbl),
-                    "file_size_in_bytes": os.path.getsize(path),
-                    "equality_ids": None,
-                    **_file_stats(tbl, self._fields),
-                }
-            )
-        return IcebergCommitMessage(files=files)
-
-    def commit(self, messages):
-        files = [f for m in messages if m is not None for f in m.files]
-        table = IcebergTable.load(self._location)
-        table.commit_data_files(files, replace=self._overwrite)
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                try:
-                    os.remove(f["file_path"])
-                except FileNotFoundError:
-                    pass
-
-
-class IcebergStreamArrowWriter(IcebergArrowWriter, DataSourceStreamArrowWriter):
-    """Streaming flavor: every epoch's collected files become one
-    epoch-stamped snapshot, and a replayed epoch (crash between the
-    table commit and the streaming commit log) is detected via the
-    stamp and skipped — assuming one streaming writer per table, which
-    the stamp's writer id makes explicit."""
-
-    def __init__(self, location: str, parts, fields, writer_id: str):
-        super().__init__(location, parts, fields, overwrite=False)
-        self._writer_id = writer_id
-
-    def commit(self, messages, batchId: int) -> None:
-        table = IcebergTable.load(self._location)
-        if table.last_streaming_batch(self._writer_id) >= batchId:
-            return  # replayed epoch: already committed atomically
-        files = [f for m in messages if m is not None for f in m.files]
-        if not files:
-            return
-        table.commit_data_files(
-            files,
-            extra_summary={
-                "streaming-query-id": self._writer_id,
-                "streaming-batch-id": str(batchId),
-            },
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        IcebergArrowWriter.abort(self, messages)
-
-
 class IcebergDataSource(DataSource):
-    """``format("ocrs_iceberg")``; options:
+    """``readStream.format("ocrs_iceberg")``; options:
 
     - ``path`` (via ``.load(location)``): table location
-    - ``snapshot_id`` (batch): time travel to a snapshot
-    - ``ref`` (batch): read a named tag/branch (dataset release)
-    - ``starting_position`` (stream): ``earliest`` (default, replay the
-      whole table as the first micro-batch) or ``latest`` (new commits
-      only)
+    - ``starting_position``: ``earliest`` (default, replay the whole
+      table as the first micro-batch) or ``latest`` (new commits only)
     """
 
     @classmethod
@@ -512,68 +140,9 @@ class IcebergDataSource(DataSource):
         table = IcebergTable.load(self.options["path"])
         return _spark_ddl(table._schema(), table._partition_columns())
 
-    def reader(self, schema) -> DataSourceReader:
-        sid = self.options.get("snapshot_id")
-        ref = self.options.get("ref")
-        if ref is not None:
-            if sid is not None:
-                raise ValueError("pass either snapshot_id or ref, not both")
-            sid = IcebergTable.load(self.options["path"]).snapshot_for_ref(ref)
-        return IcebergBatchReader(
-            self.options["path"], schema, int(sid) if sid is not None else None
-        )
-
     def streamReader(self, schema) -> DataSourceStreamReader:
         return IcebergStreamReader(
             self.options["path"],
             schema,
             self.options.get("starting_position", "earliest"),
-        )
-
-    def _table_for_write(self, schema) -> IcebergTable:
-        """Load the target table, creating it on first write (option
-        ``partition_by``: ``"col:transform,..."``, e.g.
-        ``"ts:day,user_id:bucket[8]"``)."""
-        location = self.options["path"]
-        try:
-            table = IcebergTable.load(location)
-        except FileNotFoundError:
-            partition_by = [
-                tuple(p.split(":", 1)) if ":" in p else (p, "identity")
-                for p in self.options.get("partition_by", "").split(",")
-                if p
-            ]
-            table = IcebergTable.create(
-                location, schema, partition_by=partition_by or None
-            )
-        table_cols = [f["name"] for f in table._schema()["fields"]]
-        if [f.name for f in schema.fields] != table_cols:
-            raise ValueError(
-                f"write schema {[f.name for f in schema.fields]} does not "
-                f"match table columns {table_cols}"
-            )
-        return table
-
-    def _writer_args(self, table: IcebergTable):
-        parts = table._partition_columns()
-        fields = [
-            (f["name"], f["type"], f["id"])
-            for f in table._schema()["fields"]
-            if isinstance(f["type"], str)
-        ]
-        return parts, fields
-
-    def writer(self, schema, overwrite: bool) -> DataSourceArrowWriter:
-        table = self._table_for_write(schema)
-        parts, fields = self._writer_args(table)
-        return IcebergArrowWriter(self.options["path"], parts, fields, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamArrowWriter:
-        table = self._table_for_write(schema)
-        parts, fields = self._writer_args(table)
-        return IcebergStreamArrowWriter(
-            self.options["path"],
-            parts,
-            fields,
-            self.options.get("writer_id", "ocrs-iceberg-stream-writer"),
         )

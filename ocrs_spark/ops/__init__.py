@@ -5,11 +5,14 @@ and ``ORACLES: dict[str, str]`` (DuckDB SQL producing identical rows,
 column names aliased to match; floats rounded identically on both sides
 so order-insensitive value hashes agree).
 
-``all_queries()`` / ``all_oracles()`` merge every module for
-``__spark_entry__``.
+``all_queries()`` / ``all_oracles()`` merge every module that exports
+them, found by listing this package, for ``__spark_entry__``.
 """
 
 from __future__ import annotations
+
+import importlib
+import pkgutil
 
 
 def load_tables(spark, sf_dir: str, *names: str):
@@ -34,267 +37,22 @@ def spread(df, min_partitions: int | None = None):
     return df
 
 
-def all_queries():
-    from . import (
-        alloc,
-        anchortext,
-        audio,
-        video,
-        bitext,
-        bloomskip,
-        chunking,
-        bootstrap,
-        bpe,
-        budget,
-        canonical,
-        captions,
-        cdc,
-        ccnet,
-        changepoint,
-        changerate,
-        classeval,
-        compaction,
-        cooccur,
-        countmin,
-        crawlplan,
-        dedup,
-        curastream,
-        dataorder,
-        datauri,
-        denoise,
-        doremi,
-        dpp,
-        dsir,
-        entropy,
-        joinsize,
-        kmv,
-        labelprop,
-        langseg,
-        semistruct,
-        setjoin,
-        sitemaps,
-        drift,
-        funnel,
-        gateeval,
-        gateorder,
-        gatewaterfall,
-        graphsample,
-        fuzzyjoin,
-        curation,
-        decontam,
-        dedupgraph,
-        gopher,
-        hllrollup,
-        heavyhitters,
-        hostrep,
-        hybrid,
-        icebergops,
-        imagededup,
-        imagemeta,
-        mediarouter,
-        increment,
-        ireval,
-        ivm,
-        linkgraph,
-        lshcal,
-        mailbox,
-        logreg,
-        lmscore,
-        mirrors,
-        mixture,
-        multimodal,
-        nbclassify,
-        negatives,
-        novelty,
-        ocreval,
-        officedoc,
-        outline,
-        packing,
-        percolate,
-        passagededup,
-        pdfmixed,
-        pii,
-        postings,
-        postingsize,
-        pq,
-        profiling,
-        quantiles,
-        quota,
-        relational,
-        retrieval,
-        reshard,
-        robust,
-        robotsops,
-        scd2,
-        semdedup,
-        shardexport,
-        similarity,
-        splits,
-        skew,
-        skewadvisor,
-        skyline,
-        streamrows,
-        substrdedup,
-        subtitles,
-        tables,
-        warehouse,
-        watermark,
-        wsample,
-        timeseries,
-        templates,
-        temporal,
-        texttile,
-        textstats,
-        trend,
-        trending,
-        triangles,
-        urlnorm,
-        urlpairs,
-        vocab,
-        vocabcurve,
-        urltemplates,
-        webarchive,
-        webdataset,
-        webdoc,
-        winnow,
-        zipf,
-        zorder,
-    )
-
-    out = {}
-    for mod in (relational, alloc, anchortext, audio, video, bitext, bloomskip, chunking, hllrollup, bootstrap, bpe, budget, canonical, captions, cdc, ccnet, changepoint, changerate, classeval, compaction, cooccur, countmin, gopher, lmscore, dedup, decontam, curation, curastream, dataorder, datauri, denoise, doremi, dpp, dsir, entropy, joinsize, kmv, semistruct, setjoin, sitemaps, drift, funnel, fuzzyjoin, gateeval, gateorder, gatewaterfall, graphsample, labelprop, langseg, heavyhitters, hybrid, ireval, dedupgraph, imagededup, imagemeta, mediarouter, increment, ivm, semdedup, nbclassify, negatives, similarity, skyline, textstats, trend, trending, mirrors, mixture, multimodal, novelty, zipf, skew, skewadvisor, pii, postings, postingsize, pq, ocreval, officedoc, outline, profiling, quantiles, quota, retrieval, reshard, robust, percolate, shardexport, packing, streamrows, substrdedup, subtitles, tables, passagededup, warehouse, watermark, wsample, timeseries, texttile, splits, hostrep, triangles, templates, temporal, scd2, webdoc, pdfmixed, webarchive, webdataset, icebergops, linkgraph, lshcal, mailbox, logreg, crawlplan, urlnorm, urlpairs, vocab, vocabcurve, urltemplates, robotsops, winnow, zorder):
-        out.update(mod.QUERIES)
+def _registry(attr: str) -> dict:
+    """Merge ``attr`` (``QUERIES`` or ``ORACLES``) across every module of
+    this package that exports it; a key defined twice is an error."""
+    out: dict = {}
+    for info in pkgutil.iter_modules(__path__):
+        mod = importlib.import_module(f"{__name__}.{info.name}")
+        for key, value in getattr(mod, attr, {}).items():
+            if key in out:
+                raise ValueError(f"{attr} key {key!r} is defined twice (in {info.name})")
+            out[key] = value
     return out
+
+
+def all_queries():
+    return _registry("QUERIES")
 
 
 def all_oracles():
-    from . import (
-        alloc,
-        anchortext,
-        audio,
-        video,
-        bitext,
-        bloomskip,
-        chunking,
-        bootstrap,
-        bpe,
-        budget,
-        canonical,
-        captions,
-        cdc,
-        ccnet,
-        changepoint,
-        changerate,
-        classeval,
-        compaction,
-        cooccur,
-        countmin,
-        crawlplan,
-        dedup,
-        curastream,
-        dataorder,
-        datauri,
-        denoise,
-        doremi,
-        dpp,
-        dsir,
-        entropy,
-        joinsize,
-        kmv,
-        labelprop,
-        langseg,
-        semistruct,
-        setjoin,
-        sitemaps,
-        drift,
-        funnel,
-        gateeval,
-        gateorder,
-        gatewaterfall,
-        graphsample,
-        fuzzyjoin,
-        curation,
-        decontam,
-        dedupgraph,
-        gopher,
-        hllrollup,
-        heavyhitters,
-        hostrep,
-        hybrid,
-        icebergops,
-        imagededup,
-        imagemeta,
-        mediarouter,
-        increment,
-        ireval,
-        ivm,
-        linkgraph,
-        lshcal,
-        mailbox,
-        logreg,
-        lmscore,
-        mirrors,
-        mixture,
-        multimodal,
-        nbclassify,
-        negatives,
-        novelty,
-        ocreval,
-        officedoc,
-        outline,
-        packing,
-        percolate,
-        passagededup,
-        pdfmixed,
-        pii,
-        postings,
-        postingsize,
-        pq,
-        profiling,
-        quantiles,
-        quota,
-        relational,
-        retrieval,
-        reshard,
-        robust,
-        robotsops,
-        scd2,
-        semdedup,
-        shardexport,
-        similarity,
-        splits,
-        skew,
-        skewadvisor,
-        skyline,
-        streamrows,
-        substrdedup,
-        subtitles,
-        tables,
-        warehouse,
-        watermark,
-        wsample,
-        timeseries,
-        templates,
-        temporal,
-        texttile,
-        textstats,
-        trend,
-        trending,
-        triangles,
-        urlnorm,
-        urlpairs,
-        vocab,
-        vocabcurve,
-        urltemplates,
-        webarchive,
-        webdataset,
-        webdoc,
-        winnow,
-        zipf,
-        zorder,
-    )
-
-    out = {}
-    for mod in (relational, alloc, anchortext, audio, video, bitext, bloomskip, chunking, hllrollup, bootstrap, bpe, budget, canonical, captions, cdc, ccnet, changepoint, changerate, classeval, compaction, cooccur, countmin, gopher, lmscore, dedup, decontam, curation, curastream, dataorder, datauri, denoise, doremi, dpp, dsir, entropy, joinsize, kmv, semistruct, setjoin, sitemaps, drift, funnel, fuzzyjoin, gateeval, gateorder, gatewaterfall, graphsample, labelprop, langseg, heavyhitters, hybrid, ireval, dedupgraph, imagededup, imagemeta, mediarouter, increment, ivm, semdedup, nbclassify, negatives, similarity, skyline, textstats, trend, trending, mirrors, mixture, multimodal, novelty, zipf, skew, skewadvisor, pii, postings, postingsize, pq, ocreval, officedoc, outline, profiling, quantiles, quota, retrieval, reshard, robust, percolate, shardexport, packing, streamrows, substrdedup, subtitles, tables, passagededup, warehouse, watermark, wsample, timeseries, texttile, splits, hostrep, triangles, templates, temporal, scd2, webdoc, pdfmixed, webarchive, webdataset, icebergops, linkgraph, lshcal, mailbox, logreg, crawlplan, urlnorm, urlpairs, vocab, vocabcurve, urltemplates, robotsops, winnow, zorder):
-        out.update(mod.ORACLES)
-    return out
+    return _registry("ORACLES")

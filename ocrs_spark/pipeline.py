@@ -299,69 +299,59 @@ def ocr_image_spans(
     media: DataFrame,
     engine_conf: dict,
     partitions: int | None = None,
-    broadcast_media: bool | None = None,
-    dedup_media: bool = True,
 ) -> DataFrame:
     """Run OCR over the image spans. Returns
     (doc_id, offset, ocr_text, n_words, n_lines, error).
 
-    With ``dedup_media`` (default), each distinct ``media_ref`` is OCR'd
-    exactly once and the result is joined back to the referencing spans —
-    at corpus scale the same image is commonly referenced by many
-    documents, and model inference dwarfs the join. The unit of scheduled
-    work becomes one unique image, which also flattens doc-level skew.
+    Each distinct ``media_ref`` is OCR'd exactly once and the result is
+    joined back to the referencing spans — at corpus scale the same
+    image is commonly referenced by many documents, and model inference
+    dwarfs the join. The unit of scheduled work becomes one unique
+    image, which also flattens doc-level skew.
 
-    ``broadcast_media=None`` (default) measures the media payload and
-    broadcasts only when it fits the session's broadcast threshold —
-    a corpus-scale media table falls back to the hash join + skew-salted
-    repartition automatically instead of relying on a caller flag.
+    The media payload is measured and broadcast only when it fits the
+    session's broadcast threshold — a corpus-scale media table falls
+    back to the hash join + skew-salted repartition automatically.
     """
     work = spans.filter(F.col("kind").isin(*MEDIA_KINDS)).select(
         "doc_id", "offset", "media_ref"
     )
     m = media.select("media_ref", "bytes")
-    if broadcast_media is None:
-        broadcast_media = _media_fits_broadcast(m)
-    if broadcast_media:
+    media_fits = _media_fits_broadcast(m)
+    if media_fits:
         m = F.broadcast(m)
     spark = work.sparkSession
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
 
-    if dedup_media:
-        uniq = (
-            work.select("media_ref")
-            .distinct()
-            .join(m, "media_ref", "left")
-            # Skew break: spread unique images uniformly; the OCR UDF keys
-            # on media_ref here and results fan back out via the join.
-            .repartition(partitions, F.xxhash64("media_ref"))
-            .withColumnRenamed("media_ref", "doc_id")  # reuse UDF schema slot
-            .withColumn("offset", F.lit(0))
-        )
-        per_media = uniq.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
-        per_media = per_media.select(
-            F.col("doc_id").alias("media_ref"),
-            "ocr_text",
-            "n_words",
-            "n_lines",
-            "error",
-        )
-        # Fan the per-unique-image results back out to the referencing
-        # spans. The result rows are strictly smaller than the media
-        # rows (text + counts, no pixels), so whenever the media side
-        # was broadcastable the results are too — broadcast them and the
-        # big span table never shuffles for this join.
-        if broadcast_media:
-            per_media = F.broadcast(per_media)
-        return work.join(per_media, "media_ref", "left").select(
-            "doc_id", "offset", "ocr_text", "n_words", "n_lines", "error"
-        )
-
-    work = work.join(m, "media_ref", "left").select("doc_id", "offset", "bytes")
-    # Skew break: spread one doc's many images across all partitions.
-    work = work.repartition(partitions, F.xxhash64("doc_id", "offset"))
-    return work.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
+    uniq = (
+        work.select("media_ref")
+        .distinct()
+        .join(m, "media_ref", "left")
+        # Skew break: spread unique images uniformly; the OCR UDF keys
+        # on media_ref here and results fan back out via the join.
+        .repartition(partitions, F.xxhash64("media_ref"))
+        .withColumnRenamed("media_ref", "doc_id")  # reuse UDF schema slot
+        .withColumn("offset", F.lit(0))
+    )
+    per_media = uniq.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
+    per_media = per_media.select(
+        F.col("doc_id").alias("media_ref"),
+        "ocr_text",
+        "n_words",
+        "n_lines",
+        "error",
+    )
+    # Fan the per-unique-image results back out to the referencing
+    # spans. The result rows are strictly smaller than the media rows
+    # (text + counts, no pixels), so whenever the media side was
+    # broadcastable the results are too — broadcast them and the big
+    # span table never shuffles for this join.
+    if media_fits:
+        per_media = F.broadcast(per_media)
+    return work.join(per_media, "media_ref", "left").select(
+        "doc_id", "offset", "ocr_text", "n_words", "n_lines", "error"
+    )
 
 
 def reweave(spans: DataFrame, ocr_results: DataFrame) -> DataFrame:
@@ -405,16 +395,12 @@ def ocr_documents(
     media: DataFrame,
     engine_conf: dict | None = None,
     partitions: int | None = None,
-    broadcast_media: bool | None = None,
 ) -> DataFrame:
     """Full pipeline: documents + media -> documents with image spans
-    OCR'd, span order restored by offset. ``broadcast_media=None``
-    sizes the media payload and picks the fan-out strategy itself."""
+    OCR'd, span order restored by offset."""
     engine_conf = engine_conf or {"kind": "fake"}
     spans = explode_spans(documents)
-    results = ocr_image_spans(
-        spans, media, engine_conf, partitions=partitions, broadcast_media=broadcast_media
-    )
+    results = ocr_image_spans(spans, media, engine_conf, partitions=partitions)
     return reweave(spans, results)
 
 

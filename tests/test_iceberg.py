@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocrs_spark.iceberg import (
+    CommitConflictError,
     IcebergDocumentSink,
     IcebergTable,
     bucket_value,
@@ -386,15 +387,6 @@ def test_partition_spec_evolution_identity_and_maintenance(spark, docs, tmp_path
     )
     assert after.count() == docs.count() - b.filter("lang = 'en'").count()
 
-    # the data source agrees with the JVM scan across mixed specs
-    from ocrs_spark.iceberg_source import IcebergDataSource
-
-    spark.dataSource.register(IcebergDataSource)
-    via = spark.read.format("ocrs_iceberg").load(loc)
-    assert {tuple(r) for r in via.select("doc_id", "lang").collect()} == {
-        tuple(r) for r in after.select("doc_id", "lang").collect()
-    }
-
     # compaction rewrites everything under the current spec: afterwards
     # every file carries the lang field and pruning is total
     t.compact(spark)
@@ -493,15 +485,6 @@ def test_refs_tag_pin_and_expiry_survival(spark, docs, tmp_path):
     assert t.scan(spark, ref="train-v1").count() == first_count
     assert t.scan(spark).count() == docs.count()
 
-    # data source reads the tag by name
-    from ocrs_spark.iceberg_source import IcebergDataSource
-
-    spark.dataSource.register(IcebergDataSource)
-    via_source = (
-        spark.read.format("ocrs_iceberg").option("ref", "train-v1").load(t.location)
-    )
-    assert via_source.count() == first_count
-
     t.drop_ref("train-v1")
     t = IcebergTable.load(t.location)
     assert "train-v1" not in t.refs()
@@ -526,6 +509,50 @@ def test_commit_cas_survives_version_race(spark, docs, tmp_path):
     assert t.version == current + 2
     assert open(squatter).read() == squatted
     assert IcebergTable.load(t.location).version == current + 2
+
+
+def test_concurrent_stale_appends_keep_both_snapshots(spark, docs, tmp_path):
+    """Two handles load the same version; both append. The loser of the
+    metadata-version race rebases onto the winner's snapshot instead of
+    publishing its stale metadata over it: both snapshots and all rows
+    survive, and the loser is parented on the winner."""
+    t = _fresh_table(docs, tmp_path, None)
+    t.append(docs.filter("doc_id < 50"))
+    a = IcebergTable.load(t.location)
+    b = IcebergTable.load(t.location)
+    sa = a.append(docs.filter("doc_id >= 50 and doc_id < 53"))
+    sb = b.append(docs.filter("doc_id >= 53 and doc_id < 58"))
+    assert b.version == a.version + 1
+
+    final = IcebergTable.load(t.location)
+    snaps = final.snapshots()
+    assert [s["snapshot-id"] for s in snaps][-2:] == [sa, sb]
+    assert snaps[-1]["parent-snapshot-id"] == sa
+    assert [s["sequence-number"] for s in snaps] == [1, 2, 3]
+    assert final.scan(spark).count() == docs.filter("doc_id < 58").count()
+    assert int(snaps[-1]["summary"]["total-records"]) == docs.filter(
+        "doc_id < 58"
+    ).count()
+    # the loser's changelog window is still exactly its own files
+    assert sum(f["record_count"] for f in final.plan_incremental_files(2, 3)) == 5
+
+
+def test_stale_non_append_commit_raises(spark, docs, tmp_path):
+    """A commit other than an append planned its file set against the
+    snapshot it loaded: after losing the race it raises instead of
+    overwriting the winner, and the winner's data stays live."""
+    t = _fresh_table(docs, tmp_path, None)
+    t.append(docs.filter("doc_id < 50"))
+    stale = [IcebergTable.load(t.location) for _ in range(2)]
+    IcebergTable.load(t.location).append(docs.filter("doc_id >= 50 and doc_id < 60"))
+    with pytest.raises(CommitConflictError):
+        stale[0].delete_where(spark, "doc_id < 10")
+    with pytest.raises(CommitConflictError):
+        stale[1].create_ref("release")
+    final = IcebergTable.load(t.location)
+    assert len(final.snapshots()) == 2
+    assert "release" not in final.refs()
+    assert final.scan(spark).count() == docs.filter("doc_id < 60").count()
 
 
 def test_stale_version_hint_falls_back_to_listing(spark, docs, tmp_path):

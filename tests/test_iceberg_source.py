@@ -1,6 +1,5 @@
-"""Python Data Source (format "ocrs_iceberg") tests: batch reads with
-merge-on-read deletes, time travel, and the changelog streaming source
-driven by Structured Streaming's own offset log."""
+"""Python Data Source (format "ocrs_iceberg") tests: the changelog
+streaming source driven by Structured Streaming's own offset log."""
 
 from __future__ import annotations
 
@@ -19,257 +18,34 @@ def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
 
 
-def test_batch_read_matches_scan(spark, docs, tmp_path):
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, docs.schema, partition_by=[("lang", "identity")])
-    t.append(docs)
-    got = spark.read.format("ocrs_iceberg").load(loc)
-    assert got.schema == spark.read.parquet(f"{SF}/documents.parquet").select(
-        *got.columns
-    ).schema
-    assert got.count() == docs.count()
-    # identity partition column re-attached per split
-    assert {r["lang"] for r in got.select("lang").distinct().collect()} == {
-        r["lang"] for r in docs.select("lang").distinct().collect()
-    }
-    a = {tuple(r) for r in got.select("doc_id", "lang", "n_chars").collect()}
-    b = {tuple(r) for r in docs.select("doc_id", "lang", "n_chars").collect()}
-    assert a == b
-
-
-def test_batch_read_applies_row_level_deletes(spark, docs, tmp_path):
-    """Position deletes (delete_where) and equality deletes (upsert)
-    must be applied per split, matching the JVM-path scan exactly."""
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, docs.schema)
-    t.append(docs)
-    t = IcebergTable.load(loc)
-    t.delete_where(spark, "doc_id % 10 = 3")
-    t = IcebergTable.load(loc)
-    src = docs.filter("doc_id % 10 = 4").withColumn(
-        "text", F.concat(F.lit("UPD:"), F.col("text"))
-    )
-    t.upsert(spark, src, ["doc_id"])
-    t = IcebergTable.load(loc)
-
-    got = spark.read.format("ocrs_iceberg").load(loc)
-    want = t.scan(spark)
-    assert got.count() == want.count()
-    assert got.filter("doc_id % 10 = 3").count() == 0
-    assert got.filter("text like 'UPD:%'").count() == docs.filter(
-        "doc_id % 10 = 4"
-    ).count()
-    a = {tuple(r) for r in got.select("doc_id", "text").collect()}
-    b = {tuple(r) for r in want.select("doc_id", "text").collect()}
-    assert a == b
-
-
-def test_batch_read_time_travel(spark, docs, tmp_path):
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, docs.schema)
-    first = t.append(docs.filter("doc_id < 100"))
-    t = IcebergTable.load(loc)
-    t.append(docs.filter("doc_id >= 100"))
-    got = (
-        spark.read.format("ocrs_iceberg")
-        .option("snapshot_id", str(first))
-        .load(loc)
-    )
-    assert got.count() == docs.filter("doc_id < 100").count()
-
-
-def test_pushdown_prunes_splits_day_partitioned(spark, tmp_path):
-    """Filter pushdown: a ts range predicate on the source column must
-    reach pushFilters and prune the day-partitioned splits (observable
-    as fewer scan partitions), while staying row-exact."""
-    import datetime as dt
-
-    spark.dataSource.register(IcebergDataSource)
-    events = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select("event_id", "user_id", "ts", "value")
-    )
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, events.schema, partition_by=[("ts", "day")])
-    t.append(events)
-    t = IcebergTable.load(loc)
-    n_files = t.plan_files()[1]["files_total"]
-
-    day = events.select(F.to_date("ts").alias("d")).first()["d"]
-    lo = dt.datetime(day.year, day.month, day.day)
-    hi = lo + dt.timedelta(days=1) - dt.timedelta(seconds=1)
-
-    full = spark.read.format("ocrs_iceberg").load(loc)
-    assert full.rdd.getNumPartitions() == n_files
-    pruned = (
-        spark.read.format("ocrs_iceberg")
-        .load(loc)
-        .filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
-    )
-    assert pruned.rdd.getNumPartitions() < n_files
-    want = events.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
-    assert pruned.count() == want.count() > 0
-    assert {r["event_id"] for r in pruned.collect()} == {
-        r["event_id"] for r in want.collect()
-    }
-
-
-def test_pushdown_bucket_point_lookup_and_bounds(spark, docs, tmp_path):
-    """An equality predicate maps through bucket[N] to one bucket's
-    files; on an unpartitioned table the same predicate still prunes
-    via per-file column bounds from disjoint appends."""
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, docs.schema, partition_by=[("doc_id", "bucket[8]")])
-    t.append(docs)
-    t = IcebergTable.load(loc)
-    n_files = t.plan_files()[1]["files_total"]
-    hit = spark.read.format("ocrs_iceberg").load(loc).filter("doc_id = 42")
-    assert hit.rdd.getNumPartitions() < n_files
-    assert hit.count() == 1
-
-    loc2 = str(tmp_path / "tbl2")
-    t2 = IcebergTable.create(loc2, docs.schema)
-    t2.append(docs.filter("doc_id < 100").coalesce(1))
-    IcebergTable.load(loc2).append(docs.filter("doc_id >= 100").coalesce(1))
-    t2 = IcebergTable.load(loc2)
-    n2 = t2.plan_files()[1]["files_total"]
-    low = spark.read.format("ocrs_iceberg").load(loc2).filter("doc_id <= 50")
-    assert low.rdd.getNumPartitions() < n2
-    assert low.count() == docs.filter("doc_id <= 50").count()
-
-
-def test_arrow_writer_append_partitioned(spark, docs, tmp_path):
-    """df.write.format('ocrs_iceberg'): executors write one parquet per
-    partition tuple and report stats; the driver commit is metadata-
-    only. Round-trips through both scan paths, prunes by partition, and
-    records real column bounds."""
-    loc = str(tmp_path / "tbl")
-    (
-        docs.repartition("lang")
-        .write.format("ocrs_iceberg")
-        .option("partition_by", "lang")
-        .mode("append")
-        .save(loc)
-    )
-    t = IcebergTable.load(loc)
-    files, stats = t.plan_files()
-    n_langs = docs.select("lang").distinct().count()
-    assert stats["files_total"] == n_langs  # repartitioned: 1 file/lang
-    assert t.scan(spark).count() == docs.count()
-
-    # identity source column is inside the files AND prunable by tuple
-    en = t.scan(spark, partition_filter={"lang": "en"})
-    assert en.count() == docs.filter("lang = 'en'").count()
-    got = {tuple(r) for r in spark.read.format("ocrs_iceberg").load(loc)
-           .select("doc_id", "lang", "n_chars").collect()}
-    want = {tuple(r) for r in docs.select("doc_id", "lang", "n_chars").collect()}
-    assert got == want
-
-    # executor-computed bounds enable file pruning on doc_id
-    _, bstats = t.plan_files(bounds_filter={"doc_id": (0, 10)})
-    assert 0 < bstats["files_selected"] <= bstats["files_total"]
-
-    # second append + overwrite truncates to the last write
-    docs.limit(7).write.format("ocrs_iceberg").mode("append").save(loc)
-    t = IcebergTable.load(loc)
-    assert t.scan(spark).count() == docs.count() + 7
-    docs.limit(3).write.format("ocrs_iceberg").mode("overwrite").save(loc)
-    t = IcebergTable.load(loc)
-    assert t.scan(spark).count() == 3
-    # history stays time-travelable
-    prev = t.snapshots()[-2]["snapshot-id"]
-    assert t.scan(spark, snapshot_id=prev).count() == docs.count() + 7
-
-
-def test_arrow_writer_day_partitioned_prunes(spark, docs, tmp_path):
-    import datetime as dt
-
-    events = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select("event_id", "user_id", "ts", "value")
-    )
-    loc = str(tmp_path / "tbl")
-    (
-        events.write.format("ocrs_iceberg")
-        .option("partition_by", "ts:day")
-        .mode("append")
-        .save(loc)
-    )
-    t = IcebergTable.load(loc)
-    assert t.scan(spark).count() == events.count()
-    day = events.select(F.to_date("ts").alias("d")).first()["d"]
-    lo = dt.datetime(day.year, day.month, day.day)
-    hi = lo + dt.timedelta(days=1) - dt.timedelta(seconds=1)
-    got = t.scan_range(spark, "ts", lo, hi)
-    want = events.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
-    assert got.count() == want.count() > 0
-    _, stats = t.plan_files(
-        partition_filter={
-            "ts_day": transform_value_day(day)
-        }
-    )
-    assert 0 < stats["files_selected"] < stats["files_total"]
-
-
-def transform_value_day(d):
-    from ocrs_spark.iceberg import transform_value
-
-    return transform_value(d, "day", "timestamptz")
-
-
-def test_stream_writer_epoch_commits(spark, docs, tmp_path):
-    """writeStream.format('ocrs_iceberg'): each epoch is one stamped
-    snapshot; restarts from the checkpoint only commit new epochs."""
-    in_dir = str(tmp_path / "in")
-    loc = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    h1 = docs.filter("doc_id % 2 = 0")
-    h2 = docs.filter("doc_id % 2 = 1")
-    h1.write.mode("append").parquet(in_dir)
-    schema = docs.schema
-
-    def run():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(in_dir)
-            .writeStream.format("ocrs_iceberg")
-            .option("path", loc)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    run()
-    t = IcebergTable.load(loc)
-    assert t.scan(spark).count() == h1.count()
-    h2.write.mode("append").parquet(in_dir)
-    run()
-    t = IcebergTable.load(loc)
-    result = t.scan(spark)
-    assert result.count() == docs.count()
-    assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
-    stamps = sorted(
-        int(s["summary"]["streaming-batch-id"]) for s in t.snapshots()
-    )
-    assert stamps == [0, 1]
-    run()  # idle restart: no new snapshot
-    assert len(IcebergTable.load(loc).snapshots()) == 2
-
-
 def test_stream_changelog_incremental_exactly_once(spark, docs, tmp_path):
     """Offsets are snapshot sequence numbers: each availableNow run
     drains exactly the snapshots committed since the checkpoint's last
     offset; a no-op restart reads nothing."""
+    _stream_two_appends(spark, docs, tmp_path, "plain")
+
+
+@pytest.mark.parametrize("layout", ["identity_partitioned", "added_column"])
+def test_stream_changelog_layouts_match_scan(spark, docs, tmp_path, layout):
+    """Whatever the file layout, the stream delivers the rows
+    ``IcebergTable.scan`` reads: identity partition columns (projected
+    out of hive-layout files) come back as per-split constants, and
+    files written before ``add_column`` give typed nulls for it."""
+    _stream_two_appends(spark, docs, tmp_path, layout)
+
+
+def _stream_two_appends(spark, docs, tmp_path, layout):
     loc = str(tmp_path / "tbl")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     h1 = docs.filter("doc_id % 2 = 0")
     h2 = docs.filter("doc_id % 2 = 1")
-    t = IcebergTable.create(loc, docs.schema)
+    partition_by = [("lang", "identity")] if layout == "identity_partitioned" else None
+    t = IcebergTable.create(loc, docs.schema, partition_by=partition_by)
     t.append(h1)
+    if layout == "added_column":
+        IcebergTable.load(loc).add_column("quality", "double")
+        h2 = h2.withColumn("quality", F.col("n_chars").cast("double") / 7)
 
     def run():
         q = (
@@ -292,6 +68,17 @@ def test_stream_changelog_incremental_exactly_once(spark, docs, tmp_path):
     assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
     run()  # nothing new committed -> nothing read
     assert spark.read.parquet(out).count() == docs.count()
+
+    want = IcebergTable.load(loc).scan(spark)
+    cols = want.columns
+    assert sorted(result.columns) == sorted(cols)
+    assert {tuple(r) for r in result.select(*cols).collect()} == {
+        tuple(r) for r in want.collect()
+    }
+    if layout == "identity_partitioned":
+        assert result.filter("lang is null").count() == 0
+    if layout == "added_column":
+        assert result.filter("quality is null").count() == h1.count()
 
 
 def test_stream_starting_position_latest(spark, docs, tmp_path):

@@ -85,7 +85,7 @@ def test_ocr_results_fan_out_via_broadcast(spark):
 
 
 def test_media_broadcast_decision_is_size_aware(spark):
-    """broadcast_media=None measures the payload: tiny media broadcasts
+    """ocr_image_spans measures the payload: tiny media broadcasts
     (previous test), while media over the session threshold must fall
     back to the shuffle join — at corpus scale the media table is TBs
     and force-broadcasting it would kill the driver."""
