@@ -5,20 +5,32 @@ jar in this sandbox; the layout mirrors Iceberg's table/snapshot/manifest
 split so swapping in real Iceberg is a sink change, not a redesign):
 
     <root>/
-      data/<run_id>/part-*.parquet      committed result spans per run
-      ledger/<run_id>/part-*.parquet    committed doc_ids per run (lineage)
+      data/<run_id>/part-*.parquet      committed documents per run, one
+                                        row per doc_id
       metrics/<run_id>.json             per-run extraction metrics
       manifest-<n>.json                 ordered snapshot list, version n
                                         (readers take the highest n; a run
                                         is visible iff its snapshot entry
                                         is in the current manifest)
 
-Resume = LEFT ANTI JOIN of incoming documents against the committed
-ledger, so a killed run restarts from the last committed snapshot and
-never re-processes or duplicates a document.
+Resume = LEFT ANTI JOIN of incoming documents against the ``doc_id``
+column of the committed ``data/<run_id>`` directories, read with an
+explicit schema (parquet reads one column, no schema-inference job), so
+a killed run restarts from the last committed snapshot and never
+re-processes or duplicates a document. A ``data/<run_id>`` directory
+that no manifest names (a run killed before its publish) is invisible.
+Tables written by older versions may also hold ``ledger/<run_id>``
+directories, which repeated the ``doc_id`` column; nothing reads them.
+
+A ``run_checkpointed`` pass is one Spark write job followed by the
+manifest compare-and-swap. Its metrics come from ``observe()`` on that
+job: ``spans``, ``errors`` (and ``errors_decode``/``errors_detect``/
+``errors_ocr`` by the stage prefix of the error text), ``total_words``
+and ``total_lines`` over the OCR results, and ``docs``, the number of
+rows written, which is the number of documents in the snapshot.
 
 The checkpoint root may be any Hadoop-supported URI (``hdfs://``,
-``s3a://``, ``file://``, ...): the parquet data/ledger writes always go
+``s3a://``, ``file://``, ...): the parquet data writes always go
 through Spark, and the manifest/metrics I/O is routed through the
 Hadoop FileSystem API whenever the root carries a scheme, so a cluster
 of drivers sees one shared manifest (a bare local path keeps plain
@@ -48,11 +60,16 @@ import re
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .pipeline import (
+    EXTRACTION_COUNTS,
+    broadcast_threshold,
     explode_spans,
-    extraction_metrics,
+    fits_broadcast,
+    observe_extraction,
+    observed,
     ocr_image_spans,
     reweave,
 )
@@ -98,6 +115,14 @@ class _PosixIO:
         import shutil
 
         shutil.rmtree(path, ignore_errors=True)
+
+    def size(self, path: str) -> int:
+        """Bytes of all files under directory ``path``."""
+        return sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(path)
+            for f in files
+        )
 
     def publish_exclusive(self, src: str, dst: str) -> bool:
         """Atomically publish src as dst iff dst does not exist.
@@ -162,6 +187,9 @@ class _HadoopIO:
 
     def delete_dir(self, path: str) -> None:
         self._fs.delete(self._p(path), True)
+
+    def size(self, path: str) -> int:
+        return int(self._fs.getContentSummary(self._p(path)).getLength())
 
     def publish_exclusive(self, src: str, dst: str) -> bool:
         """Publish src as dst iff dst does not exist.
@@ -240,11 +268,19 @@ class DocumentCheckpoint:
 
     # ------------------------------------------------------------ reads
 
-    def committed_doc_ids(self, spark: SparkSession) -> DataFrame:
-        paths = [self._join("ledger", s["run_id"]) for s in self.snapshots(spark)]
+    def _committed_paths(self, spark: SparkSession) -> list[str]:
+        return [self._join("data", s["run_id"]) for s in self.snapshots(spark)]
+
+    def _committed_ids(self, spark: SparkSession, paths: list[str]) -> DataFrame:
+        """``doc_id`` of every committed row in ``paths``. The explicit
+        schema lets parquet read that one column and skips the
+        schema-inference job."""
         if not paths:
             return spark.createDataFrame([], schema="doc_id string")
-        return spark.read.parquet(*paths).select("doc_id").distinct()
+        return spark.read.schema("doc_id string").parquet(*paths)
+
+    def committed_doc_ids(self, spark: SparkSession) -> DataFrame:
+        return self._committed_ids(spark, self._committed_paths(spark)).distinct()
 
     def read_result(
         self, spark: SparkSession, as_of_snapshot: int | None = None
@@ -262,28 +298,36 @@ class DocumentCheckpoint:
         return spark.read.parquet(*paths)
 
     def prune(self, documents: DataFrame) -> DataFrame:
-        """Drop documents already committed (anti-join resume pruning)."""
-        done = self.committed_doc_ids(documents.sparkSession)
+        """Drop documents already committed (anti-join resume pruning;
+        duplicate keys on the committed side do not change a left-anti
+        join, so no distinct).
+
+        Spark sizes the committed side by the bytes of every column of
+        its files, although it reads only ``doc_id``. Once the committed
+        data is over the broadcast threshold, one aggregate measures the
+        ``doc_id`` column, and a broadcast hint keeps the join from
+        shuffling the incoming documents when the ids alone fit."""
+        spark = documents.sparkSession
+        paths = self._committed_paths(spark)
+        done = self._committed_ids(spark, paths)
+        fs = self._fs(spark)
+        over = sum(fs.size(p) for p in paths) > broadcast_threshold(spark)
+        if over and fits_broadcast(done, "doc_id"):
+            done = F.broadcast(done)
         return documents.join(done, "doc_id", "left_anti")
 
     # ----------------------------------------------------------- commits
 
-    def commit(self, result: DataFrame, metrics: dict | None = None) -> dict:
-        """Write a result batch + ledger, then flip the manifest.
-
-        Data and ledger land under a fresh run_id directory first; the
-        snapshot only becomes visible when the manifest rename succeeds,
-        so a kill mid-commit leaves the table at the previous snapshot.
-        """
-        spark = result.sparkSession
-        fs = self._fs(spark)
+    def _write_data(self, result: DataFrame) -> str:
+        """Land ``result`` under a fresh ``data/<run_id>``; it stays
+        invisible until ``_publish`` names the run in a manifest."""
         run_id = uuid.uuid4().hex[:12]
-        data_path = self._join("data", run_id)
-        ledger_path = self._join("ledger", run_id)
-        result.write.parquet(data_path)
-        spark.read.parquet(data_path).select("doc_id").distinct().write.parquet(
-            ledger_path
-        )
+        result.write.parquet(self._join("data", run_id))
+        return run_id
+
+    def _publish(self, fs, run_id: str, metrics: dict | None) -> dict:
+        """Write the run's metrics, then CAS-publish a manifest that
+        appends its snapshot."""
         if metrics is not None:
             fs.mkdirs(self._join("metrics"))
             fs.write_text(self._join("metrics", f"{run_id}.json"), json.dumps(metrics))
@@ -304,16 +348,25 @@ class DocumentCheckpoint:
             f"checkpoint commit lost {32} consecutive manifest races at {self.root}"
         )
 
+    def commit(self, result: DataFrame, metrics: dict | None = None) -> dict:
+        """Write a result batch, then flip the manifest.
+
+        The data lands under a fresh run_id directory first; the
+        snapshot only becomes visible when the manifest rename succeeds,
+        so a kill mid-commit leaves the table at the previous snapshot.
+        """
+        fs = self._fs(result.sparkSession)
+        return self._publish(fs, self._write_data(result), metrics)
 
     # ------------------------------------------------------- maintenance
 
     def compact(self, spark: SparkSession) -> dict:
-        """Rewrite the committed table into ONE data/ledger run and
+        """Rewrite the committed table into ONE data run and
         publish a single-snapshot manifest (the Iceberg
         rewrite_data_files + expire_snapshots maintenance pair): at
         corpus scale an append-per-run table accretes many small runs,
         and both read_result (one scan per run) and resume pruning (one
-        ledger scan per run) degrade. Readers are never disrupted — the
+        data scan per run) degrade. Readers are never disrupted — the
         rewrite lands under a fresh run_id first and becomes visible
         via the same CAS manifest publish as commit(); a concurrent
         commit that wins the version race simply makes this compaction
@@ -326,13 +379,7 @@ class DocumentCheckpoint:
             if len(snapshots) <= 1:
                 return snapshots[0] if snapshots else {}
             old_runs = [s["run_id"] for s in snapshots]
-            run_id = uuid.uuid4().hex[:12]
-            data_path = self._join("data", run_id)
-            ledger_path = self._join("ledger", run_id)
-            self.read_result(spark).write.parquet(data_path)
-            spark.read.parquet(data_path).select(
-                "doc_id"
-            ).distinct().write.parquet(ledger_path)
+            run_id = self._write_data(self.read_result(spark))
             snapshot = {
                 "snapshot_id": len(snapshots) + 1,
                 "run_id": run_id,
@@ -342,12 +389,10 @@ class DocumentCheckpoint:
             if self._publish_manifest(fs, version + 1, [snapshot], run_id):
                 for rid in old_runs:
                     fs.delete_dir(self._join("data", rid))
-                    fs.delete_dir(self._join("ledger", rid))
                 return snapshot
             # Lost the race to a concurrent commit: drop our rewrite and
             # retry over the new state.
-            fs.delete_dir(data_path)
-            fs.delete_dir(ledger_path)
+            fs.delete_dir(self._join("data", run_id))
         raise IOError(f"compaction lost 8 consecutive manifest races at {self.root}")
 
 
@@ -360,19 +405,32 @@ def run_checkpointed(
 ) -> dict | None:
     """One resumable pipeline run: prune committed docs, OCR + reweave
     the remainder, commit as a new snapshot. Returns the snapshot dict,
-    or None if there was nothing left to do."""
+    or None if there was nothing left to do.
+
+    The pass is a single write job plus the manifest CAS: the metrics
+    are observed on the write itself, so nothing is cached, counted or
+    aggregated in a second job. ``docs`` is observed in the write's
+    result stage and is exact; the extraction counts are observed in a
+    shuffle-map stage below reweave and are exact when Spark re-runs no
+    stage of the job (a re-run after a fetch failure or a lost executor
+    counts its tasks again)."""
     engine_conf = engine_conf or {"kind": "fake"}
-    todo = checkpoint.prune(documents)
-    if todo.isEmpty():
+    spans = explode_spans(checkpoint.prune(documents))
+    results, extraction = observe_extraction(
+        ocr_image_spans(spans, media, engine_conf, partitions=partitions)
+    )
+    written = Observation("written")
+    woven = reweave(spans, results).observe(written, F.count(F.lit(1)).alias("docs"))
+    fs = checkpoint._fs(documents.sparkSession)
+    run_id = checkpoint._write_data(woven)
+    # The write job filled both observations. Reweave emits one row per
+    # doc_id, so ``docs`` is the snapshot's document count.
+    docs = observed(written).get("docs", 0)
+    if docs == 0:
+        fs.delete_dir(checkpoint._join("data", run_id))
         return None
-    spans = explode_spans(todo)
-    # Cache the OCR results: both the committed reweave and the metrics
-    # aggregate consume them, and re-running model inference is the
-    # dominant cost.
-    results = ocr_image_spans(spans, media, engine_conf, partitions=partitions).cache()
-    try:
-        woven = reweave(spans, results)
-        metrics_row = extraction_metrics(results).collect()[0]
-        return checkpoint.commit(woven, metrics=metrics_row.asDict())
-    finally:
-        results.unpersist()
+    # Documents without media spans give the OCR no rows, and then its
+    # observation may not report at all.
+    counts = observed(extraction)
+    metrics = {**{k: counts.get(k, 0) for k in EXTRACTION_COUNTS}, "docs": docs}
+    return checkpoint._publish(fs, run_id, metrics)

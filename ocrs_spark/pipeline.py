@@ -6,7 +6,7 @@ Plan shape (SURVEY.md §3.4, mandated by the north rule):
     documents
       -> explode(spans)                      [UNNEST; unit of work = span]
       -> filter kind in (image, pdf, html)   [text spans never touch Python]
-      -> left-anti join committed ledger     [resume pruning]
+      -> left-anti join committed doc_ids    [resume pruning]
       -> join media payloads                 [broadcast when small]
       -> repartition(hash(doc_id, offset))   [skew: schedule ~1 image/unit,
                                               not 1 document/unit]
@@ -31,7 +31,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +49,18 @@ SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 # really an image still OCRs, and vice versa — so the kinds only gate
 # which spans become work units.
 MEDIA_KINDS = ("image", "pdf", "html")
+
+# Stages that prefix an ``error`` cell ("decode: ...", ...), in kernel order.
+ERROR_STAGES = ("decode", "detect", "ocr")
+
+# The metrics observe_extraction attaches to the OCR results.
+EXTRACTION_COUNTS = (
+    "spans",
+    "errors",
+    *(f"errors_{stage}" for stage in ERROR_STAGES),
+    "total_words",
+    "total_lines",
+)
 
 
 def _looks_like_html(payload: bytes) -> bool:
@@ -204,8 +216,8 @@ def explode_spans(documents: DataFrame) -> DataFrame:
 
     explode_outer, not explode: a document whose spans array is empty
     (or null) still yields one all-null row, so it survives the
-    pipeline, reweaves to an empty spans array, and is committed to the
-    resume ledger — output doc set == input doc set. Plain explode
+    pipeline, reweaves to an empty spans array, and is committed, so
+    resume pruning skips it — output doc set == input doc set. Plain explode
     would silently drop such docs and re-scan them on every resume."""
     return documents.select(
         "doc_id",
@@ -235,7 +247,7 @@ def _parse_byte_size(value: str) -> int | None:
 
 
 # Broadcast decisions memoized per (application, analyzed-plan semantic
-# hash, threshold): one size aggregate per distinct media table/snapshot
+# hash, threshold): one size aggregate per distinct table/snapshot
 # per session instead of one per pipeline invocation. Values are single
 # booleans (bounded); a snapshot change produces a different analyzed
 # plan, hence a fresh entry. This caches a PLANNING decision, never
@@ -251,28 +263,27 @@ _BROADCAST_AGGS_RUN = 0  # instrumentation for the plan test
 _BROADCAST_LOCK = threading.Lock()
 
 
-def _media_fits_broadcast(media: DataFrame) -> bool:
-    """Decide the fan-out strategy with one narrow aggregate over the
-    payload column. Catalyst's own size estimate is unusable here
-    (local relations and post-UDF nodes report placeholder stats), and
-    the decision must be right at both extremes: force-broadcasting a
-    TB-scale media table kills the driver, while shuffle-joining a tiny
-    one makes the big span table pay an Exchange it never needed. The
-    deciding aggregate reads one column of the (already deduplicated-
-    by-nature) media table and is dwarfed by the OCR stage it gates.
-    When the plan's semantic hash (a private JVM call) is unavailable,
-    the decision is made without the cache."""
-    spark = media.sparkSession
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's broadcast join threshold in bytes (<= 0: broadcast
+    joins are off); an unparseable value reads as Spark's default."""
     raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     thresh = _parse_byte_size(raw)
-    if thresh is None:  # unparseable user value: fall back to Spark's default
-        thresh = 10 * 1024 * 1024
+    return 10 * 1024 * 1024 if thresh is None else thresh
+
+
+def fits_broadcast(df: DataFrame, column: str) -> bool:
+    """Whether ``df`` fits the broadcast threshold, measured with one
+    aggregate over the bytes of ``column``, its one variable-width
+    column. When the plan's semantic hash (a private JVM call) is
+    unavailable, the decision is made without the cache."""
+    spark = df.sparkSession
+    thresh = broadcast_threshold(spark)
     if thresh <= 0:
         return False
     try:
         key = (
             spark.sparkContext.applicationId,
-            media._jdf.queryExecution().analyzed().semanticHash(),
+            df._jdf.queryExecution().analyzed().semanticHash(),
             thresh,
         )
     except (AttributeError, Py4JError):
@@ -283,8 +294,8 @@ def _media_fits_broadcast(media: DataFrame) -> bool:
         if cached is not None:
             return cached
         _BROADCAST_AGGS_RUN += 1
-        row = media.agg(
-            F.coalesce(F.sum(F.octet_length("bytes")), F.lit(0)).alias("b"),
+        row = df.agg(
+            F.coalesce(F.sum(F.octet_length(column)), F.lit(0)).alias("b"),
             F.count("*").alias("n"),
         ).collect()[0]
         overhead = 64  # hashed-relation per-row key/pointer overhead
@@ -292,6 +303,18 @@ def _media_fits_broadcast(media: DataFrame) -> bool:
         if key is not None:
             _BROADCAST_DECISION_CACHE[key] = fits
     return fits
+
+
+def _media_fits_broadcast(media: DataFrame) -> bool:
+    """Decide the fan-out strategy with one narrow aggregate over the
+    payload column. Catalyst's own size estimate is unusable here
+    (local relations and post-UDF nodes report placeholder stats), and
+    the decision must be right at both extremes: force-broadcasting a
+    TB-scale media table kills the driver, while shuffle-joining a tiny
+    one makes the big span table pay an Exchange it never needed. The
+    deciding aggregate reads one column of the (already deduplicated-
+    by-nature) media table and is dwarfed by the OCR stage it gates."""
+    return fits_broadcast(media, "bytes")
 
 
 def ocr_image_spans(
@@ -430,22 +453,52 @@ def observe_extraction(ocr_results: DataFrame):
     reports spans/errors/words without a SECOND scan-and-OCR pass (the
     accumulator-backed metrics ride the tasks that already ran).
     Returns ``(observed_df, observation)`` — write/consume the returned
-    DataFrame, then read ``observation.get`` after the action completes.
+    DataFrame, then read ``observed(observation)`` after the action
+    completes.
 
-    ``docs`` is approx_count_distinct here: observe() metrics must be
-    mergeable accumulator expressions, and exact distinct isn't one —
-    the exact count stays available in extraction_metrics for callers
-    that need it (the driver contract row uses the exact form).
+    The metrics are ``EXTRACTION_COUNTS`` plus ``docs_approx``:
+    ``errors_<stage>`` splits ``errors`` by the ``decode:``/``detect:``/
+    ``ocr:`` prefix ``extract_payload_batch`` puts on the error text,
+    and the sums read 0 over no rows. ``docs_approx`` is
+    approx_count_distinct: observe() metrics must be mergeable
+    accumulator expressions, and exact distinct isn't one — the exact
+    count stays available in extraction_metrics for callers that need
+    it (the driver contract row uses the exact form).
+
+    The counts are exact when no stage of the job is re-run. Below a
+    shuffle the observation sits in a shuffle-map stage, and a stage
+    Spark re-runs after a fetch failure or a lost executor adds its
+    tasks' counts again.
     """
     from pyspark.sql import Observation
 
     obs = Observation("extraction")
-    observed = ocr_results.observe(
+    observed_df = ocr_results.observe(
         obs,
         F.count(F.lit(1)).alias("spans"),
         F.count(F.col("error")).alias("errors"),
-        F.sum("n_words").alias("total_words"),
-        F.sum("n_lines").alias("total_lines"),
+        *(
+            F.count(F.when(F.col("error").startswith(f"{stage}:"), 1)).alias(
+                f"errors_{stage}"
+            )
+            for stage in ERROR_STAGES
+        ),
+        F.coalesce(F.sum("n_words"), F.lit(0)).alias("total_words"),
+        F.coalesce(F.sum("n_lines"), F.lit(0)).alias("total_lines"),
         F.approx_count_distinct("doc_id").alias("docs_approx"),
     )
-    return observed, obs
+    return observed_df, obs
+
+
+def observed(obs) -> dict:
+    """``obs.get`` once the observed action has finished, or ``{}`` when
+    its observe() node did not run. Adaptive execution drops a join side
+    that a finished query stage proved empty, an observation inside that
+    side with it, and ``obs.get`` then receives an empty row, which the
+    JVM's row conversion rejects with an assertion."""
+    try:
+        return obs.get
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        return {}

@@ -17,7 +17,8 @@ or locally with the hermetic fake models:
         --checkpoint /tmp/ckpt --fake-models
 
 The run is resumable: each invocation prunes already-committed documents
-(anti-join against the checkpoint ledger), OCRs and reweaves the rest,
+(anti-join against the doc_ids of the committed data), OCRs and
+reweaves the rest,
 and commits a new snapshot atomically. Re-running after a kill resumes
 from the last committed snapshot with no duplicate work.
 

@@ -91,8 +91,9 @@ def test_metrics(frames):
 def test_observe_metrics_match_exact_pass(frames):
     """df.observe single-pass metrics agree with the second-scan exact
     aggregate (docs via HLL may differ; spans/errors/words/lines must
-    not) and arrive from the SAME job that produced the output."""
-    from ocrs_spark.pipeline import observe_extraction
+    not) and arrive from the SAME job that produced the output; the
+    error classes add up to ``errors``."""
+    from ocrs_spark.pipeline import ERROR_STAGES, observe_extraction
 
     docs, media, _ = frames
     spans = explode_spans(docs)
@@ -107,13 +108,14 @@ def test_observe_metrics_match_exact_pass(frames):
     assert got["total_lines"] == exact["total_lines"]
     # HLL at this cardinality is exact in practice; allow sketch slack
     assert abs(got["docs_approx"] - exact["docs"]) <= max(1, exact["docs"] * 0.05)
+    assert sum(got[f"errors_{stage}"] for stage in ERROR_STAGES) == got["errors"]
 
 
 def test_empty_span_docs_survive_pipeline(spark, frames):
     """Documents with an empty (or null) spans array must appear in the
     woven output with spans == [] — explode_outer keeps them alive, so
-    output doc set == input doc set and the resume ledger commits them
-    (plain explode would re-scan them forever)."""
+    output doc set == input doc set and a resume commits them (plain
+    explode would re-scan them forever)."""
     _, media, _ = frames
     docs = spark.createDataFrame(
         [

@@ -6,7 +6,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocrs_spark.checkpoint import DocumentCheckpoint, run_checkpointed
-from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
+from ocrs_spark.fixtures import (
+    DOCUMENTS_SCHEMA,
+    MEDIA_SCHEMA,
+    corpus_to_spark,
+    generate_corpus,
+)
+from ocrs_spark.pipeline import explode_spans, extraction_metrics, ocr_image_spans
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +31,8 @@ def spans_as_tuples(df):
 
 def test_partial_commit_then_resume(spark, frames, tmp_path_factory):
     docs, media, expected = frames
-    ckpt = DocumentCheckpoint(str(tmp_path_factory.mktemp("ckpt")))
+    ckpt_dir = tmp_path_factory.mktemp("ckpt")
+    ckpt = DocumentCheckpoint(str(ckpt_dir))
 
     # "Killed" first run: only half the documents were processed and
     # committed before the crash.
@@ -46,9 +53,13 @@ def test_partial_commit_then_resume(spark, frames, tmp_path_factory):
     assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
     assert spans_as_tuples(result) == spans_as_tuples(expected)
 
-    # Idempotent third run: nothing left to do, no new snapshot.
+    # Idempotent third run: nothing left to do, no new snapshot, and
+    # the data it wrote for its empty result is gone again.
     assert run_checkpointed(docs, media, ckpt) is None
     assert len(ckpt.snapshots()) == 2
+    assert sorted(p.name for p in (ckpt_dir / "data").iterdir()) == sorted(
+        s["run_id"] for s in ckpt.snapshots()
+    )
 
     # Time travel: as of snapshot 1 the table is exactly the first
     # committed batch.
@@ -172,9 +183,163 @@ def test_compaction_preserves_table_and_resume(spark, frames, tmp_path_factory):
     assert snap["metrics"]["compacted_runs"] == 2
     assert [s["run_id"] for s in ckpt.snapshots()] == [snap["run_id"]]
     assert len(list((root / "data").iterdir())) == 1
-    assert len(list((root / "ledger").iterdir())) == 1
     assert spans_as_tuples(ckpt.read_result(spark)) == before
     # Resume over the compacted table: nothing left to do.
     assert run_checkpointed(docs, media, ckpt) is None
     # Idempotent on a single-snapshot table.
     assert ckpt.compact(spark)["run_id"] == snap["run_id"]
+
+
+def test_crash_between_data_write_and_publish(
+    spark, frames, tmp_path_factory, monkeypatch
+):
+    """A run killed after its data write but before the manifest publish
+    leaves an orphan data/<run_id> that no manifest names: every read
+    ignores it, and the rerun commits each document exactly once in
+    exactly one new snapshot."""
+    docs, media, expected = frames
+    root = tmp_path_factory.mktemp("ckpt_crash")
+    ckpt = DocumentCheckpoint(str(root))
+    half = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
+    snap1 = run_checkpointed(half, media, ckpt)
+    n_first = ckpt.committed_doc_ids(spark).count()
+
+    publish = DocumentCheckpoint._publish_manifest
+    calls = []
+
+    def crash_once(self, *args):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("killed before publish")
+        return publish(self, *args)
+
+    monkeypatch.setattr(DocumentCheckpoint, "_publish_manifest", crash_once)
+    with pytest.raises(RuntimeError, match="killed before publish"):
+        run_checkpointed(docs, media, ckpt)
+    orphans = {p.name for p in (root / "data").iterdir()} - {snap1["run_id"]}
+    assert len(orphans) == 1
+    assert [s["snapshot_id"] for s in ckpt.snapshots()] == [1]
+    assert ckpt.committed_doc_ids(spark).count() == n_first
+    assert ckpt.prune(docs).count() == docs.count() - n_first
+    assert ckpt.read_result(spark).count() == n_first
+
+    snap2 = run_checkpointed(docs, media, ckpt)
+    assert snap2["snapshot_id"] == 2 and snap2["run_id"] not in orphans
+    assert [s["snapshot_id"] for s in ckpt.snapshots()] == [1, 2]
+    result = ckpt.read_result(spark)
+    assert result.count() == docs.count()
+    assert result.select("doc_id").distinct().count() == docs.count()
+    assert spans_as_tuples(result) == spans_as_tuples(expected)
+
+
+def test_corrupt_payload_commits_decode_error_class(spark, tmp_path_factory):
+    """One undecodable payload is one ``errors_decode`` in the committed
+    metrics, not a failed run: its span keeps a null text and every
+    other document reweaves as expected."""
+    corpus = generate_corpus(n_docs=12, seed=5)
+    bad = {"doc_id": "doc-corrupt", "spans": [
+        {"kind": "text", "text": "before", "media_ref": None, "offset": 0},
+        {"kind": "image", "text": None, "media_ref": "img-corrupt", "offset": 1},
+    ]}
+    docs, media, expected = corpus_to_spark(spark, corpus)
+    docs = docs.unionByName(spark.createDataFrame([bad], DOCUMENTS_SCHEMA))
+    media = media.unionByName(spark.createDataFrame(
+        [("img-corrupt", bytearray(b"RAWI not an image"), 1, 1, 3)], MEDIA_SCHEMA
+    ))
+    ckpt = DocumentCheckpoint(str(tmp_path_factory.mktemp("ckpt_corrupt")))
+    snap = run_checkpointed(docs, media, ckpt)
+    m = snap["metrics"]
+    assert (m["errors"], m["errors_decode"], m["errors_detect"], m["errors_ocr"]) == (1, 1, 0, 0)
+    assert m["docs"] == len(corpus.documents) + 1
+    woven = spans_as_tuples(ckpt.read_result(spark))
+    assert woven.pop("doc-corrupt") == [
+        ("text", "before", None, 0), ("image", None, "img-corrupt", 1)
+    ]
+    assert woven == spans_as_tuples(expected)
+
+
+def test_committed_metrics_match_extraction_metrics(spark, frames, tmp_path_factory):
+    """The metrics observed on the committing write equal the separate
+    extraction_metrics aggregate over the same pruned input, and
+    ``docs`` is the number of rows in the snapshot's data directory."""
+    docs, media, _ = frames
+    root = tmp_path_factory.mktemp("ckpt_metrics")
+    ckpt = DocumentCheckpoint(str(root))
+    run_checkpointed(docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0), media, ckpt)
+    todo = ckpt.prune(docs)
+    exact = extraction_metrics(
+        ocr_image_spans(explode_spans(todo), media, {"kind": "fake"})
+    ).collect()[0]
+    snap = run_checkpointed(docs, media, ckpt)
+    m = snap["metrics"]
+    for key in ("spans", "errors", "total_words", "total_lines"):
+        assert m[key] == exact[key], key
+    assert m["docs"] == spark.read.parquet(str(root / "data" / snap["run_id"])).count()
+    assert m["docs"] == todo.count()
+
+
+def test_text_only_documents_commit_zero_extraction(spark, frames, tmp_path_factory):
+    """Documents without media spans run no OCR rows; adaptive execution
+    may then drop the observed OCR side entirely. The run still commits
+    every document, with zero extraction counts."""
+    docs, media, expected = frames
+    text_only = docs.filter(F.forall("spans", lambda s: s["kind"] == "text"))
+    n = text_only.count()
+    assert n > 0
+    ckpt = DocumentCheckpoint(str(tmp_path_factory.mktemp("ckpt_text")))
+    snap = run_checkpointed(text_only, media, ckpt)
+    assert snap["metrics"]["docs"] == n
+    assert snap["metrics"]["spans"] == snap["metrics"]["errors"] == 0
+    assert snap["metrics"]["total_words"] == 0
+    want = spans_as_tuples(expected.join(text_only.select("doc_id"), "doc_id"))
+    assert spans_as_tuples(ckpt.read_result(spark)) == want
+
+
+def test_prune_broadcasts_committed_ids_that_fit(spark, tmp_path_factory):
+    """Spark sizes the committed side of the prune join by every column
+    of the data files. Once those are over the broadcast threshold,
+    prune measures the doc_id column and keeps the join a broadcast
+    while the ids alone fit; below the threshold it measures nothing."""
+    from ocrs_spark import pipeline as P
+
+    def docs_frame(lo, hi):
+        # ~1 KB of incompressible text per document
+        text = F.concat(*(F.sha2(F.concat(F.col("id"), F.lit(k)), 256) for k in range(16)))
+        span = F.struct(
+            F.lit("text").alias("kind"),
+            text.alias("text"),
+            F.lit(None).cast("string").alias("media_ref"),
+            F.lit(0).alias("offset"),
+        )
+        return spark.range(lo, hi).select(
+            F.col("id").cast("string").alias("doc_id"), F.array(span).alias("spans")
+        )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    ckpt = DocumentCheckpoint(str(tmp_path_factory.mktemp("ckpt_big")))
+    ckpt.commit(docs_frame(0, 200))
+    incoming = docs_frame(190, 210)
+    want = [str(i) for i in range(200, 210)]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        before = P._BROADCAST_AGGS_RUN
+        pruned = ckpt.prune(incoming)  # the session's 64 MB threshold
+        assert P._BROADCAST_AGGS_RUN == before
+        assert "BroadcastHashJoin" in plan(pruned)
+
+        # ~200 KB of data, ~13 KB of ids with their hashed-relation overhead
+        spark.conf.set(key, str(64 * 1024))
+        pruned = ckpt.prune(incoming)
+        assert P._BROADCAST_AGGS_RUN == before + 1
+        assert "BroadcastHashJoin" in plan(pruned)
+        assert sorted(r.doc_id for r in pruned.select("doc_id").collect()) == want
+
+        spark.conf.set(key, str(4 * 1024))
+        pruned = ckpt.prune(incoming)
+        assert "SortMergeJoin" in plan(pruned)
+        assert sorted(r.doc_id for r in pruned.select("doc_id").collect()) == want
+    finally:
+        spark.conf.set(key, old)
