@@ -325,9 +325,15 @@ class DocumentCheckpoint:
         result.write.parquet(self._join("data", run_id))
         return run_id
 
+    def _discard(self, fs, run_id: str) -> None:
+        """Remove the files of a run that no manifest will name."""
+        fs.delete_dir(self._join("data", run_id))
+        fs.delete(self._join("metrics", f"{run_id}.json"))
+
     def _publish(self, fs, run_id: str, metrics: dict | None) -> dict:
         """Write the run's metrics, then CAS-publish a manifest that
-        appends its snapshot."""
+        appends its snapshot. If every attempt loses the race, the run
+        was never published: its files are removed and IOError raised."""
         if metrics is not None:
             fs.mkdirs(self._join("metrics"))
             fs.write_text(self._join("metrics", f"{run_id}.json"), json.dumps(metrics))
@@ -344,6 +350,7 @@ class DocumentCheckpoint:
             # rebase this snapshot on theirs — no snapshot is dropped.
             if self._publish_manifest(fs, version + 1, snapshots + [snapshot], run_id):
                 return snapshot
+        self._discard(fs, run_id)
         raise IOError(
             f"checkpoint commit lost {32} consecutive manifest races at {self.root}"
         )
@@ -423,14 +430,18 @@ def run_checkpointed(
     woven = reweave(spans, results).observe(written, F.count(F.lit(1)).alias("docs"))
     fs = checkpoint._fs(documents.sparkSession)
     run_id = checkpoint._write_data(woven)
-    # The write job filled both observations. Reweave emits one row per
-    # doc_id, so ``docs`` is the snapshot's document count.
-    docs = observed(written).get("docs", 0)
+    try:
+        # The write job filled both observations. Reweave emits one row
+        # per doc_id, so ``docs`` is the snapshot's document count.
+        docs = observed(written).get("docs", 0)
+        # Documents without media spans give the OCR no rows, and then
+        # its observation may not report at all.
+        counts = observed(extraction)
+    except Exception:
+        checkpoint._discard(fs, run_id)
+        raise
     if docs == 0:
-        fs.delete_dir(checkpoint._join("data", run_id))
+        checkpoint._discard(fs, run_id)
         return None
-    # Documents without media spans give the OCR no rows, and then its
-    # observation may not report at all.
-    counts = observed(extraction)
     metrics = {**{k: counts.get(k, 0) for k in EXTRACTION_COUNTS}, "docs": docs}
     return checkpoint._publish(fs, run_id, metrics)

@@ -7,8 +7,9 @@ implements the table format itself from the public specification
 in ``ocrs_spark.avro_ocf``:
 
     <location>/
-      metadata/v<N>.metadata.json       table metadata (schemas, specs,
-                                        snapshot list), format-version 2
+      metadata/v<N>.metadata.json       table metadata (schema, partition
+                                        spec, sort orders, snapshot list),
+                                        format-version 2
       metadata/version-hint.text        latest committed version hint
       metadata/snap-<id>-<uuid>.avro    manifest list, one per snapshot
       metadata/<uuid>-m0.avro           manifest file, one per append
@@ -36,6 +37,11 @@ Everything the spec makes load-bearing is real:
   single-value binary serialization), manifests store per-file partition
   tuples and per-column bounds, and ``scan`` prunes first manifests,
   then files, before Spark reads a single row group.
+- **One schema, one partition spec**: a table keeps the schema and spec
+  it was created with, so every data file holds exactly the table
+  schema minus its partition columns, and a scan reads the files with
+  that schema, as the spec reads data files, instead of inferring it
+  from their footers: building a scan runs no Spark job.
 - **Resume**: ``scan`` exposes committed file lists per snapshot, so the
   extraction pipeline's anti-join resume (``ocrs_spark.checkpoint``) can
   use an Iceberg table as its ledger; see ``IcebergDocumentSink``.
@@ -51,9 +57,9 @@ Scale notes: commits are metadata-only (one footer read per new data
 file — the same per-file stats a real Iceberg writer collects from its
 tasks); scans materialize only file *lists* on the driver (bounded by
 file count, as in any Iceberg reader); data moves exclusively through
-Spark's parquet source, one read per partition tuple with the identity
-partition columns re-attached as literals (the constant-column trick
-Iceberg's own Spark source uses for identity-partitioned columns).
+Spark's parquet source, one read per identity-partition tuple with the
+identity partition columns re-attached as literals (the constant-column
+trick Iceberg's own Spark source uses for identity-partitioned columns).
 """
 
 from __future__ import annotations
@@ -624,93 +630,21 @@ class IcebergTable:
         sid = self.metadata["current-schema-id"]
         return next(s for s in self.metadata["schemas"] if s["schema-id"] == sid)
 
-    def _spec(self, spec_id: int | None = None) -> dict:
-        sid = spec_id if spec_id is not None else self.metadata["default-spec-id"]
+    def _spec(self) -> dict:
+        sid = self.metadata["default-spec-id"]
         return next(
             s for s in self.metadata["partition-specs"] if s["spec-id"] == sid
         )
 
-    def _field_by_id(self, fid: int) -> dict:
-        return next(f for f in self._schema()["fields"] if f["id"] == fid)
-
-    def _partition_columns(
-        self, spec_id: int | None = None
-    ) -> list[tuple[str, str, str, str]]:
+    def _partition_columns(self) -> list[tuple[str, str, str, str]]:
         """[(partition name, source column, transform, source iceberg type)]
-        for the default spec, or for ``spec_id`` (older manifests are
-        interpreted under the spec they were written with)."""
+        of the table's partition spec."""
+        by_id = {f["id"]: f for f in self._schema()["fields"]}
         out = []
-        for pf in self._spec(spec_id)["fields"]:
-            src = self._field_by_id(pf["source-id"])
+        for pf in self._spec()["fields"]:
+            src = by_id[pf["source-id"]]
             out.append((pf["name"], src["name"], pf["transform"], src["type"]))
         return out
-
-    # -- partition spec evolution --------------------------------------------
-
-    def add_partition_field(
-        self, column: str, transform: str = "identity", name: str | None = None
-    ) -> int:
-        """Partition spec evolution: future writes partition by the new
-        field; NOTHING is rewritten. Existing manifests keep their
-        original spec-id and are interpreted under it at plan time
-        (filters on the new field simply cannot prune pre-evolution
-        files), so a table can start unpartitioned at small scale and
-        add day(ts) when it grows — the standard Iceberg lifecycle.
-        ``compact()`` rewrites live data under the current spec when
-        full pruning of history is wanted. Returns the new spec id."""
-        src = next(
-            (f for f in self._schema()["fields"] if f["name"] == column), None
-        )
-        if src is None:
-            raise ValueError(f"unknown column {column!r}")
-        transform_result_type(transform, src["type"])  # validates the pair
-        spec = self._spec()
-        if name is None:
-            name = (
-                column
-                if transform == "identity"
-                else f"{column}_{transform.split('[')[0]}"
-            )
-        if any(f["name"] == name for f in spec["fields"]):
-            raise ValueError(f"partition field {name!r} already exists")
-        new_fid = self.metadata["last-partition-id"] + 1
-        new_sid = max(s["spec-id"] for s in self.metadata["partition-specs"]) + 1
-        new_spec = {
-            "spec-id": new_sid,
-            "fields": list(spec["fields"])
-            + [
-                {
-                    "name": name,
-                    "transform": transform,
-                    "source-id": src["id"],
-                    "field-id": new_fid,
-                }
-            ],
-        }
-        self.metadata["partition-specs"].append(new_spec)
-        self.metadata["default-spec-id"] = new_sid
-        self.metadata["last-partition-id"] = new_fid
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata()
-        return new_sid
-
-    def remove_partition_field(self, name: str) -> int:
-        """Drop a partition field from future writes (new spec-id; the
-        field keeps its id in older specs, per the spec's evolution
-        rules). Returns the new spec id."""
-        spec = self._spec()
-        if not any(f["name"] == name for f in spec["fields"]):
-            raise ValueError(f"unknown partition field {name!r}")
-        new_sid = max(s["spec-id"] for s in self.metadata["partition-specs"]) + 1
-        new_spec = {
-            "spec-id": new_sid,
-            "fields": [f for f in spec["fields"] if f["name"] != name],
-        }
-        self.metadata["partition-specs"].append(new_spec)
-        self.metadata["default-spec-id"] = new_sid
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata()
-        return new_sid
 
     def snapshots(self) -> list[dict]:
         return list(self.metadata["snapshots"])
@@ -728,9 +662,7 @@ class IcebergTable:
         after the table commit, before the streaming commit log) detect
         that its data is already in the table and skip — the same
         mechanism Iceberg's real Spark sink uses. Epochs are monotonic
-        per checkpoint, so the max over retained snapshots suffices;
-        ``expire_snapshots`` keeps the newest snapshots, which is where
-        the max lives.
+        per checkpoint, so the max over the snapshots suffices.
         """
         last = -1
         for s in self.metadata["snapshots"]:
@@ -769,13 +701,7 @@ class IcebergTable:
 
     # -- append --------------------------------------------------------------
 
-    def append(
-        self,
-        df: DataFrame,
-        extra_summary: dict | None = None,
-        distribution: str = "hash",
-        branch: str = "main",
-    ) -> int:
+    def append(self, df: DataFrame, extra_summary: dict | None = None) -> int:
         """Append a DataFrame as a new snapshot; returns the snapshot id.
 
         Data files are written by Spark (hive-layout per partition tuple);
@@ -785,23 +711,14 @@ class IcebergTable:
         key/values land in the snapshot summary (e.g. a streaming sink's
         batch id for replay idempotence).
 
-        ``distribution`` is Iceberg's write.distribution-mode for
-        partitioned tables: ``"hash"`` (default) shuffles rows by
-        partition tuple so each partition is written by one task —
-        without it every task writes a file into every partition it
-        sees, tasks x partitions small files at scale. Pass ``"none"``
-        to skip the shuffle (e.g. input already clustered, or one
-        partition so hot that spreading it across tasks beats file
-        count).
-
-        ``branch``: stage the append on a named branch instead of main
-        (write-audit-publish — see ``fast_forward``).
+        A partitioned table is written with Iceberg's hash
+        write.distribution-mode: rows are shuffled by partition tuple so
+        each partition is written by one task, not tasks x partitions
+        small files.
         """
         snapshot_id = int.from_bytes(os.urandom(7), "big")
         seq = self.metadata["last-sequence-number"] + 1
-        manifest = self._write_data_manifest(
-            df, snapshot_id, seq, distribution=distribution
-        )
+        manifest = self._write_data_manifest(df, snapshot_id, seq)
         return self._commit_manifests(
             [manifest],
             operation="append",
@@ -813,7 +730,6 @@ class IcebergTable:
             snapshot_id=snapshot_id,
             seq=seq,
             carry="all",
-            branch=branch,
         )
 
     def _write_data_manifest(
@@ -936,8 +852,9 @@ class IcebergTable:
     def _data_manifest_from_entries(
         self, entries: list[dict], snapshot_id: int, seq: int
     ) -> dict:
-        """Write one data manifest (current spec) for ADDED entries and
-        return its manifest-list dict (not yet committed)."""
+        """Write one data manifest of ADDED (status 1) and EXISTING
+        (status 0, explicit data sequence number) entries and return its
+        manifest-list dict (not yet committed)."""
         parts = self._partition_columns()
         partition_avro_fields = [
             {
@@ -987,19 +904,23 @@ class IcebergTable:
                 }
             )
 
+        added = [e["data_file"] for e in entries if e["status"] == 1]
+        existing = [e["data_file"] for e in entries if e["status"] == 0]
         return {
             "manifest_path": manifest_path,
             "manifest_length": os.path.getsize(manifest_path),
             "partition_spec_id": spec["spec-id"],
             "content": 0,
             "sequence_number": seq,
-            "min_sequence_number": seq,
+            "min_sequence_number": min(
+                [e["sequence_number"] for e in entries if e["status"] == 0] + [seq]
+            ),
             "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
+            "added_files_count": len(added),
+            "existing_files_count": len(existing),
             "deleted_files_count": 0,
-            "added_rows_count": sum(e["data_file"]["record_count"] for e in entries),
-            "existing_rows_count": 0,
+            "added_rows_count": sum(f["record_count"] for f in added),
+            "existing_rows_count": sum(f["record_count"] for f in existing),
             "deleted_rows_count": 0,
             "partitions": summaries,
             "key_metadata": None,
@@ -1013,22 +934,15 @@ class IcebergTable:
         snapshot_id: int,
         seq: int,
         carry: str = "all",
-        branch: str = "main",
     ) -> int:
         """Write a manifest list (new manifests + carried-forward ones)
-        and commit the snapshot.
+        and commit the snapshot as the head of the ``main`` branch.
 
         ``carry``: ``"all"`` keeps every manifest of the previous snapshot
         (the fast-append / delta-commit shape), ``"deletes"`` keeps only
-        delete manifests (file-granular data rewrites that must not drop
+        delete manifests (a rewrite of the data manifests must not drop
         pending row-level deletes), ``"none"`` keeps nothing (full
         replace/compaction, which also purges applied deletes).
-
-        ``branch``: the ref this commit advances. ``"main"`` is the
-        published table; any other name stages the snapshot on that
-        branch (write-audit-publish) — parented on the branch head (or
-        main's head if the branch is new), invisible to default scans
-        until ``fast_forward("main", branch)`` publishes it.
 
         A commit that loses the metadata-version race never overwrites
         the winner: an ``"append"`` rebases onto the table as reloaded
@@ -1036,12 +950,7 @@ class IcebergTable:
         against the stale snapshot) raises ``CommitConflictError``.
         """
         for _ in range(_APPEND_COMMIT_RETRIES):
-            branch_ref = self.metadata.get("refs", {}).get(branch)
-            prev = (
-                branch_ref["snapshot-id"]
-                if branch_ref is not None
-                else self.current_snapshot_id()
-            )
+            prev = self.current_snapshot_id()
             carried: list[dict] = []
             if prev is not None and carry != "none":
                 snap = next(
@@ -1096,17 +1005,14 @@ class IcebergTable:
             self.metadata["snapshots"].append(snapshot)
             self.metadata["last-sequence-number"] = seq
             self.metadata["last-updated-ms"] = now
-            self.metadata.setdefault("refs", {})[branch] = {
+            self.metadata.setdefault("refs", {})["main"] = {
                 "snapshot-id": snapshot_id,
                 "type": "branch",
             }
-            if branch == "main":
-                # spec: snapshot-log and current-snapshot-id track main only;
-                # staged branch commits stay invisible to default scans
-                self.metadata["snapshot-log"].append(
-                    {"timestamp-ms": now, "snapshot-id": snapshot_id}
-                )
-                self.metadata["current-snapshot-id"] = snapshot_id
+            self.metadata["snapshot-log"].append(
+                {"timestamp-ms": now, "snapshot-id": snapshot_id}
+            )
+            self.metadata["current-snapshot-id"] = snapshot_id
             try:
                 self._commit_metadata()
                 return snapshot_id
@@ -1115,7 +1021,7 @@ class IcebergTable:
                 if operation != "append":
                     raise
             # Fast append: rebase onto the winner — re-parent on the new
-            # branch head, re-carry its manifests, take the next seq.
+            # head, re-carry its manifests, take the next seq.
             fresh = IcebergTable.load(self.location)
             self.metadata, self.version = fresh.metadata, fresh.version
             seq = self.metadata["last-sequence-number"] + 1
@@ -1126,157 +1032,25 @@ class IcebergTable:
             f"at {self.location}"
         )
 
-    # -- refs (tags / branches) ----------------------------------------------
-
-    def create_ref(
-        self, name: str, snapshot_id: int | None = None, ref_type: str = "tag"
-    ) -> int:
-        """Name a snapshot (format v2 ``refs`` map). Tags are the
-        dataset-release primitive: ``create_ref("train-v3")`` pins the
-        exact table state a model was trained on, keeps it readable via
-        ``scan(ref=...)`` forever (snapshot expiry never drops a
-        ref-reachable snapshot), and costs one metadata commit — no
-        data is copied at any scale."""
-        if ref_type not in ("tag", "branch"):
-            raise ValueError(f"ref type must be 'tag' or 'branch', got {ref_type!r}")
-        sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if sid is None:
-            raise ValueError("cannot create a ref on an empty table")
-        if not any(s["snapshot-id"] == sid for s in self.metadata["snapshots"]):
-            raise ValueError(f"unknown snapshot id {sid}")
-        self.metadata.setdefault("refs", {})[name] = {
-            "snapshot-id": sid,
-            "type": ref_type,
-        }
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata()
-        return sid
-
-    def drop_ref(self, name: str) -> None:
-        if name == "main":
-            raise ValueError("cannot drop the main branch")
-        refs = self.metadata.get("refs", {})
-        if name not in refs:
-            raise KeyError(name)
-        del refs[name]
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata()
-
-    def refs(self) -> dict[str, dict]:
-        return dict(self.metadata.get("refs", {}))
-
-    def snapshot_for_ref(self, name: str) -> int:
-        try:
-            return self.metadata.get("refs", {})[name]["snapshot-id"]
-        except KeyError:
-            raise KeyError(f"unknown ref {name!r}") from None
-
-    def fast_forward(self, branch: str, source: str) -> int:
-        """Publish ``source``'s head onto ``branch`` iff the move is a
-        pure fast-forward (branch's head is an ancestor of source's head,
-        or branch is empty) — the write-audit-publish pattern: stage a
-        crawl batch with ``append(df, branch="audit")``, run quality
-        checks against ``scan(ref="audit")``, then
-        ``fast_forward("main", "audit")`` makes it visible to every
-        reader atomically (one CAS metadata commit). If main advanced
-        concurrently the ancestry check fails and the caller must
-        re-stage — never a silent overwrite of someone else's publish.
-        Returns the published snapshot id."""
-        src_head = self.snapshot_for_ref(source)
-        dst = self.metadata.get("refs", {}).get(branch)
-        dst_head = dst["snapshot-id"] if dst else None
-        by_id = {s["snapshot-id"]: s for s in self.metadata["snapshots"]}
-        cur, is_ancestor = src_head, dst_head is None
-        while cur is not None and not is_ancestor:
-            if cur == dst_head:
-                is_ancestor = True
-                break
-            cur = by_id[cur].get("parent-snapshot-id")
-        if not is_ancestor:
-            raise ValueError(
-                f"cannot fast-forward {branch!r} to {source!r}: "
-                f"{branch!r} head {dst_head} is not an ancestor of "
-                f"{source!r} head {src_head}"
-            )
-        now = int(time.time() * 1000)
-        self.metadata.setdefault("refs", {})[branch] = {
-            "snapshot-id": src_head,
-            "type": "branch",
-        }
-        if branch == "main":
-            self.metadata["current-snapshot-id"] = src_head
-            self.metadata["snapshot-log"].append(
-                {"timestamp-ms": now, "snapshot-id": src_head}
-            )
-        self.metadata["last-updated-ms"] = now
-        self._commit_metadata()
-        return src_head
-
-    def snapshot_as_of(self, timestamp_ms: int) -> int:
-        """FOR TIMESTAMP AS OF: the latest snapshot committed at or
-        before ``timestamp_ms`` (snapshot-log order)."""
-        best = None
-        for entry in self.metadata.get("snapshot-log", []):
-            if entry["timestamp-ms"] <= timestamp_ms:
-                best = entry["snapshot-id"]
-        if best is None:
-            raise ValueError(
-                f"no snapshot committed at or before {timestamp_ms}"
-            )
-        return best
-
     # -- metadata tables -------------------------------------------------------
-
-    def inspect_snapshots(self, spark: SparkSession) -> DataFrame:
-        """The ``<table>.snapshots`` metadata table: one row per
-        snapshot with operation and summary counts. Metadata-scale
-        (bounded by snapshot count), independent of data volume."""
-        rows = [
-            (
-                s["snapshot-id"],
-                s.get("parent-snapshot-id"),
-                s["sequence-number"],
-                s["timestamp-ms"],
-                s["summary"].get("operation"),
-                int(s["summary"].get("total-records", -1)),
-                int(s["summary"].get("total-data-files", -1)),
-                json.dumps(s["summary"], sort_keys=True),
-            )
-            for s in self.metadata["snapshots"]
-        ]
-        return spark.createDataFrame(
-            rows,
-            "snapshot_id long, parent_id long, sequence_number long, "
-            "committed_at_ms long, operation string, total_records long, "
-            "total_data_files long, summary string",
-        )
-
-    def inspect_files(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        """The ``<table>.files`` metadata table: one row per live data
-        file of the (current or given) snapshot, with its partition
-        tuple, size and row count — what small-file health checks and
-        compaction policies query."""
-        files, _deletes, _stats = self.plan_scan(snapshot_id)
-        rows = [
-            (
-                f["file_path"],
-                json.dumps(f.get("partition") or {}, sort_keys=True),
-                f["record_count"],
-                f["file_size_in_bytes"],
-                int(f.get("_data_seq", 0)),
-            )
-            for f in files
-        ]
-        return spark.createDataFrame(
-            rows,
-            "file_path string, partition string, record_count long, "
-            "file_size_in_bytes long, data_sequence_number long",
-        )
 
     def inspect_partitions(self, spark: SparkSession) -> DataFrame:
         """The ``<table>.partitions`` metadata table: per-partition
-        file/row totals of the current snapshot."""
-        df = self.inspect_files(spark)
+        file/row totals of the current snapshot, from the manifests
+        alone (no data file is opened). ``partition`` is the JSON of
+        the partition tuple."""
+        files, _deletes, _stats = self.plan_scan()
+        df = spark.createDataFrame(
+            [
+                (
+                    json.dumps(f.get("partition") or {}, sort_keys=True),
+                    f["record_count"],
+                    f["file_size_in_bytes"],
+                )
+                for f in files
+            ],
+            "partition string, record_count long, file_size_in_bytes long",
+        )
         return (
             df.groupBy("partition")
             .agg(
@@ -1284,74 +1058,6 @@ class IcebergTable:
                 F.sum("record_count").alias("record_count"),
                 F.sum("file_size_in_bytes").alias("total_size_bytes"),
             )
-        )
-
-    def inspect_history(self, spark: SparkSession) -> DataFrame:
-        """The ``<table>.history`` metadata table: the snapshot log,
-        flagged with whether each entry is an ancestor of the current
-        snapshot (time-travel-safe)."""
-        ancestors = set()
-        cur = self.current_snapshot_id()
-        by_id = {s["snapshot-id"]: s for s in self.metadata["snapshots"]}
-        while cur is not None:
-            ancestors.add(cur)
-            cur = by_id.get(cur, {}).get("parent-snapshot-id")
-        rows = [
-            (e["timestamp-ms"], e["snapshot-id"], e["snapshot-id"] in ancestors)
-            for e in self.metadata.get("snapshot-log", [])
-        ]
-        return spark.createDataFrame(
-            rows,
-            "made_current_at_ms long, snapshot_id long, "
-            "is_current_ancestor boolean",
-        )
-
-    def inspect_manifests(self, spark: SparkSession) -> DataFrame:
-        """The ``<table>.manifests`` metadata table: one row per manifest
-        of the current snapshot — the observable `rewrite_manifests`
-        acts on. Metadata-scale (reads one manifest list)."""
-        sid = self.current_snapshot_id()
-        rows = []
-        if sid is not None:
-            snap = next(
-                s for s in self.metadata["snapshots"] if s["snapshot-id"] == sid
-            )
-            manifests, _ = read_ocf(snap["manifest-list"])
-            rows = [
-                (
-                    m["manifest_path"],
-                    m["manifest_length"],
-                    m["partition_spec_id"],
-                    int(m.get("content", 0)),
-                    m["sequence_number"],
-                    m["min_sequence_number"],
-                    m["added_snapshot_id"],
-                    m["added_files_count"],
-                    m["existing_files_count"],
-                    m["deleted_files_count"],
-                    m["added_rows_count"],
-                    m["existing_rows_count"],
-                )
-                for m in manifests
-            ]
-        return spark.createDataFrame(
-            rows,
-            "path string, length long, partition_spec_id int, content int, "
-            "sequence_number long, min_sequence_number long, "
-            "added_snapshot_id long, added_data_files_count int, "
-            "existing_data_files_count int, deleted_data_files_count int, "
-            "added_rows_count long, existing_rows_count long",
-        )
-
-    def inspect_refs(self, spark: SparkSession) -> DataFrame:
-        """The ``<table>.refs`` metadata table: every named branch/tag
-        and the snapshot it pins."""
-        rows = [
-            (name, r["type"], r["snapshot-id"])
-            for name, r in sorted(self.metadata.get("refs", {}).items())
-        ]
-        return spark.createDataFrame(
-            rows, "name string, type string, snapshot_id long"
         )
 
     # -- maintenance ----------------------------------------------------------
@@ -1406,7 +1112,7 @@ class IcebergTable:
         many small parquet files, and scan cost is dominated by file
         count. The rewrite reads only live files and the commit swaps
         the manifest list — previous snapshots (and their files) stay
-        readable for time travel until ``expire_snapshots``.
+        readable for time travel.
 
         If a default sort order is set (``set_sort_order``), the rewrite
         range-clusters rows by (partition tuple, sort key): each output
@@ -1445,31 +1151,6 @@ class IcebergTable:
         else:
             live = live.coalesce(target)
         return self._replace_with(live, operation="replace")
-
-    def delete_partition(self, partition_filter: dict) -> int:
-        """Drop every file matching ``partition_filter`` (a metadata-only
-        delete: matching files become status-2 DELETED entries, kept
-        rows are carried forward as status-0 EXISTING). File-granular,
-        like Iceberg's own partition-predicate DELETE fast path."""
-        keep, stats = self.plan_files()
-        dropped = []
-        kept = []
-        for f in keep:
-            if all(
-                # field must EXIST in the file's spec and match: a
-                # pre-evolution file may contain matching rows, but a
-                # file-granular delete must never drop it (and a None
-                # filter must not conflate "null partition" with
-                # "field absent")
-                col in f["partition"] and f["partition"][col] == want
-                for col, want in partition_filter.items()
-            ):
-                dropped.append(f)
-            else:
-                kept.append(f)
-        return self._commit_file_set(
-            kept, dropped, operation="delete"
-        )
 
     def delete_where(self, spark: SparkSession, condition) -> int | None:
         """Row-level DELETE via v2 *position delete* files (merge-on-read).
@@ -1657,57 +1338,9 @@ class IcebergTable:
         }
         return manifest, n_rows
 
-    def expire_snapshots(self, keep_last: int = 1) -> dict:
-        """Drop all but the last ``keep_last`` snapshots and physically
-        delete files only they referenced (manifest lists, manifests,
-        data files). Snapshots named by a ref (tag or branch) are never
-        expired — a pinned dataset release stays readable. Returns
-        {snapshots_removed, files_deleted}."""
-        snaps = self.metadata["snapshots"]
-        if len(snaps) <= keep_last:
-            return {"snapshots_removed": 0, "files_deleted": 0}
-        pinned = {r["snapshot-id"] for r in self.metadata.get("refs", {}).values()}
-        keep = [
-            s
-            for i, s in enumerate(snaps)
-            if i >= len(snaps) - keep_last or s["snapshot-id"] in pinned
-        ]
-        keep_set = {s["snapshot-id"] for s in keep}
-        drop = [s for s in snaps if s["snapshot-id"] not in keep_set]
-        if not drop:
-            return {"snapshots_removed": 0, "files_deleted": 0}
-
-        def reachable(snapshots):
-            paths = set()
-            for s in snapshots:
-                paths.add(s["manifest-list"])
-                manifests, _ = read_ocf(s["manifest-list"])
-                for m in manifests:
-                    paths.add(m["manifest_path"])
-                    entries, _ = read_ocf(m["manifest_path"])
-                    for e in entries:
-                        paths.add(e["data_file"]["file_path"])
-            return paths
-
-        live = reachable(keep)
-        dead = reachable(drop) - live
-        for path in sorted(dead):
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass
-        keep_ids = {s["snapshot-id"] for s in keep}
-        self.metadata["snapshots"] = keep
-        self.metadata["snapshot-log"] = [
-            e for e in self.metadata["snapshot-log"] if e["snapshot-id"] in keep_ids
-        ]
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata()
-        return {"snapshots_removed": len(drop), "files_deleted": len(dead)}
-
     def rewrite_manifests(self, extra_summary: dict | None = None) -> dict:
-        """Consolidate the current snapshot's data manifests — one per
-        partition spec — WITHOUT touching any data file.
+        """Consolidate the current snapshot's data manifests into one,
+        WITHOUT touching any data file.
 
         Scan planning is O(manifests): a table built from thousands of
         fast-append micro-commits (streaming epochs, per-run OCR
@@ -1715,8 +1348,8 @@ class IcebergTable:
         the driver's planning time is dominated by opening them all.
         This rewrites every live entry as EXISTING (status 0, explicit
         data sequence number preserved, so merge-on-read delete
-        application is unchanged) into one manifest per spec-id, sorted
-        by partition tuple so manifest-level partition summaries stay
+        application is unchanged) into one manifest, sorted by
+        partition tuple so manifest-level partition summaries stay
         tight for pruning. Delete manifests are carried through
         untouched. Pure metadata: cost is proportional to file COUNT,
         never data volume. Returns {manifests_before, manifests_after,
@@ -1729,8 +1362,7 @@ class IcebergTable:
         )
         manifests, _ = read_ocf(snap["manifest-list"])
         data_manifests = [m for m in manifests if m.get("content", 0) == 0]
-        specs_present = {m["partition_spec_id"] for m in data_manifests}
-        if len(data_manifests) <= len(specs_present):
+        if len(data_manifests) <= 1:
             return {
                 "manifests_before": len(data_manifests),
                 "manifests_after": len(data_manifests),
@@ -1743,12 +1375,11 @@ class IcebergTable:
         snapshot_id = int.from_bytes(os.urandom(7), "big")
         seq = self.metadata["last-sequence-number"] + 1
 
-        # live entries per spec, each with its effective data sequence
-        # number made explicit (ADDED entries inherit their manifest's)
-        by_spec: dict[int, list[dict]] = {}
+        # live entries, each with its effective data sequence number made
+        # explicit (ADDED entries inherit their manifest's)
+        entries: list[dict] = []
         for m in data_manifests:
-            entries, _ = read_ocf(m["manifest_path"])
-            for e in entries:
+            for e in read_ocf(m["manifest_path"])[0]:
                 if e["status"] == 2:  # DELETED — drop from the rewrite
                     continue
                 data_seq = (
@@ -1756,7 +1387,7 @@ class IcebergTable:
                     if e["sequence_number"] is not None
                     else m["sequence_number"]
                 )
-                by_spec.setdefault(m["partition_spec_id"], []).append(
+                entries.append(
                     {
                         "status": 0,  # EXISTING
                         "snapshot_id": e["snapshot_id"]
@@ -1768,90 +1399,16 @@ class IcebergTable:
                     }
                 )
 
-        new_manifests = []
-        n_entries = 0
-        for gi, spec_id in enumerate(sorted(by_spec)):
-            entries = sorted(
-                by_spec[spec_id],
-                key=lambda e: repr(sorted((e["data_file"]["partition"] or {}).items())),
-            )
-            n_entries += len(entries)
-            sparts = self._partition_columns(spec_id)
-            spec = self._spec(spec_id)
-            partition_avro_fields = [
-                {
-                    "name": name,
-                    "type": _opt(
-                        _ICEBERG_TO_AVRO[transform_result_type(transform, src_type)]
-                    ),
-                    "field-id": 1000 + i,
-                    "default": None,
-                }
-                for i, (name, _src, transform, src_type) in enumerate(sparts)
-            ]
-            manifest_path = (
-                f"{self.location}/metadata/{_uuid.uuid4().hex}-m{gi}.avro"
-            )
-            write_ocf(
-                manifest_path,
-                _manifest_entry_schema(partition_avro_fields),
-                entries,
-                metadata={
-                    "schema": json.dumps(self._schema()),
-                    "schema-id": str(self.metadata["current-schema-id"]),
-                    "partition-spec": json.dumps(spec["fields"]),
-                    "partition-spec-id": str(spec["spec-id"]),
-                    "format-version": "2",
-                    "content": "data",
-                },
-            )
-            summaries = []
-            for name, _src, transform, src_type in sparts:
-                vals = [e["data_file"]["partition"].get(name) for e in entries]
-                non_null = [v for v in vals if v is not None]
-                bound_type = transform_result_type(transform, src_type)
-                summaries.append(
-                    {
-                        "contains_null": any(v is None for v in vals),
-                        "contains_nan": False,
-                        "lower_bound": serialize_bound(
-                            min(non_null) if non_null else None, bound_type
-                        ),
-                        "upper_bound": serialize_bound(
-                            max(non_null) if non_null else None, bound_type
-                        ),
-                    }
-                )
-            new_manifests.append(
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(
-                        [e["sequence_number"] for e in entries] + [seq]
-                    ),
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": 0,
-                    "existing_files_count": len(entries),
-                    "deleted_files_count": 0,
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"] for e in entries
-                    ),
-                    "deleted_rows_count": 0,
-                    "partitions": summaries,
-                    "key_metadata": None,
-                }
-            )
-
+        entries.sort(
+            key=lambda e: repr(sorted((e["data_file"]["partition"] or {}).items()))
+        )
+        manifest = self._data_manifest_from_entries(entries, snapshot_id, seq)
         self._commit_manifests(
-            new_manifests,
+            [manifest],
             operation="replace",
             summary={
                 "manifests-replaced": str(len(data_manifests)),
-                "manifests-created": str(len(new_manifests)),
+                "manifests-created": "1",
                 **(extra_summary or {}),
             },
             snapshot_id=snapshot_id,
@@ -1860,116 +1417,9 @@ class IcebergTable:
         )
         return {
             "manifests_before": len(data_manifests),
-            "manifests_after": len(new_manifests),
-            "entries": n_entries,
+            "manifests_after": 1,
+            "entries": len(entries),
         }
-
-    def remove_orphan_files(self, older_than_ms: int | None = None) -> dict:
-        """Delete files under the table location that no snapshot
-        references — the debris of failed distributed writes (tasks
-        wrote data files, the driver never committed the metadata).
-
-        Reachability is computed over ALL retained snapshots (not just
-        the current one), every manifest list / manifest they name, and
-        every ``*.metadata.json`` / hint file. Hidden files (basename
-        starting with ``.`` or ``_``, e.g. Spark's ``_SUCCESS``
-        markers) are skipped, mirroring Iceberg's hidden-path filter.
-        ``older_than_ms`` (epoch millis) protects in-flight writers:
-        only files modified before the cutoff are removed — at scale
-        this is run with a multi-hour cutoff so a slow task that will
-        still be committed is never deleted under it. Returns
-        {files_deleted, bytes_reclaimed}."""
-        live: set = set()
-        for s in self.metadata["snapshots"]:
-            live.add(s["manifest-list"])
-            manifests, _ = read_ocf(s["manifest-list"])
-            for m in manifests:
-                live.add(m["manifest_path"])
-                entries, _ = read_ocf(m["manifest_path"])
-                for e in entries:
-                    live.add(e["data_file"]["file_path"])
-        live = {os.path.normpath(p) for p in live}
-
-        deleted = 0
-        reclaimed = 0
-        for sub in ("data", "metadata"):
-            root_dir = f"{self.location}/{sub}"
-            if not os.path.isdir(root_dir):
-                continue
-            for root, _dirs, fns in os.walk(root_dir):
-                for fn in fns:
-                    if fn.startswith((".", "_")):
-                        continue
-                    if fn.endswith(".metadata.json") or fn == "version-hint.text":
-                        continue
-                    path = os.path.normpath(os.path.join(root, fn))
-                    if path in live:
-                        continue
-                    try:
-                        st = os.stat(path)
-                    except FileNotFoundError:
-                        continue
-                    if older_than_ms is not None and st.st_mtime * 1000 >= older_than_ms:
-                        continue
-                    os.remove(path)
-                    deleted += 1
-                    reclaimed += st.st_size
-        # prune now-empty write directories under data/
-        data_dir = f"{self.location}/data"
-        if os.path.isdir(data_dir):
-            for root, dirs, fns in os.walk(data_dir, topdown=False):
-                if root != data_dir and not dirs and not any(
-                    not f.startswith((".", "_")) for f in fns
-                ):
-                    try:
-                        for f in fns:
-                            os.remove(os.path.join(root, f))
-                        os.rmdir(root)
-                    except OSError:
-                        pass
-        return {"files_deleted": deleted, "bytes_reclaimed": reclaimed}
-
-    def add_column(self, name: str, spark_type_ddl: str) -> None:
-        """Schema evolution: add an optional column (new schema-id).
-
-        Existing data files simply lack the field; scans reconcile by
-        filling nulls (Iceberg's read-time default for added optional
-        columns). Appends after the change must include the column.
-        """
-        from pyspark.sql.types import StructType
-
-        old = self._schema()
-        if any(f["name"] == name for f in old["fields"]):
-            raise ValueError(f"column {name!r} already exists")
-        tmp = StructType.fromDDL(f"{name} {spark_type_ddl}")
-        converted = schema_from_spark(tmp)
-        base = self.metadata["last-column-id"]
-        # re-id the new subtree above the current last-column-id
-        def shift(node):
-            if isinstance(node, dict):
-                for key in ("id", "element-id", "key-id", "value-id"):
-                    if key in node:
-                        node[key] += base
-                for sub in node.get("fields", []):
-                    shift(sub)
-                for key in ("type", "element", "key", "value"):
-                    if isinstance(node.get(key), dict):
-                        shift(node[key])
-
-        new_last = base + converted.pop("_last_column_id")
-        new_field = converted["fields"][0]
-        shift(new_field)
-        new_field["required"] = False
-        new_schema = {
-            "type": "struct",
-            "schema-id": old["schema-id"] + 1,
-            "fields": [dict(f) for f in old["fields"]] + [new_field],
-        }
-        self.metadata["schemas"].append(new_schema)
-        self.metadata["current-schema-id"] = new_schema["schema-id"]
-        self.metadata["last-column-id"] = new_last
-        self.metadata["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata()
 
     def _replace_with(
         self, df: DataFrame, operation: str, distribution: str = "hash"
@@ -1997,129 +1447,6 @@ class IcebergTable:
             carry="none",
         )
 
-    def _commit_file_set(
-        self, kept: list[dict], dropped: list[dict], operation: str
-    ) -> int:
-        """Commit a snapshot from explicit keep/drop file lists.
-
-        Manifests are single-spec (spec rule); under partition evolution
-        the file set can mix specs, so files are grouped by the field
-        set of their partition tuple and one manifest is written per
-        matching spec — each readable under its own spec-id, exactly
-        like the originals."""
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
-
-        def spec_for(keyset: frozenset) -> dict:
-            default = self._spec()
-            if {f["name"] for f in default["fields"]} == set(keyset):
-                return default
-            for spec in self.metadata["partition-specs"]:
-                if {f["name"] for f in spec["fields"]} == set(keyset):
-                    return spec
-            return default
-
-        def _entry(status: int, f: dict) -> dict:
-            f = dict(f)
-            # plan_files attaches the file's effective data sequence
-            # number; EXISTING entries must carry it explicitly (spec:
-            # only status-1 ADDED entries inherit the manifest's seq)
-            data_seq = f.pop("_data_seq", None)
-            f.setdefault("equality_ids", None)
-            return {
-                "status": status,
-                "snapshot_id": snapshot_id,
-                "sequence_number": data_seq,
-                "file_sequence_number": None,
-                "data_file": f,
-            }
-
-        groups: dict[frozenset, list[dict]] = {}
-        for status, files in ((0, kept), (2, dropped)):
-            for f in files:
-                key = frozenset((f.get("partition") or {}).keys())
-                groups.setdefault(key, []).append(_entry(status, f))
-
-        manifests = []
-        for gi, (keyset, entries) in enumerate(
-            sorted(groups.items(), key=lambda kv: repr(sorted(kv[0])))
-        ):
-            spec = spec_for(keyset)
-            sparts = self._partition_columns(spec["spec-id"])
-            partition_avro_fields = [
-                {
-                    "name": name,
-                    "type": _opt(
-                        _ICEBERG_TO_AVRO[transform_result_type(transform, src_type)]
-                    ),
-                    "field-id": 1000 + i,
-                    "default": None,
-                }
-                for i, (name, _src, transform, src_type) in enumerate(sparts)
-            ]
-            manifest_path = (
-                f"{self.location}/metadata/{_uuid.uuid4().hex}-m{gi}.avro"
-            )
-            write_ocf(
-                manifest_path,
-                _manifest_entry_schema(partition_avro_fields),
-                entries,
-                metadata={
-                    "schema": json.dumps(self._schema()),
-                    "schema-id": str(self.metadata["current-schema-id"]),
-                    "partition-spec": json.dumps(spec["fields"]),
-                    "partition-spec-id": str(spec["spec-id"]),
-                    "format-version": "2",
-                    "content": "data",
-                },
-            )
-            kept_seqs = [
-                e["sequence_number"]
-                for e in entries
-                if e["sequence_number"] is not None
-            ]
-            manifests.append(
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": spec["spec-id"],
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(kept_seqs + [seq]),
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": 0,
-                    "existing_files_count": sum(
-                        1 for e in entries if e["status"] == 0
-                    ),
-                    "deleted_files_count": sum(
-                        1 for e in entries if e["status"] == 2
-                    ),
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"]
-                        for e in entries
-                        if e["status"] == 0
-                    ),
-                    "deleted_rows_count": sum(
-                        e["data_file"]["record_count"]
-                        for e in entries
-                        if e["status"] == 2
-                    ),
-                    "partitions": None,
-                    "key_metadata": None,
-                }
-            )
-        # carry delete manifests forward: a file-granular data rewrite
-        # must not drop row-level deletes pending against kept files
-        return self._commit_manifests(
-            manifests,
-            operation=operation,
-            summary={"deleted-data-files": str(len(dropped))},
-            snapshot_id=snapshot_id,
-            seq=seq,
-            carry="deletes",
-        )
-
     # -- scan ----------------------------------------------------------------
 
     def plan_files(
@@ -2130,7 +1457,7 @@ class IcebergTable:
     ) -> tuple[list[dict], dict]:
         """Plan the data-file side of a scan: (data_file dicts, stats).
         Thin wrapper over ``plan_scan`` for callers that operate at file
-        granularity (partition deletes, compaction bookkeeping)."""
+        granularity (compaction bookkeeping)."""
         files, _deletes, stats = self.plan_scan(
             snapshot_id, partition_filter, bounds_filter
         )
@@ -2172,27 +1499,12 @@ class IcebergTable:
             s for s in self.metadata["snapshots"] if s["snapshot-id"] == sid
         )
         manifests, _ = read_ocf(snap["manifest-list"])
-
-        # manifests are interpreted under the spec they were written
-        # with (partition spec evolution): field order and bound types
-        # come from the manifest's own spec-id
-        default_sid = self.metadata["default-spec-id"]
-        spec_cache: dict[int, tuple[dict, dict]] = {}
-
-        def spec_views(spec_id: int) -> tuple[dict, dict]:
-            if spec_id not in spec_cache:
-                try:
-                    sparts = self._partition_columns(spec_id)
-                except StopIteration:
-                    sparts = self._partition_columns()
-                spec_cache[spec_id] = (
-                    {name: i for i, (name, *_r) in enumerate(sparts)},
-                    {
-                        name: transform_result_type(transform, src_type)
-                        for name, _src, transform, src_type in sparts
-                    },
-                )
-            return spec_cache[spec_id]
+        parts = self._partition_columns()
+        part_index = {name: i for i, (name, *_r) in enumerate(parts)}
+        part_bound_type = {
+            name: transform_result_type(transform, src_type)
+            for name, _src, transform, src_type in parts
+        }
 
         stats = {
             "manifests_total": len(manifests),
@@ -2219,14 +1531,11 @@ class IcebergTable:
                     delete_files.append(d)
                     stats["delete_files_selected"] += 1
                 continue
-            part_index, part_bound_type = spec_views(
-                m.get("partition_spec_id", default_sid)
-            )
             if partition_filter and m.get("partitions"):
                 skip = False
                 for col, want in partition_filter.items():
                     idx = part_index.get(col)
-                    if idx is None or idx >= len(m["partitions"]):
+                    if idx is None:
                         continue
                     s = m["partitions"][idx]
                     bt = part_bound_type[col]
@@ -2257,8 +1566,6 @@ class IcebergTable:
                     miss = False
                     for col, want in partition_filter.items():
                         if col not in part_index:
-                            # pre-evolution file: the field does not
-                            # exist in its spec, so it cannot prune
                             continue
                         v = df_["partition"].get(col)
                         if isinstance(want, tuple):
@@ -2317,98 +1624,26 @@ class IcebergTable:
         snapshot_id: int | None = None,
         partition_filter: dict | None = None,
         bounds_filter: dict | None = None,
-        ref: str | None = None,
-        as_of_ms: int | None = None,
     ) -> DataFrame:
-        """Read the table (optionally time-travelled by snapshot id,
-        named ref, or FOR-TIMESTAMP-AS-OF ``as_of_ms`` / pruned) as a
-        DataFrame, merge-on-read applying any row-level delete files."""
-        if sum(x is not None for x in (snapshot_id, ref, as_of_ms)) > 1:
-            raise ValueError("pass only one of snapshot_id, ref, as_of_ms")
-        if ref is not None:
-            snapshot_id = self.snapshot_for_ref(ref)
-        if as_of_ms is not None:
-            snapshot_id = self.snapshot_as_of(as_of_ms)
+        """Read the table (optionally time-travelled to ``snapshot_id``
+        and pruned, see ``plan_scan``) as a DataFrame, merge-on-read
+        applying any row-level delete files. Planning reads metadata
+        only and runs no Spark job."""
         files, deletes, _stats = self.plan_scan(
             snapshot_id, partition_filter, bounds_filter
         )
         return self._read_files(spark, files, delete_files=deletes)
 
-    def scan_range(
-        self,
-        spark: SparkSession,
-        column: str,
-        lo,
-        hi,
-        snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Row-exact range scan on a SOURCE column with automatic hidden-
-        partition pruning — the Iceberg scan-planning behavior that makes
-        time partitioning invisible to queries.
-
-        Every order-preserving partition transform over ``column``
-        (identity / truncate / year / month / day / hour — monotone maps,
-        so a value range maps to an ordinal range) is turned into a
-        partition-range filter; per-file column bounds prune within the
-        surviving partitions; and the exact predicate is re-applied to
-        the surviving rows, which Parquet additionally pushes to
-        row-group stats. A ``ts BETWEEN x AND y`` query on a
-        day-partitioned 100-TB table therefore opens only the matching
-        day directories without the caller ever naming ``ts_day``.
-        """
-        part_ranges: dict[str, tuple] = {}
-        for name, src, transform, src_type in self._partition_columns():
-            if src != column or transform.startswith("bucket["):
-                continue
-            part_ranges[name] = (
-                transform_value(lo, transform, src_type),
-                transform_value(hi, transform, src_type),
-            )
-        df = self.scan(
-            spark,
-            snapshot_id=snapshot_id,
-            partition_filter=part_ranges or None,
-            bounds_filter={column: (lo, hi)},
-        )
-        return df.filter((F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi)))
-
-    def scan_incremental(
-        self,
-        spark: SparkSession,
-        from_snapshot_id: int | None,
-        to_snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Changelog read: rows appended AFTER ``from_snapshot_id``
-        (exclusive) up to ``to_snapshot_id`` (inclusive, default
-        current). This is what an incremental consumer (streaming OCR,
-        resumed backfill) reads per tick instead of rescanning the
-        table: manifests are selected by sequence number, so the planning
-        cost is proportional to the NEW data only.
-
-        Only ``append`` snapshots may lie inside the window — a replace
-        or delete in between makes "what was added" ambiguous at file
-        granularity, so that raises instead of silently double-counting
-        (Iceberg's own incremental scan has the same restriction).
-        """
-        snaps = self.metadata["snapshots"]
-        from_seq = 0
-        if from_snapshot_id is not None:
-            from_seq = next(
-                s for s in snaps if s["snapshot-id"] == from_snapshot_id
-            )["sequence-number"]
-        to_snap = (
-            snaps[-1]
-            if to_snapshot_id is None
-            else next(s for s in snaps if s["snapshot-id"] == to_snapshot_id)
-        )
-        files = self.plan_incremental_files(from_seq, to_snap["sequence-number"])
-        return self._read_files(spark, files)
-
     def plan_incremental_files(self, from_seq: int, to_seq: int) -> list[dict]:
         """Data files appended with sequence number in ``(from_seq,
-        to_seq]`` — the file-planning half of ``scan_incremental``,
-        shared with the streaming source (whose offsets ARE sequence
-        numbers). Raises if the window crosses a non-append snapshot."""
+        to_seq]`` — the changelog window the streaming source plans per
+        micro-batch (its offsets ARE sequence numbers). Manifests are
+        selected by sequence number, so the cost is proportional to the
+        new data only. Only ``append`` snapshots may lie inside the
+        window: a replace or delete in between makes "what was added"
+        ambiguous at file granularity, so that raises instead of
+        silently double-counting (Iceberg's own incremental scan has
+        the same restriction)."""
         snaps = self.metadata["snapshots"]
         window = [s for s in snaps if from_seq < s["sequence-number"] <= to_seq]
         if not window:
@@ -2450,6 +1685,14 @@ class IcebergTable:
         """Read planned data files, merge-on-read applying row-level
         delete files.
 
+        Every file is read with an explicit schema taken from the table
+        metadata, as the spec reads data files (by the table schema, not
+        by their footers), so planning the read runs no Spark job. Data
+        files hold the table schema minus the partition columns: the
+        hive layout keeps identity-partition sources out of the files,
+        so they are re-attached as literals per partition tuple (the
+        constant-column trick Iceberg's own Spark source uses).
+
         Position deletes (content=1) anti-join on (file path, row
         position); the position comes from Spark's ``_metadata.row_index``
         hidden column — the same parquet row index the delete files
@@ -2463,75 +1706,42 @@ class IcebergTable:
         positions).
         """
         schema = self._schema()
-        col_order = [f["name"] for f in schema["fields"]]
-        spark_schema = _spark_ddl(schema, self._partition_columns())
+        parts = self._partition_columns()
+        spark_schema = _spark_ddl(schema, parts)
         delete_files = delete_files or []
         lineage = keep_lineage or bool(delete_files)
         if not files:
             if lineage and keep_lineage:
                 spark_schema += ", _file string, _pos bigint, _seq bigint"
             return spark.createDataFrame([], spark_schema)
-        parts = self._partition_columns()
-        # identity mappings from EVERY spec (partition evolution: a file
-        # group re-attaches the identity fields of the spec it was
-        # written under — its own tuple keys say which)
-        identity = {}
-        for spec in self.metadata["partition-specs"]:
-            for pf in spec["fields"]:
-                if pf["transform"] == "identity":
-                    identity[pf["name"]] = self._field_by_id(pf["source-id"])["name"]
-        hidden = {
-            name for name, _src, transform, _t in parts if not transform == "identity"
+        types = {f["name"]: _type_ddl(f["type"]) for f in schema["fields"]}
+        hidden = {name for name, _s, transform, _t in parts if transform != "identity"}
+        identity = {
+            name: src for name, src, transform, _t in parts if transform == "identity"
         }
-        # group by partition tuple; identity source columns were projected
-        # out of the data files by the hive layout, so re-attach them as
-        # literals per group (constant-per-file, exactly what a real
-        # Iceberg Spark source does for identity partitions)
-        scalar_types = {
-            fld["name"]: fld["type"]
-            for fld in schema["fields"]
-            if isinstance(fld["type"], str)
-        }
+        cols = [c for c in types if c not in hidden]
+        file_schema = ", ".join(
+            f"{c} {types[c]}" for c in cols if c not in identity.values()
+        )
         groups: dict[tuple, list[str]] = {}
         for f in files:
-            key = tuple((k, f["partition"][k]) for k in sorted(f["partition"]))
+            key = tuple(f["partition"].get(name) for name in identity)
             groups.setdefault(key, []).append(f["file_path"])
         out = None
         for key, paths in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-            part = dict(key)
-            # mergeSchema: a group may mix files written under different
-            # schema versions (add_column evolution); without it Spark
-            # takes one arbitrary footer's schema and silently drops the
-            # added column from newer files
-            df = spark.read.option("mergeSchema", "true").parquet(*paths)
-            for name, src in identity.items():
-                if name not in part or src in df.columns:
-                    # field absent from this group's spec, or the source
-                    # column is physically present (written before the
-                    # field was added) — nothing to re-attach
-                    continue
-                cast_to = scalar_types.get(src, "string").replace(
-                    "timestamptz", "timestamp"
-                ).replace("long", "bigint")
-                df = df.withColumn(src, F.lit(part[name]).cast(cast_to))
-            for fld in schema["fields"]:
-                # schema evolution: files written before an add_column
-                # lack the field — fill the optional column with nulls
-                # (Iceberg's read-time default)
-                if fld["name"] not in df.columns:
-                    df = df.withColumn(
-                        fld["name"], F.lit(None).cast(_type_ddl(fld["type"]))
-                    )
-            cols = [c for c in col_order if c not in hidden]
+            df = spark.read.schema(file_schema).parquet(*paths)
+            for src, value in zip(identity.values(), key):
+                df = df.withColumn(src, F.lit(value).cast(types[src]))
+            select = list(cols)
             if lineage:
                 # normalize file:///p -> /p so _file matches manifest paths
-                cols = cols + [
+                select += [
                     F.regexp_replace(
                         F.col("_metadata.file_path"), "^file:/+", "/"
                     ).alias("_file"),
                     F.col("_metadata.row_index").alias("_pos"),
                 ]
-            df = df.select(*cols)
+            df = df.select(*select)
             out = df if out is None else out.unionByName(df)
 
         if lineage:
@@ -2546,7 +1756,9 @@ class IcebergTable:
         if pos_deletes:
             # position deletes name their target file explicitly, so the
             # sequence-number check is vacuous (paths are never reused)
-            dels = spark.read.parquet(*[d["file_path"] for d in pos_deletes])
+            dels = spark.read.schema("file_path string, pos bigint").parquet(
+                *[d["file_path"] for d in pos_deletes]
+            )
             out = out.join(
                 F.broadcast(dels)
                 if sum(d["file_size_in_bytes"] for d in pos_deletes) < 64 << 20
@@ -2563,11 +1775,12 @@ class IcebergTable:
                 by_keyset.setdefault(tuple(d["equality_ids"] or ()), []).append(d)
             for ids, dfiles in sorted(by_keyset.items()):
                 keys = [id_to_name[i] for i in ids]
+                key_schema = ", ".join(f"{k} {types[k]}" for k in keys)
                 dels = None
                 for d in dfiles:
                     one = (
-                        spark.read.parquet(d["file_path"])
-                        .select(*keys)
+                        spark.read.schema(key_schema)
+                        .parquet(d["file_path"])
                         .withColumn("__dseq", F.lit(int(d["_data_seq"])))
                     )
                     dels = one if dels is None else dels.unionByName(one)

@@ -39,19 +39,14 @@ def _arrow_schema(spark_schema):
 
 
 def _identity_parts(table: IcebergTable) -> list[tuple[str, str]]:
-    """[(partition field name, source column)] for identity transforms
-    across EVERY spec (partition evolution) — the hive layout projects
-    these out of the data files, so the reader re-attaches them as
-    per-split constants when the split's partition tuple carries the
-    field."""
-    by_id = {f["id"]: f for f in table._schema()["fields"]}
-    seen, out = set(), []
-    for spec in table.metadata["partition-specs"]:
-        for pf in spec["fields"]:
-            if pf["transform"] == "identity" and pf["name"] not in seen:
-                seen.add(pf["name"])
-                out.append((pf["name"], by_id[pf["source-id"]]["name"]))
-    return out
+    """[(partition field name, source column)] of the identity
+    transforms — the hive layout projects these out of the data files,
+    so the reader re-attaches them as per-split constants."""
+    return [
+        (name, src)
+        for name, src, transform, _t in table._partition_columns()
+        if transform == "identity"
+    ]
 
 
 def _split_of(f: dict) -> dict:
@@ -65,9 +60,8 @@ def _read_split(split: dict, identity, arrow_schema):
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(split["path"])
-    # re-attach identity partition columns as constants, then align to
-    # the declared schema (schema evolution: older files lack added
-    # columns -> typed nulls; hive layout dropped identity sources)
+    # re-attach identity partition columns as constants (typed nulls for
+    # a null partition value), then align to the declared schema
     names = set(tbl.schema.names)
     arrays = []
     for field in arrow_schema:

@@ -1,7 +1,6 @@
 """Corpus drift detection — the Deequ/Evidently-style "did the new
 crawl batch change distribution?" monitoring stage that gates corpus
-publication alongside data-quality checks (ops/profiling) and
-write-audit-publish branches (iceberg.fast_forward).
+publication alongside data-quality checks (ops/profiling).
 
 Metric: Population Stability Index per feature,
 ``PSI = sum_bins (p_new - p_ref) * ln(p_new / p_ref)``, the standard

@@ -42,8 +42,7 @@ PROFILE_SPEC = {
 }
 
 # Rule checks evaluated from the profile: (name, table, column, metric,
-# op, bound). A real pipeline gates publishing on these (write-audit-
-# publish pairs with iceberg.fast_forward).
+# op, bound). A real pipeline gates publishing on these.
 CHECKS = (
     ("doc_id_complete", "documents", "doc_id", "nulls", "==", 0.0),
     ("doc_id_unique", "documents", "doc_id", "distinct_ratio", "==", 1.0),

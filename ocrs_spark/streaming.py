@@ -747,9 +747,8 @@ def _ocr_epoch_sink(
         )
         manifests, _ = read_ocf(snap["manifest-list"])
         if sum(1 for m in manifests if m.get("content", 0) == 0) > manifest_rewrite_threshold:
-            # re-stamp the epoch on the consolidation snapshot: if a
-            # later expire_snapshots keeps only it, the replay
-            # high-water mark must survive
+            # re-stamp the epoch on the consolidation snapshot, so the
+            # head snapshot alone still names the replay high-water mark
             table.rewrite_manifests(
                 extra_summary={
                     "streaming-query-id": query_id,

@@ -233,10 +233,10 @@ def test_day_partition_hidden_pruning(spark, tmp_path):
 
 
 def test_scan_range_hidden_partition_pruning(spark, tmp_path):
-    """A source-column time-range scan must prune through the hidden
-    day partitioning automatically (ordinal ranges derived from the
-    predicate), stay row-exact, and never require the caller to name
-    the derived partition field."""
+    """A source-column time range prunes through the hidden day
+    partitioning as an ordinal range (``transform_value`` maps the
+    range's ends), and the pruned scan plus the exact predicate stays
+    row-exact."""
     import datetime as dt
 
     events = (
@@ -261,14 +261,19 @@ def test_scan_range_hidden_partition_pruning(spark, tmp_path):
     _, stats = loaded.plan_files(partition_filter={"ts_day": (ord_lo, ord_hi)})
     assert 0 < stats["files_selected"] < stats["files_total"]
 
-    got = loaded.scan_range(spark, "ts", lo, hi)
-    want = events.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
+    in_range = (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))
+    got = loaded.scan(spark, partition_filter={"ts_day": (ord_lo, ord_hi)}).filter(
+        in_range
+    )
+    want = events.filter(in_range)
     assert got.count() == want.count() > 0
     assert {r["event_id"] for r in got.collect()} == {
         r["event_id"] for r in want.collect()
     }
     # range on an unpartitioned long column: bounds-only path, still exact
-    ids = loaded.scan_range(spark, "event_id", 10, 40)
+    ids = loaded.scan(spark, bounds_filter={"event_id": (10, 40)}).filter(
+        "event_id between 10 and 40"
+    )
     assert ids.count() == events.filter("event_id between 10 and 40").count()
 
 
@@ -304,144 +309,79 @@ def test_null_partition_values(spark, docs, tmp_path):
     assert stats["files_selected"] >= 1
 
 
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs started by ``fn`` on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs while building a scan")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_runs_no_spark_job(spark, docs, tmp_path):
+    """Building a scan reads metadata only: data and delete files are
+    read with the table's schema, so no schema-inference job runs before
+    an action, on an identity-partitioned table with a null partition,
+    position and equality deletes, and on a bucketed table."""
+    with_nulls = docs.withColumn(
+        "lang", F.when(F.col("doc_id") % 7 == 0, None).otherwise(F.col("lang"))
+    )
+    t = IcebergTable.create(
+        str(tmp_path / "mor"), docs.schema, partition_by=[("lang", "identity")]
+    )
+    t.append(with_nulls)
+    t.delete_where(spark, "doc_id % 5 = 0")
+    t.upsert(
+        spark, with_nulls.filter("doc_id % 3 = 0").withColumn("text", F.lit("V2")), ["doc_id"]
+    )
+    b = IcebergTable.create(
+        str(tmp_path / "bucket"), docs.schema, partition_by=[("doc_id", "bucket[4]")]
+    )
+    b.append(docs)
+
+    for loc in (t.location, b.location):
+        scans = []
+        assert _jobs_during(spark, lambda: scans.append(IcebergTable.load(loc).scan(spark))) == 0
+        assert scans[0].columns == docs.columns
+    mor = IcebergTable.load(t.location).scan(spark)
+    assert mor.count() == docs.filter("doc_id % 5 <> 0 OR doc_id % 3 = 0").count()
+    assert mor.filter("lang IS NULL").count() == with_nulls.filter(
+        "lang IS NULL AND (doc_id % 5 <> 0 OR doc_id % 3 = 0)"
+    ).count()
+    assert mor.filter("text = 'V2'").count() == docs.filter("doc_id % 3 = 0").count()
+    assert IcebergTable.load(b.location).scan(spark).count() == docs.count()
+
+
 # -- commit protocol ----------------------------------------------------------
 
 
-def test_partition_spec_evolution_day_field(spark, tmp_path):
-    """Start unpartitioned, add day(ts) later: nothing rewritten, old
-    manifests keep their spec, new writes land in day directories;
-    filters on the new field prune only post-evolution files and scans
-    stay row-exact across the spec boundary."""
-    import datetime as dt
-
-    events = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select("event_id", "user_id", "ts", "value")
-    )
-    old = events.filter("event_id % 2 = 0")
-    new = events.filter("event_id % 2 = 1")
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, events.schema)  # unpartitioned
-    t.append(old)
-    t = IcebergTable.load(loc)
-    sid = t.add_partition_field("ts", "day")
-    assert t.metadata["default-spec-id"] == sid
-    t.append(new)
-    t = IcebergTable.load(loc)
-
-    assert t.scan(spark).count() == events.count()
-
-    some_day = new.select(F.to_date("ts").alias("d")).first()["d"]
-    ordinal = transform_value(some_day, "day", "timestamptz")
-    files, stats = t.plan_files(partition_filter={"ts_day": ordinal})
-    # pre-evolution files cannot prune (all kept); post-evolution files
-    # prune to the one day
-    n_old_files = t.plan_files()[1]["files_total"] - sum(
-        1 for f in t.plan_files()[0] if "ts_day" in f["partition"]
-    )
-    assert stats["files_selected"] < stats["files_total"]
-    assert stats["files_selected"] >= n_old_files
-
-    # row-exact range scan across the spec boundary
-    lo = dt.datetime(some_day.year, some_day.month, some_day.day)
-    hi = lo + dt.timedelta(days=1) - dt.timedelta(seconds=1)
-    got = t.scan_range(spark, "ts", lo, hi)
-    want = events.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
-    assert got.count() == want.count() > 0
-    assert {r["event_id"] for r in got.collect()} == {
-        r["event_id"] for r in want.collect()
-    }
-
-
-def test_partition_spec_evolution_identity_and_maintenance(spark, docs, tmp_path):
-    """Identity evolution: pre-evolution files keep the column
-    physically, post-evolution files get it re-attached from the tuple;
-    delete_partition refuses to drop pre-evolution files; compact
-    migrates everything to the current spec."""
-    loc = str(tmp_path / "tbl")
-    t = IcebergTable.create(loc, docs.schema)  # unpartitioned
-    a = docs.filter("doc_id < 250")
-    b = docs.filter("doc_id >= 250")
-    t.append(a)
-    t = IcebergTable.load(loc)
-    t.add_partition_field("lang")
-    t.append(b)
-    t = IcebergTable.load(loc)
-
-    full = t.scan(spark)
-    assert full.count() == docs.count()
-    assert full.filter("lang is null").count() == 0
-    got = {(r["doc_id"], r["lang"]) for r in full.select("doc_id", "lang").collect()}
-    want = {(r["doc_id"], r["lang"]) for r in docs.select("doc_id", "lang").collect()}
-    assert got == want
-
-    # file-granular partition delete drops only post-evolution lang=en
-    # files; pre-evolution files may contain en rows and must survive
-    t.delete_partition({"lang": "en"})
-    t = IcebergTable.load(loc)
-    after = t.scan(spark)
-    assert (
-        after.filter("lang = 'en'").count()
-        == a.filter("lang = 'en'").count()
-    )
-    assert after.count() == docs.count() - b.filter("lang = 'en'").count()
-
-    # compaction rewrites everything under the current spec: afterwards
-    # every file carries the lang field and pruning is total
-    t.compact(spark)
-    t = IcebergTable.load(loc)
-    files, _ = t.plan_files()
-    assert all("lang" in f["partition"] for f in files)
-    assert t.scan(spark).count() == after.count()
-    en_files, stats = t.plan_files(partition_filter={"lang": "en"})
-    assert stats["files_selected"] < stats["files_total"]
-
-
-def test_timestamp_time_travel_and_metadata_tables(spark, docs, tmp_path):
-    """FOR TIMESTAMP AS OF resolves through the snapshot log; the
-    metadata tables (snapshots/files/partitions/history) expose commit
-    and file health at metadata scale."""
-    import time as _time
-
+def test_partitions_metadata_table_totals(spark, docs, tmp_path):
+    """The partitions metadata table sums the current snapshot's files
+    per partition tuple: one row per lang, every row counted once."""
     t = _fresh_table(docs, tmp_path, [("lang", "identity")])
     t.append(docs.filter("doc_id < 100"))
     t = IcebergTable.load(t.location)
-    between_ms = int(_time.time() * 1000)
-    _time.sleep(0.01)
     t.append(docs.filter("doc_id >= 100"))
     t = IcebergTable.load(t.location)
 
-    assert t.scan(spark, as_of_ms=between_ms).count() == docs.filter(
-        "doc_id < 100"
-    ).count()
-    assert t.scan(spark, as_of_ms=int(_time.time() * 1000)).count() == docs.count()
-    with pytest.raises(ValueError):
-        t.snapshot_as_of(0)
-    with pytest.raises(ValueError):
-        t.scan(spark, snapshot_id=1, ref="main")
-
-    snaps = t.inspect_snapshots(spark).orderBy("sequence_number").collect()
-    assert [s["operation"] for s in snaps] == ["append", "append"]
-    assert snaps[-1]["total_records"] == docs.count()
-    assert snaps[-1]["parent_id"] == snaps[0]["snapshot_id"]
-
-    files = t.inspect_files(spark)
-    assert files.count() == t.plan_files()[1]["files_selected"]
     parts = t.inspect_partitions(spark).collect()
     n_langs = docs.select("lang").distinct().count()
     assert len(parts) == n_langs
     assert sum(p["record_count"] for p in parts) == docs.count()
-
-    hist = t.inspect_history(spark).collect()
-    assert len(hist) == 2 and all(h["is_current_ancestor"] for h in hist)
+    assert sum(p["file_count"] for p in parts) == t.plan_files()[1]["files_selected"]
 
 
 def test_hash_distribution_bounds_file_count(spark, docs, tmp_path):
     """write.distribution-mode=hash: an input spread over many Spark
     partitions still writes exactly one file per partition value (not
-    tasks x partitions small files); distribution='none' skips the
-    shuffle. Summary totals accumulate across snapshots."""
+    tasks x partitions small files). Summary totals accumulate across
+    snapshots."""
     t = _fresh_table(docs, tmp_path, [("lang", "identity")])
     n_langs = docs.select("lang").distinct().count()
     t.append(docs.repartition(16))  # default hash distribution
@@ -449,49 +389,15 @@ def test_hash_distribution_bounds_file_count(spark, docs, tmp_path):
     _, stats = loaded.plan_files()
     assert stats["files_total"] == n_langs
 
-    loaded.append(docs.repartition(16), distribution="none")
+    loaded.append(docs.repartition(16))
     loaded = IcebergTable.load(t.location)
     _, stats2 = loaded.plan_files()
-    assert stats2["files_total"] > 2 * n_langs  # unclustered: many files
+    assert stats2["files_total"] == 2 * n_langs
 
     snap = loaded.snapshots()[-1]["summary"]
     assert int(snap["total-records"]) == 2 * docs.count()
     assert int(snap["total-data-files"]) == stats2["files_total"]
     assert loaded.scan(spark).count() == 2 * docs.count()
-
-
-def test_refs_tag_pin_and_expiry_survival(spark, docs, tmp_path):
-    """Tags pin a dataset release: readable by name, immune to snapshot
-    expiry, one metadata commit; main tracks the head."""
-    t = _fresh_table(docs, tmp_path, None)
-    t.append(docs.filter("doc_id < 100"))
-    t = IcebergTable.load(t.location)
-    t.create_ref("train-v1")
-    first_count = docs.filter("doc_id < 100").count()
-    t = IcebergTable.load(t.location)
-    t.append(docs.filter("doc_id >= 100 and doc_id < 200"))
-    t = IcebergTable.load(t.location)
-    t.append(docs.filter("doc_id >= 200"))
-    t = IcebergTable.load(t.location)
-
-    assert t.refs()["main"]["snapshot-id"] == t.current_snapshot_id()
-    assert t.scan(spark, ref="train-v1").count() == first_count
-    assert t.scan(spark).count() == docs.count()
-
-    # expiry keeps the tagged snapshot alive alongside the head
-    out = t.expire_snapshots(keep_last=1)
-    assert out["snapshots_removed"] == 1  # only the untagged middle one
-    t = IcebergTable.load(t.location)
-    assert t.scan(spark, ref="train-v1").count() == first_count
-    assert t.scan(spark).count() == docs.count()
-
-    t.drop_ref("train-v1")
-    t = IcebergTable.load(t.location)
-    assert "train-v1" not in t.refs()
-    with pytest.raises(KeyError):
-        t.snapshot_for_ref("train-v1")
-    with pytest.raises(ValueError):
-        t.drop_ref("main")
 
 
 def test_commit_cas_survives_version_race(spark, docs, tmp_path):
@@ -548,10 +454,10 @@ def test_stale_non_append_commit_raises(spark, docs, tmp_path):
     with pytest.raises(CommitConflictError):
         stale[0].delete_where(spark, "doc_id < 10")
     with pytest.raises(CommitConflictError):
-        stale[1].create_ref("release")
+        stale[1].set_sort_order(["doc_id"])
     final = IcebergTable.load(t.location)
     assert len(final.snapshots()) == 2
-    assert "release" not in final.refs()
+    assert final.metadata["default-sort-order-id"] == 0
     assert final.scan(spark).count() == docs.filter("doc_id < 60").count()
 
 
@@ -575,6 +481,11 @@ def test_metadata_json_is_spec_shaped(spark, docs, tmp_path):
     snap = meta["snapshots"][-1]
     assert snap["summary"]["operation"] == "append"
     assert os.path.exists(snap["manifest-list"])
+    # every commit advances the main branch ref with the current snapshot
+    assert meta["refs"] == {
+        "main": {"snapshot-id": snap["snapshot-id"], "type": "branch"}
+    }
+    assert meta["current-snapshot-id"] == snap["snapshot-id"]
     spec = meta["partition-specs"][0]
     assert spec["fields"][0]["transform"] == "identity"
     assert spec["fields"][0]["field-id"] == 1000
@@ -605,6 +516,49 @@ def test_jvm_avro_reads_manifests(spark, docs, tmp_path):
     assert entries and all(e.get("status") == 1 for e in entries)
     total = sum(e.get("data_file").get("record_count") for e in entries)
     assert total == 50
+
+
+def test_every_public_table_method_has_a_caller():
+    """The ``IcebergTable`` surface is what the program uses: every
+    public method is referenced as an attribute somewhere in
+    ``ocrs_spark/``, ``perfbench/`` (not its tests), ``scripts/`` or
+    ``bench*.py``, outside its own body. Methods only tests call do
+    not belong on the table."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    module = root / "ocrs_spark" / "iceberg.py"
+    tree = ast.parse(module.read_text())
+    cls = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "IcebergTable"
+    )
+    methods = {
+        n.name: n
+        for n in cls.body
+        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+    }
+    own = {
+        id(node)
+        for name, fn in methods.items()
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == name
+    }
+    paths = [
+        *root.glob("ocrs_spark/**/*.py"),
+        *(p for p in root.glob("perfbench/**/*.py") if "tests" not in p.parts),
+        *root.glob("scripts/**/*.py"),
+        *root.glob("bench*.py"),
+    ]
+    used = set()
+    for path in paths:
+        t = tree if path == module else ast.parse(path.read_text())
+        used |= {
+            n.attr
+            for n in ast.walk(t)
+            if isinstance(n, ast.Attribute) and id(n) not in own
+        }
+    assert sorted(set(methods) - used) == []
 
 
 # -- resume sink --------------------------------------------------------------
@@ -649,57 +603,6 @@ def test_compact_reduces_files_and_preserves_history(spark, docs, tmp_path):
     assert tt.count() == docs.filter("doc_id % 4 IN (0, 1)").count()
 
 
-def test_delete_partition_is_metadata_only(spark, docs, tmp_path):
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    s1 = t.append(docs)
-    files_before, _ = t.plan_files()
-    t.delete_partition({"lang": "en"})
-    loaded = IcebergTable.load(t.location)
-    out = loaded.scan(spark)
-    assert out.filter("lang = 'en'").count() == 0
-    assert out.count() == docs.filter("lang <> 'en'").count()
-    assert loaded.snapshots()[-1]["summary"]["operation"] == "delete"
-    # metadata-only: the dropped files still exist on disk (time travel)
-    for f in files_before:
-        assert os.path.exists(f["file_path"])
-    assert loaded.scan(spark, snapshot_id=s1).count() == docs.count()
-
-
-def test_expire_snapshots_removes_orphans(spark, docs, tmp_path):
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    t.append(docs)
-    old_files = [f["file_path"] for f, in zip(t.plan_files()[0])]
-    t.compact(spark)
-    assert all(os.path.exists(p) for p in old_files)  # history retained
-    result = t.expire_snapshots(keep_last=1)
-    assert result["snapshots_removed"] == 1
-    assert result["files_deleted"] > 0
-    assert not any(os.path.exists(p) for p in old_files)  # orphans gone
-    loaded = IcebergTable.load(t.location)
-    assert len(loaded.snapshots()) == 1
-    assert loaded.scan(spark).count() == docs.count()  # current unaffected
-
-
-def test_add_column_schema_evolution(spark, docs, tmp_path):
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    t.append(docs)
-    t.add_column("quality", "double")
-    loaded = IcebergTable.load(t.location)
-    assert loaded.metadata["current-schema-id"] == 1
-    enriched = docs.withColumn("quality", F.col("doc_id") / 1000.0)
-    doc2 = enriched.withColumn("doc_id", F.col("doc_id") + 10000)
-    loaded.append(doc2)
-    out = IcebergTable.load(t.location).scan(spark)
-    assert out.count() == 2 * docs.count()
-    # old files read the added optional column as null
-    assert out.filter("quality IS NULL").count() == docs.count()
-    assert out.filter("quality IS NOT NULL AND doc_id < 10000").count() == 0
-    got = out.filter("doc_id = 10003").collect()[0]
-    assert got.quality == 3 / 1000.0
-    with pytest.raises(ValueError, match="already exists"):
-        IcebergTable.load(t.location).add_column("quality", "double")
-
-
 def test_rewrite_manifests_consolidates_without_touching_data(spark, docs, tmp_path):
     t = _fresh_table(docs, tmp_path, [("lang", "identity")])
     pre = []
@@ -737,92 +640,6 @@ def test_rewrite_manifests_consolidates_without_touching_data(spark, docs, tmp_p
     again = loaded.rewrite_manifests()
     assert again["manifests_before"] == again["manifests_after"] == 1
     assert len(IcebergTable.load(t.location).snapshots()) == n_snaps
-
-
-def test_remove_orphan_files_deletes_uncommitted_debris(spark, docs, tmp_path):
-    import time as _time
-
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    t.append(docs)
-    live_files = [f["file_path"] for f in t.plan_files()[0]]
-
-    # debris of a failed distributed write: task output with no commit
-    orphan_dir = f"{t.location}/data/deadbeef"
-    os.makedirs(orphan_dir)
-    orphan_data = f"{orphan_dir}/part-00000.parquet"
-    with open(orphan_data, "wb") as f:
-        f.write(b"not really parquet")
-    orphan_manifest = f"{t.location}/metadata/deadbeef-m0.avro"
-    with open(orphan_manifest, "wb") as f:
-        f.write(b"not really avro")
-    hidden = f"{orphan_dir}/_SUCCESS"
-    with open(hidden, "w"):
-        pass
-
-    # a fresh-file cutoff protects in-flight writers
-    cutoff_past = int((_time.time() - 3600) * 1000)
-    res = t.remove_orphan_files(older_than_ms=cutoff_past)
-    assert res["files_deleted"] == 0
-    assert os.path.exists(orphan_data)
-
-    res = t.remove_orphan_files()
-    assert res["files_deleted"] == 2
-    assert res["bytes_reclaimed"] > 0
-    assert not os.path.exists(orphan_data)
-    assert not os.path.exists(orphan_manifest)
-    assert not os.path.exists(orphan_dir)  # emptied write dir pruned
-    # everything reachable survives: data, manifests, metadata jsons
-    assert all(os.path.exists(p) for p in live_files)
-    loaded = IcebergTable.load(t.location)
-    assert loaded.scan(spark).count() == docs.count()
-    # reachability spans ALL snapshots, not just the current one
-    t2 = IcebergTable.load(t.location)
-    t2.compact(spark)
-    res2 = t2.remove_orphan_files()
-    assert res2["files_deleted"] == 0  # pre-compaction files still referenced
-    assert all(os.path.exists(p) for p in live_files)
-
-
-def test_write_audit_publish_branch_flow(spark, docs, tmp_path):
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    base = docs.filter("doc_id % 2 = 0")
-    t.append(base)
-    published = t.current_snapshot_id()
-
-    # stage a new crawl batch on an audit branch: invisible on main
-    batch = docs.filter("doc_id % 2 = 1")
-    staged = t.append(batch, branch="audit")
-    assert t.current_snapshot_id() == published
-    assert t.scan(spark).count() == base.count()
-    # ...but fully readable for quality checks via the branch ref
-    audit = t.scan(spark, ref="audit")
-    assert audit.count() == docs.count()
-
-    # audit passed: publish atomically
-    got = t.fast_forward("main", "audit")
-    assert got == staged
-    loaded = IcebergTable.load(t.location)
-    assert loaded.current_snapshot_id() == staged
-    assert loaded.scan(spark).count() == docs.count()
-    # snapshot-log gained exactly one entry for the publish
-    assert loaded.metadata["snapshot-log"][-1]["snapshot-id"] == staged
-
-    # a second staged batch on the same branch parents on the branch head
-    t2 = IcebergTable.load(t.location)
-    extra = docs.withColumn("doc_id", F.col("doc_id") + 50000)
-    s2 = t2.append(extra, branch="audit")
-    snaps = {s["snapshot-id"]: s for s in t2.snapshots()}
-    assert snaps[s2]["parent-snapshot-id"] == staged
-
-    # diverged main (a direct append) makes the publish a non-fast-forward
-    t2.append(docs.withColumn("doc_id", F.col("doc_id") + 90000))
-    with pytest.raises(ValueError, match="not an ancestor"):
-        t2.fast_forward("main", "audit")
-
-    # audit rejected instead: drop the branch; staged rows never published
-    t2.drop_ref("audit")
-    final = IcebergTable.load(t.location).scan(spark)
-    assert final.filter("doc_id >= 50000 AND doc_id < 90000").count() == 0
 
 
 def test_sorted_compaction_tightens_bounds_for_pruning(spark, docs, tmp_path):
@@ -864,33 +681,6 @@ def test_sorted_range_scan_row_prunes_files(spark):
     )
     assert stats["manifests_total"] == 1  # rewrite_manifests folded them
     assert stats["files_selected"] < stats["files_total"]
-
-
-def test_manifests_and_refs_metadata_tables(spark, docs, tmp_path):
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    for i in range(3):
-        t.append(docs.filter(F.col("doc_id") % 3 == i))
-    t.create_ref("train-v1")
-    t.append(docs.withColumn("doc_id", F.col("doc_id") + 10000), branch="audit")
-
-    m = t.inspect_manifests(spark).toPandas()
-    assert len(m) == 3  # main head: one manifest per append
-    assert set(m["content"]) == {0}
-    assert (m["added_data_files_count"] > 0).all()
-    assert m["sequence_number"].is_monotonic_decreasing or len(set(m["sequence_number"])) == 3
-
-    r = t.inspect_refs(spark).toPandas().set_index("name")
-    assert set(r.index) == {"main", "train-v1", "audit"}
-    assert r.loc["train-v1", "type"] == "tag"
-    assert r.loc["audit", "type"] == "branch"
-    assert r.loc["main", "snapshot_id"] == t.current_snapshot_id()
-    assert r.loc["audit", "snapshot_id"] != t.current_snapshot_id()
-
-    t.rewrite_manifests()
-    m2 = t.inspect_manifests(spark).toPandas()
-    assert len(m2) == 1
-    # the fold preserves every live data file as EXISTING
-    assert m2["existing_data_files_count"].iloc[0] == m["added_data_files_count"].sum()
 
 
 def test_metadata_count_never_opens_data_files(spark, docs, tmp_path):

@@ -1,7 +1,6 @@
 """Iceberg v2 row-level deletes: position-delete files (delete_where),
 equality-delete files (upsert/MERGE), merge-on-read scans, and their
-interplay with time travel, compaction, partition deletes, incremental
-scans, and snapshot expiry.
+interplay with time travel, compaction and incremental file planning.
 
 Spec parity (https://iceberg.apache.org/spec/#row-level-deletes):
 position deletes record (file_path, pos) and apply to data files with
@@ -12,8 +11,6 @@ files survive its own equality deletes).
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -173,42 +170,14 @@ def test_compact_folds_and_purges_deletes(spark, docs, tmp_path):
     assert _ids(loaded.scan(spark)) == want
 
 
-def test_partition_delete_keeps_pending_row_deletes(spark, docs, tmp_path):
-    """A file-granular partition delete must carry delete manifests
-    forward so pending row-level deletes still apply to kept files."""
-    t = _fresh(docs, tmp_path, [("lang", "identity")])
-    t.append(docs)
-    t.delete_where(spark, "lang = 'en' AND doc_id % 2 = 0")
-    t.delete_partition({"lang": "de"})
-    out = IcebergTable.load(t.location).scan(spark)
-    assert out.filter("lang = 'de'").count() == 0
-    assert _ids(out.filter("lang = 'en'")) == _ids(
-        docs.filter("lang = 'en' AND doc_id % 2 != 0")
-    )
-
-
 def test_incremental_scan_refuses_to_cross_row_deletes(spark, docs, tmp_path):
     t = _fresh(docs, tmp_path)
-    s1 = t.append(docs.filter("doc_id < 100"))
+    t.append(docs.filter("doc_id < 100"))
     t.delete_where(spark, "doc_id < 10")
     t.append(docs.filter("doc_id >= 100"))
+    assert [s["sequence-number"] for s in t.snapshots()] == [1, 2, 3]
     with pytest.raises(ValueError, match="delete"):
-        t.scan_incremental(spark, from_snapshot_id=s1)
-
-
-def test_expire_snapshots_removes_orphaned_delete_files(spark, docs, tmp_path):
-    t = _fresh(docs, tmp_path)
-    t.append(docs)
-    t.delete_where(spark, "doc_id % 2 = 0")
-    _files, dels, _stats = t.plan_scan()
-    delete_paths = [d["file_path"] for d in dels]
-    assert all(os.path.exists(p) for p in delete_paths)
-    t.compact(spark)  # new snapshot no longer references the delete files
-    t.expire_snapshots(keep_last=1)
-    assert not any(os.path.exists(p) for p in delete_paths)
-    # table still reads correctly after physical cleanup
-    got = _ids(IcebergTable.load(t.location).scan(spark))
-    assert got == _ids(docs.filter("doc_id % 2 != 0"))
+        t.plan_incremental_files(1, 3)
 
 
 def test_sink_invalidate_reopens_documents_for_resume(spark, docs, tmp_path):

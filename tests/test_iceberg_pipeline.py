@@ -68,21 +68,27 @@ def test_incremental_scan_drives_incremental_ocr(spark, corpus, tmp_path_factory
     docs, media = corpus
     base = tmp_path_factory.mktemp("icb_incr")
     source = IcebergTable.create(str(base / "source"), docs.schema)
-    s1 = source.append(docs.filter("doc_id < 60"))
-    s2 = source.append(docs.filter("doc_id >= 60 AND doc_id < 90"))
-    s3 = source.append(docs.filter("doc_id >= 90"))
+    source.append(docs.filter("doc_id < 60"))
+    source.append(docs.filter("doc_id >= 60 AND doc_id < 90"))
+    source.append(docs.filter("doc_id >= 90"))
 
-    # the consumer processed up to s1; one tick picks up s2+s3 only
-    delta = source.scan_incremental(spark, from_snapshot_id=s1)
+    def window(from_seq, to_seq):
+        # the changelog window as the stream source plans it; the table
+        # is unpartitioned, so its data files hold every column
+        files = source.plan_incremental_files(from_seq, to_seq)
+        return spark.read.schema(docs.schema).parquet(*[f["file_path"] for f in files])
+
+    # the consumer processed up to sequence number 1; one tick picks up
+    # the second and third appends only
+    delta = window(1, 3)
     got_ids = sorted(r.doc_id for r in delta.select("doc_id").collect())
     assert got_ids == sorted(
         r.doc_id for r in docs.filter("doc_id >= 60").select("doc_id").collect()
     )
-    # bounded window: (s1, s2] is just the second append
-    window = source.scan_incremental(spark, from_snapshot_id=s1, to_snapshot_id=s2)
-    assert window.count() == docs.filter("doc_id >= 60 AND doc_id < 90").count()
+    # bounded window: (1, 2] is just the second append
+    assert window(1, 2).count() == docs.filter("doc_id >= 60 AND doc_id < 90").count()
     # from-table-start: everything
-    assert source.scan_incremental(spark, None).count() == docs.count()
+    assert window(0, 3).count() == docs.count()
 
     # the delta flows through the OCR pipeline like any batch
     woven = ocr_documents(delta, media)
@@ -94,8 +100,8 @@ def test_incremental_scan_refuses_replace_window(spark, corpus, tmp_path_factory
     docs, _media = corpus
     base = tmp_path_factory.mktemp("icb_guard")
     source = IcebergTable.create(str(base / "source"), docs.schema)
-    s1 = source.append(docs.filter("doc_id < 60"))
+    source.append(docs.filter("doc_id < 60"))
     source.append(docs.filter("doc_id >= 60"))
     source.compact(spark)
     with pytest.raises(ValueError, match="replace"):
-        source.scan_incremental(spark, from_snapshot_id=s1)
+        source.plan_incremental_files(1, 3)

@@ -25,12 +25,12 @@ def test_stream_changelog_incremental_exactly_once(spark, docs, tmp_path):
     _stream_two_appends(spark, docs, tmp_path, "plain")
 
 
-@pytest.mark.parametrize("layout", ["identity_partitioned", "added_column"])
+@pytest.mark.parametrize("layout", ["identity_partitioned", "null_identity_partition"])
 def test_stream_changelog_layouts_match_scan(spark, docs, tmp_path, layout):
     """Whatever the file layout, the stream delivers the rows
     ``IcebergTable.scan`` reads: identity partition columns (projected
-    out of hive-layout files) come back as per-split constants, and
-    files written before ``add_column`` give typed nulls for it."""
+    out of hive-layout files) come back as per-split constants, and the
+    null partition's files give typed nulls."""
     _stream_two_appends(spark, docs, tmp_path, layout)
 
 
@@ -38,14 +38,15 @@ def _stream_two_appends(spark, docs, tmp_path, layout):
     loc = str(tmp_path / "tbl")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
+    if layout == "null_identity_partition":
+        docs = docs.withColumn(
+            "lang", F.when(F.col("doc_id") % 7 == 0, None).otherwise(F.col("lang"))
+        )
     h1 = docs.filter("doc_id % 2 = 0")
     h2 = docs.filter("doc_id % 2 = 1")
-    partition_by = [("lang", "identity")] if layout == "identity_partitioned" else None
+    partition_by = None if layout == "plain" else [("lang", "identity")]
     t = IcebergTable.create(loc, docs.schema, partition_by=partition_by)
     t.append(h1)
-    if layout == "added_column":
-        IcebergTable.load(loc).add_column("quality", "double")
-        h2 = h2.withColumn("quality", F.col("n_chars").cast("double") / 7)
 
     def run():
         q = (
@@ -77,8 +78,10 @@ def _stream_two_appends(spark, docs, tmp_path, layout):
     }
     if layout == "identity_partitioned":
         assert result.filter("lang is null").count() == 0
-    if layout == "added_column":
-        assert result.filter("quality is null").count() == h1.count()
+    if layout == "null_identity_partition":
+        nulls = result.filter("lang is null")
+        assert nulls.count() == docs.filter("doc_id % 7 = 0").count() > 0
+        assert nulls.filter("doc_id % 7 <> 0").count() == 0
 
 
 def test_stream_starting_position_latest(spark, docs, tmp_path):

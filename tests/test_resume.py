@@ -232,6 +232,43 @@ def test_crash_between_data_write_and_publish(
     assert spans_as_tuples(result) == spans_as_tuples(expected)
 
 
+def test_unpublished_run_leaves_no_files(spark, frames, tmp_path_factory, monkeypatch):
+    """A run that fails after its data write and is certainly not
+    published, because it lost every manifest race or its observations
+    could not be read, removes data/<run_id> and metrics/<run_id>.json;
+    the rerun commits every document once."""
+    import ocrs_spark.checkpoint as checkpoint
+
+    docs, media, expected = frames
+    root = tmp_path_factory.mktemp("ckpt_unpublished")
+    ckpt = DocumentCheckpoint(str(root))
+
+    monkeypatch.setattr(DocumentCheckpoint, "_publish_manifest", lambda self, *a: False)
+    with pytest.raises(IOError, match="lost 32 consecutive manifest races"):
+        run_checkpointed(docs, media, ckpt)
+    assert list((root / "data").iterdir()) == []
+    assert list((root / "metrics").iterdir()) == []
+    monkeypatch.undo()
+
+    def lost(obs):
+        raise RuntimeError("observation lost")
+
+    monkeypatch.setattr(checkpoint, "observed", lost)
+    with pytest.raises(RuntimeError, match="observation lost"):
+        run_checkpointed(docs, media, ckpt)
+    assert list((root / "data").iterdir()) == []
+    monkeypatch.undo()
+
+    snap = run_checkpointed(docs, media, ckpt)
+    assert [s["snapshot_id"] for s in ckpt.snapshots()] == [1]
+    assert {p.name for p in (root / "data").iterdir()} == {snap["run_id"]}
+    assert {p.name for p in (root / "metrics").iterdir()} == {f"{snap['run_id']}.json"}
+    result = ckpt.read_result(spark)
+    assert result.count() == docs.count()
+    assert result.select("doc_id").distinct().count() == docs.count()
+    assert spans_as_tuples(result) == spans_as_tuples(expected)
+
+
 def test_corrupt_payload_commits_decode_error_class(spark, tmp_path_factory):
     """One undecodable payload is one ``errors_decode`` in the committed
     metrics, not a failed run: its span keeps a null text and every
