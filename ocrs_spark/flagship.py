@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .codec import encode_rawi
 from .fixtures import MEDIA_SCHEMA, make_word_image
-from .matcache import materialize_once as _materialize_once
+from .matcache import materialize_once as _materialize_once, once
 from .pipeline import ocr_documents
 
 # ref -> expected OCR text under the fake models (golden constants).
@@ -234,22 +234,21 @@ def stream_ocr_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship oracle — the driver-checked proof that the streaming
     pipeline produces identical end-to-end results."""
 
-    def build():
-        import tempfile
+    def build(base):
+        from .streaming import file_stream, stream_ocr_documents
 
-        from .streaming import stream_ocr_documents
-
-        base = tempfile.mkdtemp(prefix="ocrs_stream_ocr_")
         docs_dir = f"{base}/docs"
         _materialized_interleaved(spark, sf_dir).write.parquet(docs_dir)
-        out_dir = f"{base}/out"
         stream_ocr_documents(
-            spark, docs_dir, flagship_media(spark), f"{base}/ckpt", out_dir
+            file_stream(spark, docs_dir),
+            flagship_media(spark),
+            f"{base}/ckpt",
+            f"{base}/out",
         )
-        return spark.read.parquet(out_dir).drop("batch_id")
+        return f"{base}/out"
 
-    woven = _materialize_once(spark, sf_dir, "stream_woven", build)
-    return serialize_woven(woven)
+    out_dir = once(spark, sf_dir, "stream_woven", build)
+    return serialize_woven(spark.read.parquet(out_dir).drop("batch_id"))
 
 
 ORACLE_OCR_INTERLEAVED = f"""

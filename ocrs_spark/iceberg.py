@@ -1727,8 +1727,19 @@ class IcebergTable:
         for f in files:
             key = tuple(f["partition"].get(name) for name in identity)
             groups.setdefault(key, []).append(f["file_path"])
+        # Spark lists more paths than this in a parallel job; reading
+        # each group in chunks of at most that many keeps the scan's
+        # construction free of Spark jobs however many files it covers.
+        chunk = max(1, int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+        )))
+        reads = [
+            (key, paths[i : i + chunk])
+            for key, paths in sorted(groups.items(), key=lambda kv: repr(kv[0]))
+            for i in range(0, len(paths), chunk)
+        ]
         out = None
-        for key, paths in sorted(groups.items(), key=lambda kv: repr(kv[0])):
+        for key, paths in reads:
             df = spark.read.schema(file_schema).parquet(*paths)
             for src, value in zip(identity.values(), key):
                 df = df.withColumn(src, F.lit(value).cast(types[src]))

@@ -37,10 +37,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from . import load_tables
+from ..matcache import once
 
 N_MERGES = 20
-
-_MERGES_CACHE: dict = {}
 
 
 # -- reference implementation (the parity check) ----------------------------
@@ -163,12 +162,14 @@ def train_bpe_distributed(spark, words_df, n_merges: int) -> list[tuple[str, str
 
 
 def trained_merges(spark, sf_dir: str) -> list[tuple[str, str]]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MERGES_CACHE:
-        _MERGES_CACHE[key] = train_bpe_distributed(
+    return once(
+        spark,
+        sf_dir,
+        "bpe_merges",
+        lambda _path: train_bpe_distributed(
             spark, word_freq_table(spark, sf_dir), N_MERGES
-        )
-    return _MERGES_CACHE[key]
+        ),
+    )
 
 
 def bpe_token_counts(spark, sf_dir: str):

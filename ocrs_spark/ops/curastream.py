@@ -41,6 +41,8 @@ import os
 from pyspark.sql import functions as F
 
 from . import load_tables
+from ..matcache import once
+from ..streaming import drain
 from .decontam import EVAL_EVERY, EVAL_SKIP, NGRAM_W, doc_grams, eval_grams
 from .gopher import ORACLE_GOPHER, quality_signals
 from .lmscore import ALPHA
@@ -48,9 +50,6 @@ from .curation import PPL_MAX
 
 PLANT_N = 6
 PLANT_OFFSET = 5_000_000
-
-# (applicationId, sf_dir) -> sink dir of a completed two-batch run.
-_DONE: dict = {}
 
 
 def _augmented(docs):
@@ -172,16 +171,12 @@ def _curate_batch(spark, batch, frozen: str, state_dir: str):
 def stream_incremental_curation(spark, sf_dir):
     """(doc_id, kept, reason) for the augmented corpus, produced by two
     incremental micro-batch runs over a growing Iceberg table."""
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sink = _DONE.get(key)
-    if sink is None:
+    def build(base):
         from ocrs_spark.iceberg import IcebergTable
         from ocrs_spark.iceberg_source import IcebergDataSource
 
         spark.dataSource.register(IcebergDataSource)
-        base = tempfile.mkdtemp(prefix="ocrs_curastream_")
         frozen = f"{base}/frozen"
         _freeze_artifacts(spark, sf_dir, frozen)
         (docs,) = load_tables(spark, sf_dir, "documents")
@@ -195,31 +190,28 @@ def stream_incremental_curation(spark, sf_dir):
         state = f"{base}/seen"
         os.makedirs(state, exist_ok=True)
 
+        def process(batch_df, batch_id):
+            if batch_df.isEmpty():
+                return
+            verdicts, hashes = _curate_batch(spark, batch_df, frozen, state)
+            verdicts.write.mode("append").parquet(sink)
+            hashes.write.mode("append").parquet(state)
+
         def run_once():
-            stream = spark.readStream.format("ocrs_iceberg").load(src.location)
-
-            def process(batch_df, batch_id):
-                if batch_df.isEmpty():
-                    return
-                verdicts, hashes = _curate_batch(spark, batch_df, frozen, state)
-                verdicts.write.mode("append").parquet(sink)
-                hashes.write.mode("append").parquet(state)
-
-            q = (
-                stream.writeStream.foreachBatch(process)
+            drain(
+                spark.readStream.format("ocrs_iceberg")
+                .load(src.location)
+                .writeStream.foreachBatch(process)
                 .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
             )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError("incremental curation: backlog not drained")
 
         src.append(aug.filter(F.col("doc_id") <= split))
         run_once()
         src.append(aug.filter(F.col("doc_id") > split))
         run_once()
-        _DONE[key] = sink
+        return sink
+
+    sink = once(spark, sf_dir, "stream_incremental_curation", build)
     return spark.read.parquet(sink).select("doc_id", "kept", "reason")
 
 

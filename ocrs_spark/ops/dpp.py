@@ -26,31 +26,24 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..matcache import _MATERIALIZED, _TEMP_DIRS, materialize_once
+from ..matcache import once
 
 
 def partitioned_events_path(spark, sf_dir: str) -> str:
     """Land events hive-partitioned by event_date once per session and
-    return the directory path (materialize_once caches by key)."""
-    import atexit
-    import shutil
-    import tempfile
+    return the directory path."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, "events_by_date")
-    path = _MATERIALIZED.get(key)
-    if path is None:
-        tmp = tempfile.mkdtemp(prefix="ocrs_dpp_")
-        _TEMP_DIRS.append(tmp)
-        atexit.register(lambda: shutil.rmtree(tmp, ignore_errors=True))
-        path = f"{tmp}/events_by_date"
+    def land(base: str) -> str:
+        path = f"{base}/events_by_date"
         (
             spark.read.parquet(f"{sf_dir}/events.parquet")
             .withColumn("event_date", F.to_date("ts"))
             .write.partitionBy("event_date")
             .parquet(path)
         )
-        _MATERIALIZED[key] = path
-    return path
+        return path
+
+    return once(spark, sf_dir, "events_by_date", land)
 
 
 def _date_dim(spark, sf_dir: str):

@@ -20,9 +20,9 @@ same rows straight from parquet:
   route through bucket pruning + per-file doc_id bounds, so a wrong
   bucket hash or wrong bounds loses rows and the oracle goes red.
 
-The tables are materialized once per (session, sf_dir) into a temp
-location (cleaned at exit); the timed path is metadata planning + the
-pruned parquet read, not table construction.
+The tables are built once per (session, sf_dir) through
+``matcache.once`` (cleaned at exit); the timed path is metadata
+planning + the pruned parquet read, not table construction.
 
 Scale design: commits are metadata-only; scans plan on the driver over
 manifest files (bounded, exactly Iceberg's own planning model) and read
@@ -33,64 +33,43 @@ skew regardless of doc_id distribution.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..iceberg import IcebergTable, bucket_value
-
-_TABLES: dict = {}
-_TEMP_DIRS: list[str] = []
-_CLEANUP_REGISTERED = False
+from ..matcache import once
 
 LOOKUP_IDS = [7, 42, 123, 404]
-
-
-def _register_cleanup() -> None:
-    global _CLEANUP_REGISTERED
-    if not _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED = True
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True) for d in _TEMP_DIRS]
-        )
 
 
 def corpus_table(spark, sf_dir: str):
     """documents -> identity(lang)-partitioned table, two snapshots.
 
     Returns (table, first_snapshot_id, second_snapshot_id)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "lang")
-    if key not in _TABLES:
-        _register_cleanup()
+
+    def build(loc):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        loc = tempfile.mkdtemp(prefix="ocrs_icb_")
-        _TEMP_DIRS.append(loc)
         table = IcebergTable.create(
             loc, docs.schema, partition_by=[("lang", "identity")]
         )
         s1 = table.append(docs.filter(F.col("doc_id") % 2 == 0))
         s2 = table.append(docs.filter(F.col("doc_id") % 2 == 1))
-        _TABLES[key] = (loc, s1, s2)
-    loc, s1, s2 = _TABLES[key]
+        return loc, s1, s2
+
+    loc, s1, s2 = once(spark, sf_dir, "iceberg_lang", build)
     return IcebergTable.load(loc), s1, s2
 
 
 def bucket_table(spark, sf_dir: str):
     """documents -> bucket[8](doc_id)-partitioned table, one snapshot."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bucket")
-    if key not in _TABLES:
-        _register_cleanup()
+
+    def build(loc):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        loc = tempfile.mkdtemp(prefix="ocrs_icb_")
-        _TEMP_DIRS.append(loc)
         table = IcebergTable.create(
             loc, docs.schema, partition_by=[("doc_id", "bucket[8]")]
         )
-        s1 = table.append(docs)
-        _TABLES[key] = (loc, s1, s1)
-    loc, s1, _ = _TABLES[key]
+        return loc, table.append(docs)
+
+    loc, s1 = once(spark, sf_dir, "iceberg_bucket", build)
     return IcebergTable.load(loc), s1
 
 
@@ -102,12 +81,9 @@ def maintained_table(spark, sf_dir: str):
     ``compact`` (range-clustered files, tight bounds) +
     ``rewrite_manifests`` (one manifest). The scan row over it proves
     the whole repair preserved every row value."""
-    key = (spark.sparkContext.applicationId, sf_dir, "maintained")
-    if key not in _TABLES:
-        _register_cleanup()
+
+    def build(loc):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        loc = tempfile.mkdtemp(prefix="ocrs_icb_")
-        _TEMP_DIRS.append(loc)
         table = IcebergTable.create(
             loc, docs.schema, partition_by=[("lang", "identity")]
         )
@@ -116,9 +92,9 @@ def maintained_table(spark, sf_dir: str):
         table.set_sort_order(["doc_id"])
         table.compact(spark, target_files_per_partition=4)
         table.rewrite_manifests()
-        _TABLES[key] = (loc, None, None)
-    loc, _, _ = _TABLES[key]
-    return IcebergTable.load(loc)
+        return loc
+
+    return IcebergTable.load(once(spark, sf_dir, "iceberg_maintained", build))
 
 
 SORTED_RANGE = (120, 219)
@@ -181,12 +157,9 @@ def _mor_table(spark, sf_dir: str):
     inserting a small batch of brand-new docs, then a row-level
     ``delete_where`` (position deletes) dropping doc_id % 13 == 3.
     Scans must merge-on-read all three layers."""
-    key = (spark.sparkContext.applicationId, sf_dir, "mor")
-    if key not in _TABLES:
-        _register_cleanup()
+
+    def build(loc):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        loc = tempfile.mkdtemp(prefix="ocrs_icb_")
-        _TEMP_DIRS.append(loc)
         table = IcebergTable.create(
             loc, docs.schema, partition_by=[("lang", "identity")]
         )
@@ -203,9 +176,9 @@ def _mor_table(spark, sf_dir: str):
         table.delete_where(
             spark, F.col("doc_id") % DELETE_MOD == 3
         )
-        _TABLES[key] = (loc, None, None)
-    loc, _, _ = _TABLES[key]
-    return IcebergTable.load(loc)
+        return loc
+
+    return IcebergTable.load(once(spark, sf_dir, "iceberg_mor", build))
 
 
 def iceberg_upsert_scan(spark, sf_dir: str):

@@ -29,7 +29,8 @@ from typing import Iterator
 import pandas as pd
 
 from . import load_tables
-from ..matcache import materialize_once
+from ..matcache import materialize_once, once
+from ..streaming import drain
 from .audio import _rate, _samples, decode_wav, encode_wav
 from .imagemeta import _png_with_text, extract_png_text
 from .video import _usec_per_frame, decode_avi, encode_avi
@@ -143,10 +144,6 @@ FROM documents
 
 
 
-# (applicationId, sf_dir) -> memory-sink table of a finished stream run.
-_STREAM_DONE: dict = {}
-
-
 def stream_media_route(spark, sf_dir: str):
     """The SAME router as a Structured Streaming job: the mixed binary
     column staged to a directory, read with ``readStream`` (file
@@ -156,14 +153,10 @@ def stream_media_route(spark, sf_dir: str):
     incremental shape a continuously-crawled media corpus needs).
     Same oracle as the batch row: the stream must converge to the
     batch answer."""
-    import tempfile
     import uuid
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _STREAM_DONE.get(key)
-    if name is None:
+    def build(base):
         name = "media_route_" + uuid.uuid4().hex[:8]
-        base = tempfile.mkdtemp(prefix="ocrs_stream_media_")
         pay_dir = f"{base}/payloads"
         _mixed_payloads(spark, sf_dir).write.parquet(pay_dir)
         stream = (
@@ -189,17 +182,15 @@ def stream_media_route(spark, sf_dir: str):
                     ],
                 )
 
-        q = (
+        drain(
             stream.mapInPandas(extract, schema=ROUTER_SCHEMA)
             .writeStream.format("memory")
             .queryName(name)
             .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
-        _STREAM_DONE[key] = name
-    return spark.table(name)
+        return name
+
+    return spark.table(once(spark, sf_dir, "stream_media_route", build))
 
 
 QUERIES = {

@@ -43,9 +43,7 @@ from .dedup import _DUCK_SHINGLES, shingles_df
 
 def novelty_over(docs: DataFrame) -> DataFrame:
     """(doc_id, n_distinct_shingles, n_novel, novelty_frac) per doc."""
-    from pyspark import StorageLevel
-
-    sh = shingles_df(docs).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    sh = shingles_df(docs).distinct().localCheckpoint()
     totals = sh.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_distinct_shingles")
     )

@@ -168,7 +168,7 @@ def pdf_mixed_extraction(spark, sf_dir):
 
     payloads = mixed_pdf_payload_table(spark, sf_dir)
     parallelism = spark.sparkContext.defaultParallelism
-    parsed = parse_mixed_pdfs(payloads, parallelism).cache()
+    parsed = parse_mixed_pdfs(payloads, parallelism).localCheckpoint()
     spans = parsed.select("doc_id", "kind", "text", "media_ref", "offset")
     media = (
         parsed.filter(F.col("kind") == "image")

@@ -16,90 +16,65 @@ streaming operators end-to-end instead of pytest-only:
 
 from __future__ import annotations
 
+import os
+import uuid
+
+from pyspark.sql import functions as F
+
+from .. import streaming
+from ..matcache import once
 from .relational import ORACLE_TUMBLING, SESSIONS_CTE
 
-# (applicationId, sf_dir, kind) -> memory-sink table name of a run.
-_DONE: dict = {}
 
+def _drained(spark, sf_dir, kind, stage, stream):
+    """Stage events.parquet into ``<base>/events`` with ``stage(events,
+    base)`` (the file stream source reads a directory), drain
+    ``stream(spark, events_dir, checkpoint_dir, sink_name)`` into a
+    memory sink once per (session, sf_dir) and return the sink table."""
 
-def _staged_events_run(spark, sf_dir, kind, runner):
-    """Stage events.parquet into a directory (the file stream source
-    requires one) and run ``runner(events_dir, ckpt_dir, sink_name)``
-    once per (session, sf_dir); return the memory-sink table."""
-    import tempfile
-    import uuid
-
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    name = _DONE.get(key)
-    if name is None:
+    def build(base):
+        stage(spark.read.parquet(f"{sf_dir}/events.parquet"), base)
         name = f"{kind}_" + uuid.uuid4().hex[:8]
-        base = tempfile.mkdtemp(prefix=f"ocrs_stream_{kind}_")
-        events_dir = f"{base}/events"
-        spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(events_dir)
-        runner(events_dir, f"{base}/ckpt", name)
-        _DONE[key] = name
-    return spark.table(name)
+        stream(spark, f"{base}/events", f"{base}/ckpt", name)
+        return name
+
+    return spark.table(once(spark, sf_dir, kind, build))
 
 
-def _staged_duplicated_run(spark, sf_dir, kind, runner):
-    """Stage events.parquet with planted re-deliveries — two full copies
-    plus a third partial copy (event_id % 3 == 0) landed as separate
-    files, the way an at-least-once queue re-delivers — then run the
-    stream once per (session, sf_dir)."""
-    import tempfile
-    import uuid
+def _stage_as_is(ev, base):
+    ev.write.parquet(f"{base}/events")
 
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    name = _DONE.get(key)
-    if name is None:
-        name = f"{kind}_" + uuid.uuid4().hex[:8]
-        base = tempfile.mkdtemp(prefix=f"ocrs_stream_{kind}_")
-        events_dir = f"{base}/events"
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev.write.parquet(events_dir)
-        ev.write.mode("append").parquet(events_dir)
-        ev.where("event_id % 3 = 0").write.mode("append").parquet(events_dir)
-        runner(events_dir, f"{base}/ckpt", name)
-        _DONE[key] = name
-    return spark.table(name)
+
+def _stage_duplicated(ev, base):
+    """Planted re-deliveries: two full copies plus a third partial copy
+    (event_id % 3 == 0) landed as separate files, the way an
+    at-least-once queue re-delivers."""
+    ev.write.parquet(f"{base}/events")
+    ev.write.mode("append").parquet(f"{base}/events")
+    ev.where("event_id % 3 = 0").write.mode("append").parquet(f"{base}/events")
 
 
 def stream_dedup_ingest(spark, sf_dir):
     """Distinct events surviving the watermarked streaming dedup of an
     at-least-once delivery (event_id, user_id, event_type, value)."""
-    from ocrs_spark.streaming import stream_dedup_events
-
-    return _staged_duplicated_run(
-        spark,
-        sf_dir,
-        "dedup_ingest",
-        lambda ev, ck, name: stream_dedup_events(spark, ev, ck, name),
+    return _drained(
+        spark, sf_dir, "dedup_ingest", _stage_duplicated, streaming.stream_dedup_events
     )
 
 
 def stream_sessionize_closed(spark, sf_dir):
     """Closed sessions emitted by the streaming sessionizer
     (user_id, session_start, session_end, n_events, sum_value)."""
-    from ocrs_spark.streaming import stream_sessionize_events
-
-    return _staged_events_run(
-        spark,
-        sf_dir,
-        "closed_sessions",
-        lambda ev, ck, name: stream_sessionize_events(spark, ev, ck, name),
+    return _drained(
+        spark, sf_dir, "closed_sessions", _stage_as_is, streaming.stream_sessionize_events
     )
 
 
 def stream_tumbling_agg(spark, sf_dir):
     """Hourly windowed counts/sums emitted by the watermarked streaming
     aggregation (window_start, event_type, n_events, sum_value)."""
-    from ocrs_spark.streaming import stream_events_tumbling
-
-    return _staged_events_run(
-        spark,
-        sf_dir,
-        "stream_tumbling",
-        lambda ev, ck, name: stream_events_tumbling(spark, ev, ck, name),
+    return _drained(
+        spark, sf_dir, "stream_tumbling", _stage_as_is, streaming.stream_events_tumbling
     )
 
 
@@ -118,13 +93,8 @@ def stream_click_attribution(spark, sf_dir):
     """(user_id, view_id, click_id, view_epoch, click_epoch) pairs from
     the watermarked stream-stream interval self-join (every click
     attributed to each same-user view in the preceding 2 hours)."""
-    from ocrs_spark.streaming import stream_view_click_join
-
-    return _staged_events_run(
-        spark,
-        sf_dir,
-        "click_attr",
-        lambda ev, ck, name: stream_view_click_join(spark, ev, ck, name),
+    return _drained(
+        spark, sf_dir, "click_attr", _stage_as_is, streaming.stream_view_click_join
     )
 
 
@@ -145,7 +115,7 @@ JOIN events c
 """
 
 
-def _staged_late_run(spark, sf_dir, kind, runner):
+def _stage_late(ev, base):
     """Stage events as three files with pinned, strictly-increasing
     mtimes (FileStreamSource drains them in this order, one per
     trigger):
@@ -162,39 +132,22 @@ def _staged_late_run(spark, sf_dir, kind, runner):
       (max - 2h), and every part-2 row's window closed before that —
       dropped row-for-row.
     """
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    name = _DONE.get(key)
-    if name is None:
-        name = f"{kind}_" + uuid.uuid4().hex[:8]
-        base = tempfile.mkdtemp(prefix=f"ocrs_stream_{kind}_")
-        events_dir = f"{base}/events"
-        os.makedirs(events_dir)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        (max_ts,) = ev.agg(F.max("ts")).first()
-        old = F.col("ts") < F.lit(max_ts) - F.expr("INTERVAL 4 HOURS")
-        parts = [
-            ev.filter(~((F.col("event_id") % 10).isin(0, 5) & old)),
-            ev.filter((F.col("event_id") % 10 == 0) & old),
-            ev.filter((F.col("event_id") % 10 == 5) & old),
-        ]
-        for i, part in enumerate(parts):
-            stage = f"{base}/stage{i}"
-            part.coalesce(1).write.parquet(stage)
-            (src,) = [
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            ]
-            dst = f"{events_dir}/part-{i}.parquet"
-            os.rename(f"{stage}/{src}", dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        runner(events_dir, f"{base}/ckpt", name)
-        _DONE[key] = name
-    return spark.table(name)
+    events_dir = f"{base}/events"
+    os.makedirs(events_dir)
+    (max_ts,) = ev.agg(F.max("ts")).first()
+    old = F.col("ts") < F.lit(max_ts) - F.expr("INTERVAL 4 HOURS")
+    parts = [
+        ev.filter(~((F.col("event_id") % 10).isin(0, 5) & old)),
+        ev.filter((F.col("event_id") % 10 == 0) & old),
+        ev.filter((F.col("event_id") % 10 == 5) & old),
+    ]
+    for i, part in enumerate(parts):
+        stage = f"{base}/stage{i}"
+        part.coalesce(1).write.parquet(stage)
+        (src,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        dst = f"{events_dir}/part-{i}.parquet"
+        os.rename(f"{stage}/{src}", dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
 
 
 def stream_late_data_drops(spark, sf_dir):
@@ -202,13 +155,8 @@ def stream_late_data_drops(spark, sf_dir):
     aggregation over the out-of-order staged delivery (window_start,
     event_type, n_events, sum_value): in-grace re-deliveries counted,
     past-grace re-deliveries dropped, trailing 2h of windows held."""
-    from ocrs_spark.streaming import stream_tumbling_late
-
-    return _staged_late_run(
-        spark,
-        sf_dir,
-        "late_drops",
-        lambda ev, ck, name: stream_tumbling_late(spark, ev, ck, name),
+    return _drained(
+        spark, sf_dir, "late_drops", _stage_late, streaming.stream_tumbling_late
     )
 
 
@@ -242,17 +190,16 @@ def stream_tumbling_update_upsert(spark, sf_dir):
     mode, open trailing windows ARE present (update emits changed
     state), so the oracle is the plain batch aggregation of the
     non-dropped rows."""
-    import tempfile
-
     from ocrs_spark.iceberg import IcebergTable
-    from ocrs_spark.streaming import stream_tumbling_update
 
-    def run(events_dir, ckpt, name):
-        loc = tempfile.mkdtemp(prefix="ocrs_stream_upd_") + "/tbl"
-        stream_tumbling_update(spark, events_dir, ckpt, loc)
-        IcebergTable.load(loc).scan(spark).createOrReplaceTempView(name)
+    def build(base):
+        _stage_late(spark.read.parquet(f"{sf_dir}/events.parquet"), base)
+        streaming.stream_tumbling_update(
+            spark, f"{base}/events", f"{base}/ckpt", f"{base}/tbl"
+        )
+        return f"{base}/tbl"
 
-    return _staged_late_run(spark, sf_dir, "late_update", run)
+    return IcebergTable.load(once(spark, sf_dir, "late_update", build)).scan(spark)
 
 
 # Update mode + keyed upsert: final state = batch agg over the kept
@@ -276,13 +223,8 @@ def stream_value_alerts(spark, sf_dir):
     n_events) — the stateful monitoring-rule shape (budget caps, abuse
     limits) that needs arbitrary cross-batch state, not a windowed
     aggregate."""
-    from ocrs_spark.streaming import stream_value_alerts as runner
-
-    return _staged_events_run(
-        spark,
-        sf_dir,
-        "value_alerts",
-        lambda ev, ck, name: runner(spark, ev, ck, name),
+    return _drained(
+        spark, sf_dir, "value_alerts", _stage_as_is, streaming.stream_value_alerts
     )
 
 

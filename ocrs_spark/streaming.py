@@ -1,40 +1,69 @@
 """Structured Streaming surfaces.
 
-Two shapes (SURVEY.md §2.6 / task mandate):
-- ``stream_events_tumbling``: windowed aggregation with watermarked
-  event-time over the events table read as a stream (the canonical
-  readStream -> window agg -> sink pipeline; batch-equivalent oracle is
-  ORACLE_TUMBLING in ops.relational);
-- ``stream_ocr_documents``: incremental OCR — new document files landing
-  in a directory are exploded, OCR'd and woven via ``foreachBatch``
-  reusing the exact batch pipeline, with checkpointed exactly-once sink
-  semantics from Spark's streaming commit log.
+Every stream here runs with an availableNow trigger through ``drain``:
+it processes the backlog its source holds when it starts, then stops.
+The shapes:
+
+- event streams over a staged events directory (``file_stream``): the
+  hourly watermarked window aggregate (``hourly_windows``) in complete,
+  append and update mode, watermarked dedup, a stream-stream interval
+  join, and two ``applyInPandasWithState`` operators (sessionization,
+  threshold alerts); ``ops/streamrows.py`` runs each as a driver row
+  against a batch oracle;
+- incremental OCR: ``stream_ocr_documents`` and ``stream_ocr_to_iceberg``
+  take the documents as a streaming DataFrame (a parquet directory
+  through ``file_stream``, or an Iceberg table through the
+  ``ocrs_iceberg`` source) and run every micro-batch through the batch
+  pipeline. They differ in their sinks: per-batch-id parquet
+  overwrites, or epoch-stamped Iceberg snapshots.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from .pipeline import ocr_documents
 
+DRAIN_TIMEOUT_S = 900
 
-def stream_events_tumbling(
-    spark: SparkSession, events_path: str, checkpoint_dir: str, out_table: str
-) -> None:
-    """Run the hourly windowed count as an availableNow stream into an
-    in-memory sink named ``out_table``. Watermark bounds state for true
-    continuous runs; availableNow drains the backlog and stops."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        # Watermarks require a zoned TIMESTAMP (EVENT_TIME_IS_NOT_ON_
-        # TIMESTAMP_TYPE on ntz), so the ntz wall time is cast here.
-        # get_spark pins spark.sql.session.timeZone=UTC, which makes the
-        # cast wall-time-preserving and the emitted epochs identical to
-        # the tz-independent batch query (ops.relational) and its oracle.
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+
+def drain(writer: DataStreamWriter) -> None:
+    """Start ``writer`` with an availableNow trigger and wait until the
+    query has processed its backlog and stopped. The timeout only
+    guards against a hang: a stuck micro-batch fails this query rather
+    than stalling every query scheduled after it."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id}: backlog not drained in {DRAIN_TIMEOUT_S}s"
+        )
+
+
+def file_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """The parquet files of directory ``path`` as a stream, with the
+    schema they have now (a file stream source needs one up front)."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def hourly_windows(events: DataFrame) -> DataFrame:
+    """(window_start, event_type, n_events, sum_value) per hourly
+    window of an events stream, under a 2-hour watermark.
+
+    Watermarks require a zoned TIMESTAMP (EVENT_TIME_IS_NOT_ON_
+    TIMESTAMP_TYPE on ntz), so the ntz wall time is cast here.
+    get_spark pins spark.sql.session.timeZone=UTC, which makes the cast
+    wall-time-preserving and the emitted epochs identical to the
+    tz-independent batch query (ops.relational) and its oracle."""
+    return (
+        events.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
@@ -45,15 +74,21 @@ def stream_events_tumbling(
             "sum_value",
         )
     )
-    q = (
-        stream.writeStream.format("memory")
+
+
+def stream_events_tumbling(
+    spark: SparkSession, events_path: str, checkpoint_dir: str, out_table: str
+) -> None:
+    """Run the hourly windowed count as an availableNow stream into an
+    in-memory sink named ``out_table``. Watermark bounds state for true
+    continuous runs; availableNow drains the backlog and stops."""
+    drain(
+        hourly_windows(file_stream(spark, events_path))
+        .writeStream.format("memory")
         .queryName(out_table)
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def stream_tumbling_late(
@@ -79,36 +114,13 @@ def stream_tumbling_late(
     reproducible in batch SQL (ORACLE_LATE_DROPS). Append mode is what
     a production pipeline writing finalized windows downstream uses —
     complete mode re-emits everything and never drops."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-        # zoned timestamp required for watermarks; UTC session tz makes
-        # the cast wall-time-preserving (see stream_events_tumbling).
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    q = (
-        stream.writeStream.format("memory")
+    drain(
+        hourly_windows(file_stream(spark, events_path, max_files_per_trigger=1))
+        .writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def stream_tumbling_update(
@@ -130,43 +142,9 @@ def stream_tumbling_update(
     the batch aggregation of the non-dropped rows — including the
     still-open trailing windows append mode would withhold."""
     from .iceberg import IcebergTable
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("window_start", LongType()),
-            StructField("event_type", StringType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", DoubleType()),
-        ]
-    )
-    table = IcebergTable.create(table_loc, out_schema)
-
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    stream = hourly_windows(file_stream(spark, events_dir, max_files_per_trigger=1))
+    IcebergTable.create(table_loc, stream.schema)
 
     def _merge(batch_df, _batch_id):
         if batch_df.isEmpty():
@@ -177,14 +155,11 @@ def stream_tumbling_update(
             ["window_start", "event_type"],
         )
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(_merge)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def stream_dedup_events(
@@ -202,26 +177,21 @@ def stream_dedup_events(
     The staged test corpus re-delivers every event within the horizon,
     so the drained output is exactly the distinct event set and the
     batch oracle is a plain projection of the original table."""
-    schema = spark.read.parquet(events_path).schema
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
+        file_stream(spark, events_path)
         # zoned timestamp required for watermarks; UTC session tz makes
-        # the cast wall-time-preserving (see stream_events_tumbling).
+        # the cast wall-time-preserving (see hourly_windows).
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    q = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 ATTRIBUTION_WINDOW_SEC = 2 * 60 * 60
@@ -252,17 +222,13 @@ def stream_view_click_join(
     Both sides read the SAME file source (a stream self-join); output
     keys are the two event ids, so rows stay unique even where epoch
     truncation collides. UTC session tz makes the zoned cast
-    wall-time-preserving (see stream_events_tumbling).
+    wall-time-preserving (see hourly_windows).
 
     ``max_files_per_trigger`` splits the drain into several
     micro-batches (tests use it to prove cross-batch join state +
     watermark eviction behave); the driver row leaves it unset so the
     single-batch oracle-exactness argument above holds."""
-    schema = spark.read.parquet(events_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(events_path).withColumn(
+    src = file_stream(spark, events_path, max_files_per_trigger).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     views = (
@@ -296,15 +262,12 @@ def stream_view_click_join(
         F.unix_timestamp("view_ts").alias("view_epoch"),
         F.unix_timestamp("click_ts").alias("click_epoch"),
     )
-    q = (
+    drain(
         joined.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 ALERT_THRESHOLD_CENTS = 3000 * 100
@@ -359,9 +322,7 @@ def stream_value_alerts(
     event where the user's cumulative value crosses the threshold —
     the monitoring-rule shape (budget caps, abuse limits) that needs
     arbitrary cross-batch state, not a windowed aggregate. Runs on
-    ``applyInPandasWithState``; ``stream_value_alerts_tws`` is the
-    transformWithStateInPandas twin (gated: the TWS state-server
-    protocol needs google.protobuf, absent in this sandbox).
+    ``applyInPandasWithState``.
 
     ``max_files_per_trigger`` splits the drain into micro-batches so
     tests can prove the running total and the fired latch survive in
@@ -371,12 +332,8 @@ def stream_value_alerts(
     would use)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = (
-        reader.parquet(events_dir)
+        file_stream(spark, events_dir, max_files_per_trigger)
         .withColumn(
             "ts_epoch",
             F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"),
@@ -391,135 +348,13 @@ def stream_value_alerts(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    writer = stream.writeStream.outputMode("append").option(
+        "checkpointLocation", checkpoint_dir
     )
     if sink_path is not None:
-        q = writer.format("parquet").option("path", sink_path).start()
+        drain(writer.format("parquet").option("path", sink_path))
     else:
-        q = writer.format("memory").queryName(out_table).start()
-    q.awaitTermination()
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas drives its Python-side state server
-    over protobuf; without the package the runner crashes at init."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_value_alerts_tws(
-    spark: SparkSession, events_dir: str, checkpoint_dir: str, out_table: str
-) -> None:
-    """The same alert operator on Spark 4's transformWithStateInPandas
-    (typed per-state-variable API + RocksDB state store) — committed
-    import-gated like the ONNX harness: tests assert equality with the
-    applyInPandasWithState leg whenever google.protobuf exists."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_type = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("alert_epoch", LongType()),
-            StructField("cum_cents", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("cum_cents", LongType()),
-            StructField("n_events", LongType()),
-            StructField("fired", BooleanType()),
-        ]
-    )
-
-    class AlertProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", state_type)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            ev = pd.concat(list(rows)).sort_values(["ts_epoch", "event_id"])
-            if self._state.exists():
-                cum, n, fired = self._state.get()
-                cum, n, fired = int(cum), int(n), bool(fired)
-            else:
-                cum, n, fired = 0, 0, False
-            out = []
-            cents = np.floor(ev["value"].to_numpy(np.float64) * 100).astype(
-                np.int64
-            )
-            for es, c in zip(ev["ts_epoch"].to_numpy(np.int64), cents):
-                cum += int(c)
-                n += 1
-                if not fired and cum >= ALERT_THRESHOLD_CENTS:
-                    fired = True
-                    out.append((key[0], int(es), cum, n))
-            self._state.update((cum, n, fired))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["user_id", "alert_epoch", "cum_cents", "n_events"],
-                )
-
-        def close(self):
-            pass
-
-    # TWS requires the RocksDB state store; scope the provider switch
-    # to this query and restore the session's default afterwards.
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .withColumn(
-            "ts_epoch",
-            F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"),
-        )
-        .select("user_id", "event_id", "ts_epoch", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            AlertProcessor(),
-            outputStructType=out_type,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
+        drain(writer.format("memory").queryName(out_table))
 
 
 SESSION_GAP_SEC = 30 * 60
@@ -576,10 +411,8 @@ def stream_sessionize_events(
     state."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(events_dir).schema
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
+        file_stream(spark, events_dir)
         # tz-independent epoch (see ops.relational.ntz_epoch_seconds): a
         # cast via TIMESTAMP would shift wall times by the session zone.
         .withColumn(
@@ -596,26 +429,22 @@ def stream_sessionize_events(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def stream_ocr_documents(
-    spark: SparkSession,
-    documents_dir: str,
+    documents: DataFrame,
     media: DataFrame,
     checkpoint_dir: str,
     output_dir: str,
     engine_conf: dict | None = None,
 ) -> None:
-    """Incremental OCR over a growing parquet directory of documents.
+    """Incremental OCR of a stream of documents into a parquet directory.
 
     foreachBatch reuses the batch pipeline unchanged — each micro-batch
     is exploded, skew-repartitioned, OCR'd and woven. foreachBatch is
@@ -624,42 +453,32 @@ def stream_ocr_documents(
     IDEMPOTENT: each batch overwrites its own deterministic
     ``batch_id=<id>`` partition directory — a replayed batch rewrites
     the same files instead of appending duplicates, which upgrades the
-    end-to-end guarantee to effectively-once. Read the result with
-    ``spark.read.parquet(output_dir)`` (batch_id surfaces as a
-    partition column).
+    end-to-end guarantee to effectively-once, even when the checkpoint
+    is lost. Read the result with ``spark.read.parquet(output_dir)``
+    (batch_id surfaces as a partition column).
     """
     engine_conf = engine_conf or {"kind": "fake"}
-    schema = spark.read.parquet(documents_dir).schema
-    stream = spark.readStream.schema(schema).parquet(documents_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         woven = ocr_documents(batch_df, media, engine_conf=engine_conf)
         woven.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        documents.writeStream.foreachBatch(process_batch).option(
+            "checkpointLocation", checkpoint_dir
+        )
     )
-    # availableNow terminates once the backlog drains; the timeout is a
-    # hang-guard only (a stuck micro-batch must fail THIS query, not
-    # stall every query scheduled after it in a sweep).
-    if not q.awaitTermination(900):
-        q.stop()
-        raise TimeoutError("stream_ocr_documents: backlog not drained in 900s")
 
 
 def stream_ocr_to_iceberg(
-    spark: SparkSession,
-    documents_dir: str,
+    documents: DataFrame,
     media: DataFrame,
     checkpoint_dir: str,
     table_location: str,
     engine_conf: dict | None = None,
 ) -> None:
-    """Incremental OCR with a transactional Iceberg sink — exactly-once
-    end to end.
+    """Incremental OCR of a stream of documents with a transactional
+    Iceberg sink — exactly-once end to end.
 
     foreachBatch alone is at-least-once: a crash after the sink write
     but before Spark records the epoch in the streaming commit log
@@ -677,21 +496,25 @@ def stream_ocr_to_iceberg(
     streaming sink. Snapshot commits go through the metadata CAS, so a
     kill mid-commit leaves the previous snapshot live and the epoch
     uncommitted on both sides.
+
+    With ``spark.readStream.format("ocrs_iceberg").load(source)`` as
+    ``documents`` this is the full incremental loop on Iceberg at both
+    ends: offsets are snapshot sequence numbers, so each micro-batch
+    reads exactly the documents appended to the source since the last
+    committed offset, and their extracted spans land as one committed
+    snapshot of the results table, resumable from the checkpoint alone.
     """
-    engine_conf = engine_conf or {"kind": "fake"}
-    schema = spark.read.parquet(documents_dir).schema
-    stream = spark.readStream.schema(schema).parquet(documents_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            _ocr_epoch_sink(media, checkpoint_dir, table_location, engine_conf)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        documents.writeStream.foreachBatch(
+            _ocr_epoch_sink(
+                media, checkpoint_dir, table_location, engine_conf or {"kind": "fake"}
+            )
+        ).option("checkpointLocation", checkpoint_dir)
     )
-    if not q.awaitTermination(900):
-        q.stop()
-        raise TimeoutError("stream_ocr_to_iceberg: backlog not drained in 900s")
+
+
+# Data manifests a streamed table may carry before the sink folds them.
+MANIFEST_REWRITE_THRESHOLD = 8
 
 
 def _ocr_epoch_sink(
@@ -699,7 +522,6 @@ def _ocr_epoch_sink(
     checkpoint_dir: str,
     table_location: str,
     engine_conf: dict,
-    manifest_rewrite_threshold: int = 8,
 ):
     """foreachBatch function: OCR the micro-batch and commit it to the
     Iceberg table with an epoch stamp, skipping replayed epochs (see
@@ -708,7 +530,7 @@ def _ocr_epoch_sink(
     Inline maintenance: every streaming epoch appends one manifest, and
     scan planning is O(manifests), so a long-lived stream slowly makes
     its own table expensive to read. Once the snapshot carries more
-    than ``manifest_rewrite_threshold`` data manifests the sink folds
+    than ``MANIFEST_REWRITE_THRESHOLD`` data manifests the sink folds
     them with ``rewrite_manifests`` — metadata-only (no data I/O), cost
     amortized O(1) per epoch, and crash-safe: it is a separate CAS
     commit after the epoch's own, so a kill between the two just leaves
@@ -746,7 +568,7 @@ def _ocr_epoch_sink(
             if s["snapshot-id"] == table.current_snapshot_id()
         )
         manifests, _ = read_ocf(snap["manifest-list"])
-        if sum(1 for m in manifests if m.get("content", 0) == 0) > manifest_rewrite_threshold:
+        if sum(1 for m in manifests if m.get("content", 0) == 0) > MANIFEST_REWRITE_THRESHOLD:
             # re-stamp the epoch on the consolidation snapshot, so the
             # head snapshot alone still names the replay high-water mark
             table.rewrite_manifests(
@@ -757,44 +579,3 @@ def _ocr_epoch_sink(
             )
 
     return process_batch
-
-
-def stream_ocr_iceberg_to_iceberg(
-    spark: SparkSession,
-    source_location: str,
-    media: DataFrame,
-    checkpoint_dir: str,
-    sink_location: str,
-    engine_conf: dict | None = None,
-) -> None:
-    """The full incremental extraction loop on Iceberg at BOTH ends —
-    the north-star deployment shape.
-
-    Source: the ``ocrs_iceberg`` streaming data source over the
-    documents table — offsets are snapshot sequence numbers, so each
-    micro-batch plans and reads exactly the documents appended since
-    the last committed offset (planning cost proportional to new data;
-    one executor-side split per new file). Transform: the unchanged
-    batch OCR pipeline (explode -> dedup media -> skew repartition ->
-    fused mapInPandas -> reweave). Sink: an epoch-stamped Iceberg
-    append (``stream_ocr_to_iceberg`` semantics), so a crash in the
-    commit window replays without duplicating. End to end: new
-    documents land in the source table, one micro-batch later their
-    extracted spans are a committed snapshot of the results table,
-    exactly once, resumable from the checkpoint alone.
-    """
-    from .iceberg_source import IcebergDataSource
-
-    spark.dataSource.register(IcebergDataSource)
-    stream = spark.readStream.format("ocrs_iceberg").load(source_location)
-    q = (
-        stream.writeStream.foreachBatch(
-            _ocr_epoch_sink(media, checkpoint_dir, sink_location, engine_conf or {"kind": "fake"})
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(900):
-        q.stop()
-        raise TimeoutError("stream_ocr_iceberg_to_iceberg: backlog not drained in 900s")

@@ -328,7 +328,8 @@ def test_scan_runs_no_spark_job(spark, docs, tmp_path):
     """Building a scan reads metadata only: data and delete files are
     read with the table's schema, so no schema-inference job runs before
     an action, on an identity-partitioned table with a null partition,
-    position and equality deletes, and on a bucketed table."""
+    position and equality deletes, on a bucketed table, and on a table
+    of more files than Spark lists without a job."""
     with_nulls = docs.withColumn(
         "lang", F.when(F.col("doc_id") % 7 == 0, None).otherwise(F.col("lang"))
     )
@@ -344,8 +345,12 @@ def test_scan_runs_no_spark_job(spark, docs, tmp_path):
         str(tmp_path / "bucket"), docs.schema, partition_by=[("doc_id", "bucket[4]")]
     )
     b.append(docs)
+    # more files than Spark lists without a parallel job (threshold 32)
+    many = IcebergTable.create(str(tmp_path / "many"), docs.schema)
+    many.append(docs.repartition(40))
+    assert len(many.plan_files()[0]) == 40
 
-    for loc in (t.location, b.location):
+    for loc in (t.location, b.location, many.location):
         scans = []
         assert _jobs_during(spark, lambda: scans.append(IcebergTable.load(loc).scan(spark))) == 0
         assert scans[0].columns == docs.columns
@@ -356,6 +361,7 @@ def test_scan_runs_no_spark_job(spark, docs, tmp_path):
     ).count()
     assert mor.filter("text = 'V2'").count() == docs.filter("doc_id % 3 = 0").count()
     assert IcebergTable.load(b.location).scan(spark).count() == docs.count()
+    assert IcebergTable.load(many.location).scan(spark).count() == docs.count()
 
 
 # -- commit protocol ----------------------------------------------------------

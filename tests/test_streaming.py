@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
 from ocrs_spark.ops.relational import ORACLE_TUMBLING, events_sessionize
 from ocrs_spark.streaming import (
+    file_stream,
     stream_events_tumbling,
     stream_ocr_documents,
     stream_ocr_to_iceberg,
@@ -70,14 +71,14 @@ def test_stream_ocr_incremental_exactly_once(spark, tmp_path):
     half2 = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
 
     half1.write.mode("append").parquet(in_dir)
-    stream_ocr_documents(spark, in_dir, media, ckpt, out_dir)
+    stream_ocr_documents(file_stream(spark, in_dir), media, ckpt, out_dir)
     n1 = spark.read.parquet(out_dir).count()
     assert n1 == half1.count()
 
     # New files arrive; restart the stream from its checkpoint: only the
     # new files are processed (exactly-once), totals add up.
     half2.write.mode("append").parquet(in_dir)
-    stream_ocr_documents(spark, in_dir, media, ckpt, out_dir)
+    stream_ocr_documents(file_stream(spark, in_dir), media, ckpt, out_dir)
     result = spark.read.parquet(out_dir)
     assert result.count() == docs.count()
     assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
@@ -110,12 +111,12 @@ def test_stream_ocr_iceberg_incremental_exactly_once(spark, tmp_path):
     half2 = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
 
     half1.write.mode("append").parquet(in_dir)
-    stream_ocr_to_iceberg(spark, in_dir, media, ckpt, loc)
+    stream_ocr_to_iceberg(file_stream(spark, in_dir), media, ckpt, loc)
     table = IcebergTable.load(loc)
     assert table.scan(spark).count() == half1.count()
 
     half2.write.mode("append").parquet(in_dir)
-    stream_ocr_to_iceberg(spark, in_dir, media, ckpt, loc)
+    stream_ocr_to_iceberg(file_stream(spark, in_dir), media, ckpt, loc)
     table = IcebergTable.load(loc)
     result = table.scan(spark)
     assert result.count() == docs.count()
@@ -157,14 +158,14 @@ def test_stream_ocr_iceberg_crash_replay_skips_committed_epoch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     docs.write.parquet(in_dir)
 
-    stream_ocr_to_iceberg(spark, in_dir, media, ckpt, loc)
+    stream_ocr_to_iceberg(file_stream(spark, in_dir), media, ckpt, loc)
     n_snaps = len(IcebergTable.load(loc).snapshots())
     # Erase the streaming commit record for epoch 0 (and its checksum
     # sidecar, which would fail the rewrite's rename); offsets/metadata
     # survive, so the restart re-runs batch 0 under the same query id.
     os.remove(os.path.join(ckpt, "commits", "0"))
     os.remove(os.path.join(ckpt, "commits", ".0.crc"))
-    stream_ocr_to_iceberg(spark, in_dir, media, ckpt, loc)
+    stream_ocr_to_iceberg(file_stream(spark, in_dir), media, ckpt, loc)
 
     table = IcebergTable.load(loc)
     assert len(table.snapshots()) == n_snaps
@@ -176,7 +177,7 @@ def test_stream_ocr_iceberg_crash_replay_skips_committed_epoch(spark, tmp_path):
     # epochs are not dedup-able against the old query's — same contract
     # as Iceberg's real Spark sink, where the skip scope is exactly the
     # checkpoint's replay scope.
-    stream_ocr_to_iceberg(spark, in_dir, media, str(tmp_path / "ckpt2"), loc)
+    stream_ocr_to_iceberg(file_stream(spark, in_dir), media, str(tmp_path / "ckpt2"), loc)
     table = IcebergTable.load(loc)
     assert table.scan(spark).count() == 2 * docs.count()
     assert len({
@@ -190,7 +191,13 @@ def test_stream_ocr_iceberg_to_iceberg_end_to_end(spark, tmp_path):
     batch pipeline, and land as epoch-stamped snapshots of the results
     table — incremental across restarts, span-exact, duplicate-free."""
     from ocrs_spark.iceberg import IcebergTable
-    from ocrs_spark.streaming import stream_ocr_iceberg_to_iceberg
+    from ocrs_spark.iceberg_source import IcebergDataSource
+
+    spark.dataSource.register(IcebergDataSource)
+
+    def run():
+        source = spark.readStream.format("ocrs_iceberg").load(src_loc)
+        stream_ocr_to_iceberg(source, media, ckpt, sink_loc)
 
     corpus = generate_corpus(n_docs=8, seed=21)
     docs, media, expected = corpus_to_spark(spark, corpus)
@@ -203,11 +210,11 @@ def test_stream_ocr_iceberg_to_iceberg_end_to_end(spark, tmp_path):
     src = IcebergTable.create(src_loc, docs.schema)
     src.append(half1)
 
-    stream_ocr_iceberg_to_iceberg(spark, src_loc, media, ckpt, sink_loc)
+    run()
     assert IcebergTable.load(sink_loc).scan(spark).count() == half1.count()
 
     IcebergTable.load(src_loc).append(half2)
-    stream_ocr_iceberg_to_iceberg(spark, src_loc, media, ckpt, sink_loc)
+    run()
     result = IcebergTable.load(sink_loc).scan(spark)
     assert result.count() == docs.count()
     assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
@@ -224,7 +231,7 @@ def test_stream_ocr_iceberg_to_iceberg_end_to_end(spark, tmp_path):
 
     # idle restart: no new source snapshots -> no new sink snapshots
     n = len(IcebergTable.load(sink_loc).snapshots())
-    stream_ocr_iceberg_to_iceberg(spark, src_loc, media, ckpt, sink_loc)
+    run()
     assert len(IcebergTable.load(sink_loc).snapshots()) == n
 
 
@@ -238,16 +245,16 @@ def test_stream_ocr_replay_is_idempotent(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     docs.write.parquet(in_dir)
 
-    stream_ocr_documents(spark, in_dir, media, str(tmp_path / "ck1"), out_dir)
+    stream_ocr_documents(file_stream(spark, in_dir), media, str(tmp_path / "ck1"), out_dir)
     # Fresh checkpoint -> the same input replays as the same batch ids.
-    stream_ocr_documents(spark, in_dir, media, str(tmp_path / "ck2"), out_dir)
+    stream_ocr_documents(file_stream(spark, in_dir), media, str(tmp_path / "ck2"), out_dir)
 
     result = spark.read.parquet(out_dir)
     assert result.count() == docs.count()
     assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
 
 
-def test_stream_sink_inline_manifest_maintenance(spark, tmp_path):
+def test_stream_sink_inline_manifest_maintenance(spark, tmp_path, monkeypatch):
     """A long-lived stream appends one manifest per epoch; past the
     threshold the sink folds them (metadata-only) and re-stamps the
     epoch so the replay high-water mark survives snapshot expiry."""
@@ -256,7 +263,7 @@ def test_stream_sink_inline_manifest_maintenance(spark, tmp_path):
 
     from ocrs_spark.avro_ocf import read_ocf
     from ocrs_spark.iceberg import IcebergTable
-    from ocrs_spark.streaming import _ocr_epoch_sink
+    from ocrs_spark import streaming
 
     corpus = generate_corpus(n_docs=12, seed=23)
     docs, media, expected = corpus_to_spark(spark, corpus)
@@ -266,9 +273,8 @@ def test_stream_sink_inline_manifest_maintenance(spark, tmp_path):
         json.dump({"id": "test-query-1"}, f)
     loc = str(tmp_path / "tbl")
 
-    process = _ocr_epoch_sink(
-        media, ckpt, loc, {"kind": "fake"}, manifest_rewrite_threshold=3
-    )
+    monkeypatch.setattr(streaming, "MANIFEST_REWRITE_THRESHOLD", 3)
+    process = streaming._ocr_epoch_sink(media, ckpt, loc, {"kind": "fake"})
     for epoch in range(6):
         process(
             docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(6)) == epoch), epoch
@@ -460,25 +466,6 @@ def test_stream_value_alerts_state_survives_batches_and_restart(spark, tmp_path)
     n_batches = len(os.listdir(os.path.join(ckpt, "offsets")))
     assert n_batches >= 3  # the drain genuinely split
     got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    assert got == _oracle_value_alerts()
-
-
-def test_stream_value_alerts_tws_twin_matches(spark, tmp_path):
-    """transformWithStateInPandas twin produces the identical alert set
-    — runs only where google.protobuf exists (TWS drives its Python
-    state server over protobuf; absent in this sandbox)."""
-    import pytest
-
-    from ocrs_spark.streaming import stream_value_alerts_tws, tws_available
-
-    if not tws_available():
-        pytest.skip("google.protobuf not installed; TWS runner unavailable")
-    events_dir = str(tmp_path / "events")
-    spark.read.parquet(f"{SF_DIR}/events.parquet").write.parquet(events_dir)
-    stream_value_alerts_tws(
-        spark, events_dir, str(tmp_path / "ckpt"), "alerts_tws_out"
-    )
-    got = sorted(tuple(r) for r in spark.table("alerts_tws_out").collect())
     assert got == _oracle_value_alerts()
 
 
