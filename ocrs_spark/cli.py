@@ -95,8 +95,6 @@ def main(argv=None) -> int:
         "requires -o, matching the reference's `-p ... -o out.png`",
     )
     p.add_argument("--webp", help="write annotated lossless WebP here")
-    p.add_argument("--webp-lossy", help="write annotated lossy (VP8) WebP here")
-    p.add_argument("--jpeg", help="write annotated baseline JPEG here")
     p.add_argument(
         "--text-line-images",
         nargs="?",
@@ -166,7 +164,7 @@ def main(argv=None) -> int:
             file=sys.stderr,
         )
 
-    if args.png is not None or args.webp or args.webp_lossy or args.jpeg:
+    if args.png is not None or args.webp:
         from .output import generate_annotated_image
 
         annotated = generate_annotated_image(img, lines, recognized)
@@ -179,16 +177,6 @@ def main(argv=None) -> int:
 
             with open(args.webp, "wb") as f:
                 f.write(encode_webp(annotated))
-        if args.webp_lossy:
-            from .vp8enc import encode_webp_lossy
-
-            with open(args.webp_lossy, "wb") as f:
-                f.write(encode_webp_lossy(annotated, qindex=8))
-        if args.jpeg:
-            from .jpeg import encode_jpeg
-
-            with open(args.jpeg, "wb") as f:
-                f.write(encode_jpeg(annotated, quality=90))
 
     if args.png == "":
         # Reference `-p` semantics: PNG IS the output format; the

@@ -77,13 +77,6 @@ class OcrEngine:
             raise RuntimeError("Recognition model not loaded")
         return self.recognizer.prepare_line_input(grey, line)
 
-    @property
-    def detection_threshold(self) -> float:
-        """Confidence threshold classifying a pixel as text (lib.rs:282-287)."""
-        from .kernels.detection import DEFAULT_TEXT_THRESHOLD
-
-        return self.detector.text_threshold if self.detector else DEFAULT_TEXT_THRESHOLD
-
     def recognize_text(
         self, grey: np.ndarray, lines: list[list[RotatedRect]]
     ) -> list[TextLine | None]:

@@ -228,18 +228,20 @@ def ocr_interleaved_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_ocr_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-OCR STREAM run end-to-end over the same
     interleaved corpus: documents land in a staged directory, the
-    foreachBatch stream (ocrs_spark.streaming.stream_ocr_documents)
-    explodes/OCRs/reweaves each micro-batch with idempotent per-batch
-    sinks, and the drained output must serialize to exactly the batch
-    flagship oracle — the driver-checked proof that the streaming
-    pipeline produces identical end-to-end results."""
+    foreachBatch stream (ocrs_spark.streaming.stream_ocr_to_iceberg)
+    explodes/OCRs/reweaves each micro-batch and commits it to an
+    Iceberg results table as an epoch-stamped snapshot, and the table
+    must serialize to exactly the batch flagship oracle — the
+    driver-checked proof that the exactly-once streaming sink produces
+    identical end-to-end results."""
+    from .iceberg import IcebergTable
 
     def build(base):
-        from .streaming import file_stream, stream_ocr_documents
+        from .streaming import file_stream, stream_ocr_to_iceberg
 
         docs_dir = f"{base}/docs"
         _materialized_interleaved(spark, sf_dir).write.parquet(docs_dir)
-        stream_ocr_documents(
+        stream_ocr_to_iceberg(
             file_stream(spark, docs_dir),
             flagship_media(spark),
             f"{base}/ckpt",
@@ -247,8 +249,8 @@ def stream_ocr_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return f"{base}/out"
 
-    out_dir = once(spark, sf_dir, "stream_woven", build)
-    return serialize_woven(spark.read.parquet(out_dir).drop("batch_id"))
+    table_loc = once(spark, sf_dir, "stream_woven", build)
+    return serialize_woven(IcebergTable.load(table_loc).scan(spark))
 
 
 ORACLE_OCR_INTERLEAVED = f"""

@@ -30,10 +30,6 @@ class Rect:
     right: float
 
     @staticmethod
-    def from_tlhw(top: float, left: float, h: float, w: float) -> "Rect":
-        return Rect(top, left, top + h, left + w)
-
-    @staticmethod
     def from_hw(h: float, w: float) -> "Rect":
         return Rect(0, 0, h, w)
 
@@ -85,11 +81,6 @@ class Rect:
         union = self.area() + o.area() - inter
         return inter / union if union > 0 else 0.0
 
-    def contains_point(self, x: float, y: float) -> bool:
-        """Inclusive containment (used with index rects adjusted by -1,
-        mirroring recognition.rs:100,112)."""
-        return self.left <= x <= self.right and self.top <= y <= self.bottom
-
     def contains(self, o: "Rect") -> bool:
         return (
             self.left <= o.left
@@ -140,16 +131,8 @@ class RotatedRect:
     width: float
     height: float
 
-    @staticmethod
-    def from_rect(r: Rect) -> "RotatedRect":
-        cx, cy = (r.left + r.right) / 2.0, (r.top + r.bottom) / 2.0
-        return RotatedRect(cx, cy, 0.0, -1.0, r.width, r.height)
-
     def center(self) -> tuple[float, float]:
         return (self.cx, self.cy)
-
-    def up_axis(self) -> tuple[float, float]:
-        return (self.ux, self.uy)
 
     def corners(self) -> list[tuple[float, float]]:
         """Corner order per reference convention (text_items.rs:153-156):
@@ -172,9 +155,6 @@ class RotatedRect:
     def area(self) -> float:
         return self.width * self.height
 
-    def resize(self, w: float, h: float) -> "RotatedRect":
-        return RotatedRect(self.cx, self.cy, self.ux, self.uy, w, h)
-
     def orient_towards(self, tx: float, ty: float) -> "RotatedRect":
         """Flip the up axis (if needed) so it points towards (tx, ty)."""
         if self.ux * tx + self.uy * ty < 0:
@@ -193,11 +173,6 @@ class Line:
 
     def center(self) -> tuple[float, float]:
         return ((self.x0 + self.x1) / 2.0, (self.y0 + self.y1) / 2.0)
-
-    def vertical_overlap(self, o: "Line") -> float:
-        a0, a1 = min(self.y0, self.y1), max(self.y0, self.y1)
-        b0, b1 = min(o.y0, o.y1), max(o.y0, o.y1)
-        return min(a1, b1) - max(a0, b0)
 
     def horizontal_overlap(self, o: "Line") -> float:
         a0, a1 = min(self.x0, self.x1), max(self.x0, self.x1)
@@ -234,19 +209,6 @@ class Line:
     def downwards(self) -> "Line":
         """Endpoints sorted top-to-bottom (geom_util.rs:20-26)."""
         if self.y0 <= self.y1:
-            return self
-        return Line(self.x1, self.y1, self.x0, self.y0)
-
-    def y_for_x(self, x: float):
-        """Y at given X if within the segment's X range, else None."""
-        lo, hi = min(self.x0, self.x1), max(self.x0, self.x1)
-        if x < lo or x > hi or self.x0 == self.x1:
-            return None
-        t = (x - self.x0) / (self.x1 - self.x0)
-        return self.y0 + t * (self.y1 - self.y0)
-
-    def rightwards(self) -> "Line":
-        if self.x0 <= self.x1:
             return self
         return Line(self.x1, self.y1, self.x0, self.y0)
 

@@ -42,9 +42,8 @@ Everything the spec makes load-bearing is real:
   schema minus its partition columns, and a scan reads the files with
   that schema, as the spec reads data files, instead of inferring it
   from their footers: building a scan runs no Spark job.
-- **Resume**: ``scan`` exposes committed file lists per snapshot, so the
-  extraction pipeline's anti-join resume (``ocrs_spark.checkpoint``) can
-  use an Iceberg table as its ledger; see ``IcebergDocumentSink``.
+- **Committed results**: ``IcebergDocumentSink`` appends each OCR run's
+  woven documents as one snapshot and reads them back with ``scan``.
 
 Avro manifest/manifest-list schemas use the spec's required field names
 and field-ids (500-519 manifest list, 0-4 + 100-140 manifest entries),
@@ -433,46 +432,6 @@ def transform_result_type(transform: str, src_type: str) -> str:
         return "date"  # stored as int days from epoch
     if transform in ("year", "month", "hour"):
         return "int"
-    raise ValueError(f"unsupported transform {transform!r}")
-
-
-def transform_value(value, transform: str, src_type: str):
-    """Python-side twin of ``partition_transform_column`` for single
-    values: derive the partition value a source-column value lands in,
-    so callers can build ``partition_filter`` dicts from natural keys
-    (e.g. a ``datetime.date`` -> its ``day`` ordinal) without knowing
-    the transform encodings."""
-    import datetime as _dt
-
-    if value is None:
-        return None
-    if transform == "identity":
-        return value
-    if transform.startswith("bucket["):
-        return bucket_value(value, src_type, int(transform[len("bucket[") : -1]))
-    if transform.startswith("truncate["):
-        w = int(transform[len("truncate[") : -1])
-        if src_type in ("int", "long"):
-            return int(value) - (int(value) % w)  # Python % == pmod
-        if src_type == "string":
-            return str(value)[:w]
-        raise ValueError(f"truncate transform unsupported for {src_type}")
-    if transform in ("year", "month", "day", "hour"):
-        if isinstance(value, _dt.datetime):
-            ts = value if value.tzinfo else value.replace(tzinfo=_dt.timezone.utc)
-            ts = ts.astimezone(_dt.timezone.utc)
-        elif isinstance(value, _dt.date):
-            ts = _dt.datetime(value.year, value.month, value.day, tzinfo=_dt.timezone.utc)
-        else:
-            raise ValueError(f"temporal transform needs a date/datetime, got {type(value)}")
-        if transform == "year":
-            return ts.year - 1970
-        if transform == "month":
-            return (ts.year - 1970) * 12 + ts.month - 1
-        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-        if transform == "day":
-            return (ts - epoch).days
-        return int((ts - epoch).total_seconds() // 3600)
     raise ValueError(f"unsupported transform {transform!r}")
 
 
@@ -1806,16 +1765,13 @@ class IcebergTable:
 
 
 class IcebergDocumentSink:
-    """Committed-results sink + resume ledger on a real Iceberg table.
+    """Committed results of OCR runs on a real Iceberg table.
 
-    The checkpoint layer (``ocrs_spark.checkpoint``) implements the
-    snapshot CAS protocol on plain parquet manifests; this class is the
-    same resume contract on the actual Iceberg format: every completed
-    batch of woven documents is one ``append`` snapshot, and a restarted
-    run anti-joins its input against the committed ``doc_id`` ledger, so
-    a kill between snapshots re-processes nothing that committed and a
-    kill mid-commit leaves the previous snapshot live (the metadata CAS
-    never overwrites).
+    Opens the table at ``location``, or creates it with
+    ``result_schema``. Every completed batch of woven documents is one
+    ``append`` snapshot, so a kill mid-commit leaves the previous
+    snapshot live (the metadata CAS never overwrites), and
+    ``committed`` reads every document of the current snapshot.
     """
 
     def __init__(self, location: str, spark: SparkSession, result_schema):
@@ -1834,51 +1790,6 @@ class IcebergDocumentSink:
     def committed(self) -> DataFrame:
         """All documents committed as of the current snapshot."""
         return self.table.scan(self._spark)
-
-    def remaining(self, documents: DataFrame) -> DataFrame:
-        """Documents not yet committed (the resume input)."""
-        if self.table.current_snapshot_id() is None:
-            return documents
-        ledger = self.committed().select("doc_id")
-        return documents.join(ledger, "doc_id", "left_anti")
-
-    def invalidate(self, doc_ids: DataFrame) -> int | None:
-        """Evict committed documents from the ledger so the next resume
-        re-extracts them (e.g. after a decoder fix un-quarantines their
-        media). One equality-delete commit on ``doc_id`` — no result
-        file is rewritten, and every prior snapshot stays time-travel
-        readable for auditing what the old extraction produced.
-        """
-        if self.table.current_snapshot_id() is None:
-            return None
-        keys = doc_ids.select("doc_id").dropDuplicates().coalesce(1)
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.table.metadata["last-sequence-number"] + 1
-        name_to_id = {
-            f["name"]: f["id"] for f in self.table._schema()["fields"]
-        }
-        manifest, n_rows = self.table._write_delete_manifest(
-            keys,
-            content=2,
-            equality_ids=[name_to_id["doc_id"]],
-            snapshot_id=snapshot_id,
-            seq=seq,
-        )
-        if manifest is None:
-            return None
-        out = self.table._commit_manifests(
-            [manifest],
-            operation="delete",
-            summary={
-                "added-delete-files": str(manifest["added_files_count"]),
-                "added-equality-deletes": str(n_rows),
-            },
-            snapshot_id=snapshot_id,
-            seq=seq,
-            carry="all",
-        )
-        self.table = IcebergTable.load(self.table.location)
-        return out
 
 
 def _bucket_column(src: str, src_type: str, n: int):

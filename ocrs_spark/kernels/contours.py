@@ -128,23 +128,6 @@ def _component_runs(mask: np.ndarray, grid: np.ndarray, edge: np.ndarray):
     return y, xs, xe, (np.cumsum(root) - 1)[lab], np.flatnonzero(root)
 
 
-def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """8-connected component labeling of a boolean mask.
-
-    Returns (labels, n) where labels is int32 (0 = background,
-    components numbered 1..n in raster order of their first pixel).
-    """
-    mask = np.asarray(mask, dtype=bool)
-    h, w = mask.shape
-    grid, edge, _, _ = _scratch(h, w)
-    y, xs, xe, comp, first = _component_runs(mask, grid, edge)
-    length = xe - xs
-    pixels = np.arange(length.sum()) + np.repeat(y * w + xs - np.cumsum(length) + length, length)
-    labels = np.zeros(h * w, dtype=np.int32)
-    labels[pixels] = np.repeat(comp + 1, length)
-    return labels.reshape(h, w), len(first)
-
-
 def _build_trace_table():
     """Moore-tracing transitions indexed by ``256 * bdir + code`` (the
     backtrack direction and the 8-bit neighbourhood code): the clockwise
@@ -276,15 +259,6 @@ def trace_contours(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray
     return x - 1, y - 1, offsets
 
 
-def find_contours_external(mask: np.ndarray) -> list[np.ndarray]:
-    """Outer contour of each 8-connected component, as ordered (N, 2)
-    int32 arrays of (x, y) border pixels (see trace_contours)."""
-    x, y, offsets = trace_contours(mask)
-    if len(offsets) == 1:
-        return []
-    return np.split(np.stack([x, y], axis=1).astype(np.int32), offsets[1:-1])
-
-
 def simplify_polylines(x, y, offsets, eps: float) -> np.ndarray:
     """Douglas-Peucker over every polyline at once, endpoints kept
     (counterpart of rten-imageproc simplify_polygon at detection.rs:50).
@@ -322,15 +296,6 @@ def simplify_polylines(x, y, offsets, eps: float) -> np.ndarray:
         i0, i1, bi = i0[split], i1[split], bi[split]
         keep[bi] = True
         i0, i1 = np.concatenate((i0, bi)), np.concatenate((bi, i1))
-
-
-def simplify_polyline(points, eps: float) -> np.ndarray:
-    """Douglas-Peucker of one polyline (see simplify_polylines). Accepts
-    a point list or an (N, 2) array; returns an (M, 2) float64 array."""
-    pts = np.asarray(points, dtype=np.float64)
-    if len(pts) <= 2:
-        return pts
-    return pts[simplify_polylines(pts[:, 0], pts[:, 1], np.array([0, len(pts)]), eps)]
 
 
 def convex_hulls(x, y, offsets) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

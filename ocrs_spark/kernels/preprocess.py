@@ -28,20 +28,6 @@ def validate_channels(channels: int) -> None:
         raise ImageSourceError("channel count is not 1, 3 or 4")
 
 
-def image_from_bytes(data: bytes, width: int, height: int) -> np.ndarray:
-    """Interpret a raw pixel buffer as an HWC u8 image, inferring channels
-    from the buffer length (mirrors ImageSource::from_bytes,
-    preprocess.rs:81-101)."""
-    channel_len = width * height
-    if channel_len == 0:
-        raise ImageSourceError("channel count is not 1, 3 or 4")
-    if len(data) % channel_len != 0:
-        raise ImageSourceError("data length is not a multiple of `width * height`")
-    channels = len(data) // channel_len
-    validate_channels(channels)
-    return np.frombuffer(data, dtype=np.uint8).reshape(height, width, channels)
-
-
 def prepare_image(img: np.ndarray, chw: bool = False) -> np.ndarray:
     """Convert an image array to the normalized (H, W) float32 greyscale
     form expected by the detection/recognition kernels.

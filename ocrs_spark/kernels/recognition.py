@@ -139,22 +139,16 @@ class TextLine:
         return out
 
 
-def polygon_slice_bounding_rect(poly: list[tuple[int, int]], min_x: int, max_x: int) -> Rect | None:
-    """Bounding rect of the polygon slice with X in [min_x, max_x]
-    (recognition.rs:162-193)."""
-    (rect,) = polygon_slices_bounding_rects(poly, [(min_x, max_x)])
-    return rect
-
-
 def polygon_slices_bounding_rects(
     poly: list[tuple[int, int]], slices: list[tuple[int, int]]
 ) -> list[Rect | None]:
-    """polygon_slice_bounding_rect for many [min_x, max_x] slices of the
-    SAME polygon in one vectorized pass over (slices x edges) — the
-    per-char geometry reconstruction calls this once per line instead
-    of walking the polygon edge list per recognized char. Semantics
-    (clipping rules, banker's rounding of the edge-x intersections,
-    endpoint fallbacks) are identical to the scalar loop."""
+    """Bounding rect of each slice of the polygon with X in [min_x,
+    max_x] (recognition.rs:162-193), for many slices of the SAME polygon
+    in one vectorized pass over (slices x edges) — the per-char geometry
+    reconstruction calls this once per line instead of walking the
+    polygon edge list per recognized char. Semantics (clipping rules,
+    banker's rounding of the edge-x intersections, endpoint fallbacks)
+    are identical to the reference's scalar loop."""
     if not slices:
         return []
     pts = np.asarray(poly, dtype=np.float64)

@@ -19,8 +19,8 @@ Tokenization broadcasts the ranked merge list and applies the standard
 lowest-rank-first merge loop per word in an Arrow batch UDF.
 
 Correctness: no SQL oracle can express iterative BPE, so the check is
-two INDEPENDENT implementations — ``train_bpe_reference`` (plain
-single-process Python, written from the published algorithm) must
+two INDEPENDENT implementations — the tests' ``train_bpe_reference``
+(plain single-process Python, written from the published algorithm) must
 produce the identical merge sequence as the distributed trainer on the
 same corpus, and tokenization must round-trip (concat == word) while
 using every trained merge. Symbols are characters; no end-of-word
@@ -30,8 +30,6 @@ convention).
 
 from __future__ import annotations
 
-from collections import Counter
-
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -40,30 +38,6 @@ from . import load_tables
 from ..matcache import once
 
 N_MERGES = 20
-
-
-# -- reference implementation (the parity check) ----------------------------
-
-
-def train_bpe_reference(word_freqs: dict[str, int], n_merges: int) -> list[tuple[str, str]]:
-    """Single-process BPE training: (merge pairs in order). Ties on
-    count break to the lexicographically smallest pair."""
-    words = {w: list(w) for w in word_freqs}
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        counts: Counter = Counter()
-        for w, syms in words.items():
-            f = word_freqs[w]
-            for pair in zip(syms, syms[1:]):
-                counts[pair] += f
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        a, b = best
-        for w, syms in words.items():
-            words[w] = _merge_once(syms, a, b)
-    return merges
 
 
 def _merge_once(syms: list[str], a: str, b: str) -> list[str]:

@@ -36,31 +36,12 @@ EMB_LSH_ROWS = 8  # 256 buckets/band: ~3% random candidate rate,
 EMB_PLANE_BASE = 300  # seed namespace disjoint from ANN planes
 SIMHASH_BITS = 32
 
-# Word 3-shingles over a pre-split `toks` column (split() is hoisted
-# into its own projection so the text is tokenized once per row, not
-# once per shingle index). Kept as the semantically-canonical parity
-# reference for the Arrow-batched default below.
-_SPARK_SHINGLES_FROM_TOKS = (
-    "transform(sequence(1, greatest(size(toks) - 2, 0)),"
-    " i -> concat(element_at(toks, i), ' ',"
-    " element_at(toks, i + 1), ' ', element_at(toks, i + 2)))"
-)
-
-
-def shingles_df_expr(docs):
-    """(doc_id, s) exploded word 3-shingles, expression form (the
-    transform/sequence lambda is evaluated interpreted per element)."""
-    return (
-        docs.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES_FROM_TOKS)).alias("s"))
-    )
-
 
 def shingles_df(docs):
     """(doc_id, s) exploded word 3-shingles via one Arrow-batched
     pandas_udf: pure string slicing/joining, byte-identical to the
-    expression form (tests assert equality) and ~5x cheaper than the
-    interpreted higher-order transform() it replaces. (r6 note: an
+    interpreted higher-order transform() it replaces (the tests keep
+    that form as its oracle) and ~5x cheaper. (r6 note: an
     unconditional spread() here was measured to HURT multi-branch
     consumers — the extra round-robin exchange defeats subplan reuse
     across branches — so spreading is applied at single-pass call

@@ -1,24 +1,14 @@
-"""Mergeable HLL sketch rollups — the summary-table pattern for
-distinct counts at 100 TB.
+"""Daily distinct users next to their DataSketches HLL estimate.
 
 Exact ``count(DISTINCT user)`` per day needs a full shuffle of the base
-table every time anyone asks; the production pattern is a SUMMARY TABLE
-holding one DataSketches HLL binary per day (``hll_sketch_agg``,
-map-side combinable like any partial aggregate). Any distinct-count
-question over any day range is then answered from the summary alone:
-``hll_union_agg`` merges the per-day registers (order-insensitive
-max-per-register) and ``hll_sketch_estimate`` reads the estimate — the
-base table is never rescanned, and appending a new day is a one-day
-sketch union, which is what makes the rollup incrementally maintainable.
+table; a per-day HLL sketch (``hll_sketch_agg``, map-side combinable
+like any partial aggregate) estimates it from 2^lgK registers.
 
 Driver row: per-day exact distinct users (DuckDB-oracled) PLUS a
 ``hll_within_bound`` flag asserting the sketch estimate for that day is
 within ±5% of the exact value (lgConfigK=12 → RSE 1.04/√2¹² ≈ 1.6%, so
 5% is >3σ). The oracle emits literal TRUE — the driver's value hash
 therefore fails if the sketch path ever drifts out of tolerance.
-
-Merge semantics that can't be SQL-oracled (union-vs-global equivalence,
-incremental append) are pinned in tests/test_hllrollup.py.
 """
 
 from __future__ import annotations
@@ -37,17 +27,6 @@ def _daily(spark, sf_dir: str):
     return ev.select(
         F.unix_timestamp(F.date_trunc("day", ts)).alias("day_epoch"),
         "user_id",
-    )
-
-
-def daily_sketch_summary(spark, sf_dir: str):
-    """The summary table: one HLL binary per day. At scale this is the
-    materialized artifact (tiny: 2^lgK registers per day) every
-    distinct-count query reads instead of the base table."""
-    return (
-        _daily(spark, sf_dir)
-        .groupBy("day_epoch")
-        .agg(F.hll_sketch_agg("user_id", F.lit(LG_K)).alias("sketch"))
     )
 
 

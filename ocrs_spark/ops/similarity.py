@@ -161,38 +161,6 @@ ANN_BAND_PLANE_BASE = 100  # seed namespace disjoint from ann planes 0..5
 EMB_DIM = 64
 
 
-def band_bucket_cols(n_bands: int, n_rows: int, plane_base: int, dim: int = EMB_DIM):
-    """One bucket Column per band (R sign bits packed into an int),
-    evaluated over an ``embedding`` column."""
-    cols = []
-    for band in range(n_bands):
-        bucket = None
-        for r in range(n_rows):
-            p = plane_base + band * n_rows + r
-            bit = F.when(F.expr(_plane_expr(dim, p)) > 0, F.lit(2 ** r)).otherwise(
-                F.lit(0)
-            )
-            bucket = bit if bucket is None else bucket + bit
-        cols.append(bucket.cast("long"))
-    return cols
-
-
-def banded_buckets_expr(
-    emb,
-    n_bands: int = ANN_BANDS_B,
-    n_rows: int = ANN_BAND_ROWS,
-    plane_base: int = ANN_BAND_PLANE_BASE,
-):
-    """Expression-form banded buckets: one scan + projection, unpivoted
-    with posexplode. Semantically canonical (its per-plane aggregate()
-    lambda is the same sequential left fold as the DuckDB oracle), but
-    higher-order lambdas are evaluated interpreted per element — kept
-    as the parity reference for the vectorized default below."""
-    return emb.select(
-        "vec_id", F.array(*band_bucket_cols(n_bands, n_rows, plane_base)).alias("bks")
-    ).select("vec_id", F.posexplode("bks").alias("band", "bucket"))
-
-
 def banded_buckets(
     emb,
     n_bands: int = ANN_BANDS_B,
@@ -210,8 +178,9 @@ def banded_buckets(
     from the sequential fold in the last ulp, which could flip a sign
     only for |projection| ~ 1e-15 — impossible-in-practice for
     continuous embeddings, and tests/test_ann_quality.py asserts
-    bucket-for-bucket equality against banded_buckets_expr on the
-    driver tables (the same guard protects the DuckDB oracle parity)."""
+    bucket-for-bucket equality against the expression form (the
+    per-plane aggregate() fold) on the driver tables (the same guard
+    protects the DuckDB oracle parity)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType

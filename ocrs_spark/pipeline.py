@@ -117,9 +117,8 @@ def extract_payload_batch(
     engine: OcrEngine, payloads: list[bytes]
 ) -> tuple[list, list, list, list]:
     """Fused extraction kernel over one Arrow batch of raw payloads:
-    returns parallel (texts, n_words, n_lines, errors) lists. Shared by
-    the pipeline's mapInPandas UDF and the SQL-callable functions in
-    ``sqlfuncs`` so both surfaces run the identical kernel."""
+    returns parallel (texts, n_words, n_lines, errors) lists. The body
+    of the pipeline's mapInPandas UDF."""
     n = len(payloads)
     texts = [None] * n
     n_words = [0] * n

@@ -10,12 +10,12 @@ The shapes:
   join, and two ``applyInPandasWithState`` operators (sessionization,
   threshold alerts); ``ops/streamrows.py`` runs each as a driver row
   against a batch oracle;
-- incremental OCR: ``stream_ocr_documents`` and ``stream_ocr_to_iceberg``
-  take the documents as a streaming DataFrame (a parquet directory
-  through ``file_stream``, or an Iceberg table through the
-  ``ocrs_iceberg`` source) and run every micro-batch through the batch
-  pipeline. They differ in their sinks: per-batch-id parquet
-  overwrites, or epoch-stamped Iceberg snapshots.
+- incremental OCR: ``stream_ocr_to_iceberg`` takes the documents as a
+  streaming DataFrame (a parquet directory through ``file_stream``, or
+  an Iceberg table through the ``ocrs_iceberg`` source), runs every
+  micro-batch through the batch pipeline and commits it to one Iceberg
+  results table as an epoch-stamped snapshot; a replayed epoch is
+  skipped, so the sink is exactly-once.
 """
 
 from __future__ import annotations
@@ -144,7 +144,10 @@ def stream_tumbling_update(
     from .iceberg import IcebergTable
 
     stream = hourly_windows(file_stream(spark, events_dir, max_files_per_trigger=1))
-    IcebergTable.create(table_loc, stream.schema)
+    try:
+        IcebergTable.load(table_loc)  # a restart: the replay upserts by key
+    except FileNotFoundError:
+        IcebergTable.create(table_loc, stream.schema)
 
     def _merge(batch_df, _batch_id):
         if batch_df.isEmpty():
@@ -437,39 +440,6 @@ def stream_sessionize_events(
     )
 
 
-def stream_ocr_documents(
-    documents: DataFrame,
-    media: DataFrame,
-    checkpoint_dir: str,
-    output_dir: str,
-    engine_conf: dict | None = None,
-) -> None:
-    """Incremental OCR of a stream of documents into a parquet directory.
-
-    foreachBatch reuses the batch pipeline unchanged — each micro-batch
-    is exploded, skew-repartitioned, OCR'd and woven. foreachBatch is
-    inherently at-least-once (a crash between the sink write and the
-    streaming commit replays the batch), so the sink write is made
-    IDEMPOTENT: each batch overwrites its own deterministic
-    ``batch_id=<id>`` partition directory — a replayed batch rewrites
-    the same files instead of appending duplicates, which upgrades the
-    end-to-end guarantee to effectively-once, even when the checkpoint
-    is lost. Read the result with ``spark.read.parquet(output_dir)``
-    (batch_id surfaces as a partition column).
-    """
-    engine_conf = engine_conf or {"kind": "fake"}
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        woven = ocr_documents(batch_df, media, engine_conf=engine_conf)
-        woven.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
-
-    drain(
-        documents.writeStream.foreachBatch(process_batch).option(
-            "checkpointLocation", checkpoint_dir
-        )
-    )
-
-
 def stream_ocr_to_iceberg(
     documents: DataFrame,
     media: DataFrame,
@@ -482,9 +452,8 @@ def stream_ocr_to_iceberg(
 
     foreachBatch alone is at-least-once: a crash after the sink write
     but before Spark records the epoch in the streaming commit log
-    replays the whole micro-batch on restart. The parquet sink above
-    absorbs that by overwriting a per-batch directory; here the sink is
-    an append-only Iceberg table, so replays must be *detected*, not
+    replays the whole micro-batch on restart. The sink is an
+    append-only Iceberg table, so replays must be *detected*, not
     overwritten. Each commit stamps its snapshot summary with
     (streaming-query-id, streaming-batch-id); a replayed epoch finds
     its id at-or-below the table's high-water mark and skips before

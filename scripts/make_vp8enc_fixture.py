@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Commit a cross-validation fixture for the VP8 ENCODER: a bitstream
-produced by ocrs_spark.vp8enc plus the YUV planes the system libwebp
+produced by tests/vp8enc.py plus the YUV planes the system libwebp
 decodes from it. The committed test then proves our encoder's output
 is decoded identically by the reference decoder — without needing
 libwebp at test time. Run:  python scripts/make_vp8enc_fixture.py
@@ -16,7 +16,7 @@ import numpy as np
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from make_vp8_fixtures import _load_libwebp, decode_yuv, synth_images  # noqa: E402
-from ocrs_spark.vp8enc import encode_webp_lossy  # noqa: E402
+from tests.vp8enc import encode_webp_lossy  # noqa: E402
 
 OUT_DIR = os.path.join(os.path.dirname(__file__), "..", "tests", "fixtures", "vp8")
 

@@ -16,6 +16,8 @@ import numpy as np
 
 from ocrs_spark.geometry import RotatedRect
 
+from .util import resized
+
 # Moore neighborhood in clockwise order starting from W (dx, dy).
 _MOORE = [(-1, 0), (-1, -1), (0, -1), (1, -1), (1, 0), (1, 1), (0, 1), (-1, 1)]
 
@@ -352,7 +354,7 @@ def find_connected_component_rects(mask: np.ndarray, expand_dist: float, min_are
         rect = min_area_rect(simplify_polyline(contour, 2.0))
         if rect is None:
             continue
-        rect = rect.resize(rect.width + 2 * expand_dist, rect.height + 2 * expand_dist)
+        rect = resized(rect, rect.width + 2 * expand_dist, rect.height + 2 * expand_dist)
         if rect.area() >= min_area:
             rects.append(rect)
     return rects

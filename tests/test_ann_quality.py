@@ -123,8 +123,9 @@ def test_vectorized_buckets_match_expression_form(spark):
         ANN_BAND_ROWS,
         ANN_BANDS_B,
         banded_buckets,
-        banded_buckets_expr,
     )
+
+    from .reference import banded_buckets_expr
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     for b, r, base in [

@@ -4,9 +4,10 @@ hand-computed toy case, and tokenizer round-trip properties."""
 from ocrs_spark.ops.bpe import (
     bpe_tokenize_word,
     train_bpe_distributed,
-    train_bpe_reference,
     word_freq_table,
 )
+
+from .reference import train_bpe_reference
 
 SF = "/root/testdata/sf0.001"
 

@@ -72,7 +72,9 @@ def test_vectorized_shingles_match_expression_form(spark):
     """The pandas_udf shingle path must produce byte-identical exploded
     shingles to the canonical transform() expression form (which is
     what the DuckDB oracles mirror)."""
-    from ocrs_spark.ops.dedup import shingles_df, shingles_df_expr
+    from ocrs_spark.ops.dedup import shingles_df
+
+    from .reference import shingles_df_expr
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     fast = sorted(map(tuple, shingles_df(docs).collect()))

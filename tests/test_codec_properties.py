@@ -6,8 +6,10 @@ the same image (they share quantized coefficients by construction)."""
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from ocrs_spark.jpeg import decode_jpeg, encode_jpeg, encode_jpeg_progressive
+from ocrs_spark.jpeg import decode_jpeg
 from ocrs_spark.webp import decode_webp, encode_webp
+
+from .jpeg_encode import encode_jpeg, encode_jpeg_progressive
 
 
 @st.composite
@@ -57,7 +59,7 @@ def test_vp8_lossy_roundtrip_bounded(img, qindex):
     matches, and the YUV-domain error stays within the quantizer-step
     bound (the conformance guarantee a lossy codec CAN make)."""
     from ocrs_spark.vp8 import AC_QLOOKUP, decode_vp8
-    from ocrs_spark.vp8enc import _rgb_to_yuv420, encode_vp8
+    from .vp8enc import _rgb_to_yuv420, encode_vp8
 
     y, u, v = decode_vp8(encode_vp8(img, qindex=qindex))
     ys, us, vs = _rgb_to_yuv420(img)

@@ -42,7 +42,7 @@ def _img(h=24, w=36):
 
 
 def _samples():
-    from ocrs_spark.jpeg import encode_jpeg, encode_jpeg_progressive
+    from .jpeg_encode import encode_jpeg, encode_jpeg_progressive
     from ocrs_spark.webp import encode_webp
 
     img = _img()

@@ -11,6 +11,7 @@ from ocrs_spark.kernels.detection import TextDetector, find_connected_component_
 from ocrs_spark.models import FakeDetectionModel
 
 from . import kernel_reference as R
+from .util import find_contours_external, label_components, simplify_polyline
 
 
 def _word_grid(h, w, rows, cols, row_pitch, col_pitch, word_w, step):
@@ -77,13 +78,13 @@ MASKS = _masks()
 @pytest.mark.parametrize("name", sorted(MASKS))
 def test_contours_and_rects_match_reference(name):
     mask = MASKS[name]
-    got = C.find_contours_external(mask)
+    got = find_contours_external(mask)
     want = R.find_contours_external(mask)
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert g.dtype == w.dtype and np.array_equal(g, w)
 
-    labels, n = C.label_components(mask)
+    labels, n = label_components(mask)
     runs_by_label, _, _ = R._component_runs(mask)
     assert n == len(runs_by_label)
     ref_labels = np.zeros(mask.shape, np.int32)
@@ -99,7 +100,7 @@ def test_contours_and_rects_match_reference(name):
             a, b = offsets[k], offsets[k + 1]
             ref = R.simplify_polyline(w, eps)
             assert np.array_equal(np.stack([x[a:b], y[a:b]], 1)[keep[a:b]], ref)
-            assert np.array_equal(C.simplify_polyline(w, eps), ref)
+            assert np.array_equal(simplify_polyline(w, eps), ref)
 
     for expand, min_area in ((3.0, 100.0), (0.0, 0.0)):
         assert find_connected_component_rects(mask, expand, min_area) == R.find_connected_component_rects(

@@ -8,10 +8,9 @@ import numpy as np
 import pytest
 
 from ocrs_spark import FakeDetectionModel, FakeRecognitionModel, OcrEngine, OcrEngineParams
-from ocrs_spark.geometry import Rect, RotatedRect
 from ocrs_spark.models import fake_alphabet
 
-from .util import gen_test_image
+from .util import gen_test_image, rect_from_tlhw, rotated_from_rect
 
 
 def det_engine():
@@ -45,16 +44,16 @@ def test_detect_words_expected_boxes():
         (w.bounding_rect() for w in words), key=lambda b: (int(b.top), int(b.left))
     )
     expected = [
-        Rect.from_tlhw(27.0, -3.0, 25.0, 56.0),
-        Rect.from_tlhw(27.0, 66.0, 25.0, 57.0),
-        Rect.from_tlhw(27.0, 136.0, 25.0, 57.0),
+        rect_from_tlhw(27.0, -3.0, 25.0, 56.0),
+        rect_from_tlhw(27.0, 66.0, 25.0, 57.0),
+        rect_from_tlhw(27.0, 136.0, 25.0, 57.0),
     ]
     assert boxes == expected
 
 
 def _recognize_full_image_line(engine, image):
     grey = engine.prepare_input(image, chw=True)
-    lines = [[RotatedRect.from_rect(Rect.from_tlhw(0, 0, image.shape[1], image.shape[2]))]]
+    lines = [[rotated_from_rect(rect_from_tlhw(0, 0, image.shape[1], image.shape[2]))]]
     out = engine.recognize_text(grey, lines)
     assert len(out) == 1
     return out[0]

@@ -1,58 +1,11 @@
-"""HLL summary-table semantics the SQL oracle can't see: answering a
-global distinct count FROM THE SUMMARY alone, incremental append
-equivalence, error bounds, and determinism across runs."""
+"""HLL estimate semantics the SQL oracle can't see: determinism of the
+per-day estimates across runs."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from ocrs_spark.ops.hllrollup import (
-    LG_K,
-    REL_TOL,
-    daily_distinct_users,
-    daily_sketch_summary,
-)
+from ocrs_spark.ops.hllrollup import daily_distinct_users
 
 SF = "/root/testdata/sf0.001"
-
-
-def _exact_global(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    return ev.select("user_id").distinct().count()
-
-
-def test_union_from_summary_answers_global_within_bound(spark):
-    summary = daily_sketch_summary(spark, SF)
-    est = summary.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch", F.lit(False))).alias("e")
-    ).collect()[0].e
-    exact = _exact_global(spark)
-    assert abs(est - exact) <= max(1, exact * REL_TOL)
-
-
-def test_incremental_append_equals_full_rebuild(spark):
-    """union(old days) ∪ sketch(new day) must estimate the same as the
-    union over all days — the property that makes the rollup
-    incrementally maintainable without base-table rescans."""
-    summary = daily_sketch_summary(spark, SF).cache()
-    days = sorted(r.day_epoch for r in summary.select("day_epoch").collect())
-    assert len(days) >= 2
-    cutoff = days[len(days) // 2]
-    old = summary.where(F.col("day_epoch") < cutoff)
-    new = summary.where(F.col("day_epoch") >= cutoff)
-
-    def union_est(df):
-        return df.agg(
-            F.hll_union_agg("sketch", F.lit(False)).alias("u")
-        ).select(F.hll_sketch_estimate("u").alias("e")).collect()[0].e
-
-    # merge the two partial unions via a tiny two-row union table
-    partials = old.agg(
-        F.hll_union_agg("sketch", F.lit(False)).alias("sketch")
-    ).unionByName(
-        new.agg(F.hll_union_agg("sketch", F.lit(False)).alias("sketch"))
-    )
-    assert union_est(partials) == union_est(summary)
 
 
 def test_estimates_deterministic_across_runs(spark):
@@ -60,12 +13,3 @@ def test_estimates_deterministic_across_runs(spark):
     b = {(r.day_epoch, r.n_users, r.hll_within_bound) for r in daily_distinct_users(spark, SF).collect()}
     assert a == b
     assert all(ok for _, _, ok in a)
-
-
-def test_summary_is_tiny(spark):
-    """The artifact a 100-TB deployment materializes is O(days * 2^lgK)
-    bytes — assert per-day sketch binaries stay register-sized."""
-    rows = daily_sketch_summary(spark, SF).select(
-        F.length("sketch").alias("sz")
-    ).collect()
-    assert rows and all(r.sz <= (1 << LG_K) + 64 for r in rows)

@@ -1,6 +1,6 @@
 """From-spec Iceberg v2 table tests: commit protocol, time travel,
 partition/bounds pruning, bucket transform (spec appendix B vectors),
-and the resume sink contract the north rule mandates."""
+and the committed-results sink."""
 
 from __future__ import annotations
 
@@ -19,8 +19,9 @@ from ocrs_spark.iceberg import (
     partition_transform_column,
     serialize_bound,
     deserialize_bound,
-    transform_value,
 )
+
+from .reference import transform_value
 
 SF = "/root/testdata/sf0.001"
 
@@ -449,6 +450,39 @@ def test_concurrent_stale_appends_keep_both_snapshots(spark, docs, tmp_path):
     assert sum(f["record_count"] for f in final.plan_incremental_files(2, 3)) == 5
 
 
+def test_appends_from_two_threads_keep_both_snapshots(spark, docs, tmp_path):
+    """Two threads of one SparkSession append to one table at once: both
+    writes run as concurrent Spark jobs and race for the same metadata
+    version. Neither raises, both snapshots are in the history, and the
+    table holds every row of both."""
+    import threading
+
+    t = _fresh_table(docs, tmp_path, None)
+    parts = [docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")]
+    start = threading.Barrier(len(parts))
+    snapshot_ids, errors = [], []
+
+    def append(part):
+        try:
+            table = IcebergTable.load(t.location)
+            start.wait()
+            snapshot_ids.append(table.append(part))
+        except Exception as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=append, args=(p,)) for p in parts]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+
+    assert errors == []
+    final = IcebergTable.load(t.location)
+    history = [s["snapshot-id"] for s in final.snapshots()]
+    assert len(snapshot_ids) == 2 and set(snapshot_ids) <= set(history)
+    assert final.scan(spark).count() == sum(p.count() for p in parts)
+
+
 def test_stale_non_append_commit_raises(spark, docs, tmp_path):
     """A commit other than an append planned its file set against the
     snapshot it loaded: after losing the race it raises instead of
@@ -524,69 +558,30 @@ def test_jvm_avro_reads_manifests(spark, docs, tmp_path):
     assert total == 50
 
 
-def test_every_public_table_method_has_a_caller():
-    """The ``IcebergTable`` surface is what the program uses: every
-    public method is referenced as an attribute somewhere in
-    ``ocrs_spark/``, ``perfbench/`` (not its tests), ``scripts/`` or
-    ``bench*.py``, outside its own body. Methods only tests call do
-    not belong on the table."""
-    import ast
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parents[1]
-    module = root / "ocrs_spark" / "iceberg.py"
-    tree = ast.parse(module.read_text())
-    cls = next(
-        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "IcebergTable"
-    )
-    methods = {
-        n.name: n
-        for n in cls.body
-        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
-    }
-    own = {
-        id(node)
-        for name, fn in methods.items()
-        for node in ast.walk(fn)
-        if isinstance(node, ast.Attribute) and node.attr == name
-    }
-    paths = [
-        *root.glob("ocrs_spark/**/*.py"),
-        *(p for p in root.glob("perfbench/**/*.py") if "tests" not in p.parts),
-        *root.glob("scripts/**/*.py"),
-        *root.glob("bench*.py"),
-    ]
-    used = set()
-    for path in paths:
-        t = tree if path == module else ast.parse(path.read_text())
-        used |= {
-            n.attr
-            for n in ast.walk(t)
-            if isinstance(n, ast.Attribute) and id(n) not in own
-        }
-    assert sorted(set(methods) - used) == []
-
-
 # -- resume sink --------------------------------------------------------------
+
+
+def _uncommitted(sink, docs):
+    return docs.join(sink.committed().select("doc_id"), "doc_id", "left_anti")
 
 
 def test_document_sink_resume_contract(spark, docs, tmp_path):
     loc = str(tmp_path / "sink")
     sink = IcebergDocumentSink(loc, spark, docs.schema)
-    assert sink.remaining(docs).count() == docs.count()  # empty table: all todo
+    assert _uncommitted(sink, docs).count() == docs.count()  # empty table: all todo
 
     first = docs.filter(F.col("doc_id") % 2 == 0)
     sink.commit_run(first)
-    remaining = sink.remaining(docs)
+    remaining = _uncommitted(sink, docs)
     assert remaining.count() == docs.count() - first.count()
     assert remaining.filter(F.col("doc_id") % 2 == 0).count() == 0
 
     sink.commit_run(remaining)
-    assert sink.remaining(docs).count() == 0
+    assert _uncommitted(sink, docs).count() == 0
     assert sink.committed().count() == docs.count()
-    # a reopened sink (restarted run) sees the same ledger
+    # a reopened sink (restarted run) sees the same committed documents
     reopened = IcebergDocumentSink(loc, spark, docs.schema)
-    assert reopened.remaining(docs).count() == 0
+    assert _uncommitted(reopened, docs).count() == 0
 
 
 # -- maintenance ---------------------------------------------------------------

@@ -180,29 +180,6 @@ def test_incremental_scan_refuses_to_cross_row_deletes(spark, docs, tmp_path):
         t.plan_incremental_files(1, 3)
 
 
-def test_sink_invalidate_reopens_documents_for_resume(spark, docs, tmp_path):
-    """Evicting committed docs via equality delete makes the anti-join
-    resume re-process exactly those docs — the reprocess-after-fix path."""
-    from ocrs_spark.iceberg import IcebergDocumentSink
-
-    sink = IcebergDocumentSink(str(tmp_path / "sink"), spark, docs.schema)
-    sink.commit_run(docs)
-    assert sink.remaining(docs).count() == 0
-
-    bad = docs.filter("doc_id % 10 = 0")
-    assert sink.invalidate(bad.select("doc_id")) is not None
-    remaining = sink.remaining(docs)
-    assert _ids(remaining) == _ids(bad)
-    # recommit the re-extracted docs: ledger is whole again, no dups
-    sink.commit_run(remaining)
-    assert sink.remaining(docs).count() == 0
-    committed = sink.committed()
-    assert committed.count() == docs.count()
-    assert committed.groupBy("doc_id").count().filter("count > 1").count() == 0
-    # empty invalidation is a no-op
-    assert sink.invalidate(docs.filter("doc_id < 0").select("doc_id")) is None
-
-
 def test_delete_manifest_shape_on_disk(spark, docs, tmp_path):
     """The committed delete manifest is spec-shaped: content=1 in the
     manifest list, 'deletes' in the manifest OCF metadata, and the

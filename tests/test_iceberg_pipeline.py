@@ -49,16 +49,19 @@ def test_ocr_iceberg_roundtrip_with_resume(spark, corpus, tmp_path_factory):
     woven_schema = ocr_documents(loaded.limit(1), media).schema
     sink = IcebergDocumentSink(str(base / "results"), spark, woven_schema)
 
+    def remaining():
+        return loaded.join(sink.committed().select("doc_id"), "doc_id", "left_anti")
+
     # run 1 processes half the corpus, then "dies"
-    batch1 = sink.remaining(loaded).filter("doc_id % 2 = 0")
+    batch1 = remaining().filter("doc_id % 2 = 0")
     sink.commit_run(ocr_documents(batch1, media))
 
-    # run 2 restarts: the ledger says exactly what's left
-    todo = sink.remaining(loaded)
+    # run 2 restarts: the committed doc_ids say exactly what's left
+    todo = remaining()
     assert todo.count() == docs.count() - batch1.count()
     assert todo.filter("doc_id % 2 = 0").count() == 0
     sink.commit_run(ocr_documents(todo, media))
-    assert sink.remaining(loaded).count() == 0
+    assert remaining().count() == 0
 
     got = _span_map(sink.committed())
     assert got == expected  # span-sequence equality, both runs combined

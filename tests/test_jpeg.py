@@ -10,12 +10,9 @@ import numpy as np
 import pytest
 
 from ocrs_spark.codec import UnsupportedImageError, decode_image
-from ocrs_spark.jpeg import (
-    decode_jpeg,
-    encode_jpeg,
-    encode_jpeg_multiscan,
-    encode_jpeg_progressive,
-)
+from ocrs_spark.jpeg import decode_jpeg
+
+from .jpeg_encode import encode_jpeg, encode_jpeg_multiscan, encode_jpeg_progressive
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 

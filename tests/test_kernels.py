@@ -9,13 +9,7 @@ import numpy as np
 import pytest
 
 from ocrs_spark.geometry import Line, Rect, RotatedRect, leftmost_edge, rightmost_edge
-from ocrs_spark.kernels.contours import (
-    fill_polygon_mask,
-    find_contours_external,
-    label_components,
-    min_area_rect,
-    simplify_polyline,
-)
+from ocrs_spark.kernels.contours import fill_polygon_mask, min_area_rect
 from ocrs_spark.kernels.ctc import decode_beam, decode_greedy
 from ocrs_spark.kernels.detection import find_connected_component_rects
 from ocrs_spark.kernels.layout import (
@@ -27,27 +21,25 @@ from ocrs_spark.kernels.layout import (
 from ocrs_spark.kernels.preprocess import (
     BLACK_VALUE,
     ImageSourceError,
-    image_from_bytes,
     prepare_image,
 )
 from ocrs_spark.kernels.recognition import line_polygon, resized_line_width
 from ocrs_spark.kernels.resize import resize_bilinear
 
-from .util import gen_rect_grid, union_rects
+from .util import (
+    find_contours_external,
+    gen_rect_grid,
+    label_components,
+    rect_from_tlhw,
+    rotated_from_rect,
+    simplify_polyline,
+    union_rects,
+    up_axis,
+    vertical_overlap,
+)
 
 
 # ---------------------------------------------------------------- preprocess
-
-def test_image_from_bytes_validation():
-    # Mirrors preprocess.rs:274-321 cases.
-    image_from_bytes(bytes(100), 10, 10)  # 1 channel ok
-    with pytest.raises(ImageSourceError, match="multiple"):
-        image_from_bytes(bytes(50), 10, 10)
-    with pytest.raises(ImageSourceError, match="channel count"):
-        image_from_bytes(bytes(8 * 8 * 2), 8, 8)
-    with pytest.raises(ImageSourceError, match="channel count"):
-        image_from_bytes(bytes(0), 0, 10)
-
 
 def test_prepare_image_greyscale_u8():
     data = np.array([0, 128, 255, 64], dtype=np.uint8)
@@ -89,15 +81,15 @@ def test_prepare_image_bad_channels():
 
 def test_rotated_rect_corners_reference_order():
     # Mirrors text_items.rs:150-156: up=(0,-1), rect tlhw(0,0,25,30).
-    rr = RotatedRect.from_rect(Rect.from_tlhw(0, 0, 25, 30))
-    assert rr.up_axis() == (0.0, -1.0)
+    rr = rotated_from_rect(rect_from_tlhw(0, 0, 25, 30))
+    assert up_axis(rr) == (0.0, -1.0)
     assert rr.corners() == [(30.0, 25.0), (0.0, 25.0), (0.0, 0.0), (30.0, 0.0)]
     br = rr.bounding_rect()
     assert (br.top, br.left, br.bottom, br.right) == (0, 0, 25, 30)
 
 
 def test_edges():
-    rr = RotatedRect.from_rect(Rect.from_tlhw(10, 20, 30, 40))
+    rr = rotated_from_rect(rect_from_tlhw(10, 20, 30, 40))
     le, re_ = leftmost_edge(rr), rightmost_edge(rr)
     assert {le.x0, le.x1} == {20.0}
     assert {re_.x0, re_.x1} == {60.0}
@@ -109,7 +101,7 @@ def test_line_ops():
     b = Line(5, -5, 5, 5)
     assert a.intersects(b)
     assert not Line(0, 0, 1, 0).intersects(Line(5, 5, 6, 6))
-    assert Line(0, 0, 0, 10).vertical_overlap(Line(0, 5, 0, 20)) == 5
+    assert vertical_overlap(Line(0, 0, 0, 10), Line(0, 5, 0, 20)) == 5
     assert Line(0, 0, 10, 0).horizontal_overlap(Line(8, 0, 20, 0)) == 2
 
 
@@ -159,7 +151,7 @@ def test_min_area_rect_axis_aligned():
     rr = min_area_rect(pts)
     assert rr.width == pytest.approx(10)
     assert rr.height == pytest.approx(4)
-    assert rr.up_axis() == (0.0, -1.0)
+    assert up_axis(rr) == (0.0, -1.0)
     br = rr.bounding_rect()
     assert (br.top, br.left, br.bottom, br.right) == (0, 0, 4, 10)
 
@@ -193,13 +185,13 @@ def test_fill_polygon_mask_rect():
 # -------------------------------------------------------------------- layout
 
 def test_group_into_lines_orders_left_to_right():
-    rects = [RotatedRect.from_rect(Rect.from_tlhw(0, x, 10, 8)) for x in (20, 0, 40)]
+    rects = [rotated_from_rect(rect_from_tlhw(0, x, 10, 8)) for x in (20, 0, 40)]
     (line,) = group_into_lines(rects, [])
     assert [r.bounding_rect().left for r in line] == [0, 20, 40]
 
 
 def test_group_into_lines_separator_blocks():
-    rects = [RotatedRect.from_rect(Rect.from_tlhw(0, x, 10, 8)) for x in (0, 20)]
+    rects = [rotated_from_rect(rect_from_tlhw(0, x, 10, 8)) for x in (0, 20)]
     sep = Line(15, -5, 15, 15)
     lines = group_into_lines(rects, [sep])
     assert len(lines) == 2
@@ -227,7 +219,7 @@ def test_max_empty_rects_none():
 def test_find_block_separators():
     # Mirrors layout_analysis.rs:243-291: 2 lines x 2 overlapping words.
     words = [
-        RotatedRect.from_rect(r)
+        rotated_from_rect(r)
         for r in gen_rect_grid((0, 0), (2, 2), (10, 20), (50, -5))
     ]
     assert len(find_block_separators(words)) == 2
@@ -238,7 +230,7 @@ def test_find_text_lines_two_columns_reading_order():
     left_col = gen_rect_grid((0, 0), (10, 5), (5, 5), (3, 2))
     lb = union_rects(left_col)
     right_col = gen_rect_grid((0, lb.right + 20), (10, 5), (5, 5), (3, 2))
-    words = [RotatedRect.from_rect(r) for r in left_col + right_col]
+    words = [rotated_from_rect(r) for r in left_col + right_col]
     random.Random(1234).shuffle(words)
     lines = find_text_lines(words)
     assert len(lines) == 20

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from ocrs_spark.fixtures import make_word_image
-from ocrs_spark.jpeg import decode_jpeg, encode_jpeg
+from ocrs_spark.jpeg import decode_jpeg
 from ocrs_spark.pdf import (
     PdfParseError,
     _iter_objects,
@@ -21,6 +21,8 @@ from ocrs_spark.pdf import (
     extract_pdf_text,
     extract_pdf_text_layout,
 )
+
+from .jpeg_encode import encode_jpeg
 
 
 def _img():

@@ -7,13 +7,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
 from ocrs_spark.pipeline import (
     explode_spans,
     extraction_metrics,
     ocr_documents,
     ocr_image_spans,
 )
+
+from .corpus import corpus_to_spark, generate_corpus
 
 
 @pytest.fixture(scope="module")
@@ -50,6 +51,32 @@ def test_span_sequence_equality(frames, result):
     assert got.keys() == want.keys()
     mismatches = {k: (got[k], want[k]) for k in want if got[k] != want[k]}
     assert not mismatches, f"{len(mismatches)} docs mismatched: {list(mismatches)[:3]}"
+
+
+def test_ocr_rows_independent_of_arrow_batch_and_partitions(spark):
+    """The woven rows are the same whatever the Arrow batch size the OCR
+    UDF sees and however many partitions the image spans are spread
+    over."""
+    docs, media, _ = corpus_to_spark(spark, generate_corpus(n_docs=20))
+
+    def rows(**kw):
+        return sorted(map(tuple, ocr_documents(docs, media, **kw).collect()))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    by_batch = {}
+    try:
+        for n in (1, 7, 64):
+            spark.conf.set(key, str(n))
+            by_batch[n] = rows()
+    finally:
+        spark.conf.set(key, before)
+    by_partitions = {p: rows(partitions=p) for p in (1, 7)}
+
+    want = by_batch[64]
+    assert len(want) == 20
+    assert by_batch[1] == want and by_batch[7] == want
+    assert by_partitions[1] == want and by_partitions[7] == want
 
 
 def test_order_restored_by_offset_not_storage(frames):
@@ -176,7 +203,7 @@ def test_lossy_webp_media_decodes_in_executors(spark):
     from ocrs_spark.models import FakeDetectionModel, FakeRecognitionModel, fake_alphabet
     from ocrs_spark import OcrEngine, OcrEngineParams
     from ocrs_spark.fixtures import MEDIA_SCHEMA
-    from ocrs_spark.vp8enc import encode_webp_lossy
+    from .vp8enc import encode_webp_lossy
 
     img = make_word_image(2)
     payload = encode_webp_lossy(img, qindex=4)
@@ -242,9 +269,11 @@ def test_pdf_spans_flow_through_pipeline(spark):
     import numpy as np
 
     from ocrs_spark.codec import encode_png
-    from ocrs_spark.fixtures import MEDIA_SCHEMA, fake_engine, make_word_image
+    from ocrs_spark.fixtures import MEDIA_SCHEMA, make_word_image
     from ocrs_spark.pdf import encode_pdf
     from ocrs_spark.pipeline import SPAN_STRUCT
+
+    from .corpus import fake_engine
 
     img = make_word_image(2)
     eng = fake_engine()
@@ -289,9 +318,11 @@ def test_html_spans_flow_through_pipeline(spark):
     import numpy as np
 
     from ocrs_spark.codec import encode_png
-    from ocrs_spark.fixtures import MEDIA_SCHEMA, fake_engine, make_word_image
+    from ocrs_spark.fixtures import MEDIA_SCHEMA, make_word_image
     from ocrs_spark.pdf import encode_pdf
     from ocrs_spark.pipeline import SPAN_STRUCT
+
+    from .corpus import fake_engine
 
     img = make_word_image(2)
     eng = fake_engine()

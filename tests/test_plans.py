@@ -75,7 +75,7 @@ def test_ocr_results_fan_out_via_broadcast(spark):
     """The per-unique-image OCR results must broadcast back to the
     referencing spans — the big span table never shuffles for the
     fan-out join."""
-    from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
+    from .corpus import corpus_to_spark, generate_corpus
     from ocrs_spark.pipeline import ocr_image_spans
 
     docs, media, _ = corpus_to_spark(spark, generate_corpus(n_docs=6))
@@ -89,7 +89,7 @@ def test_media_broadcast_decision_is_size_aware(spark):
     (previous test), while media over the session threshold must fall
     back to the shuffle join — at corpus scale the media table is TBs
     and force-broadcasting it would kill the driver."""
-    from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
+    from .corpus import corpus_to_spark, generate_corpus
     from ocrs_spark.pipeline import _media_fits_broadcast, ocr_image_spans
 
     docs, media, _ = corpus_to_spark(spark, generate_corpus(n_docs=6))
@@ -124,7 +124,7 @@ def test_parse_byte_size_suffixes():
 def test_media_broadcast_honors_suffixed_threshold(spark):
     """A user-set '64b'-style threshold (too small for any payload) must
     disable the broadcast path rather than being ignored."""
-    from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
+    from .corpus import corpus_to_spark, generate_corpus
     from ocrs_spark.pipeline import _media_fits_broadcast
 
     _, media, _ = corpus_to_spark(spark, generate_corpus(n_docs=4))
@@ -139,7 +139,7 @@ def test_media_broadcast_honors_suffixed_threshold(spark):
 
 
 def test_explode_prunes_media_bytes(spark):
-    from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
+    from .corpus import corpus_to_spark, generate_corpus
 
     docs, media, _ = corpus_to_spark(spark, generate_corpus(n_docs=4))
     plan = plan_of(explode_spans(docs).filter("kind = 'image'"))

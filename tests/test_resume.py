@@ -6,13 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocrs_spark.checkpoint import DocumentCheckpoint, run_checkpointed
-from ocrs_spark.fixtures import (
-    DOCUMENTS_SCHEMA,
-    MEDIA_SCHEMA,
-    corpus_to_spark,
-    generate_corpus,
-)
+from ocrs_spark.fixtures import DOCUMENTS_SCHEMA, MEDIA_SCHEMA
 from ocrs_spark.pipeline import explode_spans, extraction_metrics, ocr_image_spans
+
+from .corpus import corpus_to_spark, generate_corpus
 
 
 @pytest.fixture(scope="module")

@@ -50,8 +50,10 @@ def _write_corpus(tmpdir: str) -> tuple[str, str, str, str]:
     import numpy as np
 
     from ocrs_spark.codec import encode_png
-    from ocrs_spark.fixtures import fake_engine, make_word_image
+    from ocrs_spark.fixtures import make_word_image
     from ocrs_spark.pdf import encode_pdf
+
+    from .corpus import fake_engine
 
     img = make_word_image(2)
     eng = fake_engine()

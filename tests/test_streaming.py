@@ -5,15 +5,15 @@ import duckdb
 
 from pyspark.sql import functions as F
 
-from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
 from ocrs_spark.ops.relational import ORACLE_TUMBLING, events_sessionize
 from ocrs_spark.streaming import (
     file_stream,
     stream_events_tumbling,
-    stream_ocr_documents,
     stream_ocr_to_iceberg,
     stream_sessionize_events,
 )
+
+from .corpus import corpus_to_spark, generate_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,40 +58,6 @@ def test_stream_sessionize_matches_batch_closed_sessions(spark, tmp_path):
         if r["session_idx"] != last_idx[r["user_id"]]
     }
     assert got == want and len(want) > 0
-
-
-def test_stream_ocr_incremental_exactly_once(spark, tmp_path):
-    corpus = generate_corpus(n_docs=8, seed=3)
-    docs, media, expected = corpus_to_spark(spark, corpus)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "sckpt")
-
-    half1 = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
-    half2 = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
-
-    half1.write.mode("append").parquet(in_dir)
-    stream_ocr_documents(file_stream(spark, in_dir), media, ckpt, out_dir)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 == half1.count()
-
-    # New files arrive; restart the stream from its checkpoint: only the
-    # new files are processed (exactly-once), totals add up.
-    half2.write.mode("append").parquet(in_dir)
-    stream_ocr_documents(file_stream(spark, in_dir), media, ckpt, out_dir)
-    result = spark.read.parquet(out_dir)
-    assert result.count() == docs.count()
-    assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
-
-    woven = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in result.collect()
-    }
-    want = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in expected.collect()
-    }
-    assert woven == want
 
 
 def test_stream_ocr_iceberg_incremental_exactly_once(spark, tmp_path):
@@ -233,25 +199,6 @@ def test_stream_ocr_iceberg_to_iceberg_end_to_end(spark, tmp_path):
     n = len(IcebergTable.load(sink_loc).snapshots())
     run()
     assert len(IcebergTable.load(sink_loc).snapshots()) == n
-
-
-def test_stream_ocr_replay_is_idempotent(spark, tmp_path):
-    """A lost streaming checkpoint replays every batch; the per-batch_id
-    overwrite sink must absorb the replay without duplicating rows
-    (foreachBatch alone is only at-least-once)."""
-    corpus = generate_corpus(n_docs=4, seed=5)
-    docs, media, _ = corpus_to_spark(spark, corpus)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    docs.write.parquet(in_dir)
-
-    stream_ocr_documents(file_stream(spark, in_dir), media, str(tmp_path / "ck1"), out_dir)
-    # Fresh checkpoint -> the same input replays as the same batch ids.
-    stream_ocr_documents(file_stream(spark, in_dir), media, str(tmp_path / "ck2"), out_dir)
-
-    result = spark.read.parquet(out_dir)
-    assert result.count() == docs.count()
-    assert result.groupBy("doc_id").count().filter("count > 1").count() == 0
 
 
 def test_stream_sink_inline_manifest_maintenance(spark, tmp_path, monkeypatch):
@@ -550,3 +497,11 @@ def test_stream_update_upsert_reemits_changed_windows(spark, tmp_path):
     con.sql(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
     want = sorted(tuple(r) for r in con.sql(ORACLE_LATE_UPDATE).fetchall())
     assert got == want and len(want) > 0
+
+    # a restart on the same checkpoint and table resumes instead of
+    # failing on the table's creation; the keyed upsert keeps one row
+    # per window
+    stream_tumbling_update(spark, str(events_dir), str(tmp_path / "ckpt"), loc)
+    again = sorted(tuple(r) for r in IcebergTable.load(loc).scan(spark).collect())
+    assert again == want
+    assert len({(r[0], r[1]) for r in again}) == len(again)

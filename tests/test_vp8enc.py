@@ -12,7 +12,8 @@ import pytest
 
 from ocrs_spark.codec import decode_image
 from ocrs_spark.vp8 import decode_vp8
-from ocrs_spark.vp8enc import _rgb_to_yuv420, encode_vp8, encode_webp_lossy
+
+from .vp8enc import _rgb_to_yuv420, encode_vp8, encode_webp_lossy
 
 rng = np.random.default_rng(17)
 

@@ -12,8 +12,9 @@ import numpy as np
 import pytest
 
 from ocrs_spark.codec import decode_image
-from ocrs_spark.vp8enc import encode_vp8
 from ocrs_spark.webp import decode_webp, encode_webp
+
+from .vp8enc import encode_vp8
 
 
 def _chunk(fourcc: bytes, body: bytes) -> bytes:

@@ -1,4 +1,6 @@
-"""Minimal conformant lossy WebP (VP8) keyframe encoder.
+"""Minimal conformant lossy WebP (VP8) keyframe encoder, the input
+generator of the VP8 decoder tests (the package only decodes lossy
+WebP, like the reference CLI).
 
 Counterpart of :mod:`ocrs_spark.vp8` (the decoder), from the same
 public spec (RFC 6386); no reference code reused. "Minimal" means the
@@ -34,7 +36,7 @@ import struct
 
 import numpy as np
 
-from .vp8 import (
+from ocrs_spark.vp8 import (
     _BANDS,
     _CAT_BASES,
     _CAT_PROBS,
@@ -408,7 +410,7 @@ def encode_vp8(rgb: np.ndarray, qindex: int = 12) -> bytes:
         be.literal(0, 1)
     be.literal(0, 1)  # refresh_entropy_probs
     # No coefficient probability updates: one zero bool per update prob.
-    from .vp8 import COEFF_UPDATE_PROBS
+    from ocrs_spark.vp8 import COEFF_UPDATE_PROBS
 
     for t in range(4):
         for b in range(8):
