@@ -7,11 +7,11 @@ split so swapping in real Iceberg is a sink change, not a redesign):
     <root>/
       data/<run_id>/part-*.parquet      committed documents per run, one
                                         row per doc_id
-      metrics/<run_id>.json             per-run extraction metrics
       manifest-<n>.json                 ordered snapshot list, version n
                                         (readers take the highest n; a run
                                         is visible iff its snapshot entry
-                                        is in the current manifest)
+                                        is in the current manifest, which
+                                        also holds the run's metrics)
 
 Resume = LEFT ANTI JOIN of incoming documents against the ``doc_id``
 column of the committed ``data/<run_id>`` directories, read with an
@@ -27,11 +27,12 @@ manifest compare-and-swap. Its metrics come from ``observe()`` on that
 job: ``spans``, ``errors`` (and ``errors_decode``/``errors_detect``/
 ``errors_ocr`` by the stage prefix of the error text), ``total_words``
 and ``total_lines`` over the OCR results, and ``docs``, the number of
-rows written, which is the number of documents in the snapshot.
+rows written, which is the number of documents in the snapshot. They
+are stored once, in the run's snapshot entry (``snapshots()``).
 
 The checkpoint root may be any Hadoop-supported URI (``hdfs://``,
 ``s3a://``, ``file://``, ...): the parquet data writes always go
-through Spark, and the manifest/metrics I/O is routed through the
+through Spark, and the manifest I/O is routed through the
 Hadoop FileSystem API whenever the root carries a scheme, so a cluster
 of drivers sees one shared manifest (a bare local path keeps plain
 POSIX I/O).
@@ -48,8 +49,7 @@ for the same version — one wins, the loser re-reads and retries on the
 next version number, so no snapshot is silently dropped. On S3A rename
 is copy+delete and create is not exclusive, so with concurrent
 committers prefer an HDFS/ABFS root (or an Iceberg catalog); a
-single-writer S3 pipeline is still safe. A legacy ``manifest.json``
-(pre-versioning layout) is read as the version-0 baseline.
+single-writer S3 pipeline is still safe.
 """
 
 from __future__ import annotations
@@ -74,8 +74,7 @@ from .pipeline import (
     reweave,
 )
 
-MANIFEST = "manifest.json"  # legacy single-file layout, read as version 0
-_MANIFEST_RE = re.compile(r"^manifest-(\d+)\.json$")
+_VERSION_FILE_RE = re.compile(r"^manifest-(\d+)\.json$")
 
 
 def _manifest_name(version: int) -> str:
@@ -83,13 +82,10 @@ def _manifest_name(version: int) -> str:
 
 
 class _PosixIO:
-    """Manifest/metrics I/O for bare local paths."""
+    """Manifest I/O for bare local paths."""
 
     def mkdirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
 
     def read_text(self, path: str) -> str:
         with open(path) as f:
@@ -139,7 +135,7 @@ class _PosixIO:
 
 
 class _HadoopIO:
-    """Manifest/metrics I/O through the JVM Hadoop FileSystem, so
+    """Manifest I/O through the JVM Hadoop FileSystem, so
     scheme-qualified roots (hdfs://, s3a://, file://, ...) resolve to
     the shared filesystem every driver sees — not a mangled local path
     on whichever machine happens to run the driver."""
@@ -154,9 +150,6 @@ class _HadoopIO:
 
     def mkdirs(self, path: str) -> None:
         self._fs.mkdirs(self._p(path))
-
-    def exists(self, path: str) -> bool:
-        return bool(self._fs.exists(self._p(path)))
 
     def read_text(self, path: str) -> str:
         stream = self._fs.open(self._p(path))
@@ -175,7 +168,7 @@ class _HadoopIO:
             stream.close()
 
     def list_names(self, path: str) -> list[str]:
-        if not self.exists(path):
+        if not self._fs.exists(self._p(path)):
             return []
         return [
             str(st.getPath().getName())
@@ -235,21 +228,17 @@ class DocumentCheckpoint:
     # ------------------------------------------------------------- state
 
     def _current_manifest(self, fs) -> tuple[int, list[dict]]:
-        """(version, snapshots) of the highest manifest-<n>.json; a legacy
-        manifest.json (pre-versioning layout) reads as version 0."""
-        versions = sorted(
+        """(version, snapshots) of the highest manifest-<n>.json, or
+        (0, []) before the first commit."""
+        versions = [
             int(m.group(1))
             for name in fs.list_names(self.root)
-            if (m := _MANIFEST_RE.match(name))
-        )
-        if versions:
-            v = versions[-1]
-            text = fs.read_text(self._join(_manifest_name(v)))
-            return v, json.loads(text)["snapshots"]
-        legacy = self._join(MANIFEST)
-        if fs.exists(legacy):
-            return 0, json.loads(fs.read_text(legacy))["snapshots"]
-        return 0, []
+            if (m := _VERSION_FILE_RE.match(name))
+        ]
+        if not versions:
+            return 0, []
+        v = max(versions)
+        return v, json.loads(fs.read_text(self._join(_manifest_name(v))))["snapshots"]
 
     def snapshots(self, spark: SparkSession | None = None) -> list[dict]:
         _, snaps = self._current_manifest(self._fs(spark))
@@ -282,17 +271,9 @@ class DocumentCheckpoint:
     def committed_doc_ids(self, spark: SparkSession) -> DataFrame:
         return self._committed_ids(spark, self._committed_paths(spark)).distinct()
 
-    def read_result(
-        self, spark: SparkSession, as_of_snapshot: int | None = None
-    ) -> DataFrame:
-        """The committed table; ``as_of_snapshot`` time-travels to the
-        state as of that snapshot id (manifest order is commit order,
-        so a prefix of the snapshot list IS the historical table —
-        Iceberg's snapshot-id read, on the same layout)."""
-        snaps = self.snapshots(spark)
-        if as_of_snapshot is not None:
-            snaps = [s for s in snaps if s["snapshot_id"] <= as_of_snapshot]
-        paths = [self._join("data", s["run_id"]) for s in snaps]
+    def read_result(self, spark: SparkSession) -> DataFrame:
+        """The committed table: every run the current manifest names."""
+        paths = self._committed_paths(spark)
         if not paths:
             raise ValueError("no committed snapshots")
         return spark.read.parquet(*paths)
@@ -328,15 +309,11 @@ class DocumentCheckpoint:
     def _discard(self, fs, run_id: str) -> None:
         """Remove the files of a run that no manifest will name."""
         fs.delete_dir(self._join("data", run_id))
-        fs.delete(self._join("metrics", f"{run_id}.json"))
 
     def _publish(self, fs, run_id: str, metrics: dict | None) -> dict:
-        """Write the run's metrics, then CAS-publish a manifest that
-        appends its snapshot. If every attempt loses the race, the run
-        was never published: its files are removed and IOError raised."""
-        if metrics is not None:
-            fs.mkdirs(self._join("metrics"))
-            fs.write_text(self._join("metrics", f"{run_id}.json"), json.dumps(metrics))
+        """CAS-publish a manifest that appends the run's snapshot, its
+        metrics included. If every attempt loses the race, the run was
+        never published: its files are removed and IOError raised."""
         for _ in range(32):
             version, snapshots = self._current_manifest(fs)
             snapshot = {
@@ -364,43 +341,6 @@ class DocumentCheckpoint:
         """
         fs = self._fs(result.sparkSession)
         return self._publish(fs, self._write_data(result), metrics)
-
-    # ------------------------------------------------------- maintenance
-
-    def compact(self, spark: SparkSession) -> dict:
-        """Rewrite the committed table into ONE data run and
-        publish a single-snapshot manifest (the Iceberg
-        rewrite_data_files + expire_snapshots maintenance pair): at
-        corpus scale an append-per-run table accretes many small runs,
-        and both read_result (one scan per run) and resume pruning (one
-        data scan per run) degrade. Readers are never disrupted — the
-        rewrite lands under a fresh run_id first and becomes visible
-        via the same CAS manifest publish as commit(); a concurrent
-        commit that wins the version race simply makes this compaction
-        retry on top of the newly committed state. The superseded run
-        directories are removed only after the new manifest is live
-        (crash in between leaks directories but never loses data)."""
-        fs = self._fs(spark)
-        for _ in range(8):
-            version, snapshots = self._current_manifest(fs)
-            if len(snapshots) <= 1:
-                return snapshots[0] if snapshots else {}
-            old_runs = [s["run_id"] for s in snapshots]
-            run_id = self._write_data(self.read_result(spark))
-            snapshot = {
-                "snapshot_id": len(snapshots) + 1,
-                "run_id": run_id,
-                "committed_at": time.time(),
-                "metrics": {"compacted_runs": len(old_runs)},
-            }
-            if self._publish_manifest(fs, version + 1, [snapshot], run_id):
-                for rid in old_runs:
-                    fs.delete_dir(self._join("data", rid))
-                return snapshot
-            # Lost the race to a concurrent commit: drop our rewrite and
-            # retry over the new state.
-            fs.delete_dir(self._join("data", run_id))
-        raise IOError(f"compaction lost 8 consecutive manifest races at {self.root}")
 
 
 def run_checkpointed(

@@ -81,14 +81,6 @@ class Rect:
         union = self.area() + o.area() - inter
         return inter / union if union > 0 else 0.0
 
-    def contains(self, o: "Rect") -> bool:
-        return (
-            self.left <= o.left
-            and self.top <= o.top
-            and self.right >= o.right
-            and self.bottom >= o.bottom
-        )
-
     def adjust_tlbr(self, dt: float, dl: float, db: float, dr: float) -> "Rect":
         return Rect(self.top + dt, self.left + dl, self.bottom + db, self.right + dr)
 

@@ -612,6 +612,13 @@ class IcebergTable:
         sid = self.metadata.get("current-snapshot-id", -1)
         return None if sid in (-1, None) else sid
 
+    def _manifests(self, snapshot_id: int) -> list[dict]:
+        """The manifest-list entries of snapshot ``snapshot_id``."""
+        snap = next(
+            s for s in self.metadata["snapshots"] if s["snapshot-id"] == snapshot_id
+        )
+        return read_ocf(snap["manifest-list"])[0]
+
     def last_streaming_batch(self, query_id: str) -> int:
         """Largest streaming epoch committed by ``query_id``, or -1.
 
@@ -675,9 +682,8 @@ class IcebergTable:
         each partition is written by one task, not tasks x partitions
         small files.
         """
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
-        manifest = self._write_data_manifest(df, snapshot_id, seq)
+        snapshot_id, seq = self._next_snapshot()
+        manifest = self._write_manifest(self._write_files(df), 0, snapshot_id, seq)
         return self._commit_manifests(
             [manifest],
             operation="append",
@@ -691,99 +697,80 @@ class IcebergTable:
             carry="all",
         )
 
-    def _write_data_manifest(
-        self, df: DataFrame, snapshot_id: int, seq: int, distribution: str = "hash"
-    ) -> dict:
-        """Write ``df`` as parquet data files plus one data manifest;
-        returns the manifest-list entry dict (not yet committed)."""
+    def _next_snapshot(self) -> tuple[int, int]:
+        """(fresh snapshot id, next sequence number) for a new commit."""
+        return (
+            int.from_bytes(os.urandom(7), "big"),
+            self.metadata["last-sequence-number"] + 1,
+        )
+
+    def _write_files(
+        self,
+        df: DataFrame,
+        content: int = 0,
+        equality_ids: list[int] | None = None,
+        distribution: str = "hash",
+    ) -> list[dict]:
+        """Write ``df`` as parquet under a fresh ``data/<uuid>`` and
+        return one ADDED manifest entry per file written, from one walk
+        of that directory and one footer read per file.
+
+        Data files (``content`` 0) are written hive-partitioned by the
+        table's spec and carry their partition tuple and per-column
+        stats. Delete files (1 position, 2 equality) are written
+        unpartitioned and carry no stats: their all-null partition tuple
+        is global scope, as the spec allows for path-based position
+        deletes and unpartitioned-spec equality deletes (the reader never
+        partition-prunes delete manifests). Empty delete files are
+        skipped."""
         import pyarrow.parquet as pq
 
         parts = self._partition_columns()
-        write_id = _uuid.uuid4().hex
-        data_dir = f"{self.location}/data/{write_id}"
-        out = df
-        part_names = []
-        for name, src, transform, src_type in parts:
-            if not (transform == "identity" and name == src):
-                out = out.withColumn(
-                    name, partition_transform_column(src, src_type, transform)
-                )
-            part_names.append(name)
-        if part_names and distribution == "hash":
-            # write.distribution-mode=hash: cluster rows by partition
-            # tuple so each partition value is written by exactly one
-            # task (bounded file counts; see ``append``)
-            out = out.repartition(*part_names)
-        writer = out.write.mode("append")
-        if part_names:
-            writer = writer.partitionBy(*part_names)
+        data_dir = f"{self.location}/data/{_uuid.uuid4().hex}"
+        writer = df.write.mode("append")
+        if content == 0 and parts:
+            out = df
+            for name, src, transform, src_type in parts:
+                if not (transform == "identity" and name == src):
+                    out = out.withColumn(
+                        name, partition_transform_column(src, src_type, transform)
+                    )
+            names = [name for name, *_rest in parts]
+            if distribution == "hash":
+                # write.distribution-mode=hash: cluster rows by partition
+                # tuple so each partition value is written by exactly one
+                # task (bounded file counts; see ``append``)
+                out = out.repartition(*names)
+            writer = out.write.mode("append").partitionBy(*names)
         writer.parquet(data_dir)
 
-        # enumerate written files + their partition tuples from the layout
+        schema_fields = (
+            {f["name"]: f for f in self._schema()["fields"]} if content == 0 else {}
+        )
         entries = []
-        schema_fields = {f["name"]: f for f in self._schema()["fields"]}
-        for root, _dirs, files in os.walk(data_dir):
+        for root, _dirs, fns in os.walk(data_dir):
+            # the partition tuple of the files in ``root``, from the layout
             rel = os.path.relpath(root, data_dir)
-            tuple_vals = {}
-            if rel != ".":
-                for seg in rel.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    tuple_vals[k] = (
-                        None
-                        if v == _HIVE_NULL
-                        else urllib.parse.unquote(v)
-                    )
-            for fn in files:
+            raw = {}
+            for seg in rel.split(os.sep) if rel != "." else ():
+                k, _, v = seg.partition("=")
+                raw[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
+            partition = {}
+            for name, _src, transform, src_type in parts:
+                v = raw.get(name)
+                if v is not None and transform_result_type(transform, src_type) in (
+                    "int", "long", "date"
+                ):
+                    v = int(v)
+                partition[name] = v
+            for fn in sorted(fns):
                 if not fn.endswith(".parquet"):
                     continue
                 path = os.path.join(root, fn)
                 meta = pq.ParquetFile(path).metadata
-                partition = {}
-                for name, src, transform, src_type in parts:
-                    raw = tuple_vals.get(name)
-                    rtype = transform_result_type(transform, src_type)
-                    if raw is None:
-                        partition[name] = None
-                    elif rtype in ("int", "long", "date"):
-                        partition[name] = int(raw)
-                    else:
-                        partition[name] = raw
-                # min/max are folded across row groups in VALUE space
-                # (normalized ordinals) — comparing the little-endian
-                # serialized bytes would order multi-byte ints wrongly
-                # and record bounds that prune files incorrectly
-                lo_v, hi_v, nulls, values, ftype = {}, {}, {}, {}, {}
-                for rg in range(meta.num_row_groups):
-                    g = meta.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        cname = col.path_in_schema
-                        f = schema_fields.get(cname)
-                        if f is None or not isinstance(f["type"], str):
-                            continue
-                        fid = f["id"]
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        lo = bound_ordinal(st.min, f["type"])
-                        hi = bound_ordinal(st.max, f["type"])
-                        ftype[fid] = f["type"]
-                        if fid not in lo_v or lo < lo_v[fid]:
-                            lo_v[fid] = lo
-                        if fid not in hi_v or hi > hi_v[fid]:
-                            hi_v[fid] = hi
-                        nulls[fid] = nulls.get(fid, 0) + (st.null_count or 0)
-                        values[fid] = values.get(fid, 0) + col.num_values
-                lower = {
-                    fid: b
-                    for fid, v in lo_v.items()
-                    if (b := serialize_bound(v, ftype[fid])) is not None
-                }
-                upper = {
-                    fid: b
-                    for fid, v in hi_v.items()
-                    if (b := serialize_bound(v, ftype[fid])) is not None
-                }
+                if content and meta.num_rows == 0:
+                    continue
+                values, nulls, lower, upper = _footer_stats(meta, schema_fields)
                 entries.append(
                     {
                         "status": 1,  # ADDED
@@ -791,7 +778,7 @@ class IcebergTable:
                         "sequence_number": None,
                         "file_sequence_number": None,
                         "data_file": {
-                            "content": 0,
+                            "content": content,
                             "file_path": path,
                             "file_format": "PARQUET",
                             "partition": partition,
@@ -801,19 +788,21 @@ class IcebergTable:
                             "null_value_counts": _kv(nulls),
                             "lower_bounds": _kv(lower),
                             "upper_bounds": _kv(upper),
-                            "equality_ids": None,
+                            "equality_ids": list(equality_ids) if equality_ids else None,
                         },
                     }
                 )
+        return entries
 
-        return self._data_manifest_from_entries(entries, snapshot_id, seq)
-
-    def _data_manifest_from_entries(
-        self, entries: list[dict], snapshot_id: int, seq: int
+    def _write_manifest(
+        self, entries: list[dict], content: int, snapshot_id: int, seq: int
     ) -> dict:
-        """Write one data manifest of ADDED (status 1) and EXISTING
-        (status 0, explicit data sequence number) entries and return its
-        manifest-list dict (not yet committed)."""
+        """Write one manifest of ``entries`` and return its manifest-list
+        dict (not yet committed). ``content`` is 0 for a data manifest,
+        whose entries are ADDED (status 1) or EXISTING (status 0, explicit
+        data sequence number) and which gets per-field partition
+        summaries for manifest-level pruning, or 1 for a delete manifest,
+        which gets none."""
         parts = self._partition_columns()
         partition_avro_fields = [
             {
@@ -833,35 +822,34 @@ class IcebergTable:
             _manifest_entry_schema(partition_avro_fields),
             entries,
             metadata={
-                "schema": json.dumps(
-                    {k: v for k, v in self._schema().items()}
-                ),
+                "schema": json.dumps(self._schema()),
                 "schema-id": str(self.metadata["current-schema-id"]),
                 "partition-spec": json.dumps(spec["fields"]),
                 "partition-spec-id": str(spec["spec-id"]),
                 "format-version": "2",
-                "content": "data",
+                "content": "deletes" if content else "data",
             },
         )
 
-        # per-field partition summaries for manifest-level pruning
-        summaries = []
-        for i, (name, _src, transform, src_type) in enumerate(parts):
-            vals = [e["data_file"]["partition"][name] for e in entries]
-            non_null = [v for v in vals if v is not None]
-            bound_type = transform_result_type(transform, src_type)
-            summaries.append(
-                {
-                    "contains_null": any(v is None for v in vals),
-                    "contains_nan": False,
-                    "lower_bound": serialize_bound(
-                        min(non_null) if non_null else None, bound_type
-                    ),
-                    "upper_bound": serialize_bound(
-                        max(non_null) if non_null else None, bound_type
-                    ),
-                }
-            )
+        summaries = None
+        if content == 0:
+            summaries = []
+            for name, _src, transform, src_type in parts:
+                vals = [e["data_file"]["partition"][name] for e in entries]
+                non_null = [v for v in vals if v is not None]
+                bound_type = transform_result_type(transform, src_type)
+                summaries.append(
+                    {
+                        "contains_null": any(v is None for v in vals),
+                        "contains_nan": False,
+                        "lower_bound": serialize_bound(
+                            min(non_null) if non_null else None, bound_type
+                        ),
+                        "upper_bound": serialize_bound(
+                            max(non_null) if non_null else None, bound_type
+                        ),
+                    }
+                )
 
         added = [e["data_file"] for e in entries if e["status"] == 1]
         existing = [e["data_file"] for e in entries if e["status"] == 0]
@@ -869,7 +857,7 @@ class IcebergTable:
             "manifest_path": manifest_path,
             "manifest_length": os.path.getsize(manifest_path),
             "partition_spec_id": spec["spec-id"],
-            "content": 0,
+            "content": content,
             "sequence_number": seq,
             "min_sequence_number": min(
                 [e["sequence_number"] for e in entries if e["status"] == 0] + [seq]
@@ -912,10 +900,7 @@ class IcebergTable:
             prev = self.current_snapshot_id()
             carried: list[dict] = []
             if prev is not None and carry != "none":
-                snap = next(
-                    s for s in self.metadata["snapshots"] if s["snapshot-id"] == prev
-                )
-                carried, _ = read_ocf(snap["manifest-list"])
+                carried = self._manifests(prev)
                 if carry == "deletes":
                     carried = [m for m in carried if m.get("content", 0) == 1]
             manifests = list(new_manifests) + carried
@@ -1089,8 +1074,8 @@ class IcebergTable:
         target = max(target_files_per_partition, 1)
         if sort_cols:
             # files-per-partition × partition-tuple count, from metadata
-            # (plan_files is manifest-only — no data read)
-            files, _ = self.plan_files()
+            # (plan_scan is manifest-only — no data read)
+            files, _deletes, _stats = self.plan_scan()
             n_tuples = max(
                 1, len({tuple(sorted((f["partition"] or {}).items())) for f in files})
             )
@@ -1138,19 +1123,17 @@ class IcebergTable:
             .repartition(1)
             .sortWithinPartitions("file_path", "pos")
         )
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
-        manifest, n_rows = self._write_delete_manifest(
-            hits, content=1, equality_ids=None, snapshot_id=snapshot_id, seq=seq
-        )
-        if manifest is None:
+        entries = self._write_files(hits, content=1)
+        if not entries:
             return None
+        snapshot_id, seq = self._next_snapshot()
+        manifest = self._write_manifest(entries, 1, snapshot_id, seq)
         return self._commit_manifests(
             [manifest],
             operation="delete",
             summary={
                 "added-delete-files": str(manifest["added_files_count"]),
-                "added-position-deletes": str(n_rows),
+                "added-position-deletes": str(manifest["added_rows_count"]),
             },
             snapshot_id=snapshot_id,
             seq=seq,
@@ -1168,134 +1151,30 @@ class IcebergTable:
         MERGE shape. No existing file is read or rewritten: commit cost
         is proportional to the delta, not the table.
         """
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
-        data_manifest = self._write_data_manifest(source, snapshot_id, seq)
+        snapshot_id, seq = self._next_snapshot()
+        manifests = [self._write_manifest(self._write_files(source), 0, snapshot_id, seq)]
         name_to_id = {f["name"]: f["id"] for f in self._schema()["fields"]}
-        ids = [name_to_id[c] for c in key_columns]
         keys = source.select(*key_columns).dropDuplicates().coalesce(1)
-        eq_manifest, n_rows = self._write_delete_manifest(
-            keys, content=2, equality_ids=ids, snapshot_id=snapshot_id, seq=seq
+        eq_files = self._write_files(
+            keys, content=2, equality_ids=[name_to_id[c] for c in key_columns]
         )
-        manifests = [data_manifest] + ([eq_manifest] if eq_manifest else [])
+        if eq_files:
+            manifests.append(self._write_manifest(eq_files, 1, snapshot_id, seq))
         return self._commit_manifests(
             manifests,
             operation="overwrite",
             summary={
-                "added-data-files": str(data_manifest["added_files_count"]),
-                "added-records": str(data_manifest["added_rows_count"]),
-                "added-delete-files": str(
-                    eq_manifest["added_files_count"] if eq_manifest else 0
+                "added-data-files": str(manifests[0]["added_files_count"]),
+                "added-records": str(manifests[0]["added_rows_count"]),
+                "added-delete-files": str(len(eq_files)),
+                "added-equality-deletes": str(
+                    sum(e["data_file"]["record_count"] for e in eq_files)
                 ),
-                "added-equality-deletes": str(n_rows),
             },
             snapshot_id=snapshot_id,
             seq=seq,
             carry="all",
         )
-
-    def _write_delete_manifest(
-        self,
-        rows: DataFrame,
-        content: int,
-        equality_ids: list[int] | None,
-        snapshot_id: int,
-        seq: int,
-    ) -> tuple[dict | None, int]:
-        """Write ``rows`` as parquet delete file(s) plus one delete
-        manifest (content=1 in the manifest list); returns (manifest
-        dict, row count), or (None, 0) if ``rows`` is empty.
-
-        Delete files are committed with an all-null partition tuple —
-        global scope, as the spec allows for path-based position deletes
-        and unpartitioned-spec equality deletes; the reader never
-        partition-prunes delete manifests, so scope stays correct.
-        """
-        import pyarrow.parquet as pq
-
-        write_id = _uuid.uuid4().hex
-        out_dir = f"{self.location}/data/{write_id}"
-        rows.write.mode("append").parquet(out_dir)
-        parts = self._partition_columns()
-        null_partition = {name: None for name, *_rest in parts}
-        entries = []
-        n_rows = 0
-        for root, _dirs, fns in os.walk(out_dir):
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet"):
-                    continue
-                path = os.path.join(root, fn)
-                meta = pq.ParquetFile(path).metadata
-                if meta.num_rows == 0:
-                    continue
-                n_rows += meta.num_rows
-                entries.append(
-                    {
-                        "status": 1,  # ADDED
-                        "snapshot_id": None,
-                        "sequence_number": None,
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": content,
-                            "file_path": path,
-                            "file_format": "PARQUET",
-                            "partition": null_partition,
-                            "record_count": meta.num_rows,
-                            "file_size_in_bytes": os.path.getsize(path),
-                            "value_counts": None,
-                            "null_value_counts": None,
-                            "lower_bounds": None,
-                            "upper_bounds": None,
-                            "equality_ids": list(equality_ids) if equality_ids else None,
-                        },
-                    }
-                )
-        if not entries:
-            return None, 0
-        partition_avro_fields = [
-            {
-                "name": name,
-                "type": _opt(
-                    _ICEBERG_TO_AVRO[transform_result_type(transform, src_type)]
-                ),
-                "field-id": 1000 + i,
-                "default": None,
-            }
-            for i, (name, _src, transform, src_type) in enumerate(parts)
-        ]
-        manifest_path = f"{self.location}/metadata/{write_id}-m0.avro"
-        spec = self._spec()
-        write_ocf(
-            manifest_path,
-            _manifest_entry_schema(partition_avro_fields),
-            entries,
-            metadata={
-                "schema": json.dumps(self._schema()),
-                "schema-id": str(self.metadata["current-schema-id"]),
-                "partition-spec": json.dumps(spec["fields"]),
-                "partition-spec-id": str(spec["spec-id"]),
-                "format-version": "2",
-                "content": "deletes",
-            },
-        )
-        manifest = {
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": spec["spec-id"],
-            "content": 1,  # DELETES
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": None,
-            "key_metadata": None,
-        }
-        return manifest, n_rows
 
     def rewrite_manifests(self, extra_summary: dict | None = None) -> dict:
         """Consolidate the current snapshot's data manifests into one,
@@ -1316,11 +1195,7 @@ class IcebergTable:
         sid = self.current_snapshot_id()
         if sid is None:
             return {"manifests_before": 0, "manifests_after": 0, "entries": 0}
-        snap = next(
-            s for s in self.metadata["snapshots"] if s["snapshot-id"] == sid
-        )
-        manifests, _ = read_ocf(snap["manifest-list"])
-        data_manifests = [m for m in manifests if m.get("content", 0) == 0]
+        data_manifests = [m for m in self._manifests(sid) if m.get("content", 0) == 0]
         if len(data_manifests) <= 1:
             return {
                 "manifests_before": len(data_manifests),
@@ -1331,37 +1206,27 @@ class IcebergTable:
                 ),
             }
 
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
+        snapshot_id, seq = self._next_snapshot()
 
         # live entries, each with its effective data sequence number made
         # explicit (ADDED entries inherit their manifest's)
-        entries: list[dict] = []
-        for m in data_manifests:
-            for e in read_ocf(m["manifest_path"])[0]:
-                if e["status"] == 2:  # DELETED — drop from the rewrite
-                    continue
-                data_seq = (
-                    e["sequence_number"]
-                    if e["sequence_number"] is not None
-                    else m["sequence_number"]
-                )
-                entries.append(
-                    {
-                        "status": 0,  # EXISTING
-                        "snapshot_id": e["snapshot_id"]
-                        if e["snapshot_id"] is not None
-                        else m["added_snapshot_id"],
-                        "sequence_number": data_seq,
-                        "file_sequence_number": e["file_sequence_number"],
-                        "data_file": e["data_file"],
-                    }
-                )
-
+        entries = [
+            {
+                "status": 0,  # EXISTING
+                "snapshot_id": e["snapshot_id"]
+                if e["snapshot_id"] is not None
+                else m["added_snapshot_id"],
+                "sequence_number": e["data_file"]["_data_seq"],
+                "file_sequence_number": e["file_sequence_number"],
+                "data_file": e["data_file"],
+            }
+            for m in data_manifests
+            for e in _live_entries(m)
+        ]
         entries.sort(
             key=lambda e: repr(sorted((e["data_file"]["partition"] or {}).items()))
         )
-        manifest = self._data_manifest_from_entries(entries, snapshot_id, seq)
+        manifest = self._write_manifest(entries, 0, snapshot_id, seq)
         self._commit_manifests(
             [manifest],
             operation="replace",
@@ -1387,11 +1252,10 @@ class IcebergTable:
         manifest list contains ONLY the new manifest. Row-level delete
         manifests are NOT carried forward: ``df`` is the merge-on-read
         result, so the rewrite applies (and thereby purges) them."""
-        old_files, _ = self.plan_files()
-        snapshot_id = int.from_bytes(os.urandom(7), "big")
-        seq = self.metadata["last-sequence-number"] + 1
-        manifest = self._write_data_manifest(
-            df, snapshot_id, seq, distribution=distribution
+        old_files, _deletes, _stats = self.plan_scan()
+        snapshot_id, seq = self._next_snapshot()
+        manifest = self._write_manifest(
+            self._write_files(df, distribution=distribution), 0, snapshot_id, seq
         )
         return self._commit_manifests(
             [manifest],
@@ -1407,20 +1271,6 @@ class IcebergTable:
         )
 
     # -- scan ----------------------------------------------------------------
-
-    def plan_files(
-        self,
-        snapshot_id: int | None = None,
-        partition_filter: dict | None = None,
-        bounds_filter: dict | None = None,
-    ) -> tuple[list[dict], dict]:
-        """Plan the data-file side of a scan: (data_file dicts, stats).
-        Thin wrapper over ``plan_scan`` for callers that operate at file
-        granularity (compaction bookkeeping)."""
-        files, _deletes, stats = self.plan_scan(
-            snapshot_id, partition_filter, bounds_filter
-        )
-        return files, stats
 
     def plan_scan(
         self,
@@ -1446,18 +1296,7 @@ class IcebergTable:
         deletes against pruned-out files drop out in the anti-join.
         """
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if sid is None:
-            return [], [], {
-                "manifests_total": 0,
-                "manifests_read": 0,
-                "files_total": 0,
-                "files_selected": 0,
-                "delete_files_selected": 0,
-            }
-        snap = next(
-            s for s in self.metadata["snapshots"] if s["snapshot-id"] == sid
-        )
-        manifests, _ = read_ocf(snap["manifest-list"])
+        manifests = [] if sid is None else self._manifests(sid)
         parts = self._partition_columns()
         part_index = {name: i for i, (name, *_r) in enumerate(parts)}
         part_bound_type = {
@@ -1477,18 +1316,7 @@ class IcebergTable:
         delete_files = []
         for m in manifests:
             if m.get("content", 0) == 1:  # delete manifest: global scope
-                entries, _ = read_ocf(m["manifest_path"])
-                for e in entries:
-                    if e["status"] == 2:
-                        continue
-                    d = dict(e["data_file"])
-                    d["_data_seq"] = (
-                        e["sequence_number"]
-                        if e["sequence_number"] is not None
-                        else m["sequence_number"]
-                    )
-                    delete_files.append(d)
-                    stats["delete_files_selected"] += 1
+                delete_files += [e["data_file"] for e in _live_entries(m)]
                 continue
             if partition_filter and m.get("partitions"):
                 skip = False
@@ -1515,10 +1343,7 @@ class IcebergTable:
                 if skip:
                     continue
             stats["manifests_read"] += 1
-            entries, _ = read_ocf(m["manifest_path"])
-            for e in entries:
-                if e["status"] == 2:  # DELETED
-                    continue
+            for e in _live_entries(m):
                 stats["files_total"] += 1
                 df_ = e["data_file"]
                 if partition_filter:
@@ -1567,14 +1392,9 @@ class IcebergTable:
                             break
                     if skip:
                         continue
-                stats["files_selected"] += 1
-                d = dict(df_)
-                d["_data_seq"] = (
-                    e["sequence_number"]
-                    if e["sequence_number"] is not None
-                    else m["sequence_number"]
-                )
-                selected.append(d)
+                selected.append(df_)
+        stats["files_selected"] = len(selected)
+        stats["delete_files_selected"] = len(delete_files)
         return selected, delete_files, stats
 
     def scan(
@@ -1614,25 +1434,15 @@ class IcebergTable:
                     f"{s['summary'].get('operation')!r} snapshot"
                 )
         to_snap = max(window, key=lambda s: s["sequence-number"])
-        manifests, _ = read_ocf(to_snap["manifest-list"])
-        files = []
-        for m in manifests:
-            if m.get("content", 0) == 1:  # delete manifests carry no adds
-                continue
-            if not (from_seq < m["min_sequence_number"] <= to_seq):
-                continue
-            entries, _ = read_ocf(m["manifest_path"])
-            for e in entries:
-                if e["status"] != 1:  # ADDED only
-                    continue
-                d = dict(e["data_file"])
-                d["_data_seq"] = (
-                    e["sequence_number"]
-                    if e["sequence_number"] is not None
-                    else m["sequence_number"]
-                )
-                files.append(d)
-        return files
+        return [
+            e["data_file"]
+            for m in self._manifests(to_snap["snapshot-id"])
+            # delete manifests carry no adds
+            if m.get("content", 0) == 0
+            and from_seq < m["min_sequence_number"] <= to_seq
+            for e in _live_entries(m)
+            if e["status"] == 1  # ADDED only
+        ]
 
     def _read_files(
         self,
@@ -1771,7 +1581,9 @@ class IcebergDocumentSink:
     ``result_schema``. Every completed batch of woven documents is one
     ``append`` snapshot, so a kill mid-commit leaves the previous
     snapshot live (the metadata CAS never overwrites), and
-    ``committed`` reads every document of the current snapshot.
+    ``committed`` reads every document of the current snapshot. The
+    streaming OCR sink (``streaming.stream_ocr_to_iceberg``) opens its
+    table here too and appends each epoch through ``table``.
     """
 
     def __init__(self, location: str, spark: SparkSession, result_schema):
@@ -1782,10 +1594,9 @@ class IcebergDocumentSink:
         self._spark = spark
 
     def commit_run(self, woven: DataFrame) -> int:
-        """Append one completed batch as a new snapshot; returns its id."""
-        snapshot_id = self.table.append(woven)
-        self.table = IcebergTable.load(self.table.location)
-        return snapshot_id
+        """Append one completed batch as a new snapshot; returns its id.
+        ``append`` leaves the table handle at the version it committed."""
+        return self.table.append(woven)
 
     def committed(self) -> DataFrame:
         """All documents committed as of the current snapshot."""
@@ -1808,6 +1619,58 @@ def _bucket_column(src: str, src_type: str, n: int):
         return pd.Series([one(v) for v in s], dtype="Int32")
 
     return _bucket(F.col(src))
+
+
+def _live_entries(manifest: dict):
+    """The live (ADDED or EXISTING) entries of ``manifest``. Each data
+    file carries ``"_data_seq"``, its effective data sequence number:
+    the entry's explicit one, else inherited from the manifest."""
+    for e in read_ocf(manifest["manifest_path"])[0]:
+        if e["status"] == 2:  # DELETED
+            continue
+        seq = e["sequence_number"]
+        e["data_file"]["_data_seq"] = (
+            seq if seq is not None else manifest["sequence_number"]
+        )
+        yield e
+
+
+def _footer_stats(meta, schema_fields: dict) -> tuple[dict, ...]:
+    """(value counts, null counts, lower bounds, upper bounds) by field
+    id of the primitive ``schema_fields`` columns in a parquet footer.
+
+    min/max are folded across row groups in VALUE space (normalized
+    ordinals): comparing the little-endian serialized bytes would order
+    multi-byte ints wrongly and record bounds that prune files
+    incorrectly."""
+    lo_v, hi_v, nulls, values, ftype = {}, {}, {}, {}, {}
+    for rg in range(meta.num_row_groups):
+        g = meta.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            f = schema_fields.get(col.path_in_schema)
+            if f is None or not isinstance(f["type"], str):
+                continue
+            fid = f["id"]
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                continue
+            lo = bound_ordinal(st.min, f["type"])
+            hi = bound_ordinal(st.max, f["type"])
+            ftype[fid] = f["type"]
+            if fid not in lo_v or lo < lo_v[fid]:
+                lo_v[fid] = lo
+            if fid not in hi_v or hi > hi_v[fid]:
+                hi_v[fid] = hi
+            nulls[fid] = nulls.get(fid, 0) + (st.null_count or 0)
+            values[fid] = values.get(fid, 0) + col.num_values
+    lower = {
+        fid: b for fid, v in lo_v.items() if (b := serialize_bound(v, ftype[fid])) is not None
+    }
+    upper = {
+        fid: b for fid, v in hi_v.items() if (b := serialize_bound(v, ftype[fid])) is not None
+    }
+    return values, nulls, lower, upper
 
 
 def _kv(d: dict) -> list[dict]:

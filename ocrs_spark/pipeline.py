@@ -39,8 +39,9 @@ from .codec import decode_image
 from .engine import OcrEngine, OcrEngineParams
 from .models import FakeDetectionModel, FakeRecognitionModel, fake_alphabet
 
-# Result schema of the OCR UDF. n_words/n_lines feed the metrics table.
-OCR_RESULT_SCHEMA = "doc_id string, offset int, ocr_text string, n_words int, n_lines int, error string"
+# Result schema of the OCR UDF, one row per unique image. n_words/n_lines
+# feed the metrics table.
+OCR_RESULT_SCHEMA = "media_ref string, ocr_text string, n_words int, n_lines int, error string"
 
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
@@ -185,7 +186,8 @@ def extract_payload_batch(
 
 
 def make_ocr_udf(engine_conf: dict):
-    """Fused OCR mapInPandas function over (doc_id, offset, bytes)."""
+    """Fused OCR mapInPandas function: (media_ref, bytes) ->
+    ``OCR_RESULT_SCHEMA``."""
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         engine = build_engine(engine_conf)
@@ -195,8 +197,7 @@ def make_ocr_udf(engine_conf: dict):
             )
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf["doc_id"].values,
-                    "offset": pdf["offset"].values,
+                    "media_ref": pdf["media_ref"].values,
                     "ocr_text": texts,
                     "n_words": n_words,
                     "n_lines": n_lines,
@@ -353,17 +354,8 @@ def ocr_image_spans(
         # Skew break: spread unique images uniformly; the OCR UDF keys
         # on media_ref here and results fan back out via the join.
         .repartition(partitions, F.xxhash64("media_ref"))
-        .withColumnRenamed("media_ref", "doc_id")  # reuse UDF schema slot
-        .withColumn("offset", F.lit(0))
     )
     per_media = uniq.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
-    per_media = per_media.select(
-        F.col("doc_id").alias("media_ref"),
-        "ocr_text",
-        "n_words",
-        "n_lines",
-        "error",
-    )
     # Fan the per-unique-image results back out to the referencing
     # spans. The result rows are strictly smaller than the media rows
     # (text + counts, no pixels), so whenever the media side was

@@ -507,8 +507,7 @@ def _ocr_epoch_sink(
     import json
     import os
 
-    from .avro_ocf import read_ocf
-    from .iceberg import IcebergTable
+    from .iceberg import IcebergDocumentSink, IcebergTable
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Spark writes the query id to the checkpoint before the first
@@ -516,35 +515,19 @@ def _ocr_epoch_sink(
         with open(os.path.join(checkpoint_dir, "metadata")) as f:
             query_id = json.load(f)["id"]
         try:
-            table = IcebergTable.load(table_location)
-            if table.last_streaming_batch(query_id) >= batch_id:
-                return  # replayed epoch: already committed atomically
+            last = IcebergTable.load(table_location).last_streaming_batch(query_id)
         except FileNotFoundError:
-            table = None
+            last = -1  # the first epoch creates the table
+        if last >= batch_id:
+            return  # replayed epoch: already committed atomically
         woven = ocr_documents(batch_df, media, engine_conf=engine_conf)
-        if table is None:
-            table = IcebergTable.create(table_location, woven.schema)
-        table.append(
-            woven,
-            extra_summary={
-                "streaming-query-id": query_id,
-                "streaming-batch-id": str(batch_id),
-            },
-        )
-        snap = next(
-            s
-            for s in table.snapshots()
-            if s["snapshot-id"] == table.current_snapshot_id()
-        )
-        manifests, _ = read_ocf(snap["manifest-list"])
-        if sum(1 for m in manifests if m.get("content", 0) == 0) > MANIFEST_REWRITE_THRESHOLD:
+        spark = batch_df.sparkSession
+        table = IcebergDocumentSink(table_location, spark, woven.schema).table
+        stamp = {"streaming-query-id": query_id, "streaming-batch-id": str(batch_id)}
+        table.append(woven, extra_summary=stamp)
+        if table.plan_scan()[2]["manifests_read"] > MANIFEST_REWRITE_THRESHOLD:
             # re-stamp the epoch on the consolidation snapshot, so the
             # head snapshot alone still names the replay high-water mark
-            table.rewrite_manifests(
-                extra_summary={
-                    "streaming-query-id": query_id,
-                    "streaming-batch-id": str(batch_id),
-                }
-            )
+            table.rewrite_manifests(extra_summary=stamp)
 
     return process_batch

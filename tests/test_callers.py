@@ -53,7 +53,10 @@ def test_every_public_definition_has_a_caller():
     ``bench*.py`` or ``__spark_entry__.py``, outside its own body.
     Dunders and ``_``-prefixed names are exempt, and so are the
     protocol hooks above, each of which must still be defined. Code
-    only tests call belongs in ``tests/``."""
+    only tests call belongs in ``tests/``. The guard matches by name
+    alone, so a method with no caller passes when another API uses its
+    name: ``geometry.Rect.contains`` passed on ``Column.contains`` and
+    ``DocumentCheckpoint.compact`` on ``IcebergTable.compact``."""
     package = sorted(ROOT.glob("ocrs_spark/**/*.py"))
     roots = [
         *package,

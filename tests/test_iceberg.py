@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ocrs_spark.avro_ocf import read_ocf
 from ocrs_spark.iceberg import (
     CommitConflictError,
     IcebergDocumentSink,
@@ -103,7 +104,7 @@ def test_partition_pruning_skips_files(spark, docs, tmp_path):
     t.append(docs.filter(F.col("doc_id") % 2 == 1))
     loaded = IcebergTable.load(t.location)
     n_langs = docs.select("lang").distinct().count()
-    files, stats = loaded.plan_files(partition_filter={"lang": "en"})
+    files, _deletes, stats = loaded.plan_scan(partition_filter={"lang": "en"})
     assert stats["files_total"] == 2 * n_langs  # one file per (lang, append)
     assert stats["files_selected"] == 2  # only the two lang=en files
     got = loaded.scan(spark, partition_filter={"lang": "en"})
@@ -117,7 +118,7 @@ def test_bounds_pruning_uses_footer_stats(spark, docs, tmp_path):
     t.append(docs.filter("doc_id < 100"))
     t.append(docs.filter("doc_id >= 100"))
     loaded = IcebergTable.load(t.location)
-    files, stats = loaded.plan_files(bounds_filter={"doc_id": (0, 50)})
+    files, _deletes, stats = loaded.plan_scan(bounds_filter={"doc_id": (0, 50)})
     assert stats["files_selected"] < stats["files_total"]
     df = loaded.scan(spark, bounds_filter={"doc_id": (0, 50)})
     # bounds pruning is file-granular: every doc_id <= 50 must survive
@@ -128,9 +129,9 @@ def test_bucket_partition_point_lookup(spark, docs, tmp_path):
     t = _fresh_table(docs, tmp_path, [("doc_id", "bucket[8]")])
     t.append(docs)
     loaded = IcebergTable.load(t.location)
-    _, all_stats = loaded.plan_files()
+    _, _deletes, all_stats = loaded.plan_scan()
     b = bucket_value(42, "long", 8)
-    files, stats = loaded.plan_files(partition_filter={"doc_id_bucket": b})
+    files, _deletes, stats = loaded.plan_scan(partition_filter={"doc_id_bucket": b})
     assert 0 < stats["files_selected"] < all_stats["files_total"]
     row = (
         loaded.scan(spark, partition_filter={"doc_id_bucket": b})
@@ -217,7 +218,7 @@ def test_day_partition_hidden_pruning(spark, tmp_path):
         F.desc("count")
     ).first()["d"]
     ordinal = transform_value(some_day, "day", "timestamptz")
-    files, stats = loaded.plan_files(partition_filter={"ts_day": ordinal})
+    files, _deletes, stats = loaded.plan_scan(partition_filter={"ts_day": ordinal})
     assert 0 < stats["files_selected"] < stats["files_total"]
 
     got = loaded.scan(spark, partition_filter={"ts_day": ordinal})
@@ -259,7 +260,7 @@ def test_scan_range_hidden_partition_pruning(spark, tmp_path):
 
     ord_lo = transform_value(days[1], "day", "timestamptz")
     ord_hi = transform_value(days[2], "day", "timestamptz")
-    _, stats = loaded.plan_files(partition_filter={"ts_day": (ord_lo, ord_hi)})
+    _, _deletes, stats = loaded.plan_scan(partition_filter={"ts_day": (ord_lo, ord_hi)})
     assert 0 < stats["files_selected"] < stats["files_total"]
 
     in_range = (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))
@@ -282,8 +283,8 @@ def test_truncate_partition_point_lookup(spark, docs, tmp_path):
     t = _fresh_table(docs, tmp_path, [("doc_id", "truncate[100]")])
     t.append(docs)
     loaded = IcebergTable.load(t.location)
-    _, all_stats = loaded.plan_files()
-    files, stats = loaded.plan_files(
+    _, _deletes, all_stats = loaded.plan_scan()
+    files, _deletes, stats = loaded.plan_scan(
         partition_filter={"doc_id_truncate": transform_value(242, "truncate[100]", "long")}
     )
     assert 0 < stats["files_selected"] < all_stats["files_total"]
@@ -306,7 +307,7 @@ def test_null_partition_values(spark, docs, tmp_path):
     assert out.count() == with_nulls.count()
     assert out.filter("lang IS NULL").count() == with_nulls.filter("lang IS NULL").count()
     # null partition routes through the manifest's contains_null summary
-    _, stats = loaded.plan_files(partition_filter={"lang": None})
+    _, _deletes, stats = loaded.plan_scan(partition_filter={"lang": None})
     assert stats["files_selected"] >= 1
 
 
@@ -349,7 +350,7 @@ def test_scan_runs_no_spark_job(spark, docs, tmp_path):
     # more files than Spark lists without a parallel job (threshold 32)
     many = IcebergTable.create(str(tmp_path / "many"), docs.schema)
     many.append(docs.repartition(40))
-    assert len(many.plan_files()[0]) == 40
+    assert len(many.plan_scan()[0]) == 40
 
     for loc in (t.location, b.location, many.location):
         scans = []
@@ -381,7 +382,7 @@ def test_partitions_metadata_table_totals(spark, docs, tmp_path):
     n_langs = docs.select("lang").distinct().count()
     assert len(parts) == n_langs
     assert sum(p["record_count"] for p in parts) == docs.count()
-    assert sum(p["file_count"] for p in parts) == t.plan_files()[1]["files_selected"]
+    assert sum(p["file_count"] for p in parts) == t.plan_scan()[2]["files_selected"]
 
 
 def test_hash_distribution_bounds_file_count(spark, docs, tmp_path):
@@ -393,12 +394,12 @@ def test_hash_distribution_bounds_file_count(spark, docs, tmp_path):
     n_langs = docs.select("lang").distinct().count()
     t.append(docs.repartition(16))  # default hash distribution
     loaded = IcebergTable.load(t.location)
-    _, stats = loaded.plan_files()
+    _, _deletes, stats = loaded.plan_scan()
     assert stats["files_total"] == n_langs
 
     loaded.append(docs.repartition(16))
     loaded = IcebergTable.load(t.location)
-    _, stats2 = loaded.plan_files()
+    _, _deletes, stats2 = loaded.plan_scan()
     assert stats2["files_total"] == 2 * n_langs
 
     snap = loaded.snapshots()[-1]["summary"]
@@ -533,11 +534,44 @@ def test_metadata_json_is_spec_shaped(spark, docs, tmp_path):
     assert schema_ids == sorted(set(schema_ids))
 
 
-def test_jvm_avro_reads_manifests(spark, docs, tmp_path):
-    """The Java Avro library parses both metadata Avro file kinds."""
-    t = _fresh_table(docs, tmp_path, [("lang", "identity")])
-    t.append(docs.limit(50))
-    snap = t.snapshots()[-1]
+@pytest.fixture(scope="module")
+def manifest_kinds(spark, tmp_path_factory):
+    """One table whose history holds every manifest kind the table
+    writes: {kind: (manifest-list entry, snapshot)}."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter("doc_id < 200")
+    loc = str(tmp_path_factory.mktemp("manifest_kinds") / "tbl")
+    t = IcebergTable.create(loc, docs.schema, partition_by=[("lang", "identity")])
+    ops = {
+        "append": lambda: t.append(docs.filter("doc_id < 100")),
+        "position_delete": lambda: (
+            t.append(docs.filter("doc_id >= 100")),
+            t.delete_where(spark, "doc_id % 7 = 0"),
+        )[-1],
+        "equality_delete": lambda: t.upsert(
+            spark, docs.filter("doc_id < 20").withColumn("text", F.lit("V2")), ["doc_id"]
+        ),
+        "rewrite": lambda: (t.rewrite_manifests(), t.current_snapshot_id())[-1],
+    }
+    out = {}
+    for kind, op in ops.items():
+        sid = op()
+        snap = next(s for s in t.snapshots() if s["snapshot-id"] == sid)
+        content = 1 if kind.endswith("delete") else 0
+        (manifest,) = [
+            m for m in read_ocf(snap["manifest-list"])[0]
+            if m["added_snapshot_id"] == sid and m["content"] == content
+        ]
+        out[kind] = manifest, snap
+    return out
+
+
+@pytest.mark.parametrize(
+    "kind", ["append", "position_delete", "equality_delete", "rewrite"]
+)
+def test_jvm_avro_reads_manifests(spark, manifest_kinds, kind):
+    """The Java Avro library parses every manifest kind the table
+    writes, and the record counts it reads are the commit's."""
+    manifest, snap = manifest_kinds[kind]
     jvm = spark._jvm
 
     def jvm_read(path):
@@ -549,13 +583,28 @@ def test_jvm_avro_reads_manifests(spark, docs, tmp_path):
         dfr.close()
         return out
 
-    mlist = jvm_read(snap["manifest-list"])
-    assert len(mlist) == 1
-    manifest_path = str(mlist[0].get("manifest_path").toString())
-    entries = jvm_read(manifest_path)
-    assert entries and all(e.get("status") == 1 for e in entries)
-    total = sum(e.get("data_file").get("record_count") for e in entries)
-    assert total == 50
+    listed = [
+        str(m.get("manifest_path").toString()) for m in jvm_read(snap["manifest-list"])
+    ]
+    assert manifest["manifest_path"] in listed
+    entries = jvm_read(manifest["manifest_path"])
+    assert entries
+    statuses = {e.get("status") for e in entries}
+    counts = [e.get("data_file").get("record_count") for e in entries]
+    summary = snap["summary"]
+    if kind == "rewrite":
+        # every live data file carried over as EXISTING
+        assert statuses == {0}
+        assert sum(counts) == manifest["existing_rows_count"] == int(summary["total-records"])
+        return
+    assert statuses == {1}
+    assert sum(counts) == manifest["added_rows_count"]
+    want = {
+        "append": "added-records",
+        "position_delete": "added-position-deletes",
+        "equality_delete": "added-equality-deletes",
+    }[kind]
+    assert sum(counts) == int(summary[want]) > 0
 
 
 # -- resume sink --------------------------------------------------------------
@@ -592,10 +641,10 @@ def test_compact_reduces_files_and_preserves_history(spark, docs, tmp_path):
     pre_ids = []
     for i in range(4):  # many small appends -> many small files
         pre_ids.append(t.append(docs.filter(F.col("doc_id") % 4 == i)))
-    _, before = t.plan_files()
+    _, _deletes, before = t.plan_scan()
     t.compact(spark)
     loaded = IcebergTable.load(t.location)
-    _, after = loaded.plan_files()
+    _, _deletes, after = loaded.plan_scan()
     assert after["files_selected"] < before["files_selected"]
     assert loaded.scan(spark).count() == docs.count()
     assert loaded.snapshots()[-1]["summary"]["operation"] == "replace"
@@ -611,7 +660,7 @@ def test_rewrite_manifests_consolidates_without_touching_data(spark, docs, tmp_p
         pre.append(t.append(docs.filter(F.col("doc_id") % 4 == i)))
     # a pending row-level delete that must survive the rewrite
     t.delete_where(spark, "doc_id % 10 = 3")
-    files_before, stats_before = t.plan_files()
+    files_before, _deletes, stats_before = t.plan_scan()
     paths_before = sorted(f["file_path"] for f in files_before)
     want = docs.filter("doc_id % 10 <> 3").count()
     assert t.scan(spark).count() == want
@@ -622,7 +671,7 @@ def test_rewrite_manifests_consolidates_without_touching_data(spark, docs, tmp_p
     assert result["entries"] == len(files_before)
 
     loaded = IcebergTable.load(t.location)
-    files_after, stats_after = loaded.plan_files()
+    files_after, _deletes, stats_after = loaded.plan_scan()
     # metadata-only: the exact same data files, fewer manifests to open
     assert sorted(f["file_path"] for f in files_after) == paths_before
     assert stats_after["manifests_total"] < stats_before["manifests_total"]
@@ -630,7 +679,7 @@ def test_rewrite_manifests_consolidates_without_touching_data(spark, docs, tmp_p
     assert loaded.scan(spark).count() == want
     assert loaded.snapshots()[-1]["summary"]["operation"] == "replace"
     # partition pruning still works off the consolidated summaries
-    _, pruned = loaded.plan_files(partition_filter={"lang": "en"})
+    _, _deletes, pruned = loaded.plan_scan(partition_filter={"lang": "en"})
     assert pruned["files_selected"] < pruned["files_total"]
     # time travel to a pre-rewrite snapshot is unaffected
     assert loaded.scan(spark, snapshot_id=pre[1]).count() == docs.filter(
@@ -649,7 +698,7 @@ def test_sorted_compaction_tightens_bounds_for_pruning(spark, docs, tmp_path):
     # so a point bounds_filter can prune nothing
     for i in range(4):
         t.append(docs.filter(F.col("doc_id") % 4 == i))
-    _, before = t.plan_files(bounds_filter={"doc_id": (123, 123)})
+    _, _deletes, before = t.plan_scan(bounds_filter={"doc_id": (123, 123)})
     assert before["files_selected"] > 1  # overlapping bounds: no pruning
 
     oid = t.set_sort_order(["doc_id"])
@@ -658,7 +707,7 @@ def test_sorted_compaction_tightens_bounds_for_pruning(spark, docs, tmp_path):
     t.compact(spark, target_files_per_partition=4)
 
     loaded = IcebergTable.load(t.location)
-    files, after = loaded.plan_files(bounds_filter={"doc_id": (123, 123)})
+    files, _deletes, after = loaded.plan_scan(bounds_filter={"doc_id": (123, 123)})
     # range-clustered files: disjoint doc_id slices -> a point lookup
     # opens ~one file, not every file in the partition
     assert after["files_selected"] < before["files_selected"]
@@ -677,7 +726,7 @@ def test_sorted_range_scan_row_prunes_files(spark):
     from ocrs_spark.ops.icebergops import SORTED_RANGE, maintained_table
 
     table = maintained_table(spark, SF)
-    _, stats = table.plan_files(
+    _, _deletes, stats = table.plan_scan(
         bounds_filter={"doc_id": SORTED_RANGE}
     )
     assert stats["manifests_total"] == 1  # rewrite_manifests folded them

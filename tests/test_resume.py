@@ -57,17 +57,16 @@ def test_partial_commit_then_resume(spark, frames, tmp_path_factory):
     assert sorted(p.name for p in (ckpt_dir / "data").iterdir()) == sorted(
         s["run_id"] for s in ckpt.snapshots()
     )
-
-    # Time travel: as of snapshot 1 the table is exactly the first
-    # committed batch.
-    old = ckpt.read_result(spark, as_of_snapshot=1)
-    assert old.count() == n_first
-    assert spans_as_tuples(old).keys() < spans_as_tuples(result).keys()
+    # The root holds only what is read: the manifests, whose snapshot
+    # entries carry each run's metrics, and the committed data.
+    assert {p.name for p in ckpt_dir.iterdir()} == {
+        "data", "manifest-1.json", "manifest-2.json"
+    }
 
 
 def test_scheme_root_routes_through_hadoop_fs(spark, frames, tmp_path_factory):
     """A scheme-qualified checkpoint root (here file://, standing in for
-    hdfs://s3a://) must route manifest/metrics I/O through the Hadoop
+    hdfs://s3a://) must route manifest I/O through the Hadoop
     FileSystem API and behave identically to a local root — on a real
     cluster this is what makes snapshots visible across drivers."""
     docs, media, expected = frames
@@ -140,53 +139,6 @@ def test_concurrent_commit_race_drops_no_snapshot(spark, frames, tmp_path_factor
     assert len(top["snapshots"]) == 3
 
 
-def test_legacy_single_manifest_reads_as_version_zero(spark, frames, tmp_path_factory):
-    """A pre-versioning table (bare manifest.json) stays readable, and the
-    first new commit publishes manifest-1 on top of it."""
-    import json
-
-    docs, media, _ = frames
-    root = tmp_path_factory.mktemp("ckpt_legacy")
-    ckpt = DocumentCheckpoint(str(root))
-    half = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
-    snap1 = run_checkpointed(half, media, ckpt)
-    # Rewrite the table into the legacy layout: single manifest.json.
-    (root / "manifest.json").write_text(
-        (root / "manifest-1.json").read_text()
-    )
-    (root / "manifest-1.json").unlink()
-    assert [s["snapshot_id"] for s in ckpt.snapshots()] == [1]
-    snap2 = run_checkpointed(docs, media, ckpt)
-    assert snap2 is not None and snap2["snapshot_id"] == 2
-    assert (root / "manifest-1.json").exists()
-    assert ckpt.read_result(spark).count() == docs.count()
-
-
-def test_compaction_preserves_table_and_resume(spark, frames, tmp_path_factory):
-    """compact() rewrites N committed runs into one snapshot: the table
-    contents and resume pruning are unchanged, superseded run dirs are
-    removed, and the manifest history is replaced by a single visible
-    snapshot (rewrite_data_files + expire_snapshots semantics)."""
-    docs, media, expected = frames
-    root = tmp_path_factory.mktemp("ckpt_compact")
-    ckpt = DocumentCheckpoint(str(root))
-    run_checkpointed(docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0), media, ckpt)
-    run_checkpointed(docs, media, ckpt)
-    before = spans_as_tuples(ckpt.read_result(spark))
-    assert len(ckpt.snapshots()) == 2
-    assert len(list((root / "data").iterdir())) == 2
-
-    snap = ckpt.compact(spark)
-    assert snap["metrics"]["compacted_runs"] == 2
-    assert [s["run_id"] for s in ckpt.snapshots()] == [snap["run_id"]]
-    assert len(list((root / "data").iterdir())) == 1
-    assert spans_as_tuples(ckpt.read_result(spark)) == before
-    # Resume over the compacted table: nothing left to do.
-    assert run_checkpointed(docs, media, ckpt) is None
-    # Idempotent on a single-snapshot table.
-    assert ckpt.compact(spark)["run_id"] == snap["run_id"]
-
-
 def test_crash_between_data_write_and_publish(
     spark, frames, tmp_path_factory, monkeypatch
 ):
@@ -232,8 +184,8 @@ def test_crash_between_data_write_and_publish(
 def test_unpublished_run_leaves_no_files(spark, frames, tmp_path_factory, monkeypatch):
     """A run that fails after its data write and is certainly not
     published, because it lost every manifest race or its observations
-    could not be read, removes data/<run_id> and metrics/<run_id>.json;
-    the rerun commits every document once."""
+    could not be read, removes data/<run_id>; the rerun commits every
+    document once."""
     import ocrs_spark.checkpoint as checkpoint
 
     docs, media, expected = frames
@@ -244,7 +196,7 @@ def test_unpublished_run_leaves_no_files(spark, frames, tmp_path_factory, monkey
     with pytest.raises(IOError, match="lost 32 consecutive manifest races"):
         run_checkpointed(docs, media, ckpt)
     assert list((root / "data").iterdir()) == []
-    assert list((root / "metrics").iterdir()) == []
+    assert not (root / "metrics").exists()
     monkeypatch.undo()
 
     def lost(obs):
@@ -259,7 +211,7 @@ def test_unpublished_run_leaves_no_files(spark, frames, tmp_path_factory, monkey
     snap = run_checkpointed(docs, media, ckpt)
     assert [s["snapshot_id"] for s in ckpt.snapshots()] == [1]
     assert {p.name for p in (root / "data").iterdir()} == {snap["run_id"]}
-    assert {p.name for p in (root / "metrics").iterdir()} == {f"{snap['run_id']}.json"}
+    assert not (root / "metrics").exists()
     result = ckpt.read_result(spark)
     assert result.count() == docs.count()
     assert result.select("doc_id").distinct().count() == docs.count()
